@@ -108,15 +108,7 @@ object Cli {
     if (args.isEmpty) usage()
     val command = args.head
     val opts = parseArgs(args.tail.toSeq)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    DialectShims.registerAll(spark)
+    val spark = Session.build()
     val code = try run(spark, command, opts) finally spark.stop()
     if (code != 0) sys.exit(code)
   }

@@ -1,14 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` output for named queries to files —
   * the optimization-round evidence artifacts (`plans/rN/<q>_{before,after}.txt`).
   *
   * Usage: DumpPlan <outDir> <suffix> <query1,query2,...>
   *
-  * Same session shape as [[Bench]] (core count from SPARK_GRAFT_CPUS,
-  * data dir from SPARK_GRAFT_SF_DIR) so the dumped plan is the plan the
-  * bench actually runs. Lifecycle entries (dag_*, stream_*, skip_*)
+  * Same session as [[Bench]] ([[Session.build]], data dir from
+  * SPARK_GRAFT_SF_DIR) so the dumped plan is the plan the bench
+  * actually runs. Lifecycle entries (dag_*, stream_*, skip_*)
   * execute their build at construction time; the dumped plan is the
   * final served query, which is why those entries' evidence also cites
   * stage telemetry rather than the plan alone. */
@@ -18,26 +17,7 @@ object DumpPlan {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Let AQE re-plan CACHED frame materialization (coalesce tiny
-      // post-shuffle partitions, split skew) — off by default only for
-      // partitioning-stability of cache reuse, which nothing here
-      // relies on: every persisted frame is consumed by content-keyed
-      // operators. Without it each persist() pinned the session's full
-      // shuffle-partition fan-out, so small cached tables (band
-      // indexes, label tables, streaming micro-batches) dragged 32
-      // near-empty tasks through every downstream stage.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")

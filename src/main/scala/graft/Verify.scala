@@ -1,36 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to the box's cores (same rationale as Bench: a fixed
-    // small default silently serialized any invocation that forgot
-    // the env var — harmless for correctness here, 8x slower)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write µs (not INT96) so dumped timestamps arrow-match the
-      // DuckDB oracle's timestamp[us] in the hash compare
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Let AQE re-plan CACHED frame materialization (coalesce tiny
-      // post-shuffle partitions, split skew) — off by default only for
-      // partitioning-stability of cache reuse, which nothing here
-      // relies on: every persisted frame is consumed by content-keyed
-      // operators. Without it each persist() pinned the session's full
-      // shuffle-partition fan-out, so small cached tables (band
-      // indexes, label tables, streaming micro-batches) dragged 32
-      // near-empty tasks through every downstream stage.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
     // Optional name filter for local iteration (comma-separated); the
     // driver never sets it, so its runs always dump the full surface.

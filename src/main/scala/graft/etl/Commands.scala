@@ -267,8 +267,6 @@ object Commands {
     import spark.implicits._
     Seq(
       check("functions.native") {
-        graft.queries.DotF.register(spark)
-        graft.queries.BoundedTopK.register(spark)
         val r = spark.sql(
           "SELECT dot_f(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d, " +
             "dot_i8(sq8_quantize(array(0.5F, -1.0F)), " +
@@ -278,13 +276,11 @@ object Commands {
         require(r.getLong(1) == 64L * 64 + 127L * 127, s"dot_i8: ${r.getLong(1)}")
       },
       check("functions.udf") {
-        registerUdfs(spark)
         val r = spark.sql(
           "SELECT f_sha256('arthur') = sha2('arthur', 256) AS same").head
         require(r.getBoolean(0), "f_sha256 != sha2")
       },
       check("dialect.shim") {
-        DialectShims.registerAll(spark)
         val sql = DialectShims.rewriteRedshiftSql(
           "SELECT DATEDIFF(day, DATE '2024-01-31', DATE '2024-02-01') AS d")
         require(spark.sql(sql).head.getLong(0) == 1L, "boundary datediff")
@@ -337,17 +333,5 @@ object Commands {
           "replay must no-op")
         require(spark.table(t.quoted).count() == 2, "lifecycle rowcount")
       })
-  }
-
-  // ----------------------------------------------------------- §2.11
-  /** UDF surface: the one reference-shipped UDF is `dw.f_sha256`
-    * (sql/001_ETL_create_f_sha256.sql:4-11). Registered for
-    * transform-SQL compatibility; the NATIVE path is the codegen'd
-    * built-in `sha2(col, 256)` — new queries should use that. */
-  def registerUdfs(spark: SparkSession): Unit = {
-    spark.udf.register("f_sha256", (s: String) =>
-      if (s == null) null
-      else java.security.MessageDigest.getInstance("SHA-256")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString)
   }
 }

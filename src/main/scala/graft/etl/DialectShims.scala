@@ -10,12 +10,12 @@ import org.apache.spark.sql.SparkSession
   *
   * | Redshift | Spark mapping |
   * |---|---|
-  * | GETDATE() | current_timestamp() |
+  * | GETDATE() | current_timestamp() ([[GraftExtensions]]) |
   * | DATEADD(unit, n, ts) | ts + make_interval/n unit |
   * | DATEDIFF(unit, a, b) | timestampdiff(unit, a, b) |
   * | LISTAGG(x, sep) | array_join(collect_list(x), sep) |
   * | NVL(a, b) | coalesce — already a Spark builtin |
-  * | f_sha256(s) | sha2(s, 256) (Commands.registerUdfs) |
+  * | f_sha256(s) | sha2(s, 256) ([[GraftExtensions]]) |
   * | SYSDATE | current_timestamp() |
   * | CONVERT_TIMEZONE([src,] tgt, ts) | from_utc_timestamp/to_utc_timestamp |
   * | TO_CHAR(ts, 'fmt') | per-token date_format concat |
@@ -25,7 +25,6 @@ object DialectShims {
   def registerAll(spark: SparkSession): Unit = {
     // SQL-bodied temp functions resolve to built-ins at plan time —
     // they inline into the analyzed plan, keeping codegen intact.
-    spark.sql("CREATE OR REPLACE TEMPORARY FUNCTION getdate() RETURNS TIMESTAMP RETURN current_timestamp()")
     spark.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION dateadd_days(n INT, ts TIMESTAMP)
         |RETURNS TIMESTAMP RETURN timestampadd(DAY, n, ts)""".stripMargin)
@@ -57,7 +56,6 @@ object DialectShims {
     // LEN (Redshift's LENGTH alias) needs no shim: Spark 4 ships it
     // as a built-in alias of length — registering over a built-in is
     // refused (CANNOT_REPLACE_NON_SQL_UDF_WITH_SQL_UDF).
-    Commands.registerUdfs(spark)
     // LISTAGG has no scalar-function shim (it is an aggregate):
     // rewrite `LISTAGG(x, ',') WITHIN GROUP (ORDER BY x)` to
     // `array_join(array_sort(collect_list(x)), ',')` — see

@@ -200,7 +200,7 @@ object Extract {
           .map(k => withCond.filter(expr(samplingCondition(k))))
           .getOrElse(withCond)
       else withCond
-    applyTruncateColumns(spark, design, sampled.select(projected: _*))
+    applyTruncateColumns(design, sampled.select(projected: _*))
   }
 
   /** On-disk footprint of the parquet stand-in — the `table_size`
@@ -215,17 +215,14 @@ object Extract {
 
   /** TRUNCATECOLUMNS (dialect/redshift.py:348): the reference COPY
     * always truncates strings to the declared varchar BYTE length. */
-  private def applyTruncateColumns(spark: SparkSession, design: TableDesign,
+  private def applyTruncateColumns(design: TableDesign,
                                    selected: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.expr
     val bounded = design.activeColumns.flatMap(c =>
       varcharBytes(c).map(c.name -> _))
     if (bounded.isEmpty) selected
-    else {
-      registerTrunc(spark)
-      bounded.foldLeft(selected) { case (df, (name, n)) =>
-        df.withColumn(name, expr(s"trunc_utf8_bytes(`$name`, $n)"))
-      }
+    else bounded.foldLeft(selected) { case (df, (name, n)) =>
+      df.withColumn(name, expr(s"trunc_utf8_bytes(`$name`, $n)"))
     }
   }
 
@@ -247,7 +244,7 @@ object Extract {
     manifestFormat(spark, dir) match {
       case Some(format) =>
         val raw = StaticSource.read(spark, design, dir, format)
-        applyTruncateColumns(spark, design, raw)
+        applyTruncateColumns(design, raw)
       case None => sourceDataFrame(spark, sourceDir, design)
     }
   }
@@ -283,7 +280,7 @@ object Extract {
             s"exceed MAXERROR $maxError; first: $sample")
       }
       val loaded = wh.writeTable(design.name,
-        applyTruncateColumns(spark, design, qr.good))
+        applyTruncateColumns(design, qr.good))
       val errTable =
         if (badCount == 0) None
         else {
@@ -320,17 +317,6 @@ object Extract {
       })
     }
   }
-
-  /** Make the native [[TruncateUtf8Bytes]] expression available to
-    * `expr(...)` in this session (idempotent; [[GraftExtensions]]
-    * injects the same builder for extension-configured sessions). */
-  private def registerTrunc(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "trunc_utf8_bytes",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TruncateUtf8Bytes(children.head,
-          children(1).eval().asInstanceOf[Number].intValue),
-      "built-in")
 
   private val VarcharRe =
     raw"(?i)\s*(?:character\s+varying|varchar)\s*\(\s*(\d+)\s*\)\s*".r

@@ -223,7 +223,6 @@ object FileSkipIndex {
 
   private def bloomStatsOf(df: DataFrame, c: String,
                            expectedItems: Long): DataFrame = {
-    graft.queries.DotF.register(df.sparkSession) // bloom_agg
     df.groupBy(normFile(col("_metadata.file_path")).as("file"))
       .agg(count(lit(1)).as("row_count"),
         call_function("bloom_agg", col(c).cast("long"), lit(expectedItems))

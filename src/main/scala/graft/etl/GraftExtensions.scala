@@ -2,56 +2,72 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{CurrentTimestamp, Expression, ExpressionInfo, Literal, Sha2}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, CurrentTimestamp, Expression, ExpressionInfo, Literal, Sha2}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Session-extension entry point: `--conf
-  * spark.sql.extensions=graft.etl.GraftExtensions` makes the
-  * Redshift-dialect functions available in EVERY session (including
-  * thrift/connect ones) as NATIVE Catalyst expressions — they resolve
-  * at analysis time and stay inside whole-stage codegen, unlike a UDF.
+import graft.queries._
+
+/** The engine's one extension path: every session [[graft.Session]]
+  * builds carries `spark.sql.extensions=graft.etl.GraftExtensions`, and
+  * this class installs all of the engine's native functions, the as-of
+  * join planner strategy and the materialized-view rewrite rule. The
+  * functions are NATIVE Catalyst expressions — they resolve at analysis
+  * time and stay inside whole-stage codegen, unlike a UDF.
   *
   * `f_sha256` (the one warehouse UDF the reference ships,
   * sql/001_ETL_create_f_sha256.sql:4-11) maps to `Sha2(e, 256)`;
-  * `getdate` to `CurrentTimestamp`. The SQL-bodied shims in
-  * [[DialectShims]] cover per-session registration without the conf.
+  * `getdate` to `CurrentTimestamp`. The SQL-bodied shims stay in
+  * [[DialectShims.registerAll]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("f_sha256"),
-      new ExpressionInfo(classOf[Sha2].getName, "f_sha256"),
-      (children: Seq[Expression]) => Sha2(children.head, Literal(256))))
-    ext.injectFunction((
-      FunctionIdentifier("getdate"),
-      new ExpressionInfo(classOf[CurrentTimestamp].getName, "getdate"),
-      (_: Seq[Expression]) => CurrentTimestamp()))
-    ext.injectFunction((
-      FunctionIdentifier("trunc_utf8_bytes"),
-      new ExpressionInfo(classOf[TruncateUtf8Bytes].getName, "trunc_utf8_bytes"),
-      (children: Seq[Expression]) => TruncateUtf8Bytes(children.head,
-        children(1).eval().asInstanceOf[Number].intValue)))
-    ext.injectFunction((
-      FunctionIdentifier("bounded_topk"),
-      new ExpressionInfo(classOf[graft.queries.BoundedTopK].getName, "bounded_topk"),
-      graft.queries.BoundedTopK.builder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f"),
-      new ExpressionInfo(classOf[graft.queries.DotF].getName, "dot_f"),
-      graft.queries.DotF.builder))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_quantize"),
-      new ExpressionInfo(classOf[graft.queries.Sq8Quantize].getName, "sq8_quantize"),
-      graft.queries.Sq8Quantize.builder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_i8"),
-      new ExpressionInfo(classOf[graft.queries.DotI8].getName, "dot_i8"),
-      graft.queries.DotI8.builder))
-    // whole-operator extension: the native as-of join's planner
-    // strategy (AsofJoin.register covers conf-less sessions)
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     ext.injectPlannerStrategy(_ => new graft.plans.AsofJoinStrategy)
-    // automatic materialized-view query rewrite (MvRewrite.register
-    // covers conf-less sessions); no-op until a view is registered
+    // no-op until a view is registered (MvRewrite.registerMv)
     ext.injectOptimizerRule(session => new graft.plans.MvRewriteRule(session))
   }
+}
+
+object GraftExtensions {
+
+  /** Every native function the extension injects, by SQL name. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "f_sha256" -> (c => Sha2(c.head, Literal(256))),
+    "getdate" -> (_ => CurrentTimestamp()),
+    "trunc_utf8_bytes" -> (c =>
+      TruncateUtf8Bytes(c.head, c(1).eval().asInstanceOf[Number].intValue)),
+    "bounded_topk" -> BoundedTopK.builder,
+    "dot_f" -> DotF.builder,
+    "sq8_quantize" -> Sq8Quantize.builder,
+    "dot_i8" -> DotI8.builder,
+    "bpe_encode" -> BpeEncode.builder,
+    "zorder_key" -> ZorderKey.builder,
+    "variant_hashes" -> VariantHashes.builder,
+    "min_shared_variant_hash" -> MinSharedVariantHash.builder,
+    "bounded_lev" -> BoundedLevExpr.builder,
+    "pq_encode" -> Pq.encodeBuilder,
+    "pq_table" -> Pq.tableBuilder,
+    "pq_adc" -> Pq.adcBuilder,
+    // Spark's OWN BloomFilterAggregate / BloomFilterMightContain — the
+    // expressions the AQE runtime-filter machinery plans internally
+    // (InjectRuntimeFilter), surfaced as functions so operators can
+    // build the same sublinear membership prefilter explicitly.
+    // bloom_agg(hash[, estimatedItems]) -> binary; bloom_might_contain
+    // requires its filter arg be a literal or scalar subquery (the
+    // expression's own type check), which is exactly the shipped shape.
+    "bloom_agg" -> {
+      case Seq(c) => new BloomFilterAggregate(c)
+      case Seq(c, n) => new BloomFilterAggregate(c, n)
+      case other => throw new IllegalArgumentException(
+        s"bloom_agg(hash[, estimatedItems]) takes 1-2 args, got ${other.size}")
+    },
+    "bloom_might_contain" -> {
+      case Seq(bf, v) => BloomFilterMightContain(bf, v)
+      case other => throw new IllegalArgumentException(
+        s"bloom_might_contain(filter, hash) takes 2 args, got ${other.size}")
+    })
 }

@@ -428,7 +428,6 @@ final class Warehouse(
       least(lit(res), greatest(lit(0L),
         floor((v - lit(mn)) * res / lit(span)).cast("long")))
     }
-    graft.queries.DotF.register(spark)
     // explicit partition count: an AQE-coalesced range exchange would
     // collapse small builds to one file and lose the clustering
     df.withColumn("__zkey", call_function("zorder_key", array(scaled: _*)))

@@ -199,15 +199,6 @@ final case class AsofJoinExec(
 
 object AsofJoin {
 
-  /** Idempotent per-session strategy registration (the runtime path;
-    * [[graft.etl.GraftExtensions]] injects the same strategy via the
-    * extensions conf). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[AsofJoinStrategy]))
-      spark.experimental.extraStrategies = cur :+ new AsofJoinStrategy
-  }
-
   private def resolve(plan: LogicalPlan, name: String): Attribute =
     plan.output.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(
@@ -223,7 +214,6 @@ object AsofJoin {
            leftTime: String, rightTime: String,
            rightId: String): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     val dup = lp.output.map(_.name.toLowerCase)

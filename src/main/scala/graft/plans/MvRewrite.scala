@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
   * over a BASE table is transparently answered from a much smaller
   * maintained ROLLUP table whenever the rollup covers the query.
   *
-  * Spark-first shape: a `Rule[LogicalPlan]` in
-  * `spark.experimental.extraOptimizations` (and
-  * `injectOptimizerRule` via [[graft.etl.GraftExtensions]]). The MV
+  * Spark-first shape: a `Rule[LogicalPlan]` injected by
+  * [[graft.etl.GraftExtensions]]. The MV
   * stores the standard re-aggregable PARTIALS per group — `cnt`
   * (row count) plus `sum_c`/`cnt_c`/`min_c`/`max_c` per covered
   * column — so ANY sub-grouping of the MV's keys re-aggregates:
@@ -111,16 +110,6 @@ object MvRewrite {
       Option(registries.get(spark)).map(_.toSeq).getOrElse(Nil)
     }
 
-  /** Install the rule into this session (idempotent) — the conf-less
-    * twin of the `GraftExtensions` injection, like
-    * [[AsofJoin.register]]. */
-  def register(spark: SparkSession): Unit = synchronized {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[MvRewriteRule]))
-      spark.experimental.extraOptimizations =
-        existing :+ new MvRewriteRule(spark)
-  }
-
   def clear(spark: SparkSession): Unit =
     registries.synchronized { registries.remove(spark); () }
 
@@ -163,7 +152,6 @@ object MvRewrite {
                  partVersions: Map[String, String] = Map.empty,
                  currentPartVersions: () => Map[String, String] =
                    () => Map.empty): Unit = {
-    register(spark)
     val baseRel = base.queryExecution.analyzed.collectFirst {
       case l: LogicalRelation => l
     }.getOrElse(throw new IllegalArgumentException(

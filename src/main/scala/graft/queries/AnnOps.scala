@@ -121,8 +121,6 @@ object AnnOps {
     * per query). Ties break by neighbor_id ASC in both engines. */
   def annTopkCosine(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
-    DotF.register(spark)
     // norms once per row, not once per PAIR: the naive cosine does 3
     // dots per (query, vector); with the corpus norm computed in the
     // scan and the query norms riding the broadcast, the n × |queries|
@@ -174,7 +172,6 @@ object AnnOps {
 
   def annRangeSearch(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    DotF.register(spark)
     val vecs = Tables.load(spark, sfDir, "embeddings")
       .select($"vec_id", $"embedding",
         sqrt(dot($"embedding", $"embedding")).as("nrm"))
@@ -212,8 +209,6 @@ object AnnOps {
     * changed. */
   def annHardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
-    DotF.register(spark)
     val vecs = Tables.load(spark, sfDir, "embeddings")
       .select($"vec_id", $"label", $"embedding",
         sqrt(dot($"embedding", $"embedding")).as("nrm"))
@@ -337,7 +332,6 @@ object AnnOps {
   private def bucketedDf(spark: SparkSession, sfDir: String,
                          t: Tuning = Tuning.default): (DataFrame, Int) = {
     import spark.implicits._
-    DotF.register(spark)
     val raw = Tables.load(spark, sfDir, "embeddings")
     val planes = planesFor(embeddingCount(spark, sfDir), t.targetBucketSize)
     val df = raw.select($"vec_id", $"embedding",
@@ -529,7 +523,6 @@ object AnnOps {
 
   private def centroids(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
     import spark.implicits._
-    DotF.register(spark)
     val vecs = Tables.load(spark, sfDir, "embeddings")
     val nlist = nlistFor(embeddingCount(spark, sfDir))
     val cents = vecs
@@ -627,7 +620,6 @@ object AnnOps {
     // the per-query nprobe-nearest centroids fall out of a k-bounded
     // aggregate over the (queries × nlist) probe table; same
     // tie-break (q_cos DESC, cent_id ASC) as the oracle's window.
-    BoundedTopK.register(spark)
     val probes = queries.crossJoin(broadcast(cents))
       .select($"query_id", $"cent_id",
         cosine($"q_emb", $"c_emb").as("q_cos"))
@@ -664,7 +656,6 @@ object AnnOps {
                                     nprobe: Int = NProbe,
                                     rescore: Int = TopK * 4): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
     val cents = centroids(spark, sfDir)._1   // collected local relation
     val cells = cellsDf(spark, sfDir, cents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -818,8 +809,6 @@ object AnnOps {
                                    nprobe: Int = NProbe,
                                    rescore: Int = PqRescore): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
-    Pq.register(spark)
     val cbLit = lit(pqCodebook(spark, sfDir))
     val cents = centroids(spark, sfDir)._1   // collected local relation
     val cells = cellsDf(spark, sfDir, cents)
@@ -908,7 +897,6 @@ object AnnOps {
   private[queries] def ivfEncode(spark: SparkSession, cents: DataFrame,
                                  batch: DataFrame): DataFrame = {
     import spark.implicits._
-    DotF.register(spark)
     // same value tree as cellsDf so stored cells match the oracle's
     // assignment bit-for-bit; the sq8 code rides the argmax groupBy
     // (first() over per-vector-constant values) — one pass, no
@@ -990,8 +978,6 @@ object AnnOps {
                                        nprobe: Int = NProbe,
                                        rescore: Int = TopK * 4): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
-    DotF.register(spark)
     def dotI8(a: Column, b: Column) = call_function("dot_i8", a, b)
     val queriesF = Tables.load(spark, sfDir, "embeddings")
       .filter($"vec_id" < NumQueries)
@@ -1098,7 +1084,6 @@ object AnnOps {
     * norm, min/max/mean element — per-row folds, shuffle-free. */
   def embeddingStats(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    DotF.register(spark)
     val asDouble = transform($"embedding", x => x.cast("double"))
     Tables.load(spark, sfDir, "embeddings")
       .select(

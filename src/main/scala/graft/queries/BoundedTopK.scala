@@ -156,11 +156,4 @@ object BoundedTopK {
     }
     BoundedTopK(children(0), children(1), k)
   }
-
-  /** Idempotent per-session registration (the [[graft.etl.Extract]]
-    * `trunc_utf8_bytes` pattern), so `expr("bounded_topk(...)")`
-    * resolves without the extensions conf. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_topk", builder, "built-in")
 }

@@ -89,7 +89,6 @@ object DedupOps {
     * scale. */
   def evalShingleBloom(spark: SparkSession, sfDir: String): Array[Byte] = {
     import spark.implicits._
-    DotF.register(spark)
     shingleDf(spark, sfDir).filter($"doc_id" < EvalDocMax)
       .select(shingleHash($"shingle").as("h")).distinct()
       .createOrReplaceTempView("decon_eval_bloom_src")
@@ -1027,7 +1026,6 @@ object DedupOps {
     * membership join never broadcasts at all. */
   def dedupDecontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    DotF.register(spark)
     val sh = shingleDf(spark, sfDir)
       .select($"doc_id", shingleHash($"shingle").as("shingle"))
     sh.filter($"doc_id" >= EvalDocMax)

@@ -104,53 +104,6 @@ object DotF {
       s"dot_f(a, b) takes 2 arguments, got ${children.size}")
     DotF(children.head, children(1))
   }
-
-  /** Idempotent per-session registration (the [[BoundedTopK.register]]
-    * pattern), so `call_function("dot_f", ...)` resolves without the
-    * extensions conf. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_quantize", Sq8Quantize.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_i8", DotI8.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", BpeEncode.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder_key", ZorderKey.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "variant_hashes", VariantHashes.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_shared_variant_hash", MinSharedVariantHash.builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_lev", BoundedLevExpr.builder, "built-in")
-    // Spark's OWN BloomFilterAggregate / BloomFilterMightContain — the
-    // expressions the AQE runtime-filter machinery plans internally
-    // (InjectRuntimeFilter), surfaced as session functions so operators
-    // can build the same sublinear membership prefilter explicitly.
-    // bloom_agg(hash[, estimatedItems]) -> binary; bloom_might_contain
-    // requires its filter arg be a literal or scalar subquery (the
-    // expression's own type check), which is exactly the shipped shape.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", {
-        case Seq(c) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(c)
-        case Seq(c, n) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(c, n)
-        case other => throw new IllegalArgumentException(
-          s"bloom_agg(hash[, estimatedItems]) takes 1-2 args, got ${other.size}")
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", {
-        case Seq(bf, v) =>
-          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bf, v)
-        case other => throw new IllegalArgumentException(
-          s"bloom_might_contain(filter, hash) takes 2 args, got ${other.size}")
-      }, "built-in")
-  }
 }
 
 /** Scalar (SQ8) quantization of a float vector to int8 bytes:

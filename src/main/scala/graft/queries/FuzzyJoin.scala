@@ -44,7 +44,6 @@ object FuzzyJoin {
   private def variantFrame(names: DataFrame, k: Int): DataFrame = {
     val spark = names.sparkSession
     import spark.implicits._
-    DotF.register(spark)
     // The O(L²) hash kernel below is the plan's dominant CPU term; a
     // single-split scan would run it on one core (measured 4.9 s of
     // the 10 s fuzzy_join_names2 wall as ONE map task at sf0.1).
@@ -340,7 +339,6 @@ object FuzzyJoin {
   private def lightPairs(light: DataFrame, k: Int): DataFrame = {
     val spark = light.sparkSession
     import spark.implicits._
-    DotF.register(spark)
     // ONE join condition with the conjuncts in cheap→expensive order.
     // Spark's conjunct evaluation is in-order, but separately pushed
     // filters land in the condition in REVERSE push order — the old

@@ -139,24 +139,21 @@ object Pq {
     (cbArr, m.eval(null).asInstanceOf[Number].intValue())
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", { c =>
-        require(c.size == 3, "pq_encode(vec, codebook, m)")
-        val (cbArr, m) = literalArgs(c(1), c(2))
-        PqEncode(c(0), cbArr, m)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_table", { c =>
-        require(c.size == 3, "pq_table(vec, codebook, m)")
-        val (cbArr, m) = literalArgs(c(1), c(2))
-        PqTable(c(0), cbArr, m)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc", { c =>
-        require(c.size == 2, "pq_adc(table, codes)")
-        PqAdc(c(0), c(1))
-      }, "built-in")
+  def encodeBuilder(c: Seq[Expression]): Expression = {
+    require(c.size == 3, "pq_encode(vec, codebook, m)")
+    val (cbArr, m) = literalArgs(c(1), c(2))
+    PqEncode(c(0), cbArr, m)
+  }
+
+  def tableBuilder(c: Seq[Expression]): Expression = {
+    require(c.size == 3, "pq_table(vec, codebook, m)")
+    val (cbArr, m) = literalArgs(c(1), c(2))
+    PqTable(c(0), cbArr, m)
+  }
+
+  def adcBuilder(c: Seq[Expression]): Expression = {
+    require(c.size == 2, "pq_adc(table, codes)")
+    PqAdc(c(0), c(1))
   }
 }
 

@@ -713,7 +713,6 @@ object SqlSurface {
     * native json path operators and lateral `unnest`, sharing none of
     * the shim's machinery. */
   def q41SuperPaths(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "customer").createOrReplaceTempView("rs_customer")
     val redshiftSql =
       """WITH src AS (
@@ -759,7 +758,6 @@ object SqlSurface {
     * engines. DuckDB answers with a correlated `generate_series` over
     * the array — none of the shim's machinery. */
   def q42PartiqlIterate(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """WITH src AS (
@@ -811,7 +809,6 @@ object SqlSurface {
     * native lateral unnest over a VARCHAR[] cast — no shared
     * machinery. */
   def q43PartiqlNested(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """WITH src AS (
@@ -872,7 +869,6 @@ object SqlSurface {
     * DuckDB answers with a correlated EXISTS over its native lateral
     * unnest — none of the shim's machinery. */
   def q44WildcardFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """WITH src AS (
@@ -920,7 +916,6 @@ object SqlSurface {
     * attribute name. DuckDB re-derives via `json_keys` + lateral
     * unnest + path extraction — none of the shim's machinery. */
   def q45SuperUnpivot(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """WITH src AS (
@@ -965,7 +960,6 @@ object SqlSurface {
     * rewrite, the unit-alias mapping, and the datediff boundary
     * semantics must all agree with DuckDB's native equivalents. */
   def q21RedshiftDialect(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)   // rs_datediff_* shims
     Tables.load(spark, sfDir, "nation").createOrReplaceTempView("rs_nation")
     Tables.load(spark, sfDir, "region").createOrReplaceTempView("rs_region")
     val redshiftSql =
@@ -1294,7 +1288,6 @@ object SqlSurface {
     * Scale shape: pure per-row projection over one scan, top-k by
     * key — zero data movement beyond the TakeOrdered. */
   def q25TimeDialect(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """SELECT o_orderkey,
@@ -1336,7 +1329,6 @@ object SqlSurface {
     * TO_CHAR inside TO_DATE's first argument rewrites first, then
     * the outer parse rewrites around it. */
   def q26ParseDialect(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """SELECT o_orderkey,
@@ -1589,7 +1581,6 @@ object SqlSurface {
     * are hash-checked. Pure per-row projection, one scan, TakeOrdered
     * presentation. */
   def q33StringDialect(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "customer").createOrReplaceTempView("rs_customer")
     val redshiftSql =
       """SELECT c_custkey,
@@ -1625,7 +1616,6 @@ object SqlSurface {
     * split / aggregate collection forms), one scan, TakeOrdered
     * presentation. */
   def q39RegexDialect(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "documents").createOrReplaceTempView("rs_documents")
     val redshiftSql =
       """SELECT doc_id,
@@ -1674,7 +1664,6 @@ object SqlSurface {
     * a DuckDB derivation built from `format('{:,}')`/lpad/CASE, none
     * of which shares the shim's machinery. Per-row projection. */
   def q40ToCharNumber(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.DialectShims.registerAll(spark)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView("rs_orders")
     val redshiftSql =
       """SELECT o_orderkey,

@@ -22,9 +22,8 @@ object Tables {
       // convert; µs-precision data, so lossless) and plain
       // TIMESTAMP(MICROS) (read as-is). Adapt to what the file holds
       // rather than assuming one generation of the testdata.
-      // The nanosAsLong conf is set at session build (Verify/Bench);
-      // the guarded set here covers ad-hoc sessions without re-mutating
-      // config on every load.
+      // The guarded set enables nanosAsLong on first use without
+      // re-mutating config on every load.
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$sfDir/$name.parquet")

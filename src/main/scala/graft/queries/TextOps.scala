@@ -585,7 +585,6 @@ object TextOps {
 
   def retrievalTopk(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
     val docs = Tables.load(spark, sfDir, "documents")
     val tf = docs
       .select($"doc_id", explode(split(normText($"text"), " ")).as("token"))
@@ -846,7 +845,6 @@ object TextOps {
   def retrievalTopkStored(spark: SparkSession, base: String,
                           queriesSpec: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
     val tfTable = graft.etl.TableName(base.split('.')(0),
       base.split('.')(1) + "_tf")
     // postings scan pruned to files whose token range intersects the
@@ -970,7 +968,6 @@ object TextOps {
 
   def samplePerGroup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    BoundedTopK.register(spark)
     Tables.load(spark, sfDir, "documents")
       .select($"lang", $"doc_id",
         conv(substring(md5(concat(lit("spg:"), $"doc_id".cast("string"))),
@@ -1346,7 +1343,6 @@ object TextOps {
     import spark.implicits._
     val docs = Tables.load(spark, sfDir, "documents")
     val merges = bpeMergeCache.getOrElseUpdate(sfDir, bpeMergeTable(docs))
-    DotF.register(spark)
     // the bpe_encode kernel (per-doc merge loop) ran as one 1.4 s map
     // task over the single-split scan — spread it (no-op at scale)
     Tables.spread(docs).select($"doc_id",

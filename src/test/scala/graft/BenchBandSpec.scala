@@ -43,14 +43,7 @@ class BenchBandSpec extends AnyFunSuite with BeforeAndAfterAll {
     // meaningful against the baseline's own configuration. Built only
     // when the live test will actually run: a cancelled test must not
     // cost the default suite a SparkSession spin-up.
-    spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = Session.build(32)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

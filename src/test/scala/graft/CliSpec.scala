@@ -16,12 +16,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dataDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
     designsDir = Files.createTempDirectory("graft_cli_designs_").toString
     val schemaDir = Paths.get(designsDir, "schemas", "cli")

@@ -16,12 +16,7 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
   }
 
@@ -178,7 +173,6 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("§2.11: f_sha256 matches the built-in sha2 (the native path)") {
-    Commands.registerUdfs(spark)
     val r = spark.sql(
       "SELECT f_sha256('arthur') = sha2('arthur', 256) AS same").collect()
     assert(r.head.getBoolean(0))

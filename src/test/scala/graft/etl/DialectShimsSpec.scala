@@ -9,17 +9,23 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(2)
     spark.sparkContext.setLogLevel("ERROR")
-    DialectShims.registerAll(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  test("registerAll re-runs on an extension-configured session; getdate/f_sha256 stay native") {
+    // the bench harness calls registerAll on a session rebuilt from the
+    // CLI's reported conf, which carries spark.sql.extensions: a SQL
+    // shim over an injected name would fail with
+    // CANNOT_REPLACE_NON_SQL_UDF_WITH_SQL_UDF
+    DialectShims.registerAll(spark)
+    val plan = spark.sql("SELECT getdate() AS now, f_sha256('x') AS h")
+      .queryExecution.analyzed.toString
+    assert(plan.contains("current_timestamp") && plan.contains("sha2"), plan)
+    assert(!plan.contains("UDF"), plan)
+  }
 
   test("GETDATE / DATEADD / DATEDIFF shims resolve to built-ins") {
     val r = spark.sql(

@@ -34,13 +34,7 @@ class ExplainSpec extends AnyFunSuite with BeforeAndAfterAll {
       "retrieval_topk", "retrieval_topk_stored", "stream_heavy_hitters")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

@@ -15,12 +15,7 @@ class FrameworkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .createOrReplaceTempView("fw_nation")

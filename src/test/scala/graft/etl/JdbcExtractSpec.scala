@@ -18,11 +18,7 @@ class JdbcExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val url = s"jdbc:derby:$dbDir/testdb;create=true"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
     val conn = DriverManager.getConnection(url)
     val st = conn.createStatement()

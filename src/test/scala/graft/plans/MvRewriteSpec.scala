@@ -19,12 +19,7 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(2)
     spark.sparkContext.setLogLevel("ERROR")
     // An immutable base parquet file of our own (not the shared
     // testdata): group cols g1/g2, agg cols x (long) and v

@@ -30,12 +30,7 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val RecallFloor = 0.15
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

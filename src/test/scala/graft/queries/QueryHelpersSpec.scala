@@ -15,12 +15,7 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Session.build(2)
     spark.sparkContext.setLogLevel("ERROR")
   }
 
@@ -51,7 +46,6 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("DotF is bit-equal to the aggregate(zip_with) fold it replaced") {
     val s = spark
     import s.implicits._
-    DotF.register(spark)
     val rng = new scala.util.Random(42)
     val rows = (0 until 200).map { i =>
       (i.toLong, Seq.fill(64)(rng.nextFloat() * 2 - 1), Seq.fill(64)(rng.nextFloat() * 2 - 1))
@@ -114,7 +108,6 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Pq.encode(arr(0, 0, 0, 0), isFloat = false, cb, 2)
       .toSeq == Seq[Byte](0, 0))
     // SQL surface resolves, literal codebook, codegen over a real scan
-    graft.queries.Pq.register(spark)
     val emb = Tables.load(spark, sfDir, "embeddings")
     val cbLit = lit(Array.tabulate(8 * 16 * 8)(i => (i % 7).toDouble / 7.0))
     val planned = emb.select(
@@ -148,14 +141,12 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
     // null element -> null key
     assert(ZorderKey.interleave(
       new GenericArrayData(Array[Any](1L, null))) == null)
-    DotF.register(spark)
     assert(spark.sql("SELECT zorder_key(array(1L, 1L))")
       .collect().head.getLong(0) == 3L)
   }
 
   test("bpe_encode: known answers, null/typing, codegen span") {
     import graft.queries.BpeEncode
-    DotF.register(spark)
     // adjacent-run semantics: (a,a) on "aaaa" merges to [aa, aa]; the
     // scan continues PAST a merged pair, so "aaa" gives [aa, a]
     def enc(text: String, rules: String*): Seq[String] = {
@@ -453,7 +444,6 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("ShuffledHashJoin") && plan.contains("LeftSemi"),
       s"expected shuffled semi join:\n$plan")
     // bloom functions resolve standalone and agree with membership
-    DotF.register(spark)
     val probe = spark.sql(
       """WITH vals AS (SELECT CAST(id AS BIGINT) AS v FROM range(0, 1000))
         |SELECT
@@ -541,7 +531,6 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bounded_topk rejects a non-literal or non-integral k with a typed error") {
-    BoundedTopK.register(spark)
     val df = spark.range(5).selectExpr("CAST(id AS DOUBLE) AS s", "id")
     // non-foldable k (a column reference)
     val e1 = intercept[Exception](
