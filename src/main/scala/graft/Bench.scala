@@ -72,7 +72,7 @@ object Bench {
     * state vs GC pressure vs raw throughput) answers any future wall
     * gap from artifact fields alone. */
   private[graft] final case class JvmSnap(jitMs: Long, gcN: Long, gcMs: Long,
-                                   janinoN: Long, janinoMsTotal: Long)
+                                   janinoN: Long)
 
   private[graft] def jvmSnap(): JvmSnap = {
     import scala.jdk.CollectionConverters._
@@ -81,92 +81,46 @@ object Bench {
       comp.getTotalCompilationTime else -1L
     val gcs = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala
-    val hist = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME
-    // total Janino ms reconstructed as count×mean (the histogram keeps
-    // no running sum) — approximate but monotone enough for deltas
-    val jTot = math.round(hist.getSnapshot.getMean * hist.getCount)
     JvmSnap(jit, gcs.map(_.getCollectionCount).sum,
-      gcs.map(_.getCollectionTime).sum, hist.getCount, jTot)
+      gcs.map(_.getCollectionTime).sum,
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
   }
 
   private[graft] def jvmDeltaJson(a: JvmSnap, b: JvmSnap): String =
     s"""{"jit_ms":${b.jitMs - a.jitMs},"gc_n":${b.gcN - a.gcN},""" +
-      s""""gc_ms":${b.gcMs - a.gcMs},"janino_n":${b.janinoN - a.janinoN},""" +
-      s""""janino_ms":${b.janinoMsTotal - a.janinoMsTotal}}"""
+      s""""gc_ms":${b.gcMs - a.gcMs},"janino_n":${b.janinoN - a.janinoN}}"""
 
-  /** Per-query baselines from the last committed bench artifact (its
-    * `"queries"` object). Missing/corrupt file ⇒ no baselines — the
-    * run still produces numbers, just without contention defense. */
-  private[graft] def readBaseline(path: String): Map[String, Double] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File(path))
-      val q = node.get("queries")
-      if (q == null) Map.empty
-      else {
-        val it = q.fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) {
-          val e = it.next()
-          b += (e.getKey -> e.getValue.asDouble(-1.0))
-        }
-        b.result()
-      }
-    } catch { case _: Exception => Map.empty }
+  /** The full artifact's one path. Bench never writes the committed
+    * baseline `BENCH_LOCAL.json`: a person promotes a run with
+    * `cp BENCH_LAST.json BENCH_LOCAL.json` after reading
+    * `contended_run: false`. */
+  private[graft] val OutFile = "BENCH_LAST.json"
 
-  /** Contention self-defense. A machine-wide load spike inflates runs
-    * — consistently (low spread) OR in bursts that hit 2-of-3 warm
-    * runs (high spread with an inflated median). Both read exactly
-    * like a plan regression; the final driver artifact recorded such
-    * phantoms THREE rounds running, the third because the old defense
-    * only triggered on low spread. Contention only ever INFLATES, so
-    * a single quiet observation proves the plan: adjudicate on the
-    * MINIMUM of the warm runs.
-    *
-    * When the warm median is > `factor`× the committed baseline:
-    *   - warm min already under the threshold ⇒ the quietest run shows
-    *     the true plan time — return it and flag `contended`;
-    *   - every warm run inflated ⇒ re-run ONCE: a clean re-run is
-    *     contention (return it, flagged); a slow re-run is a real
-    *     regression — keep the best observed time, unflagged. */
-  private[graft] def adjudicate(median: Double, minWarm: Double,
-                                spread: Double,
-                                baseline: Option[Double],
-                                rerun: () => Double,
-                                factor: Double = 2.0): (Double, Boolean) =
-    baseline match {
-      case Some(b) if b > 0 && median > factor * b =>
-        if (minWarm < factor * b) (minWarm, true)
-        else {
-          val again = rerun()
-          if (again < factor * b) (again, true)
-          else (math.min(minWarm, math.min(median, again)), false)
-        }
-      case _ => (median, false)
-    }
+  /** A run is stamped contended when the box's 1-minute load average
+    * is above 1 at its start OR its end: a run that starts quiet can
+    * still end at load 8. The numbers are recorded as measured either
+    * way — the stamp only tells a reader not to compare them. */
+  private[graft] def contendedRun(loadStart: Double, loadEnd: Double): Boolean =
+    loadStart > 1.0 || loadEnd > 1.0
 
-  /** The one line the DRIVER parses. It captures only the tail of
-    * stdout (~2000 chars): the full per-query artifact is ~6 KB with
-    * ~100 queries, so its opening brace fell outside the window and
-    * two rounds' driver artifacts recorded `"parsed": null`. The last
-    * printed line is therefore a bounded COMPACT summary — rounded
-    * totals, the 25 slowest queries (the ones a regression reader
-    * needs), and a pointer to the full-precision file. */
+  /** The one line printed on stdout. A tail parser captures only ~2000
+    * chars, and the full per-query artifact is ~6 KB, so the line is a
+    * bounded COMPACT summary — rounded totals, the 25 slowest queries
+    * (the ones a regression reader needs), and a pointer to the
+    * full-precision file. */
   private[graft] def compactLine(medians: Seq[(String, Double)],
                                  total: Double, coldTotal: Double,
                                  minTotal: Double,
                                  warmRuns: Int, failed: Seq[String],
-                                 contended: Seq[String], loadStart: Double,
-                                 loadEnd: Double, ncpu: Int, sfDir: String,
-                                 outFile: String): String = {
+                                 loadStart: Double, loadEnd: Double,
+                                 ncpu: Int, sfDir: String): String = {
     def r3(d: Double): String = f"$d%.3f"
     def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val slowest = medians.filter(_._2 >= 0)
       .sortBy(-_._2).take(25)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec","warm_runs":$warmRuns,"queries":$slowest,"queries_shown":${math.min(25, medians.count(_._2 >= 0))},"queries_run":${medians.size},"full":"$outFile","cold_total":${r3(coldTotal)},"min_total":${r3(minTotal)},"failed":${arr(failed)},"contended":${arr(contended)},"contended_run":${loadStart > 1.0},"load_avg_start":${r3(loadStart)},"load_avg_end":${r3(loadEnd)},"cpus":$ncpu,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","warm_runs":$warmRuns,"queries":$slowest,"queries_shown":${math.min(25, medians.count(_._2 >= 0))},"queries_run":${medians.size},"full":"$OutFile","cold_total":${r3(coldTotal)},"min_total":${r3(minTotal)},"failed":${arr(failed)},"contended_run":${contendedRun(loadStart, loadEnd)},"load_avg_start":${r3(loadStart)},"load_avg_end":${r3(loadEnd)},"cpus":$ncpu,"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -174,22 +128,17 @@ object Bench {
     // Warm repetitions per query (median reported): multi-job queries
     // (dedup_clusters, the dag_* lifecycle builds) show 2-7x
     // run-to-run swing from GC/JIT/page-cache state, so a single
-    // sample cannot adjudicate a 2x regression. Median-of-3 plus the
-    // reported spread makes a real regression distinguishable from
-    // machine noise.
+    // sample cannot separate a 2x regression from noise; median-of-3
+    // plus the reported spread can.
     val warmRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    // Bench hygiene: stamp the 1-minute load average at start so a
-    // run taken on a busy machine is identifiable as such (a loaded
-    // box once recorded a misleading 1.8x "regression"). Recorded,
-    // not refused: the driver's run must still produce a number.
-    val loadAvg = java.lang.management.ManagementFactory
+    // The 1-minute load average at start and end is stamped into the
+    // artifact (see contendedRun) — recorded, never acted on.
+    def loadAvg(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val ncpu = Runtime.getRuntime.availableProcessors
-    if (loadAvg > ncpu * 0.5)
-      System.err.println(
-        f"[bench] WARNING: load average $loadAvg%.1f on $ncpu CPUs at start — " +
-          "timings may reflect machine contention, not the plans")
+    val loadStart = loadAvg()
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Session.build()
+    val ncpu = spark.sparkContext.defaultParallelism
     // Warm the session (hadoop FS, parquet reader, codegen paths) so
     // the alphabetically-first query's time reflects the query, not
     // one-time JVM initialization.
@@ -200,19 +149,17 @@ object Bench {
     // Each query is executed once COLD, then `warmRuns` more times,
     // cache cleared between runs so every run re-executes the full
     // plan (persists re-materialize — nothing is reused). The headline
-    // per-query number is the warm MEDIAN; cold and the warm spread
-    // (max - min) are reported alongside. The first execution of a
-    // query pays one-time costs unrelated to the plan — whole-stage
-    // codegen compilation of its expressions and first-touch parquet
-    // footer reads — which land on whichever query alphabetically
-    // first touches a table/expression shape (round 2's "dedup_exact
-    // 9.9x regression" was exactly this: first query to read
-    // documents.parquet + compile normText, 4.2 s cold vs 0.4 s warm
-    // in a fresh JVM). Warm-but-fresh runs measure the plan.
-    val baselines = readBaseline(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_LOCAL.json"))
+    // per-query number is the warm MEDIAN; cold, the warm min and the
+    // warm spread (max - min) are reported alongside, all as measured.
+    // The first execution of a query pays one-time costs unrelated to
+    // the plan — whole-stage codegen compilation of its expressions
+    // and first-touch parquet footer reads — which land on whichever
+    // query alphabetically first touches a table/expression shape
+    // (round 2's "dedup_exact 9.9x regression" was exactly this: first
+    // query to read documents.parquet + compile normText, 4.2 s cold
+    // vs 0.4 s warm in a fresh JVM). Warm-but-fresh runs measure the
+    // plan.
     var failed = List.empty[String]
-    var contended = List.empty[String]
     var censuses = List.empty[(String, String)]
     var jvmStats = List.empty[(String, String)]
     var stageStats = List.empty[(String, String)]
@@ -240,21 +187,7 @@ object Bench {
         // attributable from artifact fields
         "dedup_containment", "dedup_ngram_jaccard", "graph_pagerank"))
     val jvmRunStart = jvmSnap()
-    // Dev loop: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to the
-    // named queries (the driver never sets it — full runs unaffected).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name would otherwise run NOTHING and exit green with
-    // total=0 — reading "faster" where nothing executed
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       val wantStages = stageSet.contains(name)
       val stageRuns = scala.collection.mutable.ArrayBuffer.empty[Seq[StageRec]]
       def once(): Double = {
@@ -318,25 +251,10 @@ object Bench {
               s""""chunk_tasks":${cs.chunkTasks},"census_ms":${cs.censusMillis}}"""
           }.mkString("[", ",", "]"))
         val warms = Seq.fill(warmRuns)(once()).sorted
-        val median = warms(warms.size / 2)
-        val minWarm = warms.head
-        val spread = warms.last - warms.head
-        val (value, flagged) =
-          adjudicate(median, minWarm, spread, baselines.get(name), () => once())
-        // telemetry is snapshotted AFTER adjudication so a breach
-        // re-run — the single most diagnostically interesting run —
-        // lands in the stage and JVM fields too
         jvmStats ::= (name -> jvmDeltaJson(jvm0, jvmSnap()))
         if (wantStages) stageStats ::= (name -> stageJson(stageRuns.toSeq))
-        if (flagged) {
-          System.err.println(
-            f"[bench] $name: median $median%.2f s vs baseline " +
-              f"${baselines(name)}%.2f s cleared to $value%.2f s " +
-              "(quiet warm min or clean re-run) — " +
-              "flagging as contended, not a regression")
-          contended ::= name
-        }
-        name -> Times(cold, value, math.min(minWarm, value), spread)
+        name -> Times(cold, warms(warms.size / 2), warms.head,
+          warms.last - warms.head)
       }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -345,20 +263,13 @@ object Bench {
         name -> Times(-1.0, -1.0, -1.0, -1.0)
       }
     }
+    val loadEnd = loadAvg()
     def json(f: Times => Double): String = results
       .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val total = results.collect { case (_, t) if t.median >= 0 => t.median }.sum
     val coldTotal = results.collect { case (_, t) if t.cold >= 0 => t.cold }.sum
     val minTotal = results.collect { case (_, t) if t.minWarm >= 0 => t.minWarm }.sum
     val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contendedJson = contended.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val loadAvgEnd = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    // a run that STARTED on a loaded box measures the box, not the
-    // plans — stamp it at top level so no downstream comparison can
-    // miss it (r16's driver artifact overstated the engine 35% and
-    // was read as a regression until the judge re-benched quiet)
-    val contendedRun = loadAvg > 1.0
     def objOf(xs: List[(String, String)]): String = xs.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val censusJson = objOf(censuses)
@@ -372,62 +283,14 @@ object Bench {
       .getRuntimeMXBean.getUptime
     val jvmTotalJson = jvmDeltaJson(jvmRunStart, jvmRunEnd).dropRight(1) +
       s""","uptime_ms":$uptime,"jit_ms_since_jvm_start":${jvmRunEnd.jitMs}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm_runs":$warmRuns,"queries":${json(_.median)},"queries_cold":${json(_.cold)},"queries_min":${json(_.minWarm)},"queries_spread":${json(_.spread)},"census":$censusJson,"jvm":$jvmJson,"jvm_total":$jvmTotalJson,"stages":$stagesJson,"cold_total":$coldTotal,"min_total":$minTotal,"failed":$failedJson,"contended":$contendedJson,"contended_run":$contendedRun,"load_avg_start":$loadAvg,"load_avg_end":$loadAvgEnd,"cpus":$ncpu,"spark_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.sessionState.conf.numShufflePartitions},"sf":"$sfDir"}"""
-    // sbt wraps stdout (prefixes, epilogue), which can defeat a parser
-    // expecting a bare JSON line — the FULL result (every query's
-    // cold/median/spread at full precision) goes to a file.
-    // a SPARK_GRAFT_BENCH_ONLY dev run must never clobber the
-    // committed full baseline with a partial one — divert to a
-    // .partial file unless an output path was given explicitly.
-    // Same defense for a CONTENDED run: the committed BENCH_LOCAL.json
-    // is the cross-round baseline and must only ever come from a
-    // quiet box — a load>1 start diverts to a .contended file (an
-    // explicit SPARK_GRAFT_BENCH_OUT is honored; the stamp above
-    // still marks the artifact). Diverted files carry a TIMESTAMP so
-    // repeated runs coexist on disk instead of clobbering each other
-    // (the judge's r17 run destroyed the driver's contended artifact);
-    // both patterns are gitignored.
-    val stamp = java.time.format.DateTimeFormatter
-      .ofPattern("yyyyMMdd-HHmmss").format(java.time.LocalDateTime.now())
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) s"BENCH_LOCAL.partial.$stamp.json"
-      else if (contendedRun) s"BENCH_LOCAL.contended.$stamp.json"
-      else "BENCH_LOCAL.json")
-    if (contendedRun && !sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
-      System.err.println(
-        f"[bench] load average $loadAvg%.1f > 1 at start — writing to " +
-          s"$outFile, NOT the committed baseline")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm_runs":$warmRuns,"queries":${json(_.median)},"queries_cold":${json(_.cold)},"queries_min":${json(_.minWarm)},"queries_spread":${json(_.spread)},"census":$censusJson,"jvm":$jvmJson,"jvm_total":$jvmTotalJson,"stages":$stagesJson,"cold_total":$coldTotal,"min_total":$minTotal,"failed":$failedJson,"contended_run":${contendedRun(loadStart, loadEnd)},"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"cpus":$ncpu,"spark_parallelism":$ncpu,"shuffle_partitions":${spark.sessionState.conf.numShufflePartitions},"sf":"$sfDir"}"""
+    try java.nio.file.Files.write(java.nio.file.Paths.get(OutFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
-    // ALWAYS also land the full artifact at a FIXED path, independent
-    // of the contended/partial divert above: the driver's bench parse
-    // has been blind since r15 (sbt wraps stdout, the tail capture
-    // missed the JSON line) — a fixed-path file lets any consumer read
-    // the full result without scraping sbt output. The divert logic
-    // above still protects the committed BENCH_LOCAL.json baseline.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write BENCH_LAST.json: ${e.getMessage}") }
-    val compact = compactLine(results.map { case (k, v) => (k, v.median) },
-      total, coldTotal, minTotal, warmRuns, failed.sorted, contended.sorted,
-      loadAvg, loadAvgEnd, ncpu, sfDir, outFile)
-    println(compact)
+      System.err.println(s"[bench] could not write $OutFile: ${e.getMessage}") }
     spark.stop()
-    // Re-emit the compact line ONCE MORE, directly on fd 1: when run
-    // under sbt the println above is captured and re-printed under an
-    // "[info] " prefix, which has defeated the driver's tail parser
-    // for five straight rounds (BENCH_r15..r19 all "parsed": null).
-    // Writing to FileDescriptor.out bypasses any Java-level stdout
-    // redirection, so the last bench-owned stdout line is BARE JSON.
-    // (Under a plain `java` invocation the line simply appears twice —
-    // a parser reading the last JSON line sees identical content.)
-    try {
-      val fd = new java.io.FileOutputStream(java.io.FileDescriptor.out)
-      fd.write((compact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      fd.flush()
-    } catch { case _: Exception => () }
+    println(compactLine(results.map { case (k, v) => (k, v.median) },
+      total, coldTotal, minTotal, warmRuns, failed.sorted,
+      loadStart, loadEnd, ncpu, sfDir))
   }
 }

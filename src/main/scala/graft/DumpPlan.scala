@@ -15,14 +15,12 @@ object DumpPlan {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val selected = SparkEntry.select(Some(args(2)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val unknown = names.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    selected.foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(

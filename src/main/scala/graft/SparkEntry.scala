@@ -21,6 +21,17 @@ object SparkEntry {
       MvOps.queries ++ GraphOps.queries ++ graft.etl.DemoDag.queries ++
       graft.streaming.StreamOracles.queries
 
+  /** The entries named by a comma-separated list (`SPARK_GRAFT_ONLY`
+    * for Bench and Verify, DumpPlan's third argument), sorted by name;
+    * every entry when the list is absent or empty. An unknown name is
+    * refused: a typo would otherwise run nothing and exit green. */
+  def select(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val names = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.toSeq.filter { case (n, _) => names.isEmpty || names(n) }.sortBy(_._1)
+  }
+
   def oracleSql: Map[String, String] =
     SqlSurface.oracles ++ EtlOps.oracles ++ TextOps.oracles ++
       DedupOps.oracles ++ AnnOps.oracles ++ MultimodalOps.oracles ++

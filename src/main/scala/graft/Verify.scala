@@ -5,15 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional name filter for local iteration (comma-separated); unset,
+    // every entry is dumped.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Session.build()
     new java.io.File(outDir).mkdirs()
-    // Optional name filter for local iteration (comma-separated); the
-    // driver never sets it, so its runs always dump the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

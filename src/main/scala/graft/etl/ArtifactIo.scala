@@ -26,12 +26,6 @@ private[etl] object ArtifactIo {
     fsFor(p).exists(p)
   }
 
-  /** Immediate child file names of a directory (no recursion). */
-  def listNames(dir: String): Seq[String] = {
-    val p = new Path(dir)
-    fsFor(p).listStatus(p).toSeq.map(_.getPath.getName)
-  }
-
   /** All FILE paths under a directory, relative to it ('/'-joined) —
     * what a manifest over a partitioned (nested `col=value/`) export
     * needs. */

@@ -159,12 +159,6 @@ object DemoDag {
     new Warehouse(spark,
       Files.createTempDirectory("graft_wh_").toString, sfDir)
 
-  /** Per-relation timing dump (set SPARK_GRAFT_MONITOR=1). */
-  private def dumpMonitor(wh: Warehouse): Unit =
-    if (sys.env.get("SPARK_GRAFT_MONITOR").contains("1"))
-      wh.monitor.events.filter(_.event != "start").foreach(e =>
-        System.err.println(f"[monitor] ${e.target}%-28s ${e.step} ${e.event} ${e.elapsedSeconds}%.2fs rows=${e.rowcount.getOrElse(-1L)}"))
-
   /** The DAG ordering itself, hash-checked: identifier, total order,
     * parallelism level (D1). */
   def dagLoadOrder(spark: SparkSession, sfDir: String): DataFrame = {
@@ -218,7 +212,6 @@ object DemoDag {
     import spark.implicits._
     val wh = freshWarehouse(spark, sfDir)
     wh.loadWithStagingAndPublish(relations)
-    dumpMonitor(wh)
     spark.table("`rep`.`sales_by_segment`").orderBy($"c_mktsegment")
   }
 

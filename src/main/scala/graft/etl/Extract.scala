@@ -241,7 +241,7 @@ object Extract {
   def copyDataFrame(spark: SparkSession, sourceDir: String,
                     design: TableDesign): DataFrame = {
     val dir = s"$sourceDir/${design.name.identifier}"
-    manifestFormat(spark, dir) match {
+    manifestFormat(dir) match {
       case Some(format) =>
         val raw = StaticSource.read(spark, design, dir, format)
         applyTruncateColumns(design, raw)
@@ -268,7 +268,7 @@ object Extract {
                        design: TableDesign, maxError: Long): CopyOutcome = {
     val spark = wh.spark
     val dir = s"$sourceDir/${design.name.identifier}"
-    val format = manifestFormat(spark, dir).getOrElse("csv")
+    val format = manifestFormat(dir).getOrElse("csv")
     val qr = StaticSource.readWithQuarantine(spark, design, dir, format)
     try {
       val badCount = qr.bad.count()
@@ -295,21 +295,12 @@ object Extract {
 
   /** Sniff the COPY format from the manifest's entries (the manifest
     * is metadata-sized — one line per part file). None ⇒ no artifact. */
-  private[etl] def manifestFormat(spark: SparkSession, dir: String): Option[String] = {
-    val m = new org.apache.hadoop.fs.Path(s"$dir/manifest.json")
-    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(m)) None
+  private[etl] def manifestFormat(dir: String): Option[String] = {
+    val m = s"$dir/manifest.json"
+    if (!ArtifactIo.exists(m)) None
     else {
-      val in = fs.open(m)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
       val urls = """"url"\s*:\s*"([^"]+)"""".r
-        .findAllMatchIn(text).map(_.group(1)).toSeq
+        .findAllMatchIn(ArtifactIo.readText(m)).map(_.group(1)).toSeq
       Some(urls match {
         case us if us.exists(_.endsWith(".avro")) => "avro"
         case us if us.exists(u => u.endsWith(".json") || u.endsWith(".json.gz")) => "json"

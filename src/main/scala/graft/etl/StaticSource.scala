@@ -19,22 +19,20 @@ object StaticSource {
     writeManifest(prefix)
   }
 
-  /** S8: manifest-only re-extract — regenerate the manifest for data
-    * that is already in place. */
-  def extractManifestOnly(prefix: String): String = writeManifest(prefix)
-
   def requireSuccess(prefix: String): Unit =
     if (!ArtifactIo.exists(s"$prefix/_SUCCESS"))
       throw new MissingSuccessError(s"no _SUCCESS marker under $prefix")
 
-  /** S9: COPY-manifest JSON over the part files
-    * (`{"entries": [{"url": ..., "mandatory": true}]}`). Hadoop-FS
-    * I/O, so the prefix may live on any scheme, not just local
-    * disk. */
+  /** S8/S9: the one COPY-manifest writer, for extracts, static sources
+    * and unloads (`{"entries": [{"url": ..., "mandatory": true}]}`
+    * over the part files, extract/extractor.py:203-260). Recursive: a
+    * partitioned export nests its part files under `col=value/`.
+    * Hadoop-FS I/O, so the prefix may live on any scheme, not just
+    * local disk. */
   def writeManifest(prefix: String): String = {
     requireSuccess(prefix)
-    val entries = ArtifactIo.listNames(prefix)
-      .filter(_.startsWith("part-"))
+    val entries = ArtifactIo.listFilesRecursive(prefix)
+      .filter(_.split('/').last.startsWith("part-"))
       .sorted
       .map(n => s"""{"url": "$prefix/$n", "mandatory": true}""")
     val path = s"$prefix/manifest.json"

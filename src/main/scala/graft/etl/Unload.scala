@@ -63,7 +63,7 @@ object Unload {
       case "json" => part.json(destDir)
     }
     writeColumnsYaml(design, destDir, partitionBy, format)
-    writeManifest(destDir)
+    StaticSource.writeManifest(destDir)
     // rowcount from the write's own metrics — recounting would
     // re-execute the source query end to end
     capture.await(destDir).map(_.rowsWritten).getOrElse(out.count())
@@ -81,22 +81,6 @@ object Unload {
       yaml.append(s"partitioned_by: [${partitionBy.mkString(", ")}]\n")
     if (format != "csv") yaml.append(s"format: $format\n")
     ArtifactIo.writeText(s"$destDir/columns.yaml", yaml.toString)
-  }
-
-  /** Redshift COPY manifest shape (extract/extractor.py:203-260):
-    * `{"entries": [{"url": ..., "mandatory": true}]}` over part
-    * files; requires the `_SUCCESS` marker Spark wrote. Hadoop-FS
-    * I/O — the unload destination may be on any scheme. Recursive:
-    * a partitioned unload nests part files under `col=value/`. */
-  private def writeManifest(destDir: String): Unit = {
-    require(ArtifactIo.exists(s"$destDir/_SUCCESS"),
-      s"no _SUCCESS marker in $destDir")
-    val entries = ArtifactIo.listFilesRecursive(destDir)
-      .filter(_.split('/').last.startsWith("part-"))
-      .sorted
-      .map(n => s"""{"url": "$destDir/$n", "mandatory": true}""")
-    ArtifactIo.writeText(s"$destDir/manifest.json",
-      s"""{"entries": [${entries.mkString(", ")}]}""")
   }
 
   /** Reload-ability (S13): read the unloaded CSV back with the

@@ -107,14 +107,6 @@ object Validate {
       s"columns differ: unloaded=${a.mkString(",")} reload=${b.mkString(",")}"))
   }
 
-  // ------------------------------------------------------------- C8
-  /** Select-permission probe (validate.py:327-337): `SELECT 1 ...
-    * WHERE FALSE` — here a catalog resolution + zero-row scan. */
-  def selectProbe(spark: SparkSession, table: TableName): Seq[Finding] =
-    try { spark.table(table.quoted).filter("false").count(); Seq.empty }
-    catch { case e: Exception =>
-      Seq(Finding(table.identifier, "select_probe", e.getMessage)) }
-
   // ------------------------------------------------------------- C9
   /** Execution-order validation (validate.py:525-540): the whole DAG
     * must order without cycles. */

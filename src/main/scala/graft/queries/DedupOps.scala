@@ -726,15 +726,12 @@ object DedupOps {
     // this count and again when the repartitioned edge table
     // materializes (measured 2× the whole candidate stage on the
     // fuzzy-ER graph). Graph-sized, freed before return.
-    val tP = System.nanoTime()
     val pairsCached = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     val rawEdges = pairsCached.union(
       pairsCached.select($"d2".as("d1"), $"d1".as("d2")))
     val parts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions,
       (rawEdges.count() / 100000L + 1).toInt))
-    if (sys.env.contains("GRAFT_DEBUG"))
-      println(f"[clusters] edge count ${(System.nanoTime() - tP) / 1e9}%.2fs parts=$parts")
     val edges = rawEdges.repartition(parts, $"d2")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Lineage truncation: every round references `labels` TWICE
@@ -794,7 +791,6 @@ object DedupOps {
     try {
     while (!converged && round < MaxClusterRounds) {
       round += 1
-      val t0 = System.nanoTime()
       // edges and labels are co-partitioned on (d2 / node, parts) —
       // the big join is exchange-free every round. The groupBy keeps
       // its map-side partial aggregation; only the ≤|nodes| aggregated
@@ -831,8 +827,6 @@ object DedupOps {
       val next = truncate(next0)
       converged = next.filter($"improved").count() == 0L
       labels = next
-      if (sys.env.contains("GRAFT_DEBUG"))
-        println(f"[clusters] round $round ${(System.nanoTime() - t0) / 1e9}%.2fs converged=$converged")
     }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)

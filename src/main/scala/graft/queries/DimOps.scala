@@ -162,21 +162,6 @@ object DimOps {
       .agg(sum(col("n_orders")).as("n_orders"),
         sum(col("sum_dec")).cast("double").as("sum_price"))
 
-  /** One batch SCD2 maintenance step against the STORED dimension —
-    * the batch twin of the streaming form
-    * ([[graft.streaming.EventStreams]]'s scd2Stream): read the
-    * published dim, [[scd2Upsert]] the updates, write-and-re-point.
-    * Replaying the same updates converges (re-delivered attributes
-    * change nothing in scd2Upsert), so an at-least-once orchestrator
-    * is safe. */
-  def scd2Apply(wh: graft.etl.Warehouse, dim: graft.etl.TableName,
-                updates: DataFrame, key: String, attrs: Seq[String]): Unit = {
-    wh.spark.catalog.refreshTable(dim.quoted)
-    wh.writeTable(dim,
-      scd2Upsert(wh.spark.table(dim.quoted), updates, key, attrs))
-    ()
-  }
-
   /** Materialized-rollup maintenance END-TO-END through the warehouse
     * lifecycle: seed the stored rollup from the pre-batch corpus
     * slice ([[rollupBuild]] — staging + pointer swap), extend it with

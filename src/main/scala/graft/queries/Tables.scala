@@ -102,7 +102,7 @@ object Tables {
         case _ => true
       }
       val cols = df.schema.fields.filter(f => hashable(f.dataType))
-        .map(f => df.col(f.name))
+        .map(f => df.col("`" + f.name.replace("`", "``") + "`"))
       if (cols.isEmpty) df.repartition(target)
       else df.repartition(target, cols.toSeq: _*)
     }

@@ -214,6 +214,21 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.schema.fieldNames.toSeq == Seq("id", "name"))
   }
 
+  test("S9: the manifest of a partitioned prefix lists its nested part files") {
+    val prefix = Files.createTempDirectory("graft_static_part_").toString
+    for (v <- Seq("1", "2")) {
+      Files.createDirectories(Paths.get(prefix, s"col=$v"))
+      Files.write(Paths.get(prefix, s"col=$v", "part-00000.csv"),
+        s"$v\n".getBytes(StandardCharsets.UTF_8))
+    }
+    Files.write(Paths.get(prefix, "_SUCCESS"), Array.emptyByteArray)
+    val manifest = StaticSource.extractStatic(prefix)
+    val text = new String(Files.readAllBytes(Paths.get(manifest)), StandardCharsets.UTF_8)
+    val urls = """"url": "([^"]+)"""".r.findAllMatchIn(text).map(_.group(1)).toSeq
+    assert(urls == Seq(s"$prefix/col=1/part-00000.csv", s"$prefix/col=2/part-00000.csv"),
+      text)
+  }
+
   test("T6: update refreshes selected tables + transformations in place") {
     val wh = new Warehouse(spark,
       Files.createTempDirectory("graft_upd_").toString, sfDir)

@@ -745,6 +745,18 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"same-design restore keeps the corroborated bucketing: $meta")
   }
 
+  test("writeTable's auto layout keeps a top-level column with a dot in its name") {
+    val s = spark
+    import s.implicits._
+    val wh = freshWarehouse()
+    val t = TableName.parse("rep.dotted")
+    // under-split input, so the write takes the spreadWide path
+    assert(wh.writeTable(t, Seq((1, "a"), (2, "b")).toDF("a.b", "c")) == 2L)
+    val back = spark.table(t.quoted)
+    assert(back.columns.toSeq == Seq("a.b", "c"))
+    assert(back.select("`a.b`").as[Int].collect().sorted.toSeq == Seq(1, 2))
+  }
+
   test("restore of a PRE-distribution build registers plain, not CLUSTERED BY") {
     val s = spark
     import s.implicits._
