@@ -1,61 +1,25 @@
 package graft
+
+import graft.etl.Telemetry
+
 object Bench {
   private final case class Times(cold: Double, median: Double,
                                  minWarm: Double, spread: Double)
 
   // ------------------------------------------- per-stage telemetry
-  /** One completed Spark stage of an instrumented entry: where the
-    * wall time of a run actually went. Stage names are action
-    * callsites (Spark SQL names every stage after the collect/count
-    * that triggered the job), so the ROLE of a stage is read off
-    * tasks/records, not the name: the variant-explode map stage reads
-    * file records, the join+rescore stage reads shuffle records, the
-    * final sort reads the surviving pairs. */
-  private[graft] final case class StageRec(id: Int, wallMs: Long, tasks: Int,
-                                    runMs: Long, records: Long,
-                                    maxTaskMs: Long)
-
-  /** Collects per-stage aggregates from the listener bus. Task-end
-    * events carry the metrics (StageInfo.taskMetrics is not reliably
-    * aggregated at stage completion); stage-completed events carry
-    * submission/completion wall times. Events post on the single bus
-    * thread, but reads race with it — everything synchronized. */
-  private final class StageLog extends org.apache.spark.scheduler.SparkListener {
-    private val runMs = scala.collection.mutable.Map.empty[Int, Long]
-    private val recs = scala.collection.mutable.Map.empty[Int, Long]
-    private val maxTask = scala.collection.mutable.Map.empty[Int, Long]
-    private val nTasks = scala.collection.mutable.Map.empty[Int, Int]
-    private val wall = scala.collection.mutable.Map.empty[Int, Long]
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null && t.taskInfo.successful) synchronized {
-        val sid = t.stageId
-        nTasks(sid) = nTasks.getOrElse(sid, 0) + 1
-        maxTask(sid) = math.max(maxTask.getOrElse(sid, 0L), t.taskInfo.duration)
-        if (t.taskMetrics != null) {
-          runMs(sid) = runMs.getOrElse(sid, 0L) + t.taskMetrics.executorRunTime
-          recs(sid) = recs.getOrElse(sid, 0L) +
-            t.taskMetrics.inputMetrics.recordsRead +
-            t.taskMetrics.shuffleReadMetrics.recordsRead
-        }
-      }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      synchronized {
-        val si = e.stageInfo
-        wall(si.stageId) = (for {
-          s <- si.submissionTime; c <- si.completionTime
-        } yield c - s).getOrElse(-1L)
-      }
-    def drain(): Seq[StageRec] = synchronized {
-      (wall.keySet ++ nTasks.keySet).toSeq.sorted.map { sid =>
-        StageRec(sid, wall.getOrElse(sid, -1L), nTasks.getOrElse(sid, 0),
-          runMs.getOrElse(sid, 0L), recs.getOrElse(sid, 0L),
-          maxTask.getOrElse(sid, 0L))
-      }
+  /** One timed run of `action` under its own job tag. With `stages`,
+    * also the run's per-stage records, read after a drain of the
+    * listener bus and never inside the timing. */
+  private[graft] def timed(spark: org.apache.spark.sql.SparkSession, stages: Boolean)(
+      action: => Unit): (Double, Seq[Telemetry.StageRec]) =
+    Telemetry.scoped(spark) { scope =>
+      val t0 = System.nanoTime()
+      action
+      val dt = (System.nanoTime() - t0) / 1e9
+      (dt, if (stages) scope.profile().map(_.stages).getOrElse(Nil) else Nil)
     }
-  }
 
-  private[graft] def stageJson(runs: Seq[Seq[StageRec]]): String =
+  private[graft] def stageJson(runs: Seq[Seq[Telemetry.StageRec]]): String =
     runs.map(_.map(s =>
         s"""{"id":${s.id},"wall_ms":${s.wallMs},"tasks":${s.tasks},""" +
           s""""run_ms":${s.runMs},"records":${s.records},""" +
@@ -63,14 +27,9 @@ object Bench {
       .mkString("[", ",", "]")).mkString("[", ",", "]")
 
   // ------------------------------------------------- JVM counters
-  /** JIT/GC/codegen state snapshot. Built (with the stage log) to
-    * localize the four-round fuzzy_join_names2 judge-vs-builder wall
-    * band — which the combined telemetry then root-caused in ONE slow
-    * run (a local[4] env-var fallback: same census, same records,
-    * 4 tasks instead of 32 — see the SPARK_GRAFT_CPUS default below).
-    * Kept because the same three-way discrimination (compilation
-    * state vs GC pressure vs raw throughput) answers any future wall
-    * gap from artifact fields alone. */
+  /** JIT/GC/codegen state snapshot: tells compilation state, GC
+    * pressure and raw throughput apart in a wall gap, from artifact
+    * fields alone. */
   private[graft] final case class JvmSnap(jitMs: Long, gcN: Long, gcMs: Long,
                                    janinoN: Long)
 
@@ -164,63 +123,28 @@ object Bench {
     var jvmStats = List.empty[(String, String)]
     var stageStats = List.empty[(String, String)]
     // Entries that get PER-STAGE telemetry on every run (cold + each
-    // warm): the fuzzy tier (the r15-r18 judge-vs-builder wall band,
-    // root-caused from exactly these fields), the top lifecycle entry,
-    // and the IVF/stored-retrieval family (largest remaining
-    // judge/baseline ratio, 1.57x on ann_ivf_topk in r18 — sub-second
-    // absolute, but the next gap should be attributable from artifact
-    // fields instead of costing a round). Override with
-    // SPARK_GRAFT_BENCH_STAGES.
+    // warm): the fuzzy tier, the top lifecycle entry, the IVF/stored-
+    // retrieval family, the streaming replays and the r19 watch items.
+    // Override with SPARK_GRAFT_BENCH_STAGES.
     val stageSet: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_STAGES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set("fuzzy_join_names", "fuzzy_join_names2",
         "er_golden_records", "dag_final_table",
         "ann_ivf_topk", "ann_ivf_topk_sq8", "ann_ivf_topk_pq",
         "ann_ivf_topk_stored", "retrieval_topk_stored",
-        // the streaming replays are the newest and most
-        // micro-batch-machinery-bound entries — keep their stage
-        // shape attributable from artifact fields (the r15-r18 lesson)
         "stream_incremental_dedup", "stream_heavy_hitters",
         "stream_scd2_dim",
-        // r19 verdict watch items: the containment/jaccard twin gap
-        // and the one driver-contended pagerank reading — keep both
-        // attributable from artifact fields
         "dedup_containment", "dedup_ngram_jaccard", "graph_pagerank"))
     val jvmRunStart = jvmSnap()
     val results = selected.map { case (name, fn) =>
       val wantStages = stageSet.contains(name)
-      val stageRuns = scala.collection.mutable.ArrayBuffer.empty[Seq[StageRec]]
+      val stageRuns = scala.collection.mutable.ArrayBuffer.empty[Seq[Telemetry.StageRec]]
       def once(): Double = {
-        val log = if (wantStages) Some(new StageLog) else None
-        log.foreach(spark.sparkContext.addSparkListener)
         try {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          log.foreach { l =>
-            // listener bus is async; poll until the snapshot is STABLE
-            // across two consecutive reads (bounded at ~2 s) instead of
-            // one fixed nap — on a loaded box late task-end events
-            // landed after a 200 ms sleep, leaving wall_ms=-1 or
-            // undercounted tasks in exactly the contended runs this
-            // telemetry exists to diagnose. Always after dt is taken —
-            // never in the timing.
-            var prev = l.drain()
-            var tries = 0
-            Thread.sleep(100)
-            var cur = l.drain()
-            while (cur != prev && tries < 19) {
-              prev = cur; tries += 1; Thread.sleep(100); cur = l.drain()
-            }
-            stageRuns += cur
-          }
+          val (dt, stages) = timed(spark, wantStages) { fn(spark, sfDir).count(); () }
+          if (wantStages) stageRuns += stages
           dt
         } finally {
-          // also on the throw path: a failed run must not leave its
-          // listener accumulating every later entry's events
-          log.foreach(l =>
-            try spark.sparkContext.removeSparkListener(l)
-            catch { case _: Exception => () })
           // Queries persist() intermediates; drop them so nothing is
           // reused across runs or accumulates across the loop.
           spark.catalog.clearCache()

@@ -34,7 +34,8 @@ import org.apache.spark.storage.StorageLevel
   * a cleanup for the sorted frame itself (the prior shape leaked one
   * persisted frame per identity build for the session's lifetime).
   *
-  * The result is bit-identical to `row_number() OVER (ORDER BY keys)`.
+  * The result is bit-identical to `row_number() OVER (ORDER BY keys)`,
+  * so it is independent of input partitioning only for a total order.
   */
 object Identity {
 
@@ -63,7 +64,7 @@ object Identity {
     // largest serial stage of the dag_final_table lifecycle). No-op
     // whenever the plan already splits ≥ cores — at warehouse scale
     // this inserts nothing. Numbering is a row_number over the
-    // declared ORDER, so input partitioning cannot change the result.
+    // declared ORDER; rows tied on it are numbered in arrival order.
     // Persist only when the frame is not already cached: persist() is
     // a no-op on an already-cached plan, so the unconditional
     // persist/unpersist pair would silently drop a CALLER's cache when

@@ -1,8 +1,5 @@
 package graft.etl
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 
 /** Query monitoring rules — Redshift WLM's QMR surface plus
@@ -11,8 +8,9 @@ import org.apache.spark.sql.DataFrame
   * every session; dialect/redshift.py:536-545 SETs it). Redshift
   * evaluates rules like `query_execution_time > N` or
   * `scan_row_count > N` against running queries and aborts or logs;
-  * here a watchdog thread samples the same two metrics for a job
-  * group and `cancelJobGroup`s on an abort-rule breach:
+  * here a watchdog thread samples the same two metrics for the
+  * query's [[Telemetry.Scope]] (one job tag) and cancels the tag's
+  * jobs on an abort-rule breach:
   *
   *   - elapsed wall time — exact;
   *   - scan rows — accumulated from per-task input metrics as tasks
@@ -24,9 +22,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Scale shape: listener work is O(1) per task end; the watchdog is
   * one driver thread per guarded query. Cancellation propagates
-  * through the job group with interruptOnCancel, so a runaway
-  * 100 TB scan stops within a task boundary instead of holding the
-  * cluster. */
+  * through the job tag with interruptOnCancel, so a runaway 100 TB
+  * scan stops within a task boundary instead of holding the cluster.
+  * A tag, unlike a job group, leaves the caller's own group alone. */
 object Qmr {
 
   sealed trait Action
@@ -91,36 +89,6 @@ object Qmr {
     timeout ++ declared
   }
 
-  private final class GroupMetrics(group: String) extends SparkListener {
-    val scanRows = new AtomicLong(0L)
-    private val stages =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-      if (group == jobStart.properties.getProperty("spark.jobGroup.id"))
-        jobStart.stageIds.foreach(id => { stages.add(id); () })
-    override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
-      if (stages.contains(taskEnd.stageId) && taskEnd.taskMetrics != null) {
-        scanRows.addAndGet(taskEnd.taskMetrics.inputMetrics.recordsRead)
-        ()
-      }
-  }
-
-  /** Listener events deliver asynchronously on the bus — final
-    * task-end events may still be in flight when the action returns.
-    * Poll until the counter is stable across one interval (or the
-    * bounded wait elapses) so post-completion rules see final totals.
-    * (`sc.listenerBus.waitUntilEmpty` is private[spark].) */
-  private def awaitQuiesce(counter: AtomicLong, maxWaitMs: Long = 2000L): Unit = {
-    val deadline = System.currentTimeMillis() + maxWaitMs
-    var prev = -1L
-    var cur = counter.get()
-    while (prev != cur && System.currentTimeMillis() < deadline) {
-      Thread.sleep(50)
-      prev = cur
-      cur = counter.get()
-    }
-  }
-
   /** Predicted scan rows from CBO statistics, defined only when every
     * scan has an estimate (ANALYZEd tables under
     * `spark.sql.cbo.enabled`). Redshift's WLM likewise rejects on
@@ -129,14 +97,9 @@ object Qmr {
     * The estimate is taken per SCAN UNIT — the top of the unary
     * Filter/Project chain directly over each leaf — so a SELECTIVE
     * query over a large ANALYZEd table is costed at CBO's post-filter
-    * estimate, not the raw table cardinality. (The previous
-    * implementation summed raw leaf row counts, which refused exactly
-    * the queries CBO could prove cheap — a false refusal, since the
-    * pre-launch gate exists to stop provably-oversized scans, and
-    * "provably" must account for the filters the optimizer already
-    * costed.) A chain top without its own estimate (no column stats
-    * for the predicate) falls back to the leaf's raw count — the
-    * conservative prior behavior. */
+    * estimate, not the raw table cardinality. A chain top without its
+    * own estimate (no column stats for the predicate) falls back to
+    * the leaf's raw count. */
   private[etl] def estimatedScanRows(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
     def isChainOverLeaf(p: LogicalPlan): Boolean = p match {
@@ -157,7 +120,7 @@ object Qmr {
   }
 
   /** Run `action` on `df` under `rules`. Abort rules breach ⇒ the
-    * job group is cancelled and [[Violation]] is thrown; log rules
+    * query's jobs are cancelled and [[Violation]] is thrown; log rules
     * breach ⇒ `monitor` records a `qmr_violation` event and the
     * result is returned. When CBO statistics predict the scan alone
     * already exceeds an abort rule's `maxScanRows`, the query is
@@ -188,60 +151,52 @@ object Qmr {
         }
       }
     }
-    val group = s"qmr-${java.util.UUID.randomUUID().toString.take(8)}"
-    val metrics = new GroupMetrics(group)
-    sc.addSparkListener(metrics)
-    val t0 = System.nanoTime()
-    @volatile var breach: Option[Violation] = None
-    val abortRules = rules.filter(_.action == Abort)
-    val watchdog = new Thread(() => {
-      try {
-        while (breach.isEmpty && !Thread.currentThread().isInterrupted) {
+    val interruptKey = "spark.job.interruptOnCancel"
+    val callerInterrupt = sc.getLocalProperty(interruptKey)
+    Telemetry.scoped(spark) { scope =>
+      val t0 = System.nanoTime()
+      @volatile var breach: Option[Violation] = None
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val abortRules = rules.filter(_.action == Abort)
+      // samples the rules every 25 ms until the action returns
+      val watchdog = new Thread(() => {
+        while (breach.isEmpty &&
+            !done.await(25, java.util.concurrent.TimeUnit.MILLISECONDS)) {
           val elapsed = (System.nanoTime() - t0) / 1e9
-          val rows = metrics.scanRows.get()
+          val rows = scope.scanRows
           abortRules.find(r =>
             r.maxSeconds.exists(elapsed > _) ||
               r.maxScanRows.exists(rows > _)).foreach { r =>
             breach = Some(Violation(r, elapsed, rows))
-            sc.cancelJobGroup(group)
+            sc.cancelJobsWithTag(scope.tag)
           }
-          Thread.sleep(25)
         }
-      } catch { case _: InterruptedException => () }
-    }, s"$group-watchdog")
-    watchdog.setDaemon(true)
-    sc.setJobGroup(group, s"qmr-guarded query", interruptOnCancel = true)
-    watchdog.start()
-    try {
-      val out =
-        try action(df)
-        catch {
-          case e: Throwable =>
-            breach match {
-              case Some(v) => throw v
-              case None => throw e
-            }
+      }, s"${scope.tag}-watchdog")
+      watchdog.setDaemon(true)
+      sc.setInterruptOnCancel(true)
+      watchdog.start()
+      try {
+        val out =
+          try action(df)
+          catch { case e: Throwable => throw breach.getOrElse(e) }
+        // post-completion sweep: log rules see final totals — the
+        // drained profile includes the last tasks' rows
+        val logRules = rules.filter(_.action == Log)
+        val rows = if (!logRules.exists(_.maxScanRows.isDefined)) scope.scanRows
+          else scope.profile().fold(scope.scanRows)(_.scanRows)
+        val elapsed = (System.nanoTime() - t0) / 1e9
+        logRules.foreach { r =>
+          if (r.maxSeconds.exists(elapsed > _) || r.maxScanRows.exists(rows > _))
+            monitor.record("query", "qmr", "qmr_violation", elapsed,
+              rowcount = Some(rows), message = Some(r.name))
         }
-      // post-completion sweep: log rules see final totals — wait for
-      // in-flight task-end events to drain first, or the last tasks'
-      // rows are missed
-      val logRules = rules.filter(_.action == Log)
-      if (logRules.exists(_.maxScanRows.isDefined))
-        awaitQuiesce(metrics.scanRows)
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val rows = metrics.scanRows.get()
-      logRules.foreach { r =>
-        if (r.maxSeconds.exists(elapsed > _) || r.maxScanRows.exists(rows > _))
-          monitor.record("query", "qmr", "qmr_violation", elapsed,
-            rowcount = Some(rows), message = Some(r.name))
+        // a breach can race a query that finishes in the same tick —
+        // completed work wins, the abort is moot
+        out
+      } finally {
+        done.countDown()
+        sc.setLocalProperty(interruptKey, callerInterrupt)
       }
-      // a breach can race a query that finishes in the same tick —
-      // completed work wins, the abort is moot
-      out
-    } finally {
-      watchdog.interrupt()
-      sc.clearJobGroup()
-      sc.removeSparkListener(metrics)
     }
   }
 }

@@ -41,8 +41,6 @@ object Unload {
     require(partitionBy.forall(cols.contains),
       s"partition columns ${partitionBy.mkString(",")} must be unloaded columns")
     val out = df.selectExpr(cols: _*)
-    val capture = LoadMetricsCapture.install(df.sparkSession)
-    capture.discard(destDir)
     val writer0 = out.write.mode("overwrite")
     val writer = format match {
       case "parquet" => writer0
@@ -57,16 +55,18 @@ object Unload {
     }
     val part =
       if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)
-    format match {
-      case "csv" => part.csv(destDir)
-      case "parquet" => part.parquet(destDir)
-      case "json" => part.json(destDir)
+    val metrics = Telemetry.measureWrite(df.sparkSession, destDir) {
+      format match {
+        case "csv" => part.csv(destDir)
+        case "parquet" => part.parquet(destDir)
+        case "json" => part.json(destDir)
+      }
     }
     writeColumnsYaml(design, destDir, partitionBy, format)
     StaticSource.writeManifest(destDir)
     // rowcount from the write's own metrics — recounting would
     // re-execute the source query end to end
-    capture.await(destDir).map(_.rowsWritten).getOrElse(out.count())
+    metrics.map(_.rowsWritten).getOrElse(out.count())
   }
 
   private def writeColumnsYaml(design: TableDesign, destDir: String,

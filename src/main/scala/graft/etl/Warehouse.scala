@@ -3,6 +3,7 @@ package graft.etl
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 
 final class FailedConstraintError(msg: String) extends RuntimeException(msg)
@@ -243,10 +244,14 @@ final class Warehouse(
     var df = spark.sql(q)
     var cleanup: () => Unit = () => ()
     design.identityColumn.foreach { idCol =>
-      val orderCols =
-        (if (design.sortKeys.nonEmpty) design.sortKeys
-         else design.activeColumns.filterNot(_.identity).map(_.name))
-          .map(col)
+      // every other orderable column breaks sort-key ties, which
+      // would otherwise be numbered in input-partition order
+      val declared = design.sortKeys.map(_.toLowerCase).toSet
+      val tiebreak = design.activeColumns.filterNot(_.identity).map(_.name)
+        .filterNot(c => declared(c.toLowerCase))
+        .filter(c => df.schema.find(_.name.equalsIgnoreCase(c))
+          .exists(f => RowOrdering.isOrderable(f.dataType)))
+      val orderCols = (design.sortKeys ++ tiebreak).map(col)
       val (keyed, cl) = Identity.withSurrogateKeyManaged(df, idCol.name, orderCols)
       df = keyed
       cleanup = cl
@@ -288,99 +293,97 @@ final class Warehouse(
   def writeTable(target: TableName, df: DataFrame,
                  design: Option[TableDesign] = None): Long = {
     val loc = dataLocation(target, buildCounter.incrementAndGet())
-    val capture = LoadMetricsCapture.install(spark)   // before the action
-    capture.discard(loc)   // a late delivery from a prior run must not leak in
-    val distKeys = design.flatMap(_.distribution).getOrElse(Seq.empty)
-    if (distKeys.nonEmpty) {
-      ensureDatabase(target.schema)
-      // the bucketed path must DROP before saveAsTable; if the write
-      // then fails (executor OOM, source error) the relation would be
-      // gone from the catalog while its old data and pointer are
-      // intact — re-register the previous build (as an unbucketed
-      // external table: data readable, bucket metadata re-established
-      // by the next successful build) before rethrowing
-      val prevLoc = locationOf(target).orElse(readPointer(target))
-      spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
-      try {
-        val w0 = df.write.mode("overwrite").format("parquet")
-          .option("path", loc)
-          .bucketBy(BucketCount, distKeys.head, distKeys.tail: _*)
-        val sorted = design.map(_.sortKeys).filter(_.nonEmpty)
-          .map(sk => w0.sortBy(sk.head, sk.tail: _*)).getOrElse(w0)
-        sorted.saveAsTable(target.quoted)
-      } catch {
-        case e: Throwable =>
-          // registerAt verifies the declared layout against the old
-          // build's files: a previous build that predates the
-          // distribution keys re-registers PLAIN (CLUSTERED BY over
-          // unbucketed files would let bucketed joins skip their
-          // required shuffle — silently wrong results), while a
-          // genuinely bucketed previous build keeps its elision
-          try prevLoc.foreach(p => registerAt(target, p, design))
-          catch { case re: Throwable => e.addSuppressed(re) }
-          throw e
+    // S11 load diagnostics for the monitor's finish event (keyed by
+    // output location, so parallel D5 builds never cross-read)
+    val metrics = Telemetry.measureWrite(spark, loc) {
+      val distKeys = design.flatMap(_.distribution).getOrElse(Seq.empty)
+      if (distKeys.nonEmpty) {
+        ensureDatabase(target.schema)
+        // the bucketed path must DROP before saveAsTable; if the write
+        // then fails (executor OOM, source error) the relation would be
+        // gone from the catalog while its old data and pointer are
+        // intact — re-register the previous build (as an unbucketed
+        // external table: data readable, bucket metadata re-established
+        // by the next successful build) before rethrowing
+        val prevLoc = locationOf(target).orElse(readPointer(target))
+        spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
+        try {
+          val w0 = df.write.mode("overwrite").format("parquet")
+            .option("path", loc)
+            .bucketBy(BucketCount, distKeys.head, distKeys.tail: _*)
+          val sorted = design.map(_.sortKeys).filter(_.nonEmpty)
+            .map(sk => w0.sortBy(sk.head, sk.tail: _*)).getOrElse(w0)
+          sorted.saveAsTable(target.quoted)
+        } catch {
+          case e: Throwable =>
+            // registerAt verifies the declared layout against the old
+            // build's files: a previous build that predates the
+            // distribution keys re-registers PLAIN (CLUSTERED BY over
+            // unbucketed files would let bucketed joins skip their
+            // required shuffle — silently wrong results), while a
+            // genuinely bucketed previous build keeps its elision
+            try prevLoc.foreach(p => registerAt(target, p, design))
+            catch { case re: Throwable => e.addSuppressed(re) }
+            throw e
+        }
+        writePointer(target, loc)
+      } else {
+        val partCols = design.map(_.partitionBy).getOrElse(Seq.empty)
+        val zCols = design.map(_.interleavedSort).getOrElse(Seq.empty)
+        val style = design.flatMap(_.distStyle)
+        if (partCols.nonEmpty)
+          // hive-style partition dirs: the scan prunes whole directories
+          // for predicates on the partition key — the 100 TB layout for
+          // time/source-sliced tables (beyond-reference; Redshift has no
+          // partitions, SURVEY §1.4 maps only distkey/sortkey)
+          df.write.mode("overwrite").partitionBy(partCols: _*).parquet(loc)
+        else if (zCols.nonEmpty)
+          // INTERLEAVED SORTKEY (table_design.schema:206, dialect/
+          // redshift.py:136-137) → Z-order clustered write: range-
+          // partition + sort by the Morton key so EVERY interleaved
+          // column gets tight per-file min/max ranges and filters on
+          // any of them prune files/row-groups — Redshift's interleaved
+          // "equal weight to each sort column" property, expressed in
+          // parquet statistics instead of zone maps.
+          zorderClustered(df, zCols).write.mode("overwrite").parquet(loc)
+        else if (style.contains("even"))
+          // DISTSTYLE EVEN → round-robin repartition: rows spread
+          // uniformly across output files regardless of any skewed
+          // upstream partitioning, the Redshift even-slices property.
+          // (A skew-free layout is what EVEN buys at 100 TB: every
+          // downstream scan task gets the same bytes.)
+          df.repartition(spark.sparkContext.defaultParallelism)
+            .write.mode("overwrite").parquet(loc)
+        else if (style.contains("all"))
+          // DISTSTYLE ALL → replicate-to-every-node is Spark's
+          // broadcast: land the table as ONE compact file so
+          // size-based auto-broadcast (or an explicit hint) replicates
+          // it to every executor at join time — the Redshift
+          // copy-on-every-slice property without a shuffle.
+          // WarehouseSpec pins the join plan.
+          df.coalesce(1).write.mode("overwrite").parquet(loc)
+        else {
+          // "auto": engine default. Parallelize the write when the plan
+          // under-splits (single-split local source scans made every
+          // COPY-stand-in write a one-task stage — 0.9 s serial per
+          // source on the lifecycle's critical path); no-op at scale,
+          // and never applied over a deliberate sort order (identity
+          // builds arrive range-partitioned+sorted and keep that file
+          // layout; declared sort keys likewise rule the layout).
+          // modest cap: enough parallelism to hide per-task encode/commit
+          // latency without fanning a small table into cores-many files
+          // (32 near-empty write tasks measured as pure deser/scheduling
+          // overhead under the level-parallel source loads)
+          // spreadWide (all-columns hash), not spread: a generic
+          // relation's head column can be low-cardinality or skewed,
+          // which would collapse the fan-out into 1-2 hot write tasks
+          val out = if (design.exists(_.sortKeys.nonEmpty)) df
+                    else graft.queries.Tables.spreadWide(df, cap = 8)
+          out.write.mode("overwrite").parquet(loc)
+        }
+        registerAt(target, loc, design)
       }
-      writePointer(target, loc)
-    } else {
-      val partCols = design.map(_.partitionBy).getOrElse(Seq.empty)
-      val zCols = design.map(_.interleavedSort).getOrElse(Seq.empty)
-      val style = design.flatMap(_.distStyle)
-      if (partCols.nonEmpty)
-        // hive-style partition dirs: the scan prunes whole directories
-        // for predicates on the partition key — the 100 TB layout for
-        // time/source-sliced tables (beyond-reference; Redshift has no
-        // partitions, SURVEY §1.4 maps only distkey/sortkey)
-        df.write.mode("overwrite").partitionBy(partCols: _*).parquet(loc)
-      else if (zCols.nonEmpty)
-        // INTERLEAVED SORTKEY (table_design.schema:206, dialect/
-        // redshift.py:136-137) → Z-order clustered write: range-
-        // partition + sort by the Morton key so EVERY interleaved
-        // column gets tight per-file min/max ranges and filters on
-        // any of them prune files/row-groups — Redshift's interleaved
-        // "equal weight to each sort column" property, expressed in
-        // parquet statistics instead of zone maps.
-        zorderClustered(df, zCols).write.mode("overwrite").parquet(loc)
-      else if (style.contains("even"))
-        // DISTSTYLE EVEN → round-robin repartition: rows spread
-        // uniformly across output files regardless of any skewed
-        // upstream partitioning, the Redshift even-slices property.
-        // (A skew-free layout is what EVEN buys at 100 TB: every
-        // downstream scan task gets the same bytes.)
-        df.repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(loc)
-      else if (style.contains("all"))
-        // DISTSTYLE ALL → replicate-to-every-node is Spark's
-        // broadcast: land the table as ONE compact file so
-        // size-based auto-broadcast (or an explicit hint) replicates
-        // it to every executor at join time — the Redshift
-        // copy-on-every-slice property without a shuffle.
-        // WarehouseSpec pins the join plan.
-        df.coalesce(1).write.mode("overwrite").parquet(loc)
-      else {
-        // "auto": engine default. Parallelize the write when the plan
-        // under-splits (single-split local source scans made every
-        // COPY-stand-in write a one-task stage — 0.9 s serial per
-        // source on the lifecycle's critical path); no-op at scale,
-        // and never applied over a deliberate sort order (identity
-        // builds arrive range-partitioned+sorted and keep that file
-        // layout; declared sort keys likewise rule the layout).
-        // modest cap: enough parallelism to hide per-task encode/commit
-        // latency without fanning a small table into cores-many files
-        // (32 near-empty write tasks measured as pure deser/scheduling
-        // overhead under the level-parallel source loads)
-        // spreadWide (all-columns hash), not spread: a generic
-        // relation's head column can be low-cardinality or skewed,
-        // which would collapse the fan-out into 1-2 hot write tasks
-        val out = if (design.exists(_.sortKeys.nonEmpty)) df
-                  else graft.queries.Tables.spreadWide(df, cap = 8)
-        out.write.mode("overwrite").parquet(loc)
-      }
-      registerAt(target, loc, design)
     }
-    // S11 load diagnostics: pick up this build's SQL metrics (keyed
-    // by output location, so parallel D5 builds never cross-read) and
-    // stage them for the monitor's finish event.
-    val metrics = capture.await(loc)
     monitor.attachMetrics(metrics)
     // Rowcount from the write command's own metrics — re-scanning the
     // table just to count it would read every build's output twice

@@ -49,9 +49,9 @@ class BenchSpec extends AnyFunSuite {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     // per-run stage arrays: [[run0 stages], [run1 stages]]
     val runs = Seq(
-      Seq(Bench.StageRec(7, 3013L, 32, 58999L, 3175100L, 3004L)),
-      Seq(Bench.StageRec(9, 12186L, 4, 45643L, 3175100L, 12181L),
-        Bench.StageRec(10, 54L, 1, 42L, 105294L, 48L)))
+      Seq(graft.etl.Telemetry.StageRec(7, 3013L, 32, 58999L, 3175100L, 3004L)),
+      Seq(graft.etl.Telemetry.StageRec(9, 12186L, 4, 45643L, 3175100L, 12181L),
+        graft.etl.Telemetry.StageRec(10, 54L, 1, 42L, 105294L, 48L)))
     val sj = om.readTree(Bench.stageJson(runs))
     assert(sj.isArray && sj.size == 2 && sj.get(1).size == 2)
     val slow = sj.get(1).get(0)
@@ -72,5 +72,22 @@ class BenchSpec extends AnyFunSuite {
     val s1 = Bench.jvmSnap()
     val s2 = Bench.jvmSnap()
     assert(s2.jitMs >= s1.jitMs && s2.gcN >= s1.gcN && s2.janinoN >= s1.janinoN)
+  }
+
+  test("stage records: a 2-stage run through the bench's scoped path is complete") {
+    val spark = Session.build(2)
+    try {
+      val (dt, stages) = Bench.timed(spark, stages = true) {
+        spark.sparkContext.parallelize(1 to 1000, 4).map(i => (i % 10, i))
+          .reduceByKey(_ + _, 3).count()
+        ()
+      }
+      assert(dt >= 0.0)
+      assert(stages.size == 2, stages)
+      // the failure modes of a read that races the listener bus:
+      // wall_ms = -1 and undercounted tasks
+      assert(stages.forall(s => s.wallMs >= 0 && s.tasks >= 1), stages)
+      assert(stages.map(_.tasks).sum == 4 + 3, stages)
+    } finally spark.stop()
   }
 }

@@ -113,24 +113,16 @@ class QmrSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = spark.table("qmr.big").groupBy("k").count()
       assert(Qmr.estimatedScanRows(df).contains(5000L))
       // count jobs: the refusal must happen with ZERO jobs launched
-      val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
-      try {
+      Telemetry.scoped(spark) { scope =>
         val v = intercept[Qmr.Violation] {
           Qmr.guarded(df,
             Seq(Qmr.Rule("pre_cap", maxScanRows = Some(100L))))(_.count())
         }
         assert(v.rule.name == "pre_cap" && v.scanRows == 5000L)
-        // drain the bus so a late job-start event can't hide
-        Thread.sleep(200)
-        assert(jobs.get() == 0L, s"expected zero jobs, saw ${jobs.get()}")
-      } finally spark.sparkContext.removeSparkListener(counter)
+        // the drained profile: a late job-start event can't hide
+        val jobs = scope.profile().map(_.jobs)
+        assert(jobs.contains(0), s"expected zero jobs, saw $jobs")
+      }
       // under the cap, the same ANALYZEd query runs fine
       val n = Qmr.guarded(df,
         Seq(Qmr.Rule("pre_cap", maxScanRows = Some(100000L))))(_.count())
@@ -158,6 +150,18 @@ class QmrSpec extends AnyFunSuite with BeforeAndAfterAll {
       val noStats = spark.read.parquet(s"$dataDir/t.parquet")
       assert(Qmr.estimatedScanRows(noStats.groupBy("k").count()).isEmpty)
     } finally spark.conf.set("spark.sql.cbo.enabled", prevCbo)
+  }
+
+  test("guarded leaves the caller's job group and interrupt flag as they were") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("outer", "caller's group", interruptOnCancel = false)
+    try {
+      val n = Qmr.guarded(spark.read.parquet(s"$dataDir/t.parquet"),
+        Seq(Qmr.statementTimeout(60000)))(_.count())
+      assert(n == 320L)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "outer")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "false")
+    } finally sc.clearJobGroup()
   }
 
   test("a clean query passes with no events") {

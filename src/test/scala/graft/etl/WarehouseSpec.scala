@@ -1755,4 +1755,46 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(findings.map(_._1) == Seq("rep.dup_audit"), s"got $findings")
     assert(findings.head._2.contains("primary_key"))
   }
+
+  test("identity keys do not depend on input order when sort keys tie") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_id_ties_").toString
+    spark.sql("CREATE DATABASE IF NOT EXISTS id_ties")
+    // 100 rows per sort-key value; the same rows, in opposite orders
+    val rows = (1 to 200).map(i => (i % 2, f"v$i%03d"))
+    def keys(src: String, input: Seq[(Int, String)]): Map[String, Long] = {
+      input.toDF("g", "v").coalesce(1).write.mode("overwrite").parquet(s"$dir/$src")
+      spark.sql(s"DROP TABLE IF EXISTS id_ties.$src")
+      spark.sql(s"CREATE TABLE id_ties.$src USING parquet LOCATION '$dir/$src'")
+      val design = TableDesign.load(
+        s"""name: rep.tie_keys
+           |source_name: CTAS
+           |depends_on: [id_ties.$src]
+           |columns:
+           |  - name: sk
+           |    type: long
+           |    not_null: true
+           |    identity: true
+           |  - name: g
+           |    type: int
+           |  - name: v
+           |    type: string
+           |constraints:
+           |  - surrogate_key: [sk]
+           |attributes:
+           |  compound_sort: [g]
+           |query: SELECT g, v FROM id_ties.$src
+           |""".stripMargin)
+      val (df, cleanup) = freshWarehouse()
+        .ctasDataFrameManaged(design, SchemaPosition.Standard)
+      try df.collect().map(r => r.getString(2) -> r.getLong(0)).toMap
+      finally cleanup()
+    }
+    val forward = keys("fwd", rows)
+    val backward = keys("bwd", rows.reverse)
+    assert(forward.values.toSet == (1L to 200L).toSet)
+    assert(forward == backward,
+      s"${forward.count { case (v, k) => !backward.get(v).contains(k) }} of 200 keys differ")
+  }
 }

@@ -239,17 +239,9 @@ class AsofJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       val pT = spark.table("asof_stats_p")
       val cT = spark.table("asof_stats_c")
       // count jobs around the DECISION (listener events post async —
-      // settle before reading)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      def settled(): Int = { Thread.sleep(1000); jobs.get() }
-      try {
+      // the scope's profile drains the bus before reading)
+      graft.etl.Telemetry.scoped(spark) { scope =>
+        def settled(): Int = scope.profile().fold(-1)(_.jobs)
         val (wHot, viaStats) = AsofJoin.autoDecision(pT, cT,
           Seq("user_id"), Seq("c_user"), "p_ts", "c_ts",
           hotKeyRows = 100L, sampleFraction = 1.0, targetBuckets = 16)
@@ -259,8 +251,9 @@ class AsofJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(viaStats && viaStats2, "catalog stats path not taken")
         assert(wHot.isDefined, "800-row single-key table must trip a 100-row threshold")
         assert(wCold.isEmpty, "800 rows must not trip a 1M-row threshold")
-        assert(settled() == 0,
-          s"stats-based decision must launch ZERO jobs, saw ${jobs.get()}")
+        val statsJobs = settled()
+        assert(statsJobs == 0,
+          s"stats-based decision must launch ZERO jobs, saw $statsJobs")
         // the sampling path on the same (stat-less) data agrees — on
         // the branch AND on the bucket width (stats min/max are exact)
         val (wHotS, viaS) = AsofJoin.autoDecision(pDf, cDf,
@@ -273,7 +266,7 @@ class AsofJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(wHotS == wHot, s"widths disagree: stats $wHot vs sampled $wHotS")
         assert(wColdS == wCold)
         assert(settled() > 0, "sampling path must have run detection jobs")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
       // end-to-end parity through the stats-driven bucketed branch
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.select($"purchase_id", $"click_id").collect()

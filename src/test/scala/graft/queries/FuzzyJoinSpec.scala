@@ -355,36 +355,19 @@ class FuzzyJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     // census must take its collect branch, not the early-out
     val names = (1 to 2000).map(i => (i.toLong, f"Customer#$i%09d"))
       .toDF("id", "name")
-    def jobsIn(group: String): Int =
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    spark.sparkContext.setJobGroup("fj_construct", "census-only check")
-    val df = FuzzyJoin.pairsWithin2(names)
-    spark.sparkContext.clearJobGroup()
-    // status tracker is fed by an async listener: poll until stable
-    var n = jobsIn("fj_construct")
-    var stable = 0
-    val deadline = System.currentTimeMillis + 10000
-    while (System.currentTimeMillis < deadline && stable < 5) {
-      Thread.sleep(100)
-      val m = jobsIn("fj_construct")
-      if (m == n) stable += 1 else { n = m; stable = 0 }
-    }
+    // the jobs construction runs, counted from a drained profile
+    def withJobs[T](construct: => T): (T, Int) =
+      graft.etl.Telemetry.scoped(spark) { scope =>
+        val out = construct
+        (out, scope.profile().map(_.jobs).getOrElse(fail("listener bus did not drain")))
+      }
+    val (df, n) = withJobs(FuzzyJoin.pairsWithin2(names))
     assert(n >= 1 && n <= 3, s"pairsWithin2 construction ran $n Spark jobs " +
       "(expected only the bounded census); something new is eager")
     // and the returned frame still answers (the census fed a real plan)
     assert(df.limit(1).count() >= 0)
     // the d1 form takes the same census path — same bound
-    spark.sparkContext.setJobGroup("fj_construct1", "census-only check")
-    FuzzyJoin.pairsWithin1(names)
-    spark.sparkContext.clearJobGroup()
-    var n1 = jobsIn("fj_construct1")
-    stable = 0
-    val deadline1 = System.currentTimeMillis + 10000
-    while (System.currentTimeMillis < deadline1 && stable < 5) {
-      Thread.sleep(100)
-      val m = jobsIn("fj_construct1")
-      if (m == n1) stable += 1 else { n1 = m; stable = 0 }
-    }
+    val (_, n1) = withJobs(FuzzyJoin.pairsWithin1(names))
     assert(n1 >= 1 && n1 <= 3, s"pairsWithin1 construction ran $n1 jobs")
   }
 }

@@ -92,29 +92,12 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected pruning, read ${pruned.filesRead}/${pruned.filesTotal}")
     assert(pruned.filesRead > 0)
     // ...and reads fewer bytes end-to-end (metrics listener evidence)
-    def bytesOf(body: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) {
-            acc.addAndGet(t.taskMetrics.inputMetrics.bytesRead); ()
-          }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
+    def bytesOf(body: => Unit): Long =
+      graft.etl.Telemetry.scoped(spark) { scope =>
         body
-        // listener events deliver async — poll until the byte count
-        // is stable (same defense Qmr.awaitQuiesce applies)
-        var prev = -1L
-        var cur = acc.get()
-        val deadline = System.currentTimeMillis() + 5000
-        while (prev != cur && System.currentTimeMillis() < deadline) {
-          Thread.sleep(50); prev = cur; cur = acc.get()
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      acc.get()
-    }
+        // listener events deliver async — the profile drains the bus
+        scope.profile().map(_.scanBytes).getOrElse(fail("listener bus did not drain"))
+      }
     val prunedBytes = bytesOf { pruned.df.count(); () }
     val fullBytes = bytesOf {
       spark.table(tfTable.quoted).filter($"token".isin(terms: _*)).count(); ()

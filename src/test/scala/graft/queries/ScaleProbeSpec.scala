@@ -61,7 +61,7 @@ class ScaleProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t0 = System.nanoTime()
     val n = job
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500) // let the last task-end events drain
+    graft.etl.Telemetry.drain(spark.sparkContext) // the last task-end events
     spark.sparkContext.removeSparkListener(st)
     (n, st, wall)
   }
