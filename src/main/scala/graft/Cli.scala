@@ -24,8 +24,8 @@ object Cli {
         |  update         --designs DIR --data DIR --warehouse DIR --select PATTERN [--only-selected] [--vacuum] [--scheduled-start-time EPOCH_MS|ISO8601] [--wait-timeout-ms N] [--events FILE]
         |  check_constraints --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--with-staging]
         |  vacuum         --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--compact TABLE[,TABLE]] [--max-files N] [--dry-run]
-        |  extract        --designs DIR --data DIR --out DIR [--select PATTERN] [--format csv|avro] [--use-sampling]
-        |  unload         --designs DIR --out DIR [--select PATTERN] [--format csv|parquet|json]
+        |  extract        --designs DIR --data DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro] [--use-sampling]
+        |  unload         --designs DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro]
         |  validate       --designs DIR
         |  show_ddl       --designs DIR [--select PATTERN]
         |  ls             --designs DIR
@@ -432,14 +432,8 @@ object Cli {
           .foreach { r =>
             val df = Extract.sourceDataFrame(spark, data, r.design,
               useSampling = opts.contains("use-sampling"))
-            val n = opts.getOrElse("format", "csv") match {
-              case "avro" =>
-                val dest = s"$out/${r.identifier}"
-                val rows = AvroIO.write(df, dest)
-                StaticSource.writeManifest(dest)   // same S9 contract as CSV
-                rows
-              case _ => Unload.unload(df, r.design, s"$out/${r.identifier}")
-            }
+            val n = Artifact.write(df, r.design, s"$out/${r.identifier}",
+              opts.getOrElse("format", "csv"))
             println(s"[extract] ${r.identifier}: $n rows -> $out/${r.identifier}")
           }
         0
@@ -450,8 +444,7 @@ object Cli {
         val fmt = opts.getOrElse("format", "csv")
         designs.filter(r => selector.matches(r.name)).foreach { r =>
           val df = spark.table(r.name.quoted)
-          val n = Unload.unload(df, r.design, s"$out/${r.identifier}",
-            format = fmt)
+          val n = Artifact.write(df, r.design, s"$out/${r.identifier}", fmt)
           println(s"[unload] ${r.identifier}: $n rows -> $out/${r.identifier}")
         }
         0

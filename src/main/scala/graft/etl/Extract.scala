@@ -228,12 +228,10 @@ object Extract {
 
   /** COPY (S10, dialect/redshift.py:297-369 + config/dw.py:33-50): the
     * load-path read. When the source dir holds an extract ARTIFACT for
-    * this relation — `<schema>.<table>/manifest.json`, the exact shape
-    * `Cli extract` (and the reference's extractor) lands — ingest it
-    * the way the reference's `COPY ... FROM manifest` does, sniffing
-    * the format from the manifest's part files: gzip CSV (the default
-    * `DELIMITER ',' ... GZIP` contract), `AVRO 'auto'`, or
-    * `JSON 'auto'`. Expressions and extract conditions are NOT
+    * this relation — `<schema>.<table>/` with a manifest, the exact
+    * shape `Cli extract` (and the reference's extractor) lands — ingest
+    * it the way the reference's `COPY ... FROM manifest` does, through
+    * [[Artifact.read]]. Expressions and extract conditions are NOT
     * re-applied — the artifact already carries them (COPY is a straight
     * load) — but TRUNCATECOLUMNS is, as in the reference's COPY
     * statement. Falls back to the parquet stand-in when no artifact
@@ -241,12 +239,9 @@ object Extract {
   def copyDataFrame(spark: SparkSession, sourceDir: String,
                     design: TableDesign): DataFrame = {
     val dir = s"$sourceDir/${design.name.identifier}"
-    manifestFormat(dir) match {
-      case Some(format) =>
-        val raw = StaticSource.read(spark, design, dir, format)
-        applyTruncateColumns(design, raw)
-      case None => sourceDataFrame(spark, sourceDir, design)
-    }
+    if (Artifact.format(dir).isDefined)
+      applyTruncateColumns(design, Artifact.read(spark, design, dir))
+    else sourceDataFrame(spark, sourceDir, design)
   }
 
   /** Outcome of a MAXERROR COPY: rows landed and rows quarantined. */
@@ -267,9 +262,8 @@ object Extract {
   def copyWithMaxError(wh: Warehouse, sourceDir: String,
                        design: TableDesign, maxError: Long): CopyOutcome = {
     val spark = wh.spark
-    val dir = s"$sourceDir/${design.name.identifier}"
-    val format = manifestFormat(dir).getOrElse("csv")
-    val qr = StaticSource.readWithQuarantine(spark, design, dir, format)
+    val qr = Artifact.readQuarantined(spark, design,
+      s"$sourceDir/${design.name.identifier}")
     try {
       val badCount = qr.bad.count()
       if (badCount > maxError) {
@@ -291,22 +285,6 @@ object Extract {
         }
       CopyOutcome(loaded, badCount, errTable)
     } finally qr.close()
-  }
-
-  /** Sniff the COPY format from the manifest's entries (the manifest
-    * is metadata-sized — one line per part file). None ⇒ no artifact. */
-  private[etl] def manifestFormat(dir: String): Option[String] = {
-    val m = s"$dir/manifest.json"
-    if (!ArtifactIo.exists(m)) None
-    else {
-      val urls = """"url"\s*:\s*"([^"]+)"""".r
-        .findAllMatchIn(ArtifactIo.readText(m)).map(_.group(1)).toSeq
-      Some(urls match {
-        case us if us.exists(_.endsWith(".avro")) => "avro"
-        case us if us.exists(u => u.endsWith(".json") || u.endsWith(".json.gz")) => "json"
-        case _ => "csv"   // the reference's default COPY contract
-      })
-    }
   }
 
   private val VarcharRe =

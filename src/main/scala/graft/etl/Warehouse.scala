@@ -218,7 +218,7 @@ final class Warehouse(
 
   /** COPY (S10, dialect/redshift.py:297-369): ingest the relation's
     * upstream extract. A manifest artifact (`<schema>.<table>/` with
-    * gzip CSV / Avro / JSON part files — what `Cli extract` writes) is
+    * csv / json / parquet / avro part files — what `Cli extract` writes) is
     * loaded as the reference's `COPY ... FROM manifest` would; a bare
     * parquet stand-in is read directly. */
   def sourceDataFrame(design: TableDesign): DataFrame =

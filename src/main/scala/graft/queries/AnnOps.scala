@@ -422,16 +422,10 @@ object AnnOps {
     * from the same LSH bucket equi-join — a self-join on the bucket
     * id, never all-pairs; exact cosine only on candidates. Recall is
     * the LSH trade (multi-probe/more tables raise it); the oracle
-    * mirrors the same bucketing so results agree exactly.
+    * mirrors the same bucketing so results agree exactly. The cutoff
+    * is `Tuning.nearDupThreshold`.
     *
-    * The synthetic embeddings carry NO planted duplicates (max pair
-    * cosine ≈ 0.6), so the threshold sits at the top-0.01% tail of
-    * the pair distribution to exercise the candidate + exact-rescore
-    * path with a non-empty result; a production corpus would use
-    * ~0.95. */
-  val NearDupThreshold: Double = Tuning.default.nearDupThreshold
-
-  /** Scale shape: with planes = log2(n/target), each bucket holds
+    * Scale shape: with planes = log2(n/target), each bucket holds
     * ~target vectors, so candidates ≈ n · target · (planes+2)/2 —
     * LINEAR in n (× a log factor from multi-probe) instead of the
     * round-2 fixed-64-bucket Θ(n²/64). Pair (u,v) is emitted exactly

@@ -175,8 +175,6 @@ object DedupOps {
     * posts) that symmetric Jaccard misses when the container is much
     * larger. Same inverted-index candidates, one extra projection;
     * `contained_doc` names the swallowed side. */
-  val ContainmentThreshold: Double = Tuning.default.containmentThreshold
-
   def dedupContainment(spark: SparkSession, sfDir: String,
                        t: Tuning = Tuning.default): DataFrame = {
     import spark.implicits._

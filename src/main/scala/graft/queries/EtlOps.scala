@@ -201,7 +201,7 @@ object EtlOps {
     * A lossy format or schema drift breaks the hash. */
   def s12UnloadRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.etl.{ColumnDef, TableDesign, TableName, Unload}
+    import graft.etl.{Artifact, ColumnDef, TableDesign, TableName}
     val dest = java.nio.file.Files.createTempDirectory("graft_unload_q_")
       .toString + "/orders_csv"
     val design = TableDesign(TableName.parse("unload.orders_slice"), "src", Seq(
@@ -212,8 +212,8 @@ object EtlOps {
     val slice = Tables.load(spark, sfDir, "orders")
       .filter($"o_orderkey" <= 500)
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderdate")
-    Unload.unload(slice, design, dest)
-    Unload.reload(spark, dest)
+    Artifact.write(slice, design, dest)
+    Artifact.reload(spark, dest)
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice",
         date_format($"o_orderdate", "yyyy-MM-dd HH:mm:ss").as("o_ts"))
       .orderBy($"o_orderkey")
@@ -438,7 +438,7 @@ object EtlOps {
     * the parquet truth. */
   def s10bCopyMaxerror(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.etl.{Extract, StaticSource, TableDesign, Warehouse}
+    import graft.etl.{Artifact, Extract, TableDesign, Warehouse}
     val design = TableDesign.load(
       """name: copyq.supplier
         |source_name: copyq
@@ -463,7 +463,7 @@ object EtlOps {
         "alsobad,second-bad-id,1\n" +
         "7,arity-overflow,2,extra,cols\n" +
         "8,arity-overflow-too,3,spill\n").getBytes("UTF-8"))
-    StaticSource.writeManifest(dir.toString)
+    Artifact.writeManifest(dir.toString)
     val whDir = java.nio.file.Files.createTempDirectory("graft_copyq_wh_").toString
     val wh = new Warehouse(spark, whDir, srcRoot.toString)
     val out = Extract.copyWithMaxError(wh, srcRoot.toString, design, maxError = 10)

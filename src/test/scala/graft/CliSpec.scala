@@ -238,16 +238,22 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     // manifest; `arthur load` COPYs those files into the warehouse
     // (dialect/redshift.py:297-369). The engine's own extract artifact
     // must therefore be loadable by its own load path.
-    for (format <- Seq("csv", "avro")) {
+    import scala.jdk.CollectionConverters._
+    for (format <- Seq("csv", "json", "parquet", "avro")) {
       val out = Files.createTempDirectory(s"graft_cli_rt_${format}_").toString
-      Cli.run(spark, "extract", Map(
+      assert(Cli.run(spark, "extract", Map(
         "designs" -> designsDir, "data" -> dataDir, "out" -> out,
-        "select" -> "cli.region", "format" -> format))
+        "select" -> "cli.region", "format" -> format)) == 0)
+      // the part files are in the asked-for format
+      val parts = Files.list(Paths.get(out, "cli.region")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
+      assert(parts.nonEmpty && parts.forall(_.contains(s".$format")),
+        s"$format extract wrote $parts")
       val wh = Files.createTempDirectory(s"graft_cli_rtwh_${format}_").toString
       // load with --data pointing at the EXTRACT output, not parquet
-      Cli.run(spark, "load", Map(
+      assert(Cli.run(spark, "load", Map(
         "designs" -> designsDir, "data" -> out, "warehouse" -> wh,
-        "select" -> "cli.region"))
+        "select" -> "cli.region")) == 0)
       val loaded = spark.table("`cli`.`region`")
         .orderBy("r_regionkey").collect().toSeq
       val expected = spark.read.parquet(s"$dataDir/region.parquet")
@@ -255,6 +261,38 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
         .orderBy("r_regionkey").collect().toSeq
       assert(loaded == expected, s"$format round-trip mismatch")
     }
+    // a format typo is refused before anything is written
+    val typo = Files.createTempDirectory("graft_cli_rt_typo_").toString
+    intercept[IllegalArgumentException] {
+      Cli.run(spark, "extract", Map(
+        "designs" -> designsDir, "data" -> dataDir, "out" -> typo,
+        "select" -> "cli.region", "format" -> "cvs"))
+    }
+    assert(!Files.exists(Paths.get(typo, "cli.region")))
+  }
+
+  test("COPY builds a relation from a parquet UNLOAD artifact") {
+    // unload the published relation as parquet, then build it from
+    // that artifact into a fresh warehouse; the assertions read the
+    // build itself, not the session catalog an earlier build left
+    val wh = Files.createTempDirectory("graft_cli_pqwh_").toString
+    assert(Cli.run(spark, "load", Map(
+      "designs" -> designsDir, "data" -> dataDir, "warehouse" -> wh,
+      "select" -> "cli.region")) == 0)
+    val out = Files.createTempDirectory("graft_cli_pq_").toString
+    assert(Cli.run(spark, "unload", Map(
+      "designs" -> designsDir, "out" -> out, "select" -> "cli.region",
+      "format" -> "parquet")) == 0)
+    val region = graft.etl.FileSets.discover(designsDir)
+      .find(_.identifier == "cli.region").get
+    val fresh = new graft.etl.Warehouse(spark,
+      Files.createTempDirectory("graft_cli_pqwh2_").toString, out)
+    assert(fresh.buildOneRelation(region).rowcount == 5)
+    val expected = spark.read.parquet(s"$dataDir/region.parquet")
+      .selectExpr("CAST(r_regionkey AS INT) AS r_regionkey", "r_name")
+      .orderBy("r_regionkey").collect().toSeq
+    assert(fresh.sourceDataFrame(region.design)
+      .orderBy("r_regionkey").collect().toSeq == expected)
   }
 
   test("COPY ingests a JSON 'auto' artifact and prefers artifacts over parquet") {
@@ -266,7 +304,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("CAST(r_regionkey AS INT) AS r_regionkey", "r_name")
     src.write.json(dest)
     // give the artifact the COPY manifest contract
-    graft.etl.StaticSource.writeManifest(dest)
+    graft.etl.Artifact.writeManifest(dest)
     // ALSO drop a decoy parquet stand-in with different content: the
     // load path must prefer the manifest artifact, not silently fall
     // back to parquet
@@ -288,7 +326,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     Cli.run(spark, "extract", Map(
       "designs" -> designsDir, "data" -> dataDir, "out" -> out,
       "select" -> "cli.region", "use-sampling" -> "true"))
-    val back = graft.etl.Unload.reload(spark, s"$out/cli.region")
+    val back = graft.etl.Artifact.reload(spark, s"$out/cli.region")
     assert(back.count() == 5)
   }
 

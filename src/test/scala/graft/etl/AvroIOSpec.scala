@@ -59,16 +59,17 @@ class AvroIOSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expect)
   }
 
-  test("StaticSource.read format=avro enforces the design schema") {
+  test("Artifact.read of an avro artifact enforces the design schema") {
     val dir = Files.createTempDirectory("graft_avro_src_").toString
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(sampleRows, 1), schema)
     AvroIO.write(df, dir)
+    Artifact.writeManifest(dir)
     val design = TableDesign(TableName.parse("src.t"), "src", Seq(
       ColumnDef("id", "long", notNull = true),
       ColumnDef("name", "string"),
       ColumnDef("extra", "int")))   // not in the files -> null
-    val got = StaticSource.read(spark, design, dir, format = "avro")
+    val got = Artifact.read(spark, design, dir)
     assert(got.schema.fieldNames.toSeq == Seq("id", "name", "extra"))
     assert(got.count() == 3)
     assert(got.filter("extra IS NOT NULL").count() == 0)

@@ -199,17 +199,17 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("S7-S9: static source requires _SUCCESS, writes manifest, reads back") {
     val prefix = Files.createTempDirectory("graft_static_").toString
-    intercept[StaticSource.MissingSuccessError] { StaticSource.extractStatic(prefix) }
+    intercept[Artifact.MissingSuccessError] { Artifact.extractStatic(prefix) }
     // stage a one-part gzip CSV extract
     Files.write(Paths.get(prefix, "part-00000.csv"),
       "1,\"alpha\"\n2,\"beta\"\n".getBytes(StandardCharsets.UTF_8))
     Files.write(Paths.get(prefix, "_SUCCESS"), Array.emptyByteArray)
-    val manifest = StaticSource.extractStatic(prefix)
+    val manifest = Artifact.extractStatic(prefix)
     val text = new String(Files.readAllBytes(Paths.get(manifest)), StandardCharsets.UTF_8)
     assert(text.contains("part-00000.csv") && text.contains("\"mandatory\": true"))
     val design = TableDesign(TableName.parse("ext.t"), "ext", Seq(
       ColumnDef("id", "long", notNull = true), ColumnDef("name", "string")))
-    val df = StaticSource.read(spark, design, prefix)
+    val df = Artifact.read(spark, design, prefix)
     assert(df.count() == 2)
     assert(df.schema.fieldNames.toSeq == Seq("id", "name"))
   }
@@ -222,7 +222,7 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$v\n".getBytes(StandardCharsets.UTF_8))
     }
     Files.write(Paths.get(prefix, "_SUCCESS"), Array.emptyByteArray)
-    val manifest = StaticSource.extractStatic(prefix)
+    val manifest = Artifact.extractStatic(prefix)
     val text = new String(Files.readAllBytes(Paths.get(manifest)), StandardCharsets.UTF_8)
     val urls = """"url": "([^"]+)"""".r.findAllMatchIn(text).map(_.group(1)).toSeq
     assert(urls == Seq(s"$prefix/col=1/part-00000.csv", s"$prefix/col=2/part-00000.csv"),

@@ -176,14 +176,14 @@ class FrameworkSpec extends AnyFunSuite with BeforeAndAfterAll {
       ColumnDef("n_name", "string")))
     val df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .select("n_nationkey", "n_name")
-    val n = Unload.unload(df, design, dest)
+    val n = Artifact.write(df, design, dest)
     assert(n == 25)
     assert(Files.exists(Paths.get(dest, "columns.yaml")))
     assert(Files.exists(Paths.get(dest, "manifest.json")))
     val manifest = new String(Files.readAllBytes(Paths.get(dest, "manifest.json")),
       StandardCharsets.UTF_8)
     assert(manifest.contains("\"mandatory\": true") && manifest.contains("part-"))
-    val back = Unload.reload(spark, dest)
+    val back = Artifact.reload(spark, dest)
     assert(back.count() == 25)
     assert(back.schema.fieldNames.toSeq == Seq("n_nationkey", "n_name"))
     // value round-trip
@@ -202,7 +202,7 @@ class FrameworkSpec extends AnyFunSuite with BeforeAndAfterAll {
       ColumnDef("n_regionkey", "long")))
     val df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
-    val n = Unload.unload(df, design, dest, partitionBy = Seq("n_regionkey"))
+    val n = Artifact.write(df, design, dest, partitionBy = Seq("n_regionkey"))
     assert(n == 25)
     // the Redshift PARTITION BY layout: one prefix per region value
     val parts = new java.io.File(dest).listFiles
@@ -213,7 +213,7 @@ class FrameworkSpec extends AnyFunSuite with BeforeAndAfterAll {
       StandardCharsets.UTF_8)
     assert(manifest.contains("n_regionkey=0/"), manifest.take(300))
     // round-trip: partition column comes back TYPED and in design order
-    val back = Unload.reload(spark, dest)
+    val back = Artifact.reload(spark, dest)
     assert(back.schema.fieldNames.toSeq ==
       Seq("n_nationkey", "n_name", "n_regionkey"))
     assert(back.schema("n_regionkey").dataType ==
@@ -223,7 +223,7 @@ class FrameworkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(orig == rt)
     // an unknown partition column is refused, not silently dropped
     intercept[IllegalArgumentException] {
-      Unload.unload(df, design, dest, partitionBy = Seq("nope"))
+      Artifact.write(df, design, dest, partitionBy = Seq("nope"))
     }
   }
 
@@ -235,24 +235,24 @@ class FrameworkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
     val orig = df.orderBy("n_nationkey").collect().map(_.toSeq).toSeq
-    for (fmt <- Seq("parquet", "json")) {
+    for (fmt <- Seq("parquet", "json", "avro")) {
       val dest = Files.createTempDirectory(s"graft_unload_$fmt").toString + "/out"
       // parquet additionally exercises PARTITION BY composition
       val parts = if (fmt == "parquet") Seq("n_regionkey") else Nil
-      val n = Unload.unload(df, design, dest, partitionBy = parts, format = fmt)
+      val n = Artifact.write(df, design, dest, partitionBy = parts, format = fmt)
       assert(n == 25)
       val yaml = new String(Files.readAllBytes(Paths.get(dest, "columns.yaml")),
         StandardCharsets.UTF_8)
       assert(yaml.contains(s"format: $fmt"), yaml)
       assert(Files.exists(Paths.get(dest, "manifest.json")))
-      val back = Unload.reload(spark, dest)
+      val back = Artifact.reload(spark, dest)
       assert(back.schema.fieldNames.toSeq ==
         Seq("n_nationkey", "n_name", "n_regionkey"))
       assert(back.orderBy("n_nationkey").collect().map(_.toSeq).toSeq == orig,
         s"$fmt round-trip")
     }
     intercept[IllegalArgumentException] {
-      Unload.unload(df, design, "/tmp/never", format = "orc")
+      Artifact.write(df, design, "/tmp/never", format = "orc")
     }
   }
 

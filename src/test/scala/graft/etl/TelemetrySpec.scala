@@ -87,7 +87,7 @@ class TelemetrySpec extends AnyFunSuite with BeforeAndAfterAll {
         |""".stripMargin)
     val csv = tmp("graft_tel_csv_") + "/out"
     var unloaded = -1L
-    assert(rowsOf(csv) { unloaded = Unload.unload(df, design, csv) }.contains(500L))
+    assert(rowsOf(csv) { unloaded = Artifact.write(df, design, csv) }.contains(500L))
     assert(unloaded == 500L)
   }
 

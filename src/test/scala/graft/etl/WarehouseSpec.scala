@@ -1683,7 +1683,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       "1,alpha\n2,beta\nnotanumber,gamma\n3,delta,extra,cols\n4,epsilon\n"
         .getBytes("UTF-8"))
     java.nio.file.Files.write(dir.resolve("_SUCCESS"), Array.empty[Byte])
-    StaticSource.writeManifest(dir.toString)
+    Artifact.writeManifest(dir.toString)
     // within budget: good rows land, bad rows quarantined with their
     // raw text and source file
     val out = Extract.copyWithMaxError(wh, srcRoot.toString, design, maxError = 5)
