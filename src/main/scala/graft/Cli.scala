@@ -426,16 +426,28 @@ object Cli {
         // The reference's extract lands gzip-CSV + manifest per
         // relation (extract/extractor.py:203-260); same artifact shape
         // as unload, read from the upstream stand-in.
+        // Sources are independent, so they run concurrently through
+        // the load's pool, as wide as the load's own concurrency.
         val data = opts.getOrElse("data", usage())
         val out = opts.getOrElse("out", usage())
-        designs.filter(r => r.design.isSourceTable && selector.matches(r.name))
-          .foreach { r =>
+        val format = opts.getOrElse("format", "csv")
+        require(Artifact.Formats.contains(format),
+          s"artifact format '$format' is not one of ${Artifact.Formats.mkString("|")}")
+        val conc = settings.intValue("graft_settings.load.max_concurrency", Some(4))
+        val sources = designs.filter(r => r.design.isSourceTable && selector.matches(r.name))
+        val written = Warehouse.parallelMap(spark, sources, conc) { r =>
+          scala.util.Try {
             val df = Extract.sourceDataFrame(spark, data, r.design,
               useSampling = opts.contains("use-sampling"))
-            val n = Artifact.write(df, r.design, s"$out/${r.identifier}",
-              opts.getOrElse("format", "csv"))
-            println(s"[extract] ${r.identifier}: $n rows -> $out/${r.identifier}")
+            Artifact.write(df, r.design, s"$out/${r.identifier}", format)
           }
+        }
+        // every source has finished: report in design order, then fail
+        // on the first source that did
+        sources.zip(written).foreach { case (r, n) =>
+          n.foreach(rows => println(s"[extract] ${r.identifier}: $rows rows -> $out/${r.identifier}"))
+        }
+        written.foreach(_.get)
         0
       case "unload" =>
         // UNLOAD of warehouse relations (S12; commands.py:1279-1335):

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.etl.{DialectShims, GraftExtensions}
+import graft.etl.GraftExtensions
 
 /** The one session definition: the CLI, the bench, the oracle dump and
   * every spec build their session here, so what is measured and tested
-  * is the session the CLI ships. */
+  * is the session the CLI ships. Building it runs no SQL: every
+  * function, the dialect shims included, comes from the extension. */
 object Session {
 
   /** `SPARK_GRAFT_CPUS`, else the box's core count — not a fixed small
@@ -41,7 +42,6 @@ object Session {
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    DialectShims.registerAll(spark)
     spark
   }
 }

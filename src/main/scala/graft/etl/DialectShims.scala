@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Redshift-dialect compatibility shims (SURVEY §7.2): transform SQL
   * written for the reference warehouse uses a handful of functions
-  * Spark names differently. Registered as thin SQL aliases so
-  * existing `.sql` files run unmodified; each maps to a codegen'd
-  * built-in (no UDF in the hot path).
+  * Spark names differently. Text passes here rename them, and the
+  * function-shaped ones resolve to native builders in
+  * [[GraftExtensions]], so existing `.sql` files run unmodified; each
+  * maps to a codegen'd built-in (no UDF in the hot path).
   *
   * | Redshift | Spark mapping |
   * |---|---|
@@ -22,45 +23,16 @@ import org.apache.spark.sql.SparkSession
   */
 object DialectShims {
 
-  def registerAll(spark: SparkSession): Unit = {
-    // SQL-bodied temp functions resolve to built-ins at plan time —
-    // they inline into the analyzed plan, keeping codegen intact.
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION dateadd_days(n INT, ts TIMESTAMP)
-        |RETURNS TIMESTAMP RETURN timestampadd(DAY, n, ts)""".stripMargin)
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION datediff_days(a TIMESTAMP, b TIMESTAMP)
-        |RETURNS BIGINT RETURN timestampdiff(DAY, a, b)""".stripMargin)
-    // Redshift DATEDIFF counts BOUNDARY CROSSINGS, not complete
-    // intervals: datediff(day, 23:00, next 01:00) = 1. Truncating
-    // both sides to the unit boundary first makes Spark's
-    // complete-interval timestampdiff count exactly the crossings.
-    // One function per unit — [[rewriteDateDiff]] folds the unit
-    // argument into the name so no SQL argument parsing is needed.
-    CanonicalUnits.foreach { u =>
-      spark.sql(
-        s"""CREATE OR REPLACE TEMPORARY FUNCTION rs_datediff_$u(a TIMESTAMP, b TIMESTAMP)
-           |RETURNS BIGINT RETURN timestampdiff(${u.toUpperCase},
-           |  date_trunc('${u.toUpperCase}', a), date_trunc('${u.toUpperCase}', b))""".stripMargin)
-    }
-    // Redshift string/convenience scalars without a Spark name. All
-    // SQL-bodied (inline at plan time, codegen intact). CHARINDEX's
-    // argument order is (needle, haystack) — the REVERSE of Spark's
-    // instr — and both agree on 1-based positions with 0 for absent.
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION charindex(needle STRING, haystack STRING)
-        |RETURNS INT RETURN instr(haystack, needle)""".stripMargin)
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION strtol(s STRING, base INT)
-        |RETURNS BIGINT RETURN CAST(conv(s, base, 10) AS BIGINT)""".stripMargin)
-    // LEN (Redshift's LENGTH alias) needs no shim: Spark 4 ships it
-    // as a built-in alias of length — registering over a built-in is
-    // refused (CANNOT_REPLACE_NON_SQL_UDF_WITH_SQL_UDF).
-    // LISTAGG has no scalar-function shim (it is an aggregate):
-    // rewrite `LISTAGG(x, ',') WITHIN GROUP (ORDER BY x)` to
-    // `array_join(array_sort(collect_list(x)), ',')` — see
-    // rewriteListagg below for query-text level compat.
-  }
+  /** Installs nothing: every function-shaped shim (`dateadd_days`,
+    * `datediff_days`, `rs_datediff_<unit>`, `charindex`, `strtol`) is
+    * a native builder in [[GraftExtensions.functions]], so session
+    * start runs no SQL. Kept for callers that re-arm a session built
+    * from a reported conf. */
+  def registerAll(spark: SparkSession): Unit = ()
+
+  // LEN (Redshift's LENGTH alias) needs no shim: Spark 4 ships it as a
+  // built-in alias of length. LISTAGG has no scalar-function shim (it
+  // is an aggregate): rewriteListagg below handles it at the text level.
 
   private val ListaggRe =
     raw"(?i)LISTAGG\s*\(\s*([^,()]+)\s*,\s*('[^']*')\s*\)\s*WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+([^()]+?)\s*\)".r
@@ -149,10 +121,10 @@ object DialectShims {
         case None => java.util.regex.Matcher.quoteReplacement(m.matched)
       })
 
-  /** `DATEDIFF(unit, a, b)` → `rs_datediff_<unit>(a, b)` (registered
-    * above, boundary-crossing semantics). A first argument that is
-    * not a unit keyword — Spark's own two-argument `DATEDIFF(end,
-    * start)` — is left alone. */
+  /** `DATEDIFF(unit, a, b)` → `rs_datediff_<unit>(a, b)` (a
+    * [[GraftExtensions]] builder, boundary-crossing semantics). A
+    * first argument that is not a unit keyword — Spark's own
+    * two-argument `DATEDIFF(end, start)` — is left alone. */
   def rewriteDateDiff(sql: String): String =
     DateDiffRe.replaceAllIn(sql, m =>
       UnitAliases.get(m.group(1).toLowerCase) match {

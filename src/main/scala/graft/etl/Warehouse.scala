@@ -3,8 +3,10 @@ package graft.etl
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 final class FailedConstraintError(msg: String) extends RuntimeException(msg)
 final class RequiredRelationLoadError(msg: String) extends RuntimeException(msg)
@@ -46,9 +48,19 @@ final case class VacuumResult(deleted: Seq[String], refused: Seq[String])
   */
 final class Warehouse(
     val spark: SparkSession,
-    val warehouseDir: String,
+    dir: String,
     val sourceDir: String,                  // parquet stand-in for upstream (COPY, S10)
     val monitor: Monitor = new Monitor()) {
+
+  /** `dir`, with a scheme-less relative path made absolute against the
+    * working directory: Spark resolves a relative `LOCATION` against
+    * the database directory instead. Absolute paths and URIs pass
+    * through unchanged. */
+  val warehouseDir: String = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (p.toUri.getScheme != null || p.isAbsolute) dir
+    else java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+  }
 
   /** Build ids must be unique across JVM RUNS, not just within one:
     * a counter restarting at 0 would hand a second CLI run the same
@@ -381,7 +393,7 @@ final class Warehouse(
                     else graft.queries.Tables.spreadWide(df, cap = 8)
           out.write.mode("overwrite").parquet(loc)
         }
-        registerAt(target, loc, design)
+        registerAt(target, loc, design, Some(df.schema))
       }
     }
     monitor.attachMetrics(metrics)
@@ -938,8 +950,16 @@ final class Warehouse(
     }
   }
 
+  /** (Re-)register `target` as an external parquet table at
+    * `location`. `fileSchema` is the schema the files were written
+    * with, when the caller knows it (a fresh write, or a catalog entry
+    * being re-pointed): declaring it spares the one-task
+    * schema-inference job a bare `CREATE TABLE ... LOCATION` runs.
+    * Re-registrations of an OLDER build pass none and infer, since
+    * those files may predate the current design. */
   private def registerAt(target: TableName, location: String,
-                         design: Option[TableDesign] = None): Unit = {
+                         design: Option[TableDesign] = None,
+                         fileSchema: Option[StructType] = None): Unit = {
     ensureDatabase(target.schema)
     // trust, then VERIFY the physical layout: rollback/restore paths
     // re-register an OLDER build under the CURRENT design, and a
@@ -961,12 +981,23 @@ final class Warehouse(
       try Some(spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema))))
       catch { case _: Exception => None }
-    // ALTER keeps the catalog's stored schema, so it is only safe when
-    // that schema already equals the design's (nullability aside) —
-    // any drift falls back to drop-then-create, which re-infers.
-    val wantSchema = design.map(_.toStructType)
     val wantParts = design.map(_.partitionBy.map(_.toLowerCase)).getOrElse(Seq.empty)
       .filter(_ => !hasAnyData || hasPartDirs)
+    // bucketed/partitioned CREATE TABLE requires an explicit column
+    // list (schema inference + bucketing is rejected by the analyzer;
+    // an EMPTY partitioned location has nothing to infer from); both
+    // imply a design, so the schema is available. A plain table
+    // declares its file schema when known, all columns nullable —
+    // what inference returns for parquet Spark wrote — unless DDL text
+    // cannot say it exactly (field metadata); otherwise it infers.
+    val declared =
+      if (wantBuckets.nonEmpty || wantParts.nonEmpty) design.map(_.toStructType)
+      else fileSchema.map(Warehouse.nullable)
+        .filter(s => s.nonEmpty && StructType.fromDDL(s.toDDL) == s)
+    // ALTER keeps the catalog's stored schema, so it is only safe when
+    // that schema already equals the declared one (nullability aside) —
+    // any drift, or an older build's unknown schema, falls back to
+    // drop-then-create.
     val sameShape = existing.exists { t =>
       t.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL &&
         t.provider.exists(_.equalsIgnoreCase("parquet")) &&
@@ -974,9 +1005,10 @@ final class Warehouse(
           wantBuckets &&
         t.bucketSpec.forall(_.numBuckets == BucketCount) &&
         t.partitionColumnNames.map(_.toLowerCase) == wantParts &&
-        wantSchema.exists(s =>
-          t.schema.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType)).sortBy(_._1) ==
-            s.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType)).sortBy(_._1))
+        declared.exists(s =>
+          t.schema.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType, f.metadata))
+            .sortBy(_._1) ==
+            s.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType, f.metadata)).sortBy(_._1))
     }
     if (sameShape) {
       spark.sql(s"ALTER TABLE ${target.quoted} SET LOCATION '$location'")
@@ -1018,13 +1050,7 @@ final class Warehouse(
           if (sk.nonEmpty) s" SORTED BY (${sk.mkString(", ")})" else ""
         s" CLUSTERED BY (${d.mkString(", ")})$sortSpec INTO $BucketCount BUCKETS"
       }.getOrElse("")
-      // bucketed/partitioned CREATE TABLE requires an explicit column
-      // list (schema inference + bucketing is rejected by the
-      // analyzer; an EMPTY partitioned location has nothing to infer
-      // from); both imply a design, so the schema is available
-      val cols = if (clustered.nonEmpty || wantParts.nonEmpty)
-        wantSchema.map(s => s" (${s.toDDL})").getOrElse("")
-      else ""
+      val cols = declared.map(s => s" (${s.toDDL})").getOrElse("")
       val partitioned =
         if (wantParts.nonEmpty) s" PARTITIONED BY (${wantParts.mkString(", ")})"
         else ""
@@ -1038,12 +1064,15 @@ final class Warehouse(
     writePointer(target, location)
   }
 
+  /** `target`'s catalog entry, when it is a table with a location. */
+  private def catalogEntry(target: TableName): Option[CatalogTable] =
+    try Some(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema))))
+      .filter(_.storage.locationUri.isDefined)
+    catch { case _: Exception => None }
+
   private def locationOf(target: TableName): Option[String] =
-    try {
-      val t = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema)))
-      Some(t.location.toString)
-    } catch { case _: Exception => None }
+    catalogEntry(target).map(_.location.toString)
 
   // ------------------------------------------------- pointers manifest
   /** The session catalog is in-memory: a fresh JVM knows no live
@@ -1454,7 +1483,7 @@ final class Warehouse(
     val results = mutable.Buffer[BuildResult]()
     // Group by level: within a level there are no mutual deps (D5/D7).
     ordered.groupBy(_.executionLevel).toSeq.sortBy(_._1).foreach { case (_, levelRels) =>
-      val levelResults = parallelMap(levelRels, maxConcurrency) { rel =>
+      val levelResults = Warehouse.parallelMap(spark, levelRels, maxConcurrency) { rel =>
         val mustSkip = skipCopyAll ||
           rel.dependencies.exists(d => failed.contains(d.identifier)) ||
           rel.dependencies.exists(d => skipCopy.contains(d.identifier))
@@ -1481,34 +1510,6 @@ final class Warehouse(
       .foreach(r => analyze(TableName.parse(r.identifier).inPosition(pos)))
     results.toSeq
   }
-
-  /** The reference maps load concurrency onto Redshift WLM slots
-    * (commands.py: wlm_query_slot_count); the Spark analog is a FAIR
-    * scheduler pool. Every concurrent build thread tags its jobs with
-    * this pool name so that, when the session runs with
-    * `spark.scheduler.mode=FAIR`, parallel relation builds share
-    * executors fairly instead of FIFO-starving each other. Under the
-    * default FIFO mode the property is inert — safe to set always. */
-  val LoadSchedulerPool = "graft-load"
-
-  private[etl] def parallelMap[A, B](xs: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
-    if (xs.size <= 1 || parallelism <= 1) xs.map(f)
-    else {
-      import java.util.concurrent.Executors
-      import scala.concurrent._
-      import scala.concurrent.duration.Duration
-      val pool = Executors.newFixedThreadPool(math.min(parallelism, xs.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(xs.map(x => Future {
-        // local properties are thread-local: each worker thread tags
-        // its Spark jobs with the load pool (and clears after, since
-        // executor threads are reused across levels)
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", LoadSchedulerPool)
-        try f(x)
-        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      })), Duration.Inf)
-      finally pool.shutdown()
-    }
 
   // ------------------------------------------------ lifecycle (L1-L4)
   /** Build everything into staging, then publish: backup the standard
@@ -1564,13 +1565,25 @@ final class Warehouse(
           deletePointer(std)
         }
         spark.sql(s"CREATE OR REPLACE VIEW ${std.quoted} AS $q")
-        spark.sql(s"DROP VIEW IF EXISTS ${stg.quoted}")
+        // a catalog drop, not DROP VIEW: the staging tables this view
+        // reads are already gone, and DROP VIEW resolves the view (to
+        // uncache it) and logs the failed lookup. Nothing caches a
+        // staging view.
+        spark.sessionState.catalog.dropTable(
+          org.apache.spark.sql.catalyst.TableIdentifier(stg.table, Some(stg.schema)),
+          ignoreIfNotExists = true, purge = false)
       } else {
         val d = Some(rel.design)
-        locationOf(std).foreach(registerAt(bak, _, d))       // L2 backup
-        locationOf(stg) match {
-          case Some(loc) =>
-            registerAt(std, loc, d)                           // L3 promote
+        // both entries already hold their files' schema: re-pointing
+        // declares it rather than inferring it again (a partitioned
+        // entry declares the design's, inside registerAt)
+        def schemaOf(t: CatalogTable) =
+          Some(t.schema).filter(_ => t.partitionColumnNames.isEmpty)
+        catalogEntry(std).foreach(t =>                        // L2 backup
+          registerAt(bak, t.location.toString, d, schemaOf(t)))
+        catalogEntry(stg) match {
+          case Some(t) =>
+            registerAt(std, t.location.toString, d, schemaOf(t)) // L3 promote
             spark.sql(s"DROP TABLE IF EXISTS ${stg.quoted}")
             deletePointer(stg)   // its build now lives behind the standard pointer
           case None => ()
@@ -1947,4 +1960,48 @@ final class Warehouse(
 object Warehouse {
   /** Hive's directory name for a NULL partition value. */
   val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  /** The reference maps load concurrency onto Redshift WLM slots
+    * (commands.py: wlm_query_slot_count); the Spark analog is a FAIR
+    * scheduler pool. Every concurrent build thread tags its jobs with
+    * this pool name so that, when the session runs with
+    * `spark.scheduler.mode=FAIR`, parallel relation builds share
+    * executors fairly instead of FIFO-starving each other. Under the
+    * default FIFO mode the property is inert — safe to set always. */
+  val LoadSchedulerPool = "graft-load"
+
+  /** `xs.map(f)` on up to `parallelism` threads, results in input
+    * order: the load's level-parallel builds and `Cli extract`'s
+    * sources run here. */
+  private[graft] def parallelMap[A, B](spark: SparkSession, xs: Seq[A], parallelism: Int)(
+      f: A => B): Seq[B] =
+    if (xs.size <= 1 || parallelism <= 1) xs.map(f)
+    else {
+      import java.util.concurrent.Executors
+      import scala.concurrent._
+      import scala.concurrent.duration.Duration
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, xs.size))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try Await.result(Future.sequence(xs.map(x => Future {
+        // local properties are thread-local: each worker thread tags
+        // its Spark jobs with the load pool (and clears after, since
+        // executor threads are reused across levels)
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", LoadSchedulerPool)
+        try f(x)
+        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+      })), Duration.Inf)
+      finally pool.shutdown()
+    }
+
+  /** `t` with every field, element and value nullable. */
+  private def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullableType(m.keyType), nullableType(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 }

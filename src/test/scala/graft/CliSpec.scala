@@ -55,6 +55,22 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("`cli`.`summary`").collect().head.getLong(0) == 5L)
   }
 
+  test("cli load with a relative --warehouse publishes what an absolute one does") {
+    def counts(wh: String): Seq[Long] = {
+      assert(Cli.run(spark, "load", Map(
+        "designs" -> designsDir, "data" -> dataDir, "warehouse" -> wh)) == 0)
+      Seq("`cli`.`region`", "`cli`.`summary`").map(t => spark.table(t).count()) :+
+        spark.table("`cli`.`summary`").collect().head.getLong(0)
+    }
+    val relative = s"target/graft_cli_relwh_${java.util.UUID.randomUUID()}"
+    try {
+      val fromRelative = counts(relative)
+      val fromAbsolute = counts(Files.createTempDirectory("graft_cli_abswh_").toString)
+      assert(fromRelative == fromAbsolute)
+      assert(fromAbsolute == Seq(5L, 1L, 5L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(relative))
+  }
+
   test("cli snapshot verbs: pin, list, restore, drop; user errors exit 1") {
     val wh = Files.createTempDirectory("graft_cli_snap_").toString
     def run(cmd: String, extra: (String, String)*): Int =

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the one-session, one-extension-path design: a source scan of
-  * `src/main` plus the conf the shipped CLI session reports. */
+  * `src/main`, the state a fresh session starts with, and the conf the
+  * shipped CLI session reports. */
 class SessionSpec extends AnyFunSuite {
 
   private lazy val mainSources: Seq[(Path, String)] = {
@@ -32,6 +33,21 @@ class SessionSpec extends AnyFunSuite {
       "extraStrategies", "extraOptimizations")
       .flatMap(t => (filesMentioning(t) -- allowed).map(f => s"$f: $t"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("building a session runs no SQL and creates no temporary function") {
+    assert(filesMentioning("TEMPORARY FUNCTION").isEmpty)
+    val spark = Session.build(2)
+    try {
+      assert(etl.Telemetry.drain(spark.sparkContext))
+      assert(spark.sharedState.statusStore.executionsCount() == 0)
+      // user functions are Spark's non-built-ins: the extension's, plus
+      // any CREATE TEMPORARY FUNCTION
+      val injected = etl.GraftExtensions.functions.map(_._1).toSet
+      val temporary = spark.sql("SHOW USER FUNCTIONS").collect().map(_.getString(0))
+        .filterNot(injected)
+      assert(temporary.isEmpty, temporary.mkString(", "))
+    } finally spark.stop()
   }
 
   test("the CLI session reports the extension conf through SET") {

@@ -38,6 +38,52 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(2) == 10L)
   }
 
+  test("the function-shaped shims are native: no SQL function, same values and types") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val moved = Seq("dateadd_days", "datediff_days", "charindex", "strtol") ++
+      DialectShims.CanonicalUnits.map(u => s"rs_datediff_$u")
+    moved.foreach { name =>
+      assert(spark.sessionState.catalog.lookupFunctionInfo(FunctionIdentifier(name))
+        .getClassName == classOf[GraftExtensions].getName, name)
+    }
+    // the SQL-bodied definitions these builders replace, under other
+    // names, as the reference for values and result types
+    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION ref_dateadd_days(n INT, ts TIMESTAMP)
+        |RETURNS TIMESTAMP RETURN timestampadd(DAY, n, ts)""".stripMargin)
+    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION ref_datediff_days(a TIMESTAMP, b TIMESTAMP)
+        |RETURNS BIGINT RETURN timestampdiff(DAY, a, b)""".stripMargin)
+    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION ref_charindex(needle STRING, haystack STRING)
+        |RETURNS INT RETURN instr(haystack, needle)""".stripMargin)
+    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION ref_strtol(s STRING, base INT)
+        |RETURNS BIGINT RETURN CAST(conv(s, base, 10) AS BIGINT)""".stripMargin)
+    DialectShims.CanonicalUnits.foreach { u =>
+      val U = u.toUpperCase
+      spark.sql(s"""CREATE OR REPLACE TEMPORARY FUNCTION ref_rs_datediff_$u(a TIMESTAMP, b TIMESTAMP)
+          |RETURNS BIGINT RETURN timestampdiff($U, date_trunc('$U', a), date_trunc('$U', b))""".stripMargin)
+    }
+    val pairs = Seq(
+      "TIMESTAMP '2019-12-31 23:59:59.999999'" -> "TIMESTAMP '2021-03-01 00:00:00.000001'",
+      "TIMESTAMP '2020-01-01 23:30:00'" -> "TIMESTAMP '2020-01-02 00:30:00'",
+      "TIMESTAMP '2020-06-15 12:00:00'" -> "TIMESTAMP '2020-01-01 00:00:00'",
+      "'2020-01-31 10:59:00'" -> "'2020-02-01 11:01:30.5'",
+      "DATE '2020-02-28'" -> "DATE '2021-03-01'",
+      "NULL" -> "TIMESTAMP '2020-01-01 00:00:00'")
+    val calls = DialectShims.CanonicalUnits.map(u => s"rs_datediff_$u") ++ Seq("datediff_days")
+    val exprs = pairs.flatMap { case (a, b) => calls.map(f => s"$f($a, $b)") } ++ Seq(
+      "dateadd_days(3, TIMESTAMP '2020-01-01 00:00:00')", "dateadd_days('40', '2020-01-31')",
+      "dateadd_days(-1, DATE '2020-03-01')", "charindex('dex', 'Charindex')",
+      "charindex('zz', 'abc')", "charindex(5, 12345)", "strtol('ff', 16)",
+      "strtol('0644', 8)", "strtol('z', '36')", "strtol(NULL, 2)")
+    val native = spark.sql(exprs.mkString("SELECT ", ", ", ""))
+    val reference = spark.sql(exprs.map("ref_" + _).mkString("SELECT ", ", ", ""))
+    val analyzed = native.queryExecution.analyzed
+    assert(analyzed.flatMap(_.expressions).forall(_.collectFirst {
+      case e if e.getClass.getSimpleName.startsWith("SQLFunction") => e
+    }.isEmpty), analyzed)
+    assert(native.schema.map(_.dataType) == reference.schema.map(_.dataType))
+    assert(native.collect().head.toSeq == reference.collect().head.toSeq)
+  }
+
   test("LISTAGG rewrite produces Spark aggregate syntax") {
     val in = "SELECT g, LISTAGG(name, ', ') WITHIN GROUP (ORDER BY name) FROM t GROUP BY g"
     val out = DialectShims.rewriteListagg(in)

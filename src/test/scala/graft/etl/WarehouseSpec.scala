@@ -246,6 +246,130 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("`rep`.`counts`").count() == 5)
   }
 
+  test("publish only swaps pointers: no Spark job, no failed view lookup") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val wh = freshWarehouse()
+    val view = rel(
+      """name: rep.small_nations
+        |source_name: VIEW
+        |depends_on: [src.nation]
+        |columns:
+        |  - name: n_name
+        |query: SELECT n_name FROM src.nation WHERE n_nationkey < 5
+        |""".stripMargin)
+    val rels = Seq(srcNation, view)
+    wh.loadRelations(rels, SchemaPosition.Staging)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("publish-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = classOf[org.apache.spark.sql.execution.command.DropTableCommand].getName
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    // the spec runs at ERROR; open this one logger to WARN for the call
+    Configurator.setLevel(logger, Level.WARN)
+    val config = ctx.getConfiguration.getLoggerConfig(logger)
+    config.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    val profile = try Telemetry.scoped(spark) { scope =>
+      wh.publish(rels)
+      scope.profile()
+    } finally {
+      config.removeAppender(appender.getName)
+      Configurator.setLevel(logger, Level.ERROR)
+      appender.stop()
+    }
+    assert(profile.map(_.jobs).contains(0), s"publish ran Spark jobs: $profile")
+    assert(warnings.isEmpty, warnings.toArray.mkString("\n"))
+    assert(spark.table("`rep`.`small_nations`").count() == 5)
+    assert(!spark.catalog.tableExists("`etl_staging__rep`.`small_nations`"))
+  }
+
+  test("a declared table schema equals the schema inferred from its files") {
+    val wh = freshWarehouse()
+    val design = TableDesign.load(
+      """name: rep.every_type
+        |source_name: CTAS
+        |columns:
+        |  - name: b
+        |    type: boolean
+        |    not_null: true
+        |  - name: d
+        |    type: date
+        |  - name: f8
+        |    type: double
+        |  - name: f4
+        |    type: float
+        |  - name: i
+        |    type: int
+        |    not_null: true
+        |  - name: l
+        |    type: long
+        |  - name: s
+        |    type: string
+        |  - name: ts
+        |    type: timestamp
+        |  - name: u
+        |    type: uuid
+        |  - name: n
+        |    type: decimal
+        |    sql_type: numeric(12,2)
+        |  - name: "seg.code"
+        |    type: string
+        |query: SELECT 1
+        |""".stripMargin)
+    val df = spark.sql(
+      """SELECT true, DATE '2020-01-02', 1.5, 2.5, 3, 4, 'x',
+        |  TIMESTAMP '2020-01-02 03:04:05.123456', 'u-1', 6.75, 'a.b'""".stripMargin)
+      .toDF(design.activeColumns.map(_.name): _*)
+    val typed = df.select(design.activeColumns.map(c =>
+      org.apache.spark.sql.functions.col(s"`${c.name}`").cast(c.dataType).as(c.name)): _*)
+    def roundTrip(t: TableName, df: org.apache.spark.sql.DataFrame): Unit = {
+      assert(wh.writeTable(t, df, Some(design)) == 1L)
+      val location = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t.table, Some(t.schema))).location.toString
+      assert(spark.table(t.quoted).schema == spark.read.parquet(location).schema)
+      assert(spark.table(t.quoted).collect().head.getAs[String]("seg.code") == "a.b")
+    }
+    roundTrip(TableName("rep", "every_type"), typed)
+    // field metadata, which a DDL column list cannot carry, still
+    // reaches the catalog (an index version rides there)
+    val md = new org.apache.spark.sql.types.MetadataBuilder().putLong("version", 3L).build()
+    roundTrip(TableName("rep", "every_type_md"),
+      typed.withColumn("l", org.apache.spark.sql.functions.col("l").as("l", md)))
+  }
+
+  test("a constraint rollback serves the previous build's columns, not the new design's") {
+    val wh = freshWarehouse()
+    def grow(extra: String, key: String) = rel(
+      s"""name: rep.grow
+         |source_name: CTAS
+         |depends_on: [src.nation]
+         |columns:
+         |  - name: k
+         |    type: int
+         |    not_null: true
+         |$extra
+         |constraints:
+         |  - primary_key: [k]
+         |query: SELECT $key AS k${if (extra.isEmpty) "" else ", n_name AS tag"} FROM src.nation
+         |""".stripMargin)
+    wh.buildOneRelation(grow("", "CAST(n_nationkey AS INT)"))
+    // the design gains a column, and its build violates the key
+    intercept[FailedConstraintError] {
+      wh.buildOneRelation(grow("  - name: tag\n    type: string", "CAST(n_nationkey % 5 AS INT)"))
+    }
+    val back = spark.table("`rep`.`grow`")
+    assert(back.columns.toSeq == Seq("k"))
+    assert(back.count() == 25)
+  }
+
   test("restore from backup brings back the pre-publish table") {
     val wh = freshWarehouse()
     val v1 = Seq(srcNation, ctasTop("SELECT n_name FROM src.nation WHERE n_nationkey < 5"))
@@ -598,10 +722,9 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("maxConcurrency bounds the level-parallel build fan-out") {
-    val wh = freshWarehouse()
     val inFlight = new java.util.concurrent.atomic.AtomicInteger
     val maxSeen = new java.util.concurrent.atomic.AtomicInteger
-    wh.parallelMap((1 to 12).toSeq, 3) { _ =>
+    Warehouse.parallelMap(spark, (1 to 12).toSeq, 3) { _ =>
       val cur = inFlight.incrementAndGet()
       maxSeen.accumulateAndGet(cur, math.max _)
       Thread.sleep(25)
