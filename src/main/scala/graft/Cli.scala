@@ -15,7 +15,12 @@ import graft.etl._
   */
 object Cli {
 
-  private def usage(): Nothing = {
+  /** A usage error: `run` prints the usage text and returns 2. */
+  private final class UsageError extends RuntimeException
+
+  private def usage(): Nothing = throw new UsageError
+
+  private def printUsage(): Unit =
     System.err.println(
       """usage: graft.Cli <command> [options]
         |  load           --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--no-staging] [--skip-copy] [--continue-from POINT] [--max-concurrency N] [--analyze] [--vacuum] [--events FILE] [--serve-port N]
@@ -24,7 +29,7 @@ object Cli {
         |  update         --designs DIR --data DIR --warehouse DIR --select PATTERN [--only-selected] [--vacuum] [--scheduled-start-time EPOCH_MS|ISO8601] [--wait-timeout-ms N] [--events FILE]
         |  check_constraints --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--with-staging]
         |  vacuum         --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--compact TABLE[,TABLE]] [--max-files N] [--dry-run]
-        |  extract        --designs DIR --data DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro] [--use-sampling]
+        |  extract        --designs DIR --data DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro] [--use-sampling] [--max-concurrency N]
         |  unload         --designs DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro]
         |  validate       --designs DIR
         |  show_ddl       --designs DIR [--select PATTERN]
@@ -66,8 +71,6 @@ object Cli {
         |  restore_snapshot --designs DIR --data DIR --warehouse DIR --tag TAG [--select PATTERN]
         |  diff_snapshots   --data DIR --warehouse DIR --tag-a TAG --tag-b TAG
         |""".stripMargin)
-    sys.exit(2)
-  }
 
   private def printEvent(e: MonitorEvent): Unit = {
     val extra = e.rowcount.map(r => s" rows=$r").getOrElse("") +
@@ -105,22 +108,27 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.isEmpty) usage()
-    val command = args.head
-    val opts = parseArgs(args.tail.toSeq)
-    val spark = Session.build()
-    val code = try run(spark, command, opts) finally spark.stop()
+    val code =
+      try {
+        if (args.isEmpty) usage()
+        val opts = parseArgs(args.tail.toSeq)
+        val spark = Session.build()
+        try run(spark, args.head, opts) finally spark.stop()
+      } catch { case _: UsageError => printUsage(); 2 }
     if (code != 0) sys.exit(code)
   }
 
-  /** Returns the process exit code (main applies it): non-zero for
-    * vacuum refusals, validation findings, constraint violations, and
-    * config-plane user errors (unknown setting/template), so
-    * automation can branch on the result — and tests can assert it
-    * without the JVM dying under them. */
+  /** Returns the process exit code (main applies it): 2 for usage
+    * errors, non-zero for vacuum refusals, validation findings,
+    * constraint violations, and config-plane user errors (unknown
+    * setting/template), so automation can branch on the result — and
+    * tests can assert it without the JVM dying under them. */
   private[graft] def run(spark: SparkSession, command: String,
                          opts: Map[String, String]): Int =
     try runCommand(spark, command, opts) catch {
+      case _: UsageError =>
+        printUsage()
+        2
       case e: SettingsError =>
         System.err.println(s"[error] ${e.getMessage}")
         1
@@ -147,6 +155,19 @@ object Cli {
     // (comma-separated), the reference's -c/--config surface
     def settings: Settings =
       Settings.load(opts.get("config").toSeq.flatMap(_.split(',').toSeq))
+    // how many relations load, upgrade and extract build at once:
+    // --max-concurrency N, else graft_settings.load.max_concurrency
+    def maxConcurrency: Int = opts.get("max-concurrency") match {
+      case Some(n) => n.toIntOption.filter(_ > 0).getOrElse {
+        System.err.println(s"--max-concurrency: not a positive integer: '$n'")
+        usage()
+      }
+      case None =>
+        val name = "graft_settings.load.max_concurrency"
+        val n = settings.value(name, Some("4"))
+        n.toIntOption.filter(_ > 0).getOrElse(
+          throw new SettingsError(s"$name: not a positive integer: '$n'"))
+    }
 
     // --serve-port N: live status dashboard for the duration of the
     // command (monitor.py:433-574 — the reference binds 8086
@@ -167,11 +188,10 @@ object Cli {
     }
     try command match {
       case "load" =>
+        val conc = maxConcurrency
         val rels = Dag.selectInExecutionOrder(designs, selector,
           includeDependents = true, continueFrom = opts.get("continue-from"))
         val wh = warehouse
-        val conc = opts.get("max-concurrency").map(_.toInt).getOrElse(
-          settings.intValue("graft_settings.load.max_concurrency", Some(4)))
         val doAnalyze = opts.contains("analyze")
         // --skip-copy (commands.py load args): create every table but
         // leave them empty — structure-only deploys.
@@ -208,12 +228,13 @@ object Cli {
           System.err.println("option '--into-schema' requires that relations are selected")
           return 2
         }
+        val conc = maxConcurrency
         warehouse.upgradeRelations(designs, selector,
           onlySelected = opts.contains("only-selected"),
           includeImmediateViews = opts.contains("include-immediate-views"),
           continueFrom = opts.get("continue-from"),
           skipCopy = opts.contains("skip-copy"),
-          maxConcurrency = opts.get("max-concurrency").map(_.toInt).getOrElse(4),
+          maxConcurrency = conc,
           targetSchema = opts.get("into-schema"))
           .foreach(r =>
             println(s"[upgrade] ${r.identifier}: ${r.rowcount} rows" +
@@ -433,7 +454,7 @@ object Cli {
         val format = opts.getOrElse("format", "csv")
         require(Artifact.Formats.contains(format),
           s"artifact format '$format' is not one of ${Artifact.Formats.mkString("|")}")
-        val conc = settings.intValue("graft_settings.load.max_concurrency", Some(4))
+        val conc = maxConcurrency
         val sources = designs.filter(r => r.design.isSourceTable && selector.matches(r.name))
         val written = Warehouse.parallelMap(spark, sources, conc) { r =>
           scala.util.Try {

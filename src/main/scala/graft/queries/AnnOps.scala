@@ -939,8 +939,11 @@ object AnnOps {
     // rows, every consumer broadcasts it. The collected local relation
     // otherwise plans cores-many near-empty write tasks (probed: a
     // 32-task write stage at 37 s summed run / 9 s task-deser for 45
-    // rows) and every downstream scan then pays 32 tiny splits.
-    wh.writeTable(centsTable, centroids(spark, sfDir)._1.coalesce(1))
+    // rows) and every downstream scan then pays 32 tiny splits. A bare
+    // coalesce(1) is not enough: writeTable's auto layout spreads a
+    // one-partition frame back out.
+    wh.writeTable(centsTable, centroids(spark, sfDir)._1, Some(
+      graft.etl.TableDesign(centsTable, "CTAS", Seq.empty, distStyle = Some("all"))))
     wh.writeTable(indexTable,
       ivfEncode(spark, spark.table(centsTable.quoted), corpus))
   }

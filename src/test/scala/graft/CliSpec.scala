@@ -429,6 +429,35 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       "into-schema" -> "scratch")) == 2)
   }
 
+  test("cli --max-concurrency and its setting: one positive-integer rule for load, upgrade, extract") {
+    val wh = Files.createTempDirectory("graft_cli_mcwh_").toString
+    val base = Map("designs" -> designsDir, "data" -> dataDir, "warehouse" -> wh,
+      "out" -> Files.createTempDirectory("graft_cli_mcex_").toString)
+    val cfg = Files.createTempDirectory("graft_cli_mccfg_")
+    Files.write(cfg.resolve("zero.yaml"),
+      "graft_settings:\n  load:\n    max_concurrency: 0\n".getBytes(StandardCharsets.UTF_8))
+    val commands = Seq("load", "upgrade", "extract")
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+    try {
+      // a flag that is not a positive integer is a usage error
+      for (cmd <- commands; bad <- Seq("abc", "0", "-3"))
+        assert(Cli.run(spark, cmd, base + ("max-concurrency" -> bad)) == 2,
+          s"$cmd --max-concurrency $bad")
+      // without the flag, all three read the setting, and refuse a bad one
+      for (cmd <- commands)
+        assert(Cli.run(spark, cmd, base + ("config" -> cfg.toString)) == 1,
+          s"$cmd with max_concurrency: 0")
+    } finally System.setErr(prevErr)
+    val err = errBuf.toString("UTF-8")
+    assert(err.contains("--max-concurrency: not a positive integer: 'abc'") &&
+      err.contains("usage: graft.Cli"), err)
+    assert(err.contains("graft_settings.load.max_concurrency: not a positive integer: '0'"), err)
+    assert(Cli.run(spark, "load", base + ("max-concurrency" -> "2")) == 0)
+    assert(spark.table("`cli`.`summary`").collect().head.getLong(0) == 5L)
+  }
+
   test("cli check_constraints: zero on clean, non-zero with samples on violation") {
     val wh = Files.createTempDirectory("graft_cli_ccwh_").toString
     Cli.run(spark, "load", Map(

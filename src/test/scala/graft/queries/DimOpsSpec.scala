@@ -208,6 +208,16 @@ class DimOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("the stored IVF centroid table lands as one data file") {
+    val wh = new graft.etl.Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft_ivf1_wh_").toString, sfDir)
+    val centsT = graft.etl.TableName.parse("ann.one_centroids")
+    AnnOps.buildIvfIndex(wh, sfDir, centsT,
+      graft.etl.TableName.parse("ann.one_index"), Tables.load(spark, sfDir, "embeddings"))
+    val files = spark.table(centsT.quoted).inputFiles
+    assert(files.length == 1, s"centroid table spread over ${files.mkString(", ")}")
+  }
+
   test("compacting the append-grown IVF index leaves the probe bit-equal") {
     val s = spark
     import s.implicits._
