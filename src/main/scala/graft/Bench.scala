@@ -56,11 +56,37 @@ object Bench {
   private[graft] val OutFile = "BENCH_LAST.json"
 
   /** A run is stamped contended when the box's 1-minute load average
-    * is above 1 at its start OR its end: a run that starts quiet can
-    * still end at load 8. The numbers are recorded as measured either
-    * way — the stamp only tells a reader not to compare them. */
-  private[graft] def contendedRun(loadStart: Double, loadEnd: Double): Boolean =
-    loadStart > 1.0 || loadEnd > 1.0
+    * is above 1 at its start, or when at its end the load average less
+    * Bench's own busy cores over the run's last minute is above 1: a
+    * run that starts quiet can still end at load 8, but on a small box
+    * Bench's own threads alone lift the end load past 1 (an idle 4-core
+    * box went from 0.51 to 2.70 with about 3 of those cores Bench's).
+    * The numbers are recorded as measured either way — the stamp only
+    * tells a reader not to compare them. */
+  private[graft] def contendedRun(loadStart: Double, loadEnd: Double,
+                                  ownBusyCoresEnd: Double): Boolean =
+    loadStart > 1.0 || loadEnd - ownBusyCoresEnd > 1.0
+
+  /** This JVM's CPU time so far, all threads, in ns (-1 where the JVM
+    * does not report it). */
+  private def processCpuNanos(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
+      case _ => -1L
+    }
+
+  /** Mean busy cores over the last minute of a run (the window of the
+    * 1-minute load average), from (wall ns, process CPU ns) samples
+    * taken at entry boundaries, oldest first: the CPU time since the
+    * latest sample at or before the minute's start (the first sample
+    * for a shorter run), over the wall time since it. */
+  private[graft] def ownBusyCores(samples: Seq[(Long, Long)]): Double = {
+    val (wallEnd, cpuEnd) = samples.last
+    val (wall0, cpu0) = samples.takeWhile(_._1 <= wallEnd - 60L * 1000000000L)
+      .lastOption.getOrElse(samples.head)
+    if (wallEnd <= wall0 || cpu0 < 0) 0.0
+    else (cpuEnd - cpu0).toDouble / (wallEnd - wall0)
+  }
 
   /** The one line printed on stdout. A tail parser captures only ~2000
     * chars, and the full per-query artifact is ~6 KB, so the line is a
@@ -72,6 +98,7 @@ object Bench {
                                  minTotal: Double,
                                  warmRuns: Int, failed: Seq[String],
                                  loadStart: Double, loadEnd: Double,
+                                 ownBusyCoresEnd: Double,
                                  ncpu: Int, sfDir: String): String = {
     def r3(d: Double): String = f"$d%.3f"
     def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -79,7 +106,7 @@ object Bench {
       .sortBy(-_._2).take(25)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec","warm_runs":$warmRuns,"queries":$slowest,"queries_shown":${math.min(25, medians.count(_._2 >= 0))},"queries_run":${medians.size},"full":"$OutFile","cold_total":${r3(coldTotal)},"min_total":${r3(minTotal)},"failed":${arr(failed)},"contended_run":${contendedRun(loadStart, loadEnd)},"load_avg_start":${r3(loadStart)},"load_avg_end":${r3(loadEnd)},"cpus":$ncpu,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","warm_runs":$warmRuns,"queries":$slowest,"queries_shown":${math.min(25, medians.count(_._2 >= 0))},"queries_run":${medians.size},"full":"$OutFile","cold_total":${r3(coldTotal)},"min_total":${r3(minTotal)},"failed":${arr(failed)},"contended_run":${contendedRun(loadStart, loadEnd, ownBusyCoresEnd)},"load_avg_start":${r3(loadStart)},"load_avg_end":${r3(loadEnd)},"own_busy_cores_end":${r3(ownBusyCoresEnd)},"cpus":$ncpu,"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -90,11 +117,14 @@ object Bench {
     // sample cannot separate a 2x regression from noise; median-of-3
     // plus the reported spread can.
     val warmRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    // The 1-minute load average at start and end is stamped into the
-    // artifact (see contendedRun) — recorded, never acted on.
+    // The 1-minute load average at start and end, and this JVM's own
+    // busy cores at the end, are stamped into the artifact (see
+    // contendedRun) — recorded, never acted on.
     def loadAvg(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg()
+    val cpuSamples = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def sampleCpu(): Unit = cpuSamples += ((System.nanoTime(), processCpuNanos()))
     val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Session.build()
     val ncpu = spark.sparkContext.defaultParallelism
@@ -136,6 +166,7 @@ object Bench {
         "stream_scd2_dim",
         "dedup_containment", "dedup_ngram_jaccard", "graph_pagerank"))
     val jvmRunStart = jvmSnap()
+    sampleCpu()
     val results = selected.map { case (name, fn) =>
       val wantStages = stageSet.contains(name)
       val stageRuns = scala.collection.mutable.ArrayBuffer.empty[Seq[Telemetry.StageRec]]
@@ -164,8 +195,8 @@ object Bench {
         // snapshot after the cold run — the census is computed at plan
         // CONSTRUCTION and is content-deterministic, so warm runs
         // recompute the identical decision. An ARRAY: entries that
-        // build several fuzzy plans (self + bipartite, per-batch
-        // fold-ins) log one census each, in construction order.
+        // build several fuzzy plans log one census each, in
+        // construction order.
         val censusesOfEntry = graft.queries.FuzzyJoin.censusLog.get().reverse
         if (censusesOfEntry.nonEmpty)
           censuses ::= (name -> censusesOfEntry.map { cs =>
@@ -186,8 +217,10 @@ object Bench {
         spark.catalog.clearCache()
         name -> Times(-1.0, -1.0, -1.0, -1.0)
       }
+      finally sampleCpu()
     }
     val loadEnd = loadAvg()
+    val ownBusyCoresEnd = ownBusyCores(cpuSamples.toSeq)
     def json(f: Times => Double): String = results
       .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val total = results.collect { case (_, t) if t.median >= 0 => t.median }.sum
@@ -207,7 +240,7 @@ object Bench {
       .getRuntimeMXBean.getUptime
     val jvmTotalJson = jvmDeltaJson(jvmRunStart, jvmRunEnd).dropRight(1) +
       s""","uptime_ms":$uptime,"jit_ms_since_jvm_start":${jvmRunEnd.jitMs}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm_runs":$warmRuns,"queries":${json(_.median)},"queries_cold":${json(_.cold)},"queries_min":${json(_.minWarm)},"queries_spread":${json(_.spread)},"census":$censusJson,"jvm":$jvmJson,"jvm_total":$jvmTotalJson,"stages":$stagesJson,"cold_total":$coldTotal,"min_total":$minTotal,"failed":$failedJson,"contended_run":${contendedRun(loadStart, loadEnd)},"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"cpus":$ncpu,"spark_parallelism":$ncpu,"shuffle_partitions":${spark.sessionState.conf.numShufflePartitions},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","warm_runs":$warmRuns,"queries":${json(_.median)},"queries_cold":${json(_.cold)},"queries_min":${json(_.minWarm)},"queries_spread":${json(_.spread)},"census":$censusJson,"jvm":$jvmJson,"jvm_total":$jvmTotalJson,"stages":$stagesJson,"cold_total":$coldTotal,"min_total":$minTotal,"failed":$failedJson,"contended_run":${contendedRun(loadStart, loadEnd, ownBusyCoresEnd)},"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"own_busy_cores_end":$ownBusyCoresEnd,"cpus":$ncpu,"spark_parallelism":$ncpu,"shuffle_partitions":${spark.sessionState.conf.numShufflePartitions},"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(OutFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>
@@ -215,6 +248,6 @@ object Bench {
     spark.stop()
     println(compactLine(results.map { case (k, v) => (k, v.median) },
       total, coldTotal, minTotal, warmRuns, failed.sorted,
-      loadStart, loadEnd, ncpu, sfDir))
+      loadStart, loadEnd, ownBusyCoresEnd, ncpu, sfDir))
   }
 }

@@ -90,13 +90,6 @@ object Artifact {
     ArtifactIo.writeText(s"$dest/columns.yaml", yaml.toString)
   }
 
-  /** S7: verify the prefix is a complete extract (`_SUCCESS` present)
-    * and write its manifest — the whole static "extract" step. */
-  def extractStatic(prefix: String): String = {
-    requireSuccess(prefix)
-    writeManifest(prefix)
-  }
-
   def requireSuccess(prefix: String): Unit =
     if (!ArtifactIo.exists(s"$prefix/_SUCCESS"))
       throw new MissingSuccessError(s"no _SUCCESS marker under $prefix")

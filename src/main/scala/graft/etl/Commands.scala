@@ -14,19 +14,6 @@ object Commands {
     limit.map(df.limit).getOrElse(df)
   }
 
-  /** run_query's printed form — the CLI surface. */
-  def runQueryText(spark: SparkSession, query: String, limit: Option[Int] = Some(100)): String =
-    runQuery(spark, query, limit).showString(limit.getOrElse(Int.MaxValue))
-
-  private implicit class ShowString(df: DataFrame) {
-    def showString(n: Int): String = {
-      val rows = df.limit(n).collect()
-      val header = df.schema.fieldNames.mkString(" | ")
-      (header +: rows.map(_.toSeq.map(v =>
-        Option(v).map(_.toString).getOrElse("NULL")).mkString(" | "))).mkString("\n")
-    }
-  }
-
   // ------------------------------------------------------------- Q4
   /** show_downstream_dependents (load.py:1424-1564): the DAG with
     * index, level, kind, and required flag — and the mirror view for

@@ -143,25 +143,4 @@ final class ResultCache(spark: SparkSession, cacheDir: String) {
   }
 
   def run(df: DataFrame): DataFrame = lookup(df)._1
-
-  /** Drop entries beyond `keep` most-recent (by entry mtime), plus any
-    * orphaned `.tmp_*` writer scratch older than `tmpGraceMs` — a
-    * crashed or lost-race writer leaves one behind and nothing else
-    * reclaims it. The grace period keeps an IN-FLIGHT writer's scratch
-    * safe (its rename happens well within the window). */
-  def evict(keep: Int, tmpGraceMs: Long = 60 * 60 * 1000L): Int = {
-    val root = new org.apache.hadoop.fs.Path(cacheDir)
-    val f = fs(root)
-    if (!f.exists(root)) return 0
-    val all = f.listStatus(root).filter(_.isDirectory)
-    val entries = all.filterNot(_.getPath.getName.startsWith("."))
-      .sortBy(-_.getModificationTime)
-    val victims = entries.drop(math.max(0, keep))
-    victims.foreach(s => f.delete(s.getPath, true))
-    val cutoff = System.currentTimeMillis() - tmpGraceMs
-    val orphans = all.filter(s => s.getPath.getName.startsWith(".tmp_") &&
-      s.getModificationTime < cutoff)
-    orphans.foreach(s => f.delete(s.getPath, true))
-    victims.length + orphans.length
-  }
 }

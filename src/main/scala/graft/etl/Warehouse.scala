@@ -239,16 +239,12 @@ final class Warehouse(
   /** CTAS materialization (T1/T2/T3, load.py:467-551): run the
     * rewritten query, enforce design column order, assign the
     * identity surrogate key over the design's sort order if declared,
-    * and append the missing-dimension NA row for `dim_*` tables. */
-  def ctasDataFrame(design: TableDesign, pos: SchemaPosition.Value,
-                    inRun: Option[Set[String]] = None): DataFrame =
-    ctasDataFrameManaged(design, pos, inRun)._1
-
-  /** As [[ctasDataFrame]], also returning the identity build's cache
-    * cleanup — [[buildOneRelation]] runs it after the write action so
-    * the sorted intermediate doesn't stay persisted for the rest of
-    * the session (one leaked frame per identity build, observed as
-    * steady storage-memory growth across a multi-relation load). */
+    * and append the missing-dimension NA row for `dim_*` tables. Also
+    * returns the identity build's cache cleanup — [[buildOneRelation]]
+    * runs it after the write action so the sorted intermediate doesn't
+    * stay persisted for the rest of the session (one leaked frame per
+    * identity build, observed as steady storage-memory growth across a
+    * multi-relation load). */
   private[etl] def ctasDataFrameManaged(design: TableDesign,
                                         pos: SchemaPosition.Value,
                                         inRun: Option[Set[String]] = None): (DataFrame, () => Unit) = {
@@ -1255,23 +1251,6 @@ final class Warehouse(
     if (!fs.rename(tmp, dir))
       throw new IllegalStateException(
         s"snapshot '$tag': publishing rename failed (concurrent create?)")
-  }
-
-  /** Read the data exactly as pinned — a time-travel scan. Raw
-    * parquet read of the frozen build directory: bucketing metadata
-    * is not replayed (reads are correct; only a bucket-join shortcut
-    * against it would be lost), and a partitioned build's partition
-    * columns come back via directory discovery. */
-  def readSnapshot(tag: String, name: TableName): DataFrame = {
-    requireSnapshotTag(tag)
-    val p = snapshotFile(tag, name)
-    pointerStateAt(p) match {
-      case PointerLive(loc) => spark.read.parquet(loc)
-      case PointerAbsent => throw new IllegalArgumentException(
-        s"no snapshot '$tag' for '${name.identifier}'")
-      case PointerUnresolvable => throw new IllegalStateException(
-        s"snapshot '$tag' for '${name.identifier}' exists but is unreadable (torn write)")
-    }
   }
 
   /** Re-point the live table at a pinned build — rollback to the

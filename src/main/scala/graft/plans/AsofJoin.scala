@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -347,159 +347,4 @@ object AsofJoin {
                    rightId: String, bucketWidth: Long): DataFrame =
     asofBucketed(left, right, Seq(leftKey), Seq(rightKey),
       leftTime, rightTime, rightId, bucketWidth)
-
-  /** One side's skew profile: estimated hottest-key row count and the
-    * time column's [min, max] in the merge's long units. */
-  private[plans] case class AsofProfile(hotRows: Double, tmin: Long, tmax: Long)
-
-  /** ZERO-JOB profile from catalog/CBO statistics. Defined only when
-    * the plan carries a row count plus column stats for the (single)
-    * key and the time column — i.e. both inputs trace to ANALYZEd
-    * tables and `spark.sql.cbo.enabled` propagates their stats.
-    * Hottest-key estimate: with an equi-height HISTOGRAM on the key
-    * (ANALYZE ... with `spark.sql.statistics.histogram.enabled`),
-    * the max over bins of height/ndv — a real skew signal; with only
-    * an NDV, rows/ndv — the uniform-key density (an underestimate
-    * under skew, same information the sampling path's average would
-    * see at zero cost). Time min/max come straight from column stats
-    * (Catalyst stores timestamps as micros — the same unit
-    * [[asofBucketed]] buckets on). */
-  private[plans] def statsProfile(df: DataFrame, keys: Seq[String],
-                                  time: String): Option[AsofProfile] = {
-    import org.apache.spark.sql.types._
-    if (keys.size != 1) return None
-    val plan = df.queryExecution.optimizedPlan
-    val stats = plan.stats
-    def attr(name: String) =
-      plan.output.find(_.name.equalsIgnoreCase(name))
-    def colStat(name: String) =
-      attr(name).flatMap(a => stats.attributeStats.get(a))
-    def timeToLong(a: org.apache.spark.sql.catalyst.expressions.Attribute,
-                   v: Any): Option[Long] = (a.dataType, v) match {
-      case (TimestampType | TimestampNTZType, l: Long) => Some(l)
-      case (ByteType | ShortType | IntegerType | LongType, n: Number) =>
-        Some(n.longValue)
-      case _ => None
-    }
-    for {
-      rowCount <- stats.rowCount
-      key <- colStat(keys.head)
-      ndv <- key.distinctCount if ndv > 0
-      tAttr <- attr(time)
-      tStat <- colStat(time)
-      tmin <- tStat.min.flatMap(timeToLong(tAttr, _))
-      tmax <- tStat.max.flatMap(timeToLong(tAttr, _))
-    } yield {
-      val hot = key.histogram match {
-        case Some(h) =>
-          // a hot value SPANS consecutive equi-height bins (each
-          // reporting ndv=1), so per-bin height/ndv alone would read
-          // a constant key as ~rows/numBins — sum single-value bins
-          // per value, and use height/ndv only for multi-value bins
-          val (single, multi) = h.bins.partition(b => b.lo == b.hi)
-          val hottestSingle =
-            if (single.isEmpty) 0.0
-            else single.groupBy(_.lo).values.map(_.size * h.height).max
-          val hottestMulti =
-            if (multi.isEmpty) 0.0
-            else multi.map(b => h.height / math.max(1L, b.ndv)).max
-          math.max(hottestSingle, hottestMulti)
-        case None => rowCount.toDouble / ndv.toDouble
-      }
-      AsofProfile(hot, tmin, tmax)
-    }
-  }
-
-  /** ONE-JOB sampled profile: max per-key count and time min/max over
-    * `sampleFraction` of the rows, map-side-combinable, scaled back
-    * up by the fraction. */
-  private[plans] def sampledProfile(df: DataFrame, keys: Seq[String],
-                                    time: String,
-                                    sampleFraction: Double): AsofProfile = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, unix_micros}
-    import org.apache.spark.sql.types._
-    def timeAsLong(d: DataFrame) = {
-      val f = d.schema.fields.find(_.name.equalsIgnoreCase(time)).getOrElse(
-        throw new IllegalArgumentException(s"column '$time' not found"))
-      f.dataType match {
-        case TimestampType | TimestampNTZType =>
-          unix_micros(d.col(f.name).cast(TimestampType))
-        case _ => d.col(f.name).cast(LongType)
-      }
-    }
-    val sampled =
-      if (sampleFraction >= 1.0) df else df.sample(sampleFraction, seed = 42L)
-    val row = sampled
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        min(timeAsLong(sampled)).as("tmin"),
-        max(timeAsLong(sampled)).as("tmax"))
-      .agg(max(col("n")), min(col("tmin")), max(col("tmax")))
-      .head()
-    if (row.isNullAt(0)) AsofProfile(0.0, 0L, 0L)
-    else AsofProfile(row.getLong(0) / sampleFraction,
-      if (row.isNullAt(1)) 0L else row.getLong(1),
-      if (row.isNullAt(2)) 0L else row.getLong(2))
-  }
-
-  /** The auto-dispatch decision: `(bucketWidth, usedCatalogStats)` —
-    * None width ⇒ plain [[asof]]. Catalog stats on BOTH sides win
-    * (zero jobs); otherwise two sampling jobs. Exposed for the spec's
-    * zero-job assertion. */
-  private[plans] def autoDecision(left: DataFrame, right: DataFrame,
-                                  leftKeys: Seq[String], rightKeys: Seq[String],
-                                  leftTime: String, rightTime: String,
-                                  hotKeyRows: Long, sampleFraction: Double,
-                                  targetBuckets: Int): (Option[Long], Boolean) = {
-    val viaStats = for {
-      l <- statsProfile(left, leftKeys, leftTime)
-      r <- statsProfile(right, rightKeys, rightTime)
-    } yield (l, r)
-    val ((l, r), usedStats) = viaStats match {
-      case Some(p) => (p, true)
-      case None =>
-        ((sampledProfile(left, leftKeys, leftTime, sampleFraction),
-          sampledProfile(right, rightKeys, rightTime, sampleFraction)), false)
-    }
-    val span = math.max(l.tmax, r.tmax) - math.min(l.tmin, r.tmin)
-    val width =
-      if (math.max(l.hotRows, r.hotRows) < hotKeyRows.toDouble || span <= 0) None
-      else Some(math.max(1L, span / targetBuckets))
-    (width, usedStats)
-  }
-
-  /** Adaptive as-of: detect hot keys and pick the plain operator (no
-    * detection hit ⇒ zero overhead beyond detection) or the
-    * time-bucketed form with a width derived from the time range.
-    *
-    * Detection cost at 100 TB: ZERO jobs when both sides carry
-    * catalog stats (ANALYZEd tables + CBO — [[statsProfile]]), else
-    * one job per side over `sampleFraction` of the rows computing
-    * (max per-key count, min/max time) — map-side partial
-    * aggregation, a scale-independent driver result. The estimated
-    * hottest-key row count, scaled to full size, is compared to
-    * `hotKeyRows` (default 4M rows ≈ a few hundred MB on one task —
-    * past the point a single merge task is acceptable); past it, the
-    * bucketed form splits the observed time range into
-    * `targetBuckets` buckets. Estimates steer only the PLAN — either
-    * branch returns exactly the same rows (AsofJoinSpec pins
-    * parity), so an estimation miss costs balance, never
-    * correctness. */
-  def asofAuto(left: DataFrame, right: DataFrame,
-               leftKeys: Seq[String], rightKeys: Seq[String],
-               leftTime: String, rightTime: String, rightId: String,
-               hotKeyRows: Long = 4000000L,
-               sampleFraction: Double = 0.01,
-               targetBuckets: Int = 64): DataFrame = {
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction must be in (0, 1], got $sampleFraction")
-    autoDecision(left, right, leftKeys, rightKeys, leftTime, rightTime,
-        hotKeyRows, sampleFraction, targetBuckets)._1 match {
-      case None =>
-        asof(left, right, leftKeys, rightKeys, leftTime, rightTime, rightId)
-      case Some(width) =>
-        asofBucketed(left, right, leftKeys, rightKeys, leftTime, rightTime,
-          rightId, width)
-    }
-  }
 }

@@ -30,19 +30,6 @@ object AnnOps {
   val TopK = 3
   val NumQueries = 5    // query set: vec_id < 5
 
-  /** LSH bucket-count policy: planes derive from the CORPUS SIZE so
-    * the per-bucket population stays ~[[TargetBucketSize]] at any
-    * scale — the round-2 fixed `LshPlanes = 6` meant the bucket
-    * self-join degraded to Θ(n²/64). planes = smallest p with
-    * 2^p ≥ ceil(n / target), computed INTEGRALLY (never via float
-    * log2: at exact powers of two a 1-ulp difference between engines
-    * would flip the ceil and desynchronize every bucket id). The
-    * DuckDB oracle computes the identical quantity from `count(*)`
-    * in a `params` CTE, so both engines agree at every SF. Recall
-    * loss from smaller buckets is recovered by 1-bit multi-probe
-    * (each probe set covers all buckets at hamming ≤ 1). */
-  val TargetBucketSize: Int = Tuning.default.targetBucketSize
-
   /** Corpus row count, memoized per dataset FINGERPRINT (file names +
     * lengths + mtimes of the parquet directory), not per path: a
     * count scan on a fixed input is constant, and three ANN entry
@@ -70,6 +57,17 @@ object AnnOps {
       _ => Tables.load(spark, sfDir, "embeddings").count())
   }
 
+  /** LSH bucket-count policy: planes derive from the CORPUS SIZE so
+    * the per-bucket population stays ~`Tuning.targetBucketSize` at any
+    * scale — the round-2 fixed `LshPlanes = 6` meant the bucket
+    * self-join degraded to Θ(n²/64). planes = smallest p with
+    * 2^p ≥ ceil(n / target), computed INTEGRALLY (never via float
+    * log2: at exact powers of two a 1-ulp difference between engines
+    * would flip the ceil and desynchronize every bucket id). The
+    * DuckDB oracle computes the identical quantity from `count(*)`
+    * in a `params` CTE, so both engines agree at every SF. Recall
+    * loss from smaller buckets is recovered by 1-bit multi-probe
+    * (each probe set covers all buckets at hamming ≤ 1). */
   def planesFor(n: Long,
                 targetBucketSize: Int = Tuning.default.targetBucketSize): Int = {
     val ceilDiv = (n + targetBucketSize - 1) / targetBucketSize
@@ -260,9 +258,6 @@ object AnnOps {
 
   private def hyperplane(p: Int): Seq[Double] =
     (0 until Dim).map(i => hpComponentValue(p, i))
-
-  private def hpComponentSql(p: Int, iExpr: String): String =
-    s"(CAST(CAST(('0x' || substring(md5('hp_${p}_' || CAST($iExpr AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 AS DOUBLE) - 499.5)"
 
   /** Per-vector LSH bucket: bit p of the bucket id is the sign of the
     * dot product with hyperplane p. One scan, no joins over data —
@@ -886,8 +881,7 @@ object AnnOps {
     * row; float embeddings stay OUT of the stored index). New vectors
     * extend the index in Θ(batch · √n) assignment compute and
     * O(batch) appended bytes via the idempotent tagged append; no
-    * corpus rescan, and batch + streaming runs share the same stored
-    * tables. */
+    * corpus rescan. */
   private[queries] def ivfEncode(spark: SparkSession, cents: DataFrame,
                                  batch: DataFrame): DataFrame = {
     import spark.implicits._
@@ -928,8 +922,7 @@ object AnnOps {
   /** Build the stored index tables from scratch: train + store the
     * centroid table (√n rows, from the corpus parquet), then encode +
     * store the coded form of `corpus` (which may be a first slice —
-    * extend with [[appendToIvfIndex]] batches or
-    * [[graft.streaming.EventStreams.ivfIndexStream]] micro-batches). */
+    * extend with [[appendToIvfIndex]] batches). */
   def buildIvfIndex(wh: graft.etl.Warehouse, sfDir: String,
                     centsTable: graft.etl.TableName,
                     indexTable: graft.etl.TableName,

@@ -67,35 +67,6 @@ object DedupOps {
   private[graft] def shingleHash(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Per-ROW distinct shingle array over any text column — the
-    * stateless form of [[shinglesOf]] a STREAM needs (same normalize,
-    * same word triples; an empty array under 3 tokens instead of a
-    * pre-filter, so the expression composes row-local with no
-    * explode/groupBy). */
-  private[graft] def shingleArrayOf(text: Column): Column = {
-    val w = split(normText(text), " ")
-    when(size(w) >= 3,
-      array_distinct(transform(
-        sequence(lit(0), size(w) - 3),
-        i => concat_ws(" ", get(w, i), get(w, i + 1), get(w, i + 2)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Freeze the evaluation set into a bloom filter (one driver-side
-    * build over the hashed eval shingles, ~1.2 bytes/item at the
-    * default sizing) — the filter [[graft.streaming.EventStreams
-    * .decontaminateStream]] probes per row. Benchmark sets are
-    * bounded, so the bytes are task-binary-sized at any corpus
-    * scale. */
-  def evalShingleBloom(spark: SparkSession, sfDir: String): Array[Byte] = {
-    import spark.implicits._
-    shingleDf(spark, sfDir).filter($"doc_id" < EvalDocMax)
-      .select(shingleHash($"shingle").as("h")).distinct()
-      .createOrReplaceTempView("decon_eval_bloom_src")
-    spark.sql("SELECT bloom_agg(h) FROM decon_eval_bloom_src")
-      .head().getAs[Array[Byte]](0)
-  }
-
   private val shingleSql: String =
     s"""SELECT DISTINCT doc_id, unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]) AS shingle
        |FROM (SELECT doc_id, string_split($normTextSql, ' ') AS w FROM documents)
@@ -108,16 +79,15 @@ object DedupOps {
     * shingle never meet.
     *
     * Skew guard for 100 TB: shingles with document frequency >
-    * [[MaxShingleDf]] (stopword shingles) are dropped BEFORE the join,
-    * capping per-shingle join fan-out at MaxShingleDf² pairs so no
+    * `Tuning.maxShingleDf` (stopword shingles) are dropped BEFORE the join,
+    * capping per-shingle join fan-out at maxShingleDf² pairs so no
     * single reducer melts on a hot key. Semantics: exact Jaccard over
     * the df≤k shingle sets, identically on both engines (the oracle
     * applies the same cutoff); k is recorded here. At the test SFs the
     * max df is 25, so the cutoff drops nothing and values equal the
-    * unguarded Jaccard. */
-  val MaxShingleDf: Int = Tuning.default.maxShingleDf
-
-  /** Shared tail of the inverted-index pipeline: candidate pairs with
+    * unguarded Jaccard.
+    *
+    * This shared tail of the inverted-index pipeline gives candidate pairs with
     * common-shingle counts and both set sizes (d1, d2, common, na,
     * nb) — jaccard and containment are projections over it. */
   private def pairCommonCounts(spark: SparkSession, sfDir: String,
@@ -146,7 +116,7 @@ object DedupOps {
     // All joins below are shuffle joins: the shingle index, the pair
     // list and the per-doc sizes all scale with the corpus, so none
     // may be a broadcast build side (plan-gated in ExplainSpec). The
-    // df≤MaxShingleDf cutoff bounds per-shingle fan-out; AQE splits
+    // df≤maxShingleDf cutoff bounds per-shingle fan-out; AQE splits
     // any residual hot shingle group at runtime.
     val sizes = kept.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     val pairs = kept.as("a").hint("shuffle_merge").join(kept.as("b"),
@@ -421,7 +391,7 @@ object DedupOps {
   /** Passage-level exact dedup — the C4/RefinedWeb "remove duplicated
     * passages corpus-wide, keep the first occurrence" step, at a finer
     * grain than whole-document [[dedupExact]]. Documents split into
-    * fixed [[ChunkWords]]-word chunks (deterministic positional
+    * fixed `Tuning.chunkWords`-word chunks (deterministic positional
     * chunking — the synthetic corpus has no sentence boundaries; a
     * production corpus would split on '\n\n'), each chunk keeps only
     * its corpus-wide FIRST occurrence by (doc_id, pos), and every
@@ -433,7 +403,6 @@ object DedupOps {
     * window — then one hinted shuffle join back (both sides corpus-
     * scale; plan-gated non-broadcast). Reconstruction is a groupBy
     * per doc whose state is bounded by the document's own length. */
-  val ChunkWords: Int = Tuning.default.chunkWords
 
   def dedupPassages(spark: SparkSession, sfDir: String,
                     t: Tuning = Tuning.default): DataFrame = {

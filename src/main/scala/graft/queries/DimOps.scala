@@ -191,46 +191,6 @@ object DimOps {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_price
       |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  // ------------------------------------ distinct-count sketch rollup
-  /** The aggregate [[rollupIncremental]] CANNOT maintain: COUNT
-    * DISTINCT is not summable — merging per-batch distinct counts
-    * overcounts users active in both batches. Its HLL SKETCH is a
-    * monoid, though: per-day Datasketches-HLL sketches of the user
-    * column are STORED (the band-index/IVF lifecycle applied to an
-    * aggregate), so extending the rollup by a day costs Θ(day) scan
-    * plus one appended ~KB sketch row, and ANY date-range distinct
-    * count is the union of its day sketches — the corpus is never
-    * re-scanned. Spark's native `hll_sketch_agg` / `hll_union_agg` /
-    * `hll_sketch_estimate` do all the work (map-side-combinable
-    * aggregate state, no UDF). Union is associative and
-    * deterministic at fixed lgK, so merged-vs-one-shot estimate
-    * equality is EXACT — the spec pins it, alongside a
-    * within-2%-of-exact accuracy bound and idempotent re-append.
-    * No DuckDB oracle by nature (DuckDB's approx_count_distinct is a
-    * different HLL implementation); the contract is DimOpsSpec. */
-  def userSketchByDay(events: DataFrame): DataFrame =
-    events.groupBy(to_date(col("ts")).as("day"))
-      .agg(hll_sketch_agg(col("user_id")).as("sketch"))
-
-  /** Append one batch's day sketches to the stored rollup with the
-    * batch-tagged idempotent append (replays replace, never double
-    * merge — though a doubled sketch row would not even change the
-    * estimate: HLL union is idempotent in the values too). */
-  def appendUserSketches(wh: graft.etl.Warehouse,
-                         table: graft.etl.TableName,
-                         batch: DataFrame, tag: String): Unit =
-    wh.appendToTableIdempotent(table, userSketchByDay(batch), tag)
-
-  /** Distinct users over [from, to] from the STORED day sketches
-    * alone: union the range's sketches, estimate once. */
-  def distinctUsersInRange(spark: SparkSession,
-                           table: graft.etl.TableName,
-                           from: String, to: String): Long =
-    spark.table(table.quoted)
-      .filter(col("day").between(from, to))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("n"))
-      .collect()(0).getLong(0)
-
   // --------------------------------------- histogram quantile rollup
   /** Mergeable PERCENTILES for the rollup family: exact quantiles
     * need a global sort and are not summable, and the usual sketch
@@ -257,14 +217,6 @@ object DimOps {
     events.groupBy(to_date(col("ts")).as("day"), col("event_type"),
         floor(col("value") * HistScale).cast("long").as("bin"))
       .agg(count(lit(1)).as("n"))
-
-  /** Append one batch's histogram rows idempotently (replays replace;
-    * a histogram row-set is also safe to re-merge structurally since
-    * bins are summed at query time from distinct stored rows). */
-  def appendValueHistogram(wh: graft.etl.Warehouse,
-                           table: graft.etl.TableName,
-                           batch: DataFrame, tag: String): Unit =
-    wh.appendToTableIdempotent(table, valueHistogram(batch), tag)
 
   /** p50/p95/p99 per event_type from histogram rows alone: merge bins
     * (vector add), cumulative-sum per type, and take the first bin

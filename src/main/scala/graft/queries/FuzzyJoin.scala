@@ -55,9 +55,8 @@ object FuzzyJoin {
   }
 
   /** Driver-side cap on the over-cap bucket census (2²⁰ entries ≈
-    * 16 MB). A corpus needs > cap·maxVariantDf ≈ 32M rows collapsing
-    * onto hot variants to exceed it — at that point the census stays
-    * a distributed frame (recomputed per consumer, still exact). */
+    * 16 MB). Past it the census stays a distributed frame
+    * (recomputed per consumer, still exact). */
   private val HotCollectCap = 1 << 20
 
   /** When `cap` is at least this large, the census runs on a 10%
@@ -66,9 +65,7 @@ object FuzzyJoin {
     * at ~cap misclassified costs at most ~2× one task's CPU budget,
     * while a bucket at 2×cap is missed with probability ≈ 0
     * (Binomial(2·cap, 0.1) falling under cap·0.1 is a many-sigma
-    * event once cap ≥ 256). Small caps (the bipartite/ER paths,
-    * where fan-out still pays a dedup shuffle and the frames are
-    * Θ(batch)-sized anyway) keep the exact census.
+    * event once cap ≥ 256). Smaller caps keep the exact census.
     *
     * The sample is a CONTENT-HASH row filter, not `df.sample`:
     * Spark's Bernoulli sampler draws per-partition (seed + partition
@@ -88,8 +85,7 @@ object FuzzyJoin {
     * (the fuzzy session-bimodality hunt needed the DECISION visible,
     * not another timing re-run). An accumulating LOG, not a last-write
     * slot: an entry that constructs multiple fuzzy plans in one run
-    * (incremental ER fold-in per batch; self + bipartite paths) makes
-    * several census calls, and the artifact must carry every decision
+    * makes several census calls, and the artifact must carry every decision
     * (ADVICE r17). Appended (prepend order) by [[hotCensus]];
     * cleared + read by [[graft.Bench]] around each entry. */
   final case class CensusStats(cap: Int, sampled: Boolean,
@@ -262,12 +258,10 @@ object FuzzyJoin {
     if (prev(m) <= k) prev(m) else -1
   }
 
-  /** Row shapes for the within-bucket tier (case classes so the typed
+  /** Row shape for the within-bucket tier (a case class so the typed
     * grouping encodes by field name). */
   private[graft] final case class VChunkRow(
       vh: Long, i: Int, j: Int, c: Int, id: Long, name: String)
-  private[graft] final case class BChunkRow(
-      vh: Long, ch: Int, fromBatch: Boolean, id: Long, name: String)
 
   /** Exact ed≤k pairs from a (vh, id, name) variant frame, with the
     * df SKEW GUARD the shingle index has ([[DedupOps]] `maxShingleDf`)
@@ -433,107 +427,6 @@ object FuzzyJoin {
       .toDF("id1", "id2", "dist")
   }
 
-  /** Bipartite twin of [[guardedSelfPairs]] for the incremental ER
-    * fold-in: candidate pairs between a BATCH's variants and the
-    * STORED variant index (which already contains the batch, so
-    * batch-internal pairs come for free). The stored side is first
-    * semi-joined down to the batch's buckets (Θ(touched buckets),
-    * never corpus × corpus), then split by bucket df: light buckets
-    * take the equi-join (fan-out ≤ batch·cap, so names ride along
-    * and the dedup keys on ids); hot buckets run the local pairwise
-    * tier with each batch member replicated across the stored side's
-    * chunks — batch×chunk work, bounded per task. */
-  private def guardedBipartitePairs(bv: DataFrame, stored: DataFrame,
-                                    k: Int, t: Tuning): DataFrame = {
-    val spark = bv.sparkSession
-    import spark.implicits._
-    val touched = stored.join(bv.select($"vh").distinct().hint("shuffle_hash"),
-      Seq("vh"), "left_semi")
-    // as in [[guardedSelfPairs]]: the census is collected once; a hot-
-    // free batch (the common maintenance case) skips the anti joins
-    // and the heavy tier entirely
-    hotCensus(touched, t.maxVariantDf, t.variantChunk) match {
-      case None => bipartiteCand(bv, touched, k)
-      case Some(hotDf) =>
-        val hotKeys = hotDf.select($"vh")
-        val cand = bipartiteCand(
-          bv.join(hotKeys, Seq("vh"), "left_anti"),
-          touched.join(hotKeys, Seq("vh"), "left_anti"), k)
-        cand.unionByName(bipartiteHeavy(bv, touched, hotDf, k, t))
-          .dropDuplicates("id1", "id2")
-    }
-  }
-
-  /** Bipartite light tier: batch × stored equi-join on light buckets
-    * (fan-out ≤ batch·cap, so names ride along and the dedup keys on
-    * ids) + exact bounded rescore. */
-  private def bipartiteCand(bvL: DataFrame, storedL: DataFrame,
-                            k: Int): DataFrame = {
-    val spark = bvL.sparkSession
-    import spark.implicits._
-    bvL.select($"vh", $"id".as("id1"), $"name".as("name1"))
-      .join(storedL
-        .select($"vh", $"id".as("id2"), $"name".as("name2"))
-        .hint("shuffle_hash"), Seq("vh"))
-      .filter($"id1" =!= $"id2")
-      .filter(abs(length($"name1") - length($"name2")) <= k)
-      .select(
-        when($"id1" < $"id2",
-          struct($"id1".as("a"), $"id2".as("b"),
-            $"name1".as("na"), $"name2".as("nb")))
-          .otherwise(struct($"id2".as("a"), $"id1".as("b"),
-            $"name2".as("na"), $"name1".as("nb"))).as("p"))
-      .select($"p.a", $"p.b", $"p.na", $"p.nb")
-      .dropDuplicates("a", "b")
-      .withColumn("dist", levenshtein($"na", $"nb", k).cast("long"))
-      .filter($"dist" >= 0)
-      .select($"a".as("id1"), $"b".as("id2"), $"dist")
-  }
-
-  /** Bipartite heavy tier: each batch member replicated across the
-    * stored side's chunks — batch×chunk work, bounded per task. */
-  private def bipartiteHeavy(bv: DataFrame, touched: DataFrame,
-                             hotDf: DataFrame, k: Int, t: Tuning): DataFrame = {
-    val spark = bv.sparkSession
-    import spark.implicits._
-    val heavyDfs = hotDf
-      .withColumn("nc", ceil($"df" / lit(t.variantChunk)).cast("int"))
-      .select($"vh", $"nc")
-    val storedHeavy = touched.join(heavyDfs.hint("shuffle_hash"), Seq("vh"))
-      .select($"vh", pmod(hash($"id"), $"nc").cast("int").as("ch"),
-        lit(false).as("fromBatch"), $"id", $"name")
-    val batchHeavy = bv.join(heavyDfs.hint("shuffle_hash"), Seq("vh"))
-      .select($"vh", explode(expr("sequence(0, nc - 1)")).as("che"),
-        lit(true).as("fromBatch"), $"id", $"name")
-      .select($"vh", $"che".cast("int").as("ch"), $"fromBatch", $"id", $"name")
-    val kk = k
-    storedHeavy.unionByName(batchHeavy)
-      .as[BChunkRow]
-      .groupByKey(r => (r.vh, r.ch))
-      .flatMapGroups { (_: (Long, Int), it: Iterator[BChunkRow]) =>
-        val rows = it.toArray
-        val li = rows.filter(_.fromBatch)
-        val rj = rows.filter(!_.fromBatch)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        var x = 0
-        while (x < li.length) {
-          var y = 0
-          while (y < rj.length) {
-            val u = li(x); val v = rj(y)
-            if (u.id != v.id) {
-              val d = boundedLev(u.name, v.name, kk)
-              if (d >= 0)
-                buf += ((math.min(u.id, v.id), math.max(u.id, v.id), d.toLong))
-            }
-            y += 1
-          }
-          x += 1
-        }
-        buf.iterator
-      }
-      .toDF("id1", "id2", "dist")
-  }
-
   /** Edit-distance ≤ 1 pairs over any (id, name) frame.
     *
     * NOTE: construction is EAGER about the skew census — building the
@@ -690,166 +583,6 @@ object FuzzyJoin {
        |  'NOT_CONVERGED' AS canonical_name, CAST(-1 AS BIGINT) AS n_members
        |FROM $last a JOIN $prevLast b ON a.node = b.node AND a.lab <> b.lab
        |ORDER BY id""".stripMargin
-  }
-
-  // ------------------------------ incremental entity resolution
-  /** Entity resolution as a MAINTAINED warehouse artifact — the
-    * production MDM shape (a master-data system folds each day's new
-    * records into existing entities; it never re-resolves the whole
-    * corpus). Two tables per index:
-    *
-    *   `<base>_variants` — (vh, id, name) deletion-neighborhood
-    *     index; [[erIndexAppend]] extends it Θ(batch), idempotent per
-    *     tag (the band-index lifecycle applied to ER);
-    *   `<base>_entities` — (id, entity_id, name) current assignments
-    *     (entity_id = component-min member).
-    *
-    * A batch folds in at Θ(batch + touched components): candidate
-    * edges come from the batch's variants against the STORED index
-    * (never corpus × corpus); only components those edges touch are
-    * re-resolved — their members are pulled by entity_id and
-    * reconnected through (id, entity_id) edges, so the component
-    * union's min is recomputed exactly; every untouched entity keeps
-    * its row. The entity table updates through ONE keyed
-    * [[graft.etl.Warehouse.mergeInto]]. Replayed batches converge:
-    * the variant append is marker-guarded and the re-run merge
-    * recomputes identical assignments. Incremental == batch is
-    * verified by FuzzyJoinSpec: build on part of the corpus, append
-    * the rest (one batch replayed), and the served golden records
-    * must equal the one-shot full-corpus [[goldenRecordsOf]]. */
-  /** Hash-scheme version of the PERSISTED `<base>_variants` index.
-    * The vh values stored there must have been produced by the same
-    * fingerprint scheme the append path computes for new batches — a
-    * mismatch (e.g. an index built before the native [[VariantHashes]]
-    * kernel, whose keys were xxhash64 of variant strings, or the
-    * md5-prefix scheme before that) would make every batch-vs-stored
-    * equi-join silently miss: no error, just dropped edges. The
-    * version rides as column METADATA on `vh` (survives the parquet
-    * round-trip via Spark's schema property), and [[erIndexAppend]]
-    * refuses a stale or unversioned index LOUDLY. Bump on any change
-    * to [[VariantHashes.hashes]]. */
-  private[graft] val VariantIndexVersion = 3L
-  private val VariantVersionKey = "graft.variant_index_version"
-
-  private def variantsOf(names: DataFrame): DataFrame = {
-    val spark = names.sparkSession
-    import spark.implicits._
-    val md = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(VariantVersionKey, VariantIndexVersion).build()
-    variantFrame(names, 1).withColumn("vh", $"vh".as("vh", md))
-  }
-
-  /** Version-checks the persisted variant index WITHOUT instantiating
-    * its relation. Reading the schema through `spark.table(...)` here
-    * would prime the session's relation cache with the current file
-    * listing; when the caller appends immediately afterwards (as
-    * [[erIndexAppend]] does), the post-append read would then serve
-    * the PRE-append listing and every batch-internal fuzzy edge would
-    * be dropped silently. The catalog metadata carries the same schema
-    * (including the `vh` column metadata where the version rides) and
-    * never touches the file index. */
-  private def requireVariantIndexVersion(spark: SparkSession,
-                                         vT: graft.etl.TableName): Unit = {
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(
-      vT.table, if (vT.schema.isEmpty) None else Some(vT.schema))
-    val schema = spark.sessionState.catalog.getTableMetadata(ident).schema
-    val meta = schema("vh").metadata
-    val got = if (meta.contains(VariantVersionKey))
-      Some(meta.getLong(VariantVersionKey)) else None
-    require(got.contains(VariantIndexVersion),
-      s"ER variant index '${vT.quoted}' was built with hash-scheme version " +
-        s"${got.map(_.toString).getOrElse("<unversioned, pre-v3>")} but this " +
-        s"engine computes version $VariantIndexVersion fingerprints — " +
-        "appending would silently drop every batch-vs-stored match. " +
-        "Rebuild the index with erIndexBuild.")
-  }
-
-  def erIndexBuild(wh: graft.etl.Warehouse, names: DataFrame,
-                   base: String): Unit = {
-    val spark = names.sparkSession
-    import spark.implicits._
-    wh.writeTable(graft.etl.TableName.parse(base + "_variants"),
-      variantsOf(names))
-    val edges = pairsWithin1(names).select($"id1".as("d1"), $"id2".as("d2"))
-    val comps = DedupOps.connectedComponents(spark, edges)
-    val assign = names
-      .join(comps.hint("shuffle_hash"), names("id") === comps("doc_id"), "left")
-      .select(names("id"), coalesce($"cluster", names("id")).as("entity_id"),
-        $"name")
-    wh.writeTable(graft.etl.TableName.parse(base + "_entities"), assign)
-    ()
-  }
-
-  def erIndexAppend(wh: graft.etl.Warehouse, batch: DataFrame,
-                    base: String, tag: String): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val vT = graft.etl.TableName.parse(base + "_variants")
-    val eT = graft.etl.TableName.parse(base + "_entities")
-    // foreachBatch runs in a CLONED session with its own relation
-    // cache — without the refresh, the stored-variant and entity
-    // reads below can serve the PRE-batch file listing and the merge
-    // would resolve against stale components (EventStreamsSpec caught
-    // exactly this: mid-stream batches fragmented into per-digit
-    // entities)
-    spark.catalog.refreshTable(vT.quoted)
-    spark.catalog.refreshTable(eT.quoted)
-    // catalog-metadata read only — a spark.table read here would
-    // re-prime this session's relation cache with the pre-append
-    // listing and the `stored` read below would miss the batch
-    requireVariantIndexVersion(spark, vT)
-    wh.appendToTableIdempotent(vT, variantsOf(batch), s"$tag-v")
-    // the append bypasses the DataFrameWriter (direct FS write +
-    // marker), so nothing invalidated the relation cache for us:
-    // refresh so `stored` sees the file listing INCLUDING this batch
-    spark.catalog.refreshTable(vT.quoted)
-    // candidate edges: batch variants vs the STORED index (which now
-    // contains the batch — batch-internal pairs come for free),
-    // through the same df skew guard the one-shot join has
-    val bv = variantsOf(batch)
-    val stored = spark.table(vT.quoted)
-    val cand = guardedBipartitePairs(bv, stored, 1, Tuning.default)
-    val newEdges = cand.select($"id1".as("d1"), $"id2".as("d2"))
-    // only components the new edges touch are re-resolved
-    val ents = spark.table(eT.quoted)
-    val nodes = newEdges.select($"d1".as("nid"))
-      .union(newEdges.select($"d2".as("nid"))).distinct()
-    val touched = ents.join(nodes.hint("shuffle_hash"), $"id" === $"nid")
-      .select($"entity_id").distinct()
-    val members = ents.join(touched.hint("shuffle_hash"), Seq("entity_id"))
-      .select($"id", $"entity_id", $"name")
-    val memberEdges = members.filter($"id" =!= $"entity_id")
-      .select($"id".as("d1"), $"entity_id".as("d2"))
-    val comps = DedupOps.connectedComponents(spark,
-      newEdges.union(memberEdges))
-    val affected = batch.select($"id", $"name")
-      .unionByName(members.select($"id", $"name"))
-      .dropDuplicates("id")
-    val assign = affected.alias("af")
-      .join(comps.hint("shuffle_hash"), $"af.id" === comps("doc_id"), "left")
-      .select($"af.id", coalesce($"cluster", $"af.id").as("entity_id"),
-        $"af.name")
-    wh.mergeInto(eT, assign, Seq("id"))
-    ()
-  }
-
-  /** Serve golden records from a maintained `<base>_entities` table
-    * — the read side of the incremental index. (Verified by
-    * FuzzyJoinSpec against the one-shot [[goldenRecordsOf]]; this is
-    * a LIFECYCLE operator like the streaming maintainers, so it is
-    * spec-verified rather than an oracle entry — a per-bench-run
-    * rebuild of a four-phase warehouse lifecycle would measure fixed
-    * build latency, not a query plan.) */
-  def erServeGoldenRecords(spark: SparkSession, base: String): DataFrame = {
-    import spark.implicits._
-    val ents = spark.table(graft.etl.TableName.parse(base + "_entities").quoted)
-    val sizes = ents.groupBy($"entity_id").agg(count(lit(1)).as("n_members"))
-    val canon = ents.select($"id".as("cid"), $"name".as("canonical_name"))
-    ents.select($"id", $"entity_id")
-      .join(canon.hint("shuffle_hash"), $"entity_id" === $"cid")
-      .join(sizes.hint("shuffle_hash"), Seq("entity_id"))
-      .select($"id", $"entity_id", $"canonical_name", $"n_members")
-      .orderBy($"id")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

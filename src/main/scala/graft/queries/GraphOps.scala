@@ -85,77 +85,6 @@ object GraphOps {
     out
   }
 
-  /** Convergence-mode power iteration — production PageRank runs to a
-    * fixed-point delta (typically 20+ rounds), not a fixed count; the
-    * 4-round [[pagerank]] stays as the oracle entry because an
-    * unrolled-CTE oracle cannot follow a dynamic stop. Two additions
-    * the lazy oracle form must NOT have, both mandatory past a
-    * handful of rounds:
-    *
-    *  - CHECKPOINT CADENCE: the lazy plan's depth grows linearly and
-    *    its analysis cost super-linearly (each round references the
-    *    previous rank through two joins) — by ~20 rounds the driver
-    *    chokes on plan analysis regardless of data size. Every
-    *    round's rank is lineage-truncated exactly like
-    *    [[DedupOps.connectedComponents]]' labels (reliable checkpoint
-    *    when a checkpoint dir is set, localCheckpoint otherwise), so
-    *    the plan stays O(1) deep and each round is one bounded BSP
-    *    job: graph-sized join + |nodes| aggregate.
-    *  - CONVERGENCE TEST: stop when `max |Δrank| ≤ tolScaled`
-    *    (fixed-point units; Scale/1e6 default = 1e-6 of total mass).
-    *    The delta rides the rank update's own materialization — the
-    *    checkpoint is eager, so the extra aggregate reads
-    *    already-local data, no second pass over the graph.
-    *
-    * Returns (ranks, roundsRun, lastDeltaScaled). */
-  def pagerankConverged(edges: DataFrame, deg: DataFrame,
-                        tolScaled: Long = Scale / 1000000L,
-                        maxIters: Int = 50): (DataFrame, Int, Long) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // Truncate lineage AND statistics: checkpointing alone keeps the
-    // origin plan's Statistics, whose sizeInBytes estimate doubles in
-    // BIT LENGTH every round (join size = product of children) until
-    // the driver hard-hangs multiplying million-bit BigIntegers —
-    // found by this operator's 40-round spec. See
-    // [[org.apache.spark.sql.GraftLineage.clearOriginStats]].
-    def truncate(df: DataFrame): DataFrame = {
-      val ck =
-        if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-        else df.localCheckpoint(true)
-      org.apache.spark.sql.GraftLineage.clearOriginStats(ck)
-    }
-    val e = edges.persist()
-    val d = deg.persist()
-    val n = d.count()
-    val init = Scale / n
-    var rank = truncate(d.select($"node", lit(init).as("rank")))
-    var round = 0
-    var delta = Long.MaxValue
-    while (round < maxIters && delta > tolScaled) {
-      round += 1
-      val contrib = e.join(rank.hint("shuffle_hash"), $"src" === $"node")
-        .join(d.select($"node".as("dn"), $"outdeg").hint("shuffle_hash"),
-          $"src" === $"dn")
-        .select($"dst", expr("rank div outdeg").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("contrib"))
-      val updated = d.select($"node")
-        .join(contrib.hint("shuffle_hash"), $"node" === $"dst", "left")
-        .select($"node",
-          expr(s"(15 * ${init}L + 85 * coalesce(contrib, 0L)) div 100")
-            .as("rank"))
-      val next = truncate(updated
-        .join(rank.select($"node".as("pn"), $"rank".as("prev")),
-          $"node" === $"pn")
-        .select($"node", $"rank", abs($"rank" - $"prev").as("dlt")))
-      delta = next.agg(max($"dlt")).head().getLong(0)
-      rank = next.select($"node", $"rank")
-    }
-    e.unpersist(blocking = false)
-    d.unpersist(blocking = false)
-    (rank, round, delta)
-  }
-
   /** Oracle entry: 4 PageRank iterations over the customer–supplier
     * graph, bit-exact vs DuckDB's unrolled recomputation. */
   def graphPagerank(spark: SparkSession, sfDir: String): DataFrame = {

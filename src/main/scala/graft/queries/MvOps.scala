@@ -35,22 +35,6 @@ object MvOps {
     table.quoted
   }
 
-  /** INCREMENTAL refresh: the MV stores re-aggregable PARTIALS, which
-    * form a monoid — appending one batch's partial rows (idempotent,
-    * batch-tagged) extends the view in Θ(batch) with NO base rescan,
-    * and the rewrite's re-aggregation folds duplicate group rows
-    * automatically (sum of sums, min of mins, sum of cnts). Re-arm
-    * the registration at the base's new version and rewriting resumes
-    * — Redshift's incremental REFRESH MATERIALIZED VIEW, expressed as
-    * the warehouse's append discipline. Replays are no-ops (the
-    * `_applied` marker), so at-least-once delivery cannot
-    * double-count a group. */
-  def appendBatch(wh: graft.etl.Warehouse, mvTable: graft.etl.TableName,
-                  batch: DataFrame, groupCols: Seq[String],
-                  aggCols: Seq[String], tag: String): Boolean =
-    wh.appendToTableIdempotent(mvTable,
-      MvRewrite.partials(batch, groupCols, aggCols), tag)
-
   private[graft] def scanPaths(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation => l.relation match {

@@ -357,8 +357,8 @@ object SqlSurface {
 
   // ---------------------------------------------------------------- q14
   /** Time-bucketed event analytics (hourly tumbling window as a batch
-    * groupBy; the streaming twin lives in graft.streaming). Buckets
-    * formatted as strings for engine-neutral output. */
+    * groupBy). Buckets formatted as strings for engine-neutral
+    * output. */
   def q14EventsHourly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, sfDir, "events")
@@ -376,8 +376,7 @@ object SqlSurface {
   // ---------------------------------------------------------------- q15
   /** Sessionization: split each user's event stream on >30 min gaps
     * (lag + cumulative flag sum), then per-session stats. Windows
-    * partition by user_id → even distribution at scale; the batch twin
-    * of flatMapGroupsWithState sessionization. */
+    * partition by user_id → even distribution at scale. */
   def q15EventsSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
@@ -449,8 +448,7 @@ object SqlSurface {
   /** Native `session_window` sessionization — Spark's own gap-window
     * operator pinned against the from-first-principles oracle (q15 is
     * the lag+flag-sum derivation; this is the one-aggregation form a
-    * Spark user should write, and the BATCH twin of the streaming
-    * state operator). Boundary semantics differ from q15 by design:
+    * Spark user should write). Boundary semantics differ from q15 by design:
     * `session_window` is half-open, so a gap of EXACTLY 30 min starts
     * a new session (q15's strict `>` keeps it) — the oracle encodes
     * `>=`. The window's end is last-event + gap, so duration is

@@ -33,9 +33,8 @@ object TextOps {
   def tokenCount(c: Column): Column = size(wsTokens(c)).cast("long")
 
   /** The combined quality score (alpha ratio + stopword ratio +
-    * length band) — ONE expression shared by `text_quality`,
-    * `curation_pipeline`, and the streaming curation twin, so every
-    * surface scores identically. */
+    * length band) — ONE expression shared by `text_quality` and
+    * `curation_pipeline`, so both score identically. */
   def qualityScore(text: Column): Column = {
     val toks = wsTokens(text)
     val nToks = size(toks).cast("double")
@@ -702,45 +701,6 @@ object TextOps {
        |FROM ct JOIN cd USING (class) JOIN ctot USING (class)
        |ORDER BY class, token""".stripMargin
 
-  /** Score documents against a trained [[nbTrain]] model: Laplace-
-    * smoothed log-likelihood, `argmax_c [ log prior(c) +
-    * Σ_t log((n(t,c)+1)/(class_tokens(c)+V)) ]`. Implemented without
-    * materializing the doc × class × vocab cube: matched token
-    * occurrences come from ONE broadcast hash join against the
-    * model; the unmatched remainder is closed-form
-    * (`−(T_d − m) · log(class_tokens + V)` folds into
-    * `Σ_matched log(n+1) − T_d · log(class_tokens + V)`). The only
-    * driver-side values are the vocab size and the #classes row set
-    * — model-scale metadata. Ties break to the lexicographically
-    * LAST class deterministically (struct max). */
-  def nbScore(docs: DataFrame, model: DataFrame, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val vocabSize = model.select($"token").distinct().count().toDouble
-    val classes = model.groupBy($"class").agg(
-      first($"class_docs").as("class_docs"),
-      first($"class_tokens").as("class_tokens"))
-    val totalDocs = classes.agg(sum($"class_docs")).head().getLong(0).toDouble
-    val toks = docs
-      .select($"doc_id", explode(split(normText(col(textCol)), " ")).as("token"))
-      .filter(length($"token") > 0)
-    val docLen = toks.groupBy($"doc_id").agg(count(lit(1)).as("t_d"))
-    val matched = toks
-      .join(broadcast(model.select($"class", $"token", $"n")), Seq("token"))
-      .groupBy($"doc_id", $"class")
-      .agg(sum(log($"n" + lit(1.0))).as("sum_log_n1"))
-    val grid = docLen.crossJoin(broadcast(classes))
-    grid.join(matched, Seq("doc_id", "class"), "left")
-      .select($"doc_id", $"class",
-        (coalesce($"sum_log_n1", lit(0.0))
-          - $"t_d" * log($"class_tokens" + lit(vocabSize))
-          + log($"class_docs" / lit(totalDocs))).as("score"))
-      .groupBy($"doc_id")
-      .agg(max(struct($"score", $"class")).as("best"))
-      .select($"doc_id", $"best.class".as("predicted"),
-        $"best.score".as("score"))
-  }
-
   // ------------------------------------------ stored retrieval index
   /** [[retrievalTopk]] against a STORED inverted index — the
     * production shape (the band-index / stored-IVF lifecycle applied
@@ -997,8 +957,7 @@ object TextOps {
     * KenLM/CCNet pattern where a small LM trained on trusted text
     * scores candidate documents by perplexity and the noisy tail is
     * filtered. Training is nothing but counting, so (like
-    * [[nbTrain]]) the model is oracle-checked bit-for-bit; scoring
-    * ([[lmPerplexity]]) is float log-math pinned by spec.
+    * [[nbTrain]]) the model is oracle-checked bit-for-bit.
     *
     * Output: (tok, nxt, n, n_tok) — bigram count plus the token's
     * continuation total (the add-one denominator base). Scale shape:
@@ -1041,35 +1000,6 @@ object TextOps {
        |SELECT pair.tok, pair.nxt, pair.n, uni.n_tok
        |FROM pair JOIN uni USING (tok)
        |ORDER BY tok, nxt""".stripMargin
-
-  /** Per-document PERPLEXITY under the [[lmTrain]] model with add-one
-    * smoothing: `exp(−mean ln P(nxt | tok))`, where a seen bigram
-    * scores `(n+1)/(n_tok+V)`, an unseen continuation of a seen token
-    * `1/(n_tok+V)`, and an unseen token `1/V`. One broadcast join of
-    * the doc bigrams against the model (bounded by vocab²) — the
-    * corpus is scored in a single embarrassing-parallel pass. Vocab
-    * size is the only driver-side scalar. */
-  def lmPerplexity(docs: DataFrame, model: DataFrame, textCol: String)
-      : DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val v = model.select($"nxt").distinct().count().toDouble
-    val uni = model.groupBy($"tok").agg(first($"n_tok").as("n_tok"))
-    val bigrams = docs
-      .select($"doc_id", split(normText(col(textCol)), " ").as("w"))
-      .filter(size($"w") >= 2 && length(element_at($"w", 1)) > 0)
-      .select($"doc_id", $"w", posexplode($"w").as(Seq("i", "tok")))
-      .filter($"i" < size($"w") - 1)
-      .select($"doc_id", $"tok", element_at($"w", $"i" + 2).as("nxt"))
-    bigrams
-      .join(broadcast(model.select($"tok", $"nxt", $"n")), Seq("tok", "nxt"), "left")
-      .join(broadcast(uni), Seq("tok"), "left")
-      .select($"doc_id",
-        log((coalesce($"n", lit(0L)) + lit(1.0)) /
-          (coalesce($"n_tok", lit(0L)) + lit(v))).as("logp"))
-      .groupBy($"doc_id")
-      .agg(exp(-avg($"logp")).as("perplexity"), count(lit(1)).as("n_bigrams"))
-  }
 
   // ---------------------------------------------------------- chunking
   /** Context-window chunking — split each document's token sequence
@@ -1547,8 +1477,8 @@ object TextOps {
   private val PhoneRe = "\\b\\d{3}-\\d{3}-\\d{4}\\b"
   private val Ipv4Re = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
 
-  /** The redactor and its match counter — shared by the batch
-    * `pii_redact` entry and the streaming curation twin. */
+  /** The redactor and its match counter, used by the `pii_redact`
+    * entry. */
   def redactPii(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c,
       EmailRe, "[EMAIL]"), PhoneRe, "[PHONE]"), Ipv4Re, "[IP]")

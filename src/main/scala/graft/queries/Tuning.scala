@@ -20,15 +20,12 @@ package graft.queries
   *  - `chunkWords`: passage-dedup chunk width (words per positional
   *    chunk; a production corpus splitting on real paragraph
   *    boundaries sets this aside entirely).
-  *  - `maxVariantDf`: FastSS deletion-neighborhood skew guard for the
-  *    BIPARTITE (incremental-ER) paths — a variant bucket holding
-  *    more strings than this skips the candidate equi-join (whose
-  *    fan-out there still pays a dedup shuffle) and is handled by the
-  *    exact within-bucket grouped pairwise tier instead. Unlike
-  *    `maxShingleDf` this changes COST, never the answer: both tiers
-  *    are exact.
-  *  - `maxSelfVariantDf`: the same boundary for the SELF-join paths
-  *    (`pairsWithin1/2`), much higher because the canonical-bucket
+  *  - `maxSelfVariantDf`: FastSS deletion-neighborhood skew guard for
+  *    the self-join paths (`pairsWithin1/2`) — a variant bucket holding
+  *    more strings than this skips the candidate equi-join and is
+  *    handled by the exact within-bucket grouped pairwise tier instead.
+  *    Unlike `maxShingleDf` this changes COST, never the answer: both
+  *    tiers are exact. It sits high because the canonical-bucket
   *    exactly-once emission rule means the light join's df² fan-out
   *    streams through one whole-stage-codegen span and never hits a
   *    shuffle — the boundary is purely a per-task CPU bound, so it
@@ -46,7 +43,6 @@ final case class Tuning(
     targetBucketSize: Int = 16,
     nearDupThreshold: Double = 0.45,
     chunkWords: Int = 10,
-    maxVariantDf: Int = 32,
     maxSelfVariantDf: Int = 1024,
     variantChunk: Int = 1024)
 

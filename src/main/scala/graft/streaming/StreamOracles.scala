@@ -70,7 +70,7 @@ object StreamOracles {
     val wh = freshWarehouse(spark, sfDir)
     val index = graft.etl.TableName.parse("stream.minhash_band_index")
     spark.sql(s"DROP TABLE IF EXISTS ${index.quoted}")
-    // seed-empty discipline (see retrievalIndexStream's scaladoc):
+    // seed-empty discipline (see incrementalDedupStream's scaladoc):
     // schema only, so every data write is the batch-tagged append
     wh.writeTable(index, DedupOps.minhashBandsOf(docs.limit(0)))
     val pairsDir = tempDir("graft_stream_pairs_")

@@ -14,16 +14,4 @@ import org.apache.spark.sql.classic
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Column ⇄ Expression, the same doorway at expression granularity:
-    * lets an operator splice a catalyst expression Spark ships but
-    * does not surface in `functions` (e.g. BloomFilterMightContain)
-    * into an ordinary Column pipeline. */
-  def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.Column =
-    classic.ExpressionUtils.column(e)
-
-  def expressionOf(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
 }

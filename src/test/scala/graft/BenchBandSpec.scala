@@ -96,6 +96,27 @@ class BenchBandSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(breaches(best = 3.3, baselineMin = 1.0, band = 3.0))
   }
 
+  test("contended stamp: Bench's own busy cores are not contention") {
+    // the measured run on an otherwise idle 4-core box: load 0.51 at
+    // the start, 2.70 at the end, about 3 of those cores Bench's own
+    assert(!Bench.contendedRun(0.51, 2.70, ownBusyCoresEnd = 3.0))
+    // the same run with 2 more cores kept busy from elsewhere
+    assert(Bench.contendedRun(0.51, 4.70, ownBusyCoresEnd = 3.0))
+    // a loaded start stays contended whatever Bench did
+    assert(Bench.contendedRun(2.5, 0.3, ownBusyCoresEnd = 0.0))
+  }
+
+  test("own busy cores: process CPU over wall across the run's last minute") {
+    val sec = 1000000000L
+    // 1 core busy for the first 30 s, 3 cores for the last 60 s
+    assert(Bench.ownBusyCores(Seq((0L, 0L), (30 * sec, 30 * sec),
+      (90 * sec, 210 * sec))) == 3.0)
+    // a run shorter than the window averages from its first sample
+    assert(Bench.ownBusyCores(Seq((0L, 0L), (20 * sec, 40 * sec))) == 2.0)
+    // a JVM that reports no process CPU time counts no own cores
+    assert(Bench.ownBusyCores(Seq((0L, -1L), (20 * sec, -1L))) == 0.0)
+  }
+
   test("expensive entries stay within their band of BENCH_LOCAL.json") {
     // opt-in: a live measurement at the tail of a hot full-suite JVM
     // measures suite debris, not the plans (judge r17: 3.25 s on an

@@ -14,7 +14,7 @@ class BenchSpec extends AnyFunSuite {
     val medians = (0 until 120).map(i =>
       (f"dedup_embedding_semantic_clusters_$i%03d", i * 0.01))
     val line = Bench.compactLine(medians, 71.4, 190.2, 65.2, 3,
-      Seq("q_failed_one"), 2.523, 3.125, 32, "/data/sf0.1")
+      Seq("q_failed_one"), 2.523, 3.125, 0.0, 32, "/data/sf0.1")
     assert(line.length < 1600, s"compact line too long: ${line.length}")
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(node.get("metric").asText == "total")
@@ -29,7 +29,7 @@ class BenchSpec extends AnyFunSuite {
     // failed queries (median -1) never crowd out real timings
     val withFailed = Bench.compactLine(
       medians.take(10) ++ Seq(("boom", -1.0)), 1.0, 2.0, 0.9, 3,
-      Seq("boom"), 0.1, 0.1, 32, "sf")
+      Seq("boom"), 0.1, 0.1, 0.0, 32, "sf")
     val n2 = new com.fasterxml.jackson.databind.ObjectMapper().readTree(withFailed)
     assert(!n2.get("queries").has("boom") && n2.get("queries_shown").asInt == 10)
   }
@@ -38,7 +38,7 @@ class BenchSpec extends AnyFunSuite {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     def contended(start: Double, end: Double): Boolean =
       om.readTree(Bench.compactLine(Seq(("q1_agg", 0.5)), 0.5, 1.0, 0.4, 3,
-        Nil, start, end, 2, "sf")).get("contended_run").asBoolean
+        Nil, start, end, 0.0, 2, "sf")).get("contended_run").asBoolean
     // quiet at start, loaded by the end: the numbers are not a baseline
     assert(contended(0.01, 8.6))
     assert(contended(2.5, 0.3))

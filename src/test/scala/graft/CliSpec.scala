@@ -658,7 +658,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c2 == 0 && v2.trim == "12")
     val (c3, v3) = captureOut { Cli.run(spark, "settings",
       Map("name" -> "graft_settings.*retries")) }
-    assert(c3 == 0 && v3.contains("copy_data_retries") && !v3.contains("bucket_count"))
+    assert(c3 == 0 && v3.contains("copy_data_retries") && !v3.contains("max_concurrency"))
     // an unknown name without a default is a user error: exit 1
     val errBuf = new java.io.ByteArrayOutputStream()
     val prevErr = System.err

@@ -84,8 +84,6 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.read.parquet(s"$sfDir/nation.parquet").createOrReplaceTempView("cmd_nation")
     assert(Commands.runQuery(spark, "SELECT n_name FROM cmd_nation", Some(3)).count() == 3)
     assert(Commands.runQuery(spark, "SELECT n_name FROM cmd_nation", None).count() == 25)
-    val text = Commands.runQueryText(spark, "SELECT n_nationkey FROM cmd_nation ORDER BY 1", Some(2))
-    assert(text.startsWith("n_nationkey") && text.contains("0") && text.contains("1"))
   }
 
   test("Q4: dependents/dependencies listings carry order, level, kind") {
@@ -199,12 +197,12 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("S7-S9: static source requires _SUCCESS, writes manifest, reads back") {
     val prefix = Files.createTempDirectory("graft_static_").toString
-    intercept[Artifact.MissingSuccessError] { Artifact.extractStatic(prefix) }
+    intercept[Artifact.MissingSuccessError] { Artifact.writeManifest(prefix) }
     // stage a one-part gzip CSV extract
     Files.write(Paths.get(prefix, "part-00000.csv"),
       "1,\"alpha\"\n2,\"beta\"\n".getBytes(StandardCharsets.UTF_8))
     Files.write(Paths.get(prefix, "_SUCCESS"), Array.emptyByteArray)
-    val manifest = Artifact.extractStatic(prefix)
+    val manifest = Artifact.writeManifest(prefix)
     val text = new String(Files.readAllBytes(Paths.get(manifest)), StandardCharsets.UTF_8)
     assert(text.contains("part-00000.csv") && text.contains("\"mandatory\": true"))
     val design = TableDesign(TableName.parse("ext.t"), "ext", Seq(
@@ -222,7 +220,7 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$v\n".getBytes(StandardCharsets.UTF_8))
     }
     Files.write(Paths.get(prefix, "_SUCCESS"), Array.emptyByteArray)
-    val manifest = Artifact.extractStatic(prefix)
+    val manifest = Artifact.writeManifest(prefix)
     val text = new String(Files.readAllBytes(Paths.get(manifest)), StandardCharsets.UTF_8)
     val urls = """"url": "([^"]+)"""".r.findAllMatchIn(text).map(_.group(1)).toSeq
     assert(urls == Seq(s"$prefix/col=1/part-00000.csv", s"$prefix/col=2/part-00000.csv"),

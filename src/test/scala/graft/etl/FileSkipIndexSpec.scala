@@ -74,6 +74,7 @@ class FileSkipIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the appended values are reachable through the pruned scan and
     // the original files are NOT read for them
     val p = FileSkipIndex.prunedScan(spark, t, "v", lit(1000L), lit(1002L))
+    assert(!p.stale, "the index must be current after refresh")
     assert(p.filesRead == 3, s"read ${p.filesRead}")
     assert(p.df.orderBy($"v").collect().map(_.getLong(0)).toSeq ==
       Seq(1000L, 1001L, 1002L))

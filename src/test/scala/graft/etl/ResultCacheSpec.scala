@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Result cache contract: hits serve WITHOUT touching the base data,
   * any input change or plan change is a miss, non-deterministic
-  * queries bypass, eviction keeps the newest entries. */
+  * queries bypass. */
 class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -119,30 +119,5 @@ class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!h1 && !h2)
     assert(r2.collect().map(r => (r.getString(0), r.getLong(1))).toMap
       == Map("a" -> 1L, "c" -> 1L))
-  }
-
-  test("evict reclaims aged orphan .tmp dirs but spares fresh ones") {
-    val dir = java.nio.file.Files.createTempDirectory("rc_tmp_").toString
-    val c = new ResultCache(spark, dir)
-    val old = new java.io.File(dir, ".tmp_deadbeef")
-    val fresh = new java.io.File(dir, ".tmp_cafebabe")
-    old.mkdirs(); fresh.mkdirs()
-    old.setLastModified(System.currentTimeMillis() - 2 * 60 * 60 * 1000L)
-    assert(c.evict(keep = 10) == 1)
-    assert(!old.exists(), "aged orphan must be reclaimed")
-    assert(fresh.exists(), "in-flight writer scratch must survive")
-  }
-
-  test("evict keeps the most recent entries") {
-    val dir = java.nio.file.Files.createTempDirectory("rc_ev_").toString
-    val c = new ResultCache(spark, dir)
-    for (i <- 1 to 4) {
-      c.lookup(base.filter(col("k") > i).groupBy("g").count())
-      Thread.sleep(20)   // distinct mtimes so recency ordering is stable
-    }
-    assert(c.evict(keep = 2) == 2)
-    // the newest two still hit
-    val (_, hit) = c.lookup(base.filter(col("k") > 4).groupBy("g").count())
-    assert(hit)
   }
 }

@@ -1,7 +1,9 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,10 +18,27 @@ class SettingsSpec extends AnyFunSuite {
     val s = Settings.load()
     assert(s.value("graft_settings.load.max_concurrency") == "4")
     assert(s.value("graft_settings.extract_retries") == "1")
-    assert(s.intValue("graft_settings.spark.bucket_count") == 8)
+    assert(s.intValue("graft_settings.spark.max_extract_partitions") == 32)
     // dates are UTC and path-shaped (config/__init__.py:303-308)
     assert(s.value("date.today").matches(raw"\d{4}/\d{2}/\d{2}"))
     assert(s.value("date.yesterday").matches(raw"\d{4}/\d{2}/\d{2}"))
+  }
+
+  test("every packaged graft_settings value is named by the engine or a template") {
+    // a setting nothing reads is a knob that silently changes nothing
+    val leaves = Settings.load().configMap.keys.filter(_.startsWith("graft_settings.")).toSeq
+    assert(leaves.nonEmpty)
+    val walk = Files.walk(Paths.get("src/main"))
+    val readers =
+      try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList.collect {
+        case p if p.toString.endsWith(".scala") =>
+          graft.ReachabilitySpec.strip(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))._1
+        case p if p.toString.contains("/templates/") =>
+          new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      }
+      finally walk.close()
+    val unread = leaves.filterNot(k => readers.exists(_.contains(k)))
+    if (unread.nonEmpty) fail(s"settings nothing reads: ${unread.mkString(", ")}")
   }
 
   test("config dirs deep-merge onto defaults in filename order") {
@@ -85,7 +104,7 @@ class SettingsSpec extends AnyFunSuite {
     assert(banner.contains("extract=1 copy=3 insert=3"))
     // JSON template: rendered, then re-emitted as sorted JSON
     val env = Templates.render(s, "runtime_env")
-    assert(env.contains("\"bucket_count\" : \"8\""), env)
+    assert(env.contains("\"max_extract_partitions\" : \"32\""), env)
     val compact = Templates.render(s, "runtime_env", compact = true)
     assert(compact.linesIterator.size == 1 && compact.contains("\"version\":\"graft-r10\""))
     // sorted: application_name before version

@@ -1499,7 +1499,10 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!deleted.exists(_.contains("rep.top_nations")),
       s"vacuum reclaimed a pinned build: $deleted")
     // time travel: the pinned build reads back exactly as at pin time
-    val snap = wh.readSnapshot("run-2026-08-13", t)
+    def pinnedBuild(tag: String) = spark.read.parquet(wh.listSnapshots().collectFirst {
+      case (`tag`, id, loc) if id == t.identifier => loc
+    }.get)
+    val snap = pinnedBuild("run-2026-08-13")
       .orderBy("n_name").collect().map(_.getString(0)).toSeq
     assert(snap == pinned)
     // diff two pins: same table, different builds -> "changed" with
@@ -1525,7 +1528,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deleted2 = wh.vacuum(gen(7)).deleted
     assert(deleted2.count(_.contains("rep.top_nations")) == 1, s"second vacuum: $deleted2")
     assert(spark.table(t.quoted).count() == 5)
-    intercept[IllegalArgumentException](wh.readSnapshot("run-2026-08-13", t))
+    intercept[IllegalArgumentException](wh.restoreSnapshot("run-2026-08-13", t))
     // a torn pin file refuses the relation's vacuum, same as lifecycle pointers
     val tornDir = new java.io.File(s"$dir/snapshots/torn-tag")
     tornDir.mkdirs()
@@ -1534,7 +1537,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = wh.vacuum(gen(7))
     assert(res.refused.contains("src.nation"), s"refused: ${res.refused}")
     intercept[IllegalStateException](
-      wh.readSnapshot("torn-tag", TableName.parse("src.nation")))
+      wh.restoreSnapshot("torn-tag", TableName.parse("src.nation")))
     // ATOMIC creation: a crash mid-create leaves only the hidden
     // `.tmp_<tag>` staging dir — it is invisible to listSnapshots,
     // does not block re-creating the tag, and the retry cleans it up
@@ -1546,7 +1549,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     wh.createSnapshot("retry-tag", Seq(t))
     assert(!staleTmp.exists(), "retry must clean the stale staging dir")
     assert(wh.listSnapshots().exists(_._1 == "retry-tag"))
-    assert(wh.readSnapshot("retry-tag", t).count() == 5)
+    assert(pinnedBuild("retry-tag").count() == 5)
     wh.dropSnapshot("retry-tag")
   }
 

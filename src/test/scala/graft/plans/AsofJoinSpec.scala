@@ -183,107 +183,6 @@ class AsofJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"bucketing did not spread the hot key: $maxBucketed vs $maxPlain")
   }
 
-  test("asofAuto picks bucketed only past the hot-key threshold; parity either way") {
-    val s = spark
-    import s.implicits._
-    val base = ts("2024-01-01 00:00:00").getTime
-    val pDf = (1 to 800).map { i =>
-      (7L, new Timestamp(base + i * 3600000L), 20000L + i)   // one key, 800 rows
-    }.toDF("user_id", "p_ts", "purchase_id")
-    val cDf = (1 to 800).map { i =>
-      (7L, new Timestamp(base + i * 3597000L), 10000L + i)
-    }.toDF("c_user", "c_ts", "click_id")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select($"purchase_id", $"click_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = canon(AsofJoin.asof(pDf, cDf,
-      "user_id", "c_user", "p_ts", "c_ts", "click_id"))
-    // below threshold: the plain operator (no bucket column planned)
-    val cold = AsofJoin.asofAuto(pDf, cDf, Seq("user_id"), Seq("c_user"),
-      "p_ts", "c_ts", "click_id", hotKeyRows = 1000000L, sampleFraction = 1.0)
-    assert(!cold.queryExecution.executedPlan.toString.contains("__asof_lbkt"))
-    assert(canon(cold) == expected)
-    // past threshold: the bucketed form, same rows
-    val hot = AsofJoin.asofAuto(pDf, cDf, Seq("user_id"), Seq("c_user"),
-      "p_ts", "c_ts", "click_id", hotKeyRows = 100L, sampleFraction = 1.0,
-      targetBuckets = 16)
-    assert(hot.queryExecution.executedPlan.toString.contains("__asof_lbkt"))
-    assert(canon(hot) == expected)
-  }
-
-  test("asofAuto reuses catalog stats: zero detection jobs on ANALYZEd tables") {
-    val s = spark
-    import s.implicits._
-    val base = ts("2024-01-01 00:00:00").getTime
-    val pDf = (1 to 800).map { i =>
-      (7L, new Timestamp(base + i * 3600000L), 20000L + i)
-    }.toDF("user_id", "p_ts", "purchase_id")
-    val cDf = (1 to 800).map { i =>
-      (7L, new Timestamp(base + i * 3597000L), 10000L + i)
-    }.toDF("c_user", "c_ts", "click_id")
-    val dir = java.nio.file.Files.createTempDirectory("asof_stats")
-      .toFile.getAbsolutePath
-    pDf.write.mode("overwrite").parquet(s"$dir/p")
-    cDf.write.mode("overwrite").parquet(s"$dir/c")
-    spark.sql("DROP TABLE IF EXISTS asof_stats_p")
-    spark.sql("DROP TABLE IF EXISTS asof_stats_c")
-    spark.sql("CREATE TABLE asof_stats_p (user_id BIGINT, p_ts TIMESTAMP, " +
-      s"purchase_id BIGINT) USING parquet LOCATION '$dir/p'")
-    spark.sql("CREATE TABLE asof_stats_c (c_user BIGINT, c_ts TIMESTAMP, " +
-      s"click_id BIGINT) USING parquet LOCATION '$dir/c'")
-    spark.conf.set("spark.sql.statistics.histogram.enabled", "true")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
-      spark.sql("ANALYZE TABLE asof_stats_p COMPUTE STATISTICS FOR COLUMNS user_id, p_ts")
-      spark.sql("ANALYZE TABLE asof_stats_c COMPUTE STATISTICS FOR COLUMNS c_user, c_ts")
-      val pT = spark.table("asof_stats_p")
-      val cT = spark.table("asof_stats_c")
-      // count jobs around the DECISION (listener events post async —
-      // the scope's profile drains the bus before reading)
-      graft.etl.Telemetry.scoped(spark) { scope =>
-        def settled(): Int = scope.profile().fold(-1)(_.jobs)
-        val (wHot, viaStats) = AsofJoin.autoDecision(pT, cT,
-          Seq("user_id"), Seq("c_user"), "p_ts", "c_ts",
-          hotKeyRows = 100L, sampleFraction = 1.0, targetBuckets = 16)
-        val (wCold, viaStats2) = AsofJoin.autoDecision(pT, cT,
-          Seq("user_id"), Seq("c_user"), "p_ts", "c_ts",
-          hotKeyRows = 1000000L, sampleFraction = 1.0, targetBuckets = 16)
-        assert(viaStats && viaStats2, "catalog stats path not taken")
-        assert(wHot.isDefined, "800-row single-key table must trip a 100-row threshold")
-        assert(wCold.isEmpty, "800 rows must not trip a 1M-row threshold")
-        val statsJobs = settled()
-        assert(statsJobs == 0,
-          s"stats-based decision must launch ZERO jobs, saw $statsJobs")
-        // the sampling path on the same (stat-less) data agrees — on
-        // the branch AND on the bucket width (stats min/max are exact)
-        val (wHotS, viaS) = AsofJoin.autoDecision(pDf, cDf,
-          Seq("user_id"), Seq("c_user"), "p_ts", "c_ts",
-          hotKeyRows = 100L, sampleFraction = 1.0, targetBuckets = 16)
-        val (wColdS, _) = AsofJoin.autoDecision(pDf, cDf,
-          Seq("user_id"), Seq("c_user"), "p_ts", "c_ts",
-          hotKeyRows = 1000000L, sampleFraction = 1.0, targetBuckets = 16)
-        assert(!viaS, "in-memory DataFrames have no catalog stats")
-        assert(wHotS == wHot, s"widths disagree: stats $wHot vs sampled $wHotS")
-        assert(wColdS == wCold)
-        assert(settled() > 0, "sampling path must have run detection jobs")
-      }
-      // end-to-end parity through the stats-driven bucketed branch
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.select($"purchase_id", $"click_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val auto = AsofJoin.asofAuto(pT, cT, Seq("user_id"), Seq("c_user"),
-        "p_ts", "c_ts", "click_id", hotKeyRows = 100L, targetBuckets = 16)
-      assert(auto.queryExecution.executedPlan.toString.contains("__asof_lbkt"))
-      assert(canon(auto) == canon(AsofJoin.asof(pT, cT,
-        "user_id", "c_user", "p_ts", "c_ts", "click_id")))
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.statistics.histogram.enabled", "false")
-      spark.sql("DROP TABLE IF EXISTS asof_stats_p")
-      spark.sql("DROP TABLE IF EXISTS asof_stats_c")
-    }
-  }
-
   test("asofBucketed: carry-over crosses empty buckets; integral time columns") {
     val s = spark
     import s.implicits._

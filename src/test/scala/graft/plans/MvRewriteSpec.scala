@@ -210,8 +210,9 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // base grows by one batch; the MV follows with PARTIAL rows only —
     // no rescan of the base — and re-registers at the new version
     wh.appendToTableIdempotent(baseT, sliceB, "b1")
-    assert(MvOps.appendBatch(wh, mvT, sliceB, Seq("g"), Seq("x"), "b1"))
-    assert(!MvOps.appendBatch(wh, mvT, sliceB, Seq("g"), Seq("x"), "b1"),
+    val partialsB = MvRewrite.partials(sliceB, Seq("g"), Seq("x"))
+    assert(wh.appendToTableIdempotent(mvT, partialsB, "b1"))
+    assert(!wh.appendToTableIdempotent(mvT, partialsB, "b1"),
       "replayed batch must be a no-op")
     MvRewrite.registerMv(spark, "incmv", spark.table(baseT.quoted),
       spark.table(mvT.quoted), Seq("g"), Seq("x"),
@@ -476,8 +477,8 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
             MvRewrite.partials(batch.limit(0), Seq("g"), Seq("x")))
         }
         wh.appendToTableIdempotent(baseT, batch, s"base-$id")
-        graft.queries.MvOps.appendBatch(wh, mvT, batch,
-          Seq("g"), Seq("x"), s"mv-$id")
+        wh.appendToTableIdempotent(mvT,
+          MvRewrite.partials(batch, Seq("g"), Seq("x")), s"mv-$id")
         ()
       }
       .option("checkpointLocation",

@@ -99,50 +99,6 @@ class DimOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       List(1L, "a3", "X2", "2024-05-01", "9999-12-31", true)))
   }
 
-  test("HLL day-sketch rollup: merged range estimate equals one-shot; within 2% of exact") {
-    val s = spark
-    import s.implicits._
-    val events = Tables.load(spark, sfDir, "events")
-      .select(col("ts"), col("user_id"))
-    val days = events.select(to_date($"ts").as("day")).distinct()
-      .orderBy($"day").as[java.sql.Date].collect()
-    assert(days.length >= 3, s"need several days, got ${days.length}")
-    val cutoff = days(days.length / 2)
-    val wh = new graft.etl.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft_hll_wh_").toString, sfDir)
-    val tbl = graft.etl.TableName.parse("rollup.user_day_sketches")
-    // day 0: the batch pipeline sketched the history...
-    wh.writeTable(tbl, DimOps.userSketchByDay(
-      events.filter(to_date($"ts") < cutoff)))
-    // ...and later days arrive as appended batches
-    DimOps.appendUserSketches(wh, tbl,
-      events.filter(to_date($"ts") >= cutoff), "d2")
-    val lo = days.head.toString
-    val hi = days.last.toString
-    val merged = DimOps.distinctUsersInRange(spark, tbl, lo, hi)
-    // merged day sketches must estimate EXACTLY like one sketch over
-    // the whole range (union associativity at fixed lgK)
-    val oneShot = events
-      .agg(hll_sketch_estimate(hll_sketch_agg($"user_id"))).collect()(0).getLong(0)
-    assert(merged == oneShot,
-      s"merged day sketches ($merged) diverge from one-shot sketch ($oneShot)")
-    val exact = events.select($"user_id").distinct().count()
-    assert(math.abs(merged - exact).toDouble / exact <= 0.02,
-      s"estimate $merged vs exact $exact exceeds 2%")
-    // a replayed append must not change the estimate (idempotent tag)
-    DimOps.appendUserSketches(wh, tbl,
-      events.filter(to_date($"ts") >= cutoff), "d2")
-    assert(DimOps.distinctUsersInRange(spark, tbl, lo, hi) == merged,
-      "replayed append changed the stored rollup")
-    // and a sub-range needs only its own sketches
-    val subExact = events.filter(to_date($"ts") < cutoff)
-      .select($"user_id").distinct().count()
-    val sub = DimOps.distinctUsersInRange(spark, tbl, lo,
-      cutoff.toLocalDate.minusDays(1).toString)
-    assert(math.abs(sub - subExact).toDouble / subExact <= 0.02,
-      s"sub-range estimate $sub vs exact $subExact exceeds 2%")
-  }
-
   test("histogram quantile rollup: stored days merge exactly, bounded error, idempotent") {
     val s = spark
     import s.implicits._
@@ -156,8 +112,8 @@ class DimOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tbl = graft.etl.TableName.parse("rollup.value_hist")
     wh.writeTable(tbl, DimOps.valueHistogram(
       events.filter(to_date($"ts") < cutoff)))
-    DimOps.appendValueHistogram(wh, tbl,
-      events.filter(to_date($"ts") >= cutoff), "d2")
+    wh.appendToTableIdempotent(tbl,
+      DimOps.valueHistogram(events.filter(to_date($"ts") >= cutoff)), "d2")
     def quantRows(df: org.apache.spark.sql.DataFrame) =
       DimOps.histQuantiles(df).collect()
         .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -185,8 +141,8 @@ class DimOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(p99 - e99) <= binW, s"$t p99 $p99 vs $e99")
     }
     // replayed append: stored rollup unchanged
-    DimOps.appendValueHistogram(wh, tbl,
-      events.filter(to_date($"ts") >= cutoff), "d2")
+    wh.appendToTableIdempotent(tbl,
+      DimOps.valueHistogram(events.filter(to_date($"ts") >= cutoff)), "d2")
     assert(quantRows(spark.table(tbl.quoted)) == stored,
       "replayed append changed the stored histogram")
     // a sub-range query reads only its own day rows
@@ -238,7 +194,10 @@ class DimOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       AnnOps.appendToIvfIndex(wh, centsT, idxT,
         corpus.filter($"vec_id" >= i * step && $"vec_id" < hi), s"b$i")
     }
+    assert(spark.table(idxT.quoted).count() == n, "the appended index must cover the corpus")
     val before = AnnOps.probeIvfIndex(spark, sfDir, centsT, idxT).collect()
+    // the append-grown index probes exactly like the in-memory sq8 path
+    assert(before.toSeq == AnnOps.annIvfTopkSq8(spark, sfDir).collect().toSeq)
     val folded = wh.compactTable(idxT, maxDataFiles = 4)
     assert(folded.exists { case (b, a) => b > a },
       s"append-grown index must compact, got $folded")

@@ -231,77 +231,6 @@ class FuzzyJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       "heavy tier (within-bucket local pairwise) must be in the plan")
   }
 
-  test("incremental ER: batch appends converge to the full recompute") {
-    val s = spark
-    import s.implicits._
-    val wh = new graft.etl.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("er_inc_").toString,
-      "/root/testdata/sf0.001")
-    val names = Tables.load(spark, "/root/testdata/sf0.001", "customer")
-      .select($"c_custkey".as("id"), $"c_name".as("name"))
-    // build on the first third, fold in the rest in two batches
-    FuzzyJoin.erIndexBuild(wh, names.filter($"id" < 50), "eri.c")
-    val entsBefore = spark.table("`eri`.`c_entities`")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    FuzzyJoin.erIndexAppend(wh, names.filter($"id" >= 50 && $"id" < 100),
-      "eri.c", "b1")
-    FuzzyJoin.erIndexAppend(wh, names.filter($"id" >= 100), "eri.c", "b2")
-    // at-least-once replay of the SAME tag must change nothing
-    val snap = FuzzyJoin.erServeGoldenRecords(spark, "eri.c")
-      .collect().map(_.toSeq).toSeq
-    FuzzyJoin.erIndexAppend(wh, names.filter($"id" >= 100), "eri.c", "b2")
-    assert(FuzzyJoin.erServeGoldenRecords(spark, "eri.c")
-      .collect().map(_.toSeq).toSeq == snap, "replay must be a no-op")
-    // incremental == one-shot full recompute, row for row
-    val full = FuzzyJoin.goldenRecordsOf(names).collect().map(_.toSeq).toSeq
-    assert(snap == full,
-      "incrementally maintained entities diverged from the full recompute")
-    // untouched-component semantics: entities none of the new edges
-    // reached keep their exact assignment from the initial build
-    val after = spark.table("`eri`.`c_entities`")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val fullMap = full.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])).toMap
-    val untouched = entsBefore.filter { case (id, e) => fullMap(id) == e }
-    assert(untouched.nonEmpty, "fixture must leave some entities untouched")
-    untouched.foreach { case (id, e) => assert(after(id) == e) }
-  }
-
-  test("incremental ER: batch-internal edges survive a cloned session " +
-    "(foreachBatch relation-cache regression)") {
-    val s = spark
-    import s.implicits._
-    val wh = new graft.etl.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("er_clone_").toString,
-      "/root/testdata/sf0.001")
-    // seed: two names nowhere near the batch (no cross edges possible)
-    FuzzyJoin.erIndexBuild(wh,
-      Seq((1L, "aaaaaaaa"), (2L, "bbbbbbbb")).toDF("id", "name"), "ericl.c")
-    // foreachBatch hands user code a CLONED session whose relation
-    // cache starts as a copy of the parent's; reproduce that exactly
-    // (cloneSession is private[sql] — reflection is the test's only
-    // way in). Pre-fix, erIndexAppend's version-guard read primed
-    // this clone's cache with the pre-append file listing and the
-    // post-append stored read missed the batch: the batch-internal
-    // d1 pair below came out as two singleton entities.
-    val m = spark.getClass.getMethod("cloneSession")
-    m.setAccessible(true)
-    val clone = m.invoke(spark).asInstanceOf[SparkSession]
-    // prime the clone's cache the way a prior micro-batch would have
-    clone.table("`ericl`.`c_variants`").count()
-    val whClone = new graft.etl.Warehouse(clone, wh.warehouseDir,
-      "/root/testdata/sf0.001")
-    val batch = clone.createDataFrame(
-      Seq((10L, "cccccccc"), (11L, "ccccccccx"))).toDF("id", "name")
-    FuzzyJoin.erIndexAppend(whClone, batch, "ericl.c", "cb1")
-    val ents = spark.table("`ericl`.`c_entities`")
-      .filter($"id" >= 10L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(ents.keySet == Set(10L, 11L))
-    assert(ents(10L) == ents(11L),
-      "batch-internal d1 pair fragmented — the stored-variant read " +
-        "served a stale (pre-append) file listing in the clone session")
-  }
-
   test("golden records: chained variants collapse to one entity, singletons survive") {
     val s = spark
     import s.implicits._

@@ -4,10 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bigram LM train + perplexity: exact pair counts on a planted
-  * corpus, and the CCNet-style filter property — in-distribution text
-  * scores LOWER perplexity than shuffled/unseen text under the same
-  * model. */
+/** Bigram LM training: exact pair counts on a planted corpus. */
 class LmSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -38,30 +35,5 @@ class LmSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.map(_._3).sum == rows.head._4, s"inconsistent n_tok for $tok")
     }
     assert(m.sortBy(r => (r._1, r._2)).toSeq == m.toSeq, "ordered output")
-  }
-
-  test("perplexity separates in-distribution from out-of-distribution text") {
-    val s = spark
-    import s.implicits._
-    val train = Seq.tabulate(20)(i =>
-      (i.toLong, "alpha beta gamma delta alpha beta gamma delta"))
-      .toDF("doc_id", "text")
-    val model = TextOps.lmTrain(train, "text")
-    val test = Seq(
-      (100L, "alpha beta gamma delta alpha beta"),   // in-distribution
-      (101L, "delta gamma beta alpha delta gamma"),  // reversed transitions
-      (102L, "zz qq ww ee rr tt")                    // fully unseen
-    ).toDF("doc_id", "text")
-    val ppl = TextOps.lmPerplexity(test, model, "text").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // the guarantee is in-distribution < both OOD forms; the two OOD
-    // forms are NOT ordered between themselves (with a tiny vocab the
-    // unseen-token backoff 1/V can beat wrong-transition 1/(n_tok+V))
-    assert(ppl(100L) < ppl(101L), s"$ppl")
-    assert(ppl(100L) < ppl(102L), s"$ppl")
-    // deterministic across runs
-    val again = TextOps.lmPerplexity(test, model, "text").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(again == ppl)
   }
 }

@@ -4,10 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Naive Bayes train + score: the trainer's sufficient statistics are
-  * pinned on a planted corpus, and the scorer recovers the classes of
-  * a vocabulary-separated dataset perfectly — including docs holding
-  * out-of-model tokens (the smoothing path). */
+/** Naive Bayes training: the trainer's sufficient statistics are
+  * pinned on a planted corpus. */
 class NbSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -49,29 +47,5 @@ class NbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.count(_._2 == "goal") == 1)
     // ordered by (class, token) for the oracle hash
     assert(rows.sortBy(r => (r._1, r._2)).toSeq == rows.toSeq)
-  }
-
-  test("scorer recovers planted classes, handles unseen tokens, is deterministic") {
-    val s = spark
-    import s.implicits._
-    val model = TextOps.nbTrain(planted(), "lang", "text")
-    // held-out docs: class vocab plus tokens the model never saw
-    val test = Seq(
-      (101L, "penalty goal goal zzz"),
-      (102L, "dividend market bond unseen"),
-      (103L, "photon quark lab qqq")
-    ).toDF("doc_id", "text")
-    def predict() = TextOps.nbScore(test, model, "text")
-      .orderBy($"doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val got = predict()
-    assert(got == Seq((101L, "sports"), (102L, "finance"), (103L, "science")))
-    assert(predict() == got, "scoring must be deterministic")
-    // self-classification on the training set is perfect for a
-    // vocabulary-separated corpus
-    val self = TextOps.nbScore(planted(), model, "text")
-      .join(planted().select($"doc_id", $"lang"), "doc_id")
-      .filter($"predicted" === $"lang").count()
-    assert(self == 9L)
   }
 }

@@ -324,8 +324,8 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planesFor: smallest p with 2^p buckets giving <= target per bucket") {
-    import AnnOps.{planesFor, TargetBucketSize}
-    assert(TargetBucketSize == 16)
+    import AnnOps.planesFor
+    assert(Tuning.default.targetBucketSize == 16)
     assert(planesFor(50) == 2)      // sf0.001: ceil(50/16)=4 -> 2^2
     assert(planesFor(500) == 5)     // sf0.01:  ceil(500/16)=32 -> 2^5 exact
     assert(planesFor(5000) == 9)    // sf0.1:   ceil(5000/16)=313 -> 2^9
