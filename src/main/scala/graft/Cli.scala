@@ -148,7 +148,9 @@ object Cli {
       opts.get("select").map(p => TableSelector(p.split(',').toSeq))
         .getOrElse(TableSelector.all)
     val monitor = new Monitor(opts.get("events"))
-    def warehouse: Warehouse = new Warehouse(spark,
+    // one Warehouse per command: opening it registers what the
+    // warehouse directory publishes
+    lazy val warehouse: Warehouse = new Warehouse(spark,
       opts.getOrElse("warehouse", usage()), opts.getOrElse("data", usage()),
       monitor)
     // settings: packaged defaults + every --config directory
@@ -419,7 +421,7 @@ object Cli {
               val tag = opts.getOrElse("tag", usage())
               val rels = designs.filterNot(_.isView)
                 .filter(r => selector.matches(r.name))
-              rels.foreach(r => wh.restoreSnapshot(tag, r.name, Some(r.design)))
+              rels.foreach(r => wh.restoreSnapshot(tag, r.name))
               println(s"[snapshot] restored ${rels.size} table(s) from '$tag'")
             case "diff_snapshots" =>
               val diffs = wh.diffSnapshots(

@@ -14,7 +14,6 @@ import org.apache.spark.sql.SparkSession
   * | GETDATE() | current_timestamp() ([[GraftExtensions]]) |
   * | DATEADD(unit, n, ts) | ts + make_interval/n unit |
   * | DATEDIFF(unit, a, b) | timestampdiff(unit, a, b) |
-  * | LISTAGG(x, sep) | array_join(collect_list(x), sep) |
   * | NVL(a, b) | coalesce — already a Spark builtin |
   * | f_sha256(s) | sha2(s, 256) ([[GraftExtensions]]) |
   * | SYSDATE | current_timestamp() |
@@ -31,22 +30,8 @@ object DialectShims {
   def registerAll(spark: SparkSession): Unit = ()
 
   // LEN (Redshift's LENGTH alias) needs no shim: Spark 4 ships it as a
-  // built-in alias of length. LISTAGG has no scalar-function shim (it
-  // is an aggregate): rewriteListagg below handles it at the text level.
-
-  private val ListaggRe =
-    raw"(?i)LISTAGG\s*\(\s*([^,()]+)\s*,\s*('[^']*')\s*\)\s*WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+([^()]+?)\s*\)".r
-
-  /** Text-level rewrite of the LISTAGG aggregate (ordered variant) to
-    * Spark's array_join(array_sort(collect_list(...))). The reference
-    * ships queries in .sql files (relation.py:279-293); this runs as
-    * part of loading them. Only the common `ORDER BY <same column>`
-    * shape is rewritten — anything else surfaces to the dry-run
-    * validator (C5) as unsupported syntax. */
-  def rewriteListagg(sql: String): String =
-    ListaggRe.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"array_join(array_sort(collect_list(${m.group(1).trim})), ${m.group(2)})"))
+  // built-in alias of length, and it runs `LISTAGG(x, sep) WITHIN GROUP
+  // (ORDER BY ...)` natively, ordering and NULL semantics included.
 
   // ------------------------------------------------- DATEADD/DATEDIFF
   /** Redshift's unit spellings → the canonical unit. */
@@ -81,9 +66,8 @@ object DialectShims {
   /** Redshift's `RATIO_TO_REPORT(x) OVER (w)` → the explicit
     * `CAST(x AS DOUBLE) / SUM(x) OVER (w)` (neither Spark nor DuckDB
     * names the function; redshift.py ships it through verbatim SQL).
-    * Like [[rewriteListagg]], only the paren-free argument/window
-    * shape is rewritten — anything nested surfaces to the C5 dry-run
-    * as unsupported syntax. NULL semantics agree by construction:
+    * Only the paren-free argument/window shape is rewritten — anything
+    * nested surfaces to the C5 dry-run as unsupported syntax. NULL semantics agree by construction:
     * a NULL x yields NULL (division by a non-null sum), and SUM
     * ignores NULLs in both engines. */
   def rewriteRatioToReport(sql: String): String =
@@ -426,8 +410,10 @@ object DialectShims {
       }
     }
     if (predEnd < 0) predEnd = sql.length
-    val pred = sql.substring(at + 7, predEnd).trim
-    val inner = sql.substring(selStart + 6, at).trim   // sans SELECT keyword
+    // strip, not trim: trim would also eat the NUL that closes a
+    // masked `--` comment's placeholder
+    val pred = keepLineEnd(sql.substring(at + 7, predEnd).strip)
+    val inner = sql.substring(selStart + 6, at).strip   // sans SELECT keyword
     val tail = sql.substring(predEnd)
     // split the select list from FROM...: find depth-0 FROM
     val innerLower = inner.toLowerCase
@@ -445,13 +431,18 @@ object DialectShims {
       f += 1
     }
     if (fromAt < 0) return sql
-    val selList = inner.substring(0, fromAt).trim
-    val fromRest = inner.substring(fromAt)
+    val selList = keepLineEnd(inner.substring(0, fromAt).strip)
+    val fromRest = keepLineEnd(inner.substring(fromAt))
     val rewritten = sql.substring(0, selStart) +
       s"SELECT * EXCEPT (__qualify) FROM (SELECT $selList, ($pred) AS __qualify $fromRest) WHERE __qualify " +
       tail
     rewriteQualify(rewritten)   // handle remaining (outer) QUALIFYs
   }
+
+  /** `s` with a line break after it when it ends in a `--` comment:
+    * text spliced in after `s` would otherwise become comment text. */
+  private def keepLineEnd(s: String): String =
+    if (s.matches("(?s).*--[^\n]*")) s + "\n" else s
 
   /** PARSE tokens safe to translate for TO_DATE/TO_TIMESTAMP: the
     * numeric tokens whose Java pattern both formats AND parses the
@@ -1668,8 +1659,7 @@ object DialectShims {
     val arr = scala.collection.mutable.ArrayBuffer(saved: _*)
     val step0 = rewriteSelectTop(masked)
     val step1 = rewriteRatioToReport(rewriteApproxCount(step0))
-    val step2 = rewriteListagg(step1)
-    val step3 = rewriteDateAdd(step2)
+    val step3 = rewriteDateAdd(step1)
     val step4 = rewriteDateDiff(step3)
     val step5 = rewriteSysdate(step4)
     val step6 = rewriteConvertTimezone(step5)

@@ -30,7 +30,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Scale shape: a hit costs one parquet read of the RESULT (typically
   * KBs for analytic answers) instead of a 100 TB scan; a miss costs
   * the query plus one result write. Entries are immutable files —
-  * safe under concurrent readers; [[evict]] is the retention knob.
+  * safe under concurrent readers. Nothing evicts them: entries
+  * accumulate until the cache directory is cleared.
   */
 final class ResultCache(spark: SparkSession, cacheDir: String) {
 

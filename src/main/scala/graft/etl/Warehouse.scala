@@ -1,9 +1,12 @@
 package graft.etl
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable, CatalogTableType}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -45,12 +48,24 @@ final case class VacuumResult(deleted: Seq[String], refused: Seq[String])
   *
   * At 100 TB this matters: publish cost is O(#tables) catalog calls,
   * not O(bytes). Builds themselves are plain distributed writes.
+  *
+  * The warehouse directory is the one record of published state; the
+  * session catalog is a cache of it, filled when a `Warehouse` opens:
+  *
+  *   - `data/<schema>.<table>/<build>/`: one immutable build, with its
+  *     layout record `_layout.json` (schema, partition and bucket
+  *     columns) written after the data and before any pointer names it;
+  *   - `pointers/<schema>.<table>`: the live build's location, one per
+  *     lifecycle position (`etl_staging__s`, `etl_backup__s`);
+  *   - `views/<schema>.<table>.sql`: a view's query text;
+  *   - `snapshots/<tag>/<schema>.<table>`: pinned build locations.
   */
 final class Warehouse(
     val spark: SparkSession,
     dir: String,
     val sourceDir: String,                  // parquet stand-in for upstream (COPY, S10)
     val monitor: Monitor = new Monitor()) {
+  import Warehouse.{HiveDefaultPartition, Layout}
 
   /** `dir`, with a scheme-less relative path made absolute against the
     * working directory: Spark resolves a relative `LOCATION` against
@@ -182,8 +197,7 @@ final class Warehouse(
           // ANY exit path — NA-row construction, pointer read, write,
           // constraint check — must release them
           val rowcount = try {
-          val hasNaRow =
-            !skipCopy && design.isCtas && design.name.table.startsWith("dim_")
+          val hasNaRow = !skipCopy && naRowShape(design)
           val out = if (hasNaRow) withNaRow(design, df) else df
           // Constraints are verified against the WRITTEN table, as
           // the reference does (load.py:564-634 queries the loaded
@@ -197,7 +211,7 @@ final class Warehouse(
           // engine-generated NA row (T3) is excluded from the check —
           // identity keys start at 1, so sk=0 IS the NA row — else a
           // real source key 0 would false-positive against it.
-          val prevLocation = locationOf(target)
+          val prevLocation = readPointer(target)
           val rowcount0 = writeTable(target, out, Some(design))
           if (!skipCopy) {
             val written = spark.table(target.quoted)
@@ -212,7 +226,7 @@ final class Warehouse(
             try verifyConstraints(checked, design)
             catch { case e: FailedConstraintError =>
               prevLocation match {
-                case Some(loc) => registerAt(target, loc, Some(design))
+                case Some(loc) => registerAt(target, loc)
                 case None =>
                   spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
                   deletePointer(target)
@@ -269,17 +283,21 @@ final class Warehouse(
   }
 
   /** Missing-dimension NA row (T3, load.py:506-526). */
-  def withNaRow(design: TableDesign, df: DataFrame): DataFrame = {
-    val naRow = design.activeColumns.map(c =>
-      expr(design.naValueSql(c)).cast(c.dataType).as(c.name))
-    df.unionByName(spark.range(1).select(naRow: _*))
-  }
+  def withNaRow(design: TableDesign, df: DataFrame): DataFrame =
+    df.unionByName(naRow(design))
+
+  /** Designs whose builds carry the NA row: `dim_*` CTAS tables. */
+  private def naRowShape(design: TableDesign): Boolean =
+    design.isCtas && design.name.table.startsWith("dim_")
+
+  private def naRow(design: TableDesign): DataFrame =
+    spark.range(1).select(design.activeColumns.map(c =>
+      expr(design.naValueSql(c)).cast(c.dataType).as(c.name)): _*)
 
   private def buildView(design: TableDesign, pos: SchemaPosition.Value,
                         target: TableName,
                         inRun: Option[Set[String]] = None): BuildResult = {
-    val q = rewriteQuery(design.query, design.dependsOn, pos, inRun)
-    spark.sql(s"CREATE OR REPLACE VIEW ${target.quoted} AS $q")
+    createView(target, rewriteQuery(design.query, design.dependsOn, pos, inRun))
     BuildResult(design.name.identifier, "view", 0L)
   }
 
@@ -287,7 +305,6 @@ final class Warehouse(
     * co-located join must agree, so it is one warehouse-wide constant
     * (Redshift's analog is the slice count). */
   val BucketCount = 8
-  import Warehouse.HiveDefaultPartition
 
   /** Write as an external parquet table at a fresh versioned location
     * and (re-)register it — DROP+CREATE like the reference's
@@ -310,10 +327,9 @@ final class Warehouse(
         // the bucketed path must DROP before saveAsTable; if the write
         // then fails (executor OOM, source error) the relation would be
         // gone from the catalog while its old data and pointer are
-        // intact — re-register the previous build (as an unbucketed
-        // external table: data readable, bucket metadata re-established
-        // by the next successful build) before rethrowing
-        val prevLoc = locationOf(target).orElse(readPointer(target))
+        // intact — re-declare the previous build, exactly as its record
+        // says it was written, before rethrowing
+        val prevLoc = readPointer(target)
         spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
         try {
           val w0 = df.write.mode("overwrite").format("parquet")
@@ -324,16 +340,12 @@ final class Warehouse(
           sorted.saveAsTable(target.quoted)
         } catch {
           case e: Throwable =>
-            // registerAt verifies the declared layout against the old
-            // build's files: a previous build that predates the
-            // distribution keys re-registers PLAIN (CLUSTERED BY over
-            // unbucketed files would let bucketed joins skip their
-            // required shuffle — silently wrong results), while a
-            // genuinely bucketed previous build keeps its elision
-            try prevLoc.foreach(p => registerAt(target, p, design))
+            try prevLoc.foreach(declare(target, _))
             catch { case re: Throwable => e.addSuppressed(re) }
             throw e
         }
+        // saveAsTable declared the layout: record what it declared
+        writeLayout(loc, Layout.of(spark.sessionState.catalog.getTableMetadata(ident(target))))
         writePointer(target, loc)
       } else {
         val partCols = design.map(_.partitionBy).getOrElse(Seq.empty)
@@ -389,7 +401,12 @@ final class Warehouse(
                     else graft.queries.Tables.spreadWide(df, cap = 8)
           out.write.mode("overwrite").parquet(loc)
         }
-        registerAt(target, loc, design, Some(df.schema))
+        // the catalog keeps partition columns last, as a read infers them
+        val fields = Warehouse.nullable(df.schema).fields
+        val parts = partCols.flatMap(c => fields.find(_.name.equalsIgnoreCase(c)))
+        writeLayout(loc, Layout(StructType(fields.filterNot(parts.contains) ++ parts),
+          parts.map(_.name), None))
+        registerAt(target, loc)
       }
     }
     monitor.attachMetrics(metrics)
@@ -458,13 +475,7 @@ final class Warehouse(
     * interplay — and are rebuilt via [[writeTable]] only when full
     * re-derivation is intended. */
   def appendToTable(target: TableName, df: DataFrame): Unit = {
-    // SCHEMA GUARD: parquet reads resolve columns by name against the
-    // catalog schema, so a drifted batch would not fail — an extra
-    // column is silently DROPPED on read and a missing one surfaces
-    // as nulls. Refuse the mixed append loudly; schema evolution is a
-    // rebuild (writeTable), not an append.
-    requireAppendShape(target, df)
-    df.write.mode("append").parquet(appendLocation(target))
+    df.write.mode("append").parquet(appendLocation(target, Some(df.schema))._1)
     spark.catalog.refreshTable(target.quoted)
   }
 
@@ -499,23 +510,12 @@ final class Warehouse(
     import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "mergeInto needs at least one merge key")
     spark.catalog.refreshTable(target.quoted)
-    if (design.isEmpty) {
-      // Only an absent table may skip the layout guard — any OTHER
-      // catalog failure must propagate, or a transient error would
-      // silently de-bucket/de-partition the very layout this check
-      // exists to protect.
-      val meta = try Some(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          target.table, Some(target.schema)))) catch {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException => None
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException => None
-      }
-      meta.foreach { t =>
-        require(t.bucketSpec.isEmpty && t.partitionColumnNames.isEmpty,
+    if (design.isEmpty)
+      readPointer(target).map(layoutAt).foreach { l =>
+        require(l.buckets.isEmpty && l.partitionBy.isEmpty,
           s"mergeInto '${target.identifier}': target is bucketed/partitioned — " +
             "pass its TableDesign so the rewrite keeps the physical layout")
       }
-    }
     val current = spark.table(target.quoted)
     require(source.columns.map(_.toLowerCase).toSet ==
         current.columns.map(_.toLowerCase).toSet,
@@ -688,51 +688,42 @@ final class Warehouse(
     }.toMap
   }
 
-  /** Live location for an in-place append, refusing bucketed and
-    * partitioned tables: a bucketed table's files carry bucket-id
-    * assignments, and a partitioned table's rows live in partition
-    * DIRECTORIES — raw root-level parquet appends would corrupt
-    * either layout. The accumulating-table pattern is for plain
-    * unbucketed, unpartitioned indexes. */
-  private def appendLocation(target: TableName): String = {
-    val meta =
-      try Some(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema))))
-      catch {
-        // pointer-only accumulating tables legitimately have no
-        // catalog entry; any other catalog failure propagates (a
-        // swallowed transient error would let a raw append corrupt a
-        // bucketed/partitioned layout this guard exists to refuse)
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException => None
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException => None
-      }
-    if (meta.exists(_.bucketSpec.isDefined))
+  /** Live location and layout record for an in-place append,
+    * refusing bucketed and partitioned tables: a bucketed table's files
+    * carry bucket-id assignments, and a partitioned table's rows live
+    * in partition DIRECTORIES — raw root-level parquet appends would
+    * corrupt either layout. The accumulating-table pattern is for plain
+    * unbucketed, unpartitioned indexes.
+    *
+    * SCHEMA GUARD (with a `batch` schema): parquet reads resolve
+    * columns by name against the recorded schema, so a drifted batch
+    * would not fail — an extra column is silently DROPPED on read and a
+    * missing one surfaces as nulls. The mixed append is refused loudly;
+    * schema evolution is a rebuild (writeTable), not an append. */
+  private def appendLocation(target: TableName,
+                             batch: Option[StructType] = None): (String, Layout) = {
+    val loc = readPointer(target).getOrElse(throw new IllegalStateException(
+      s"no live location for '${target.identifier}' — build it with writeTable first"))
+    val layout = layoutAt(loc)
+    if (layout.buckets.isDefined)
       throw new IllegalStateException(
         s"'${target.identifier}' is bucketed; in-place append would corrupt " +
           "bucket assignments — rebuild with writeTable instead")
-    if (meta.exists(_.partitionColumnNames.nonEmpty))
+    if (layout.partitionBy.nonEmpty)
       throw new IllegalStateException(
         s"'${target.identifier}' is partitioned; root-level appends would " +
           "bypass the partition directories — rebuild with writeTable instead")
-    val loc = locationOf(target).orElse(readPointer(target)).getOrElse(
-      throw new IllegalStateException(
-        s"no live location for '${target.identifier}' — build it with writeTable first"))
-    // pointer-only path (fresh JVM, no catalog entry): the metadata
-    // guards above were vacuous, so detect the layout from the data
-    // itself — a cross-JVM raw append into a partitioned or bucketed
-    // layout is exactly the corruption those guards refuse
-    if (meta.isEmpty) {
-      val (hasPartDirs, hasBucketFiles, _) = sniffLayout(loc)
-      if (hasPartDirs)
-        throw new IllegalStateException(
-          s"'${target.identifier}' has partition directories at $loc; " +
-            "root-level appends would bypass them — rebuild with writeTable")
-      if (hasBucketFiles)
-        throw new IllegalStateException(
-          s"'${target.identifier}' holds bucketed files at $loc; in-place " +
-            "append would corrupt bucket assignments — rebuild with writeTable")
+    def shape(s: StructType) =
+      s.fields.map(f => (f.name.toLowerCase, f.dataType)).sortBy(_._1).toSeq
+    batch.foreach { b =>
+      val (want, got) = (shape(layout.schema), shape(b))
+      require(got == want,
+        s"append schema drift for ${target.identifier}: table has " +
+          s"${want.map(_._1).mkString(",")} but batch has " +
+          s"${got.map(_._1).mkString(",")} (or a column changed type) — " +
+          "evolve the table with a rebuild, not a silent mixed append")
     }
-    loc
+    (loc, layout)
   }
 
   /** [[appendToTable]] made IDEMPOTENT per `batchTag` — the ingest
@@ -751,37 +742,9 @@ final class Warehouse(
     * (underscore-prefixed paths are invisible to table scans, so
     * readers never see half a batch) and moves in via per-file
     * renames. Returns true if this call applied the batch. */
-  private def requireAppendShape(target: TableName, df: DataFrame): Unit = {
-    def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.map(f => (f.name.toLowerCase, f.dataType)).sortBy(_._1).toSeq
-    // pointer-only table (fresh JVM: the in-memory catalog has no
-    // entry but the pointers manifest resolves a live location — the
-    // documented re-run-cron / restarted-stream case): take the
-    // schema from the data itself, or every cross-JVM append dies
-    // here before appendLocation's pointer fallback can run
-    val tableSchema =
-      try spark.table(target.quoted).schema
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          spark.read.parquet(
-            locationOf(target).orElse(readPointer(target)).getOrElse(
-              throw new IllegalStateException(
-                s"no live location for '${target.identifier}' — build " +
-                  "it with writeTable first"))).schema
-      }
-    val want = shape(tableSchema)
-    val got = shape(df.schema)
-    require(got == want,
-      s"append schema drift for ${target.identifier}: table has " +
-        s"${want.map(_._1).mkString(",")} but batch has " +
-        s"${got.map(_._1).mkString(",")} (or a column changed type) — " +
-        "evolve the table with a rebuild, not a silent mixed append")
-  }
-
   def appendToTableIdempotent(target: TableName, df: DataFrame,
                               batchTag: String): Boolean = {
-    requireAppendShape(target, df)
-    val loc = appendLocation(target)
+    val (loc, _) = appendLocation(target, Some(df.schema))
     // Sanitizing alone would COLLIDE distinct tags ('b.1' and 'b:1'
     // both become 'b_1', silently dropping the second batch); a raw-tag
     // hash suffix keeps sanitized names unique per raw tag.
@@ -865,7 +828,7 @@ final class Warehouse(
                    maxDataFiles: Int = 64,
                    dryRun: Boolean = false,
                    clusterBy: Seq[String] = Nil): Option[(Int, Int)] = {
-    val loc = appendLocation(target)
+    val (loc, layout) = appendLocation(target)
     val hp = new org.apache.hadoop.fs.Path(loc)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(p: org.apache.hadoop.fs.Path) =
@@ -888,125 +851,52 @@ final class Warehouse(
       .foreach { m =>
         fs.create(new org.apache.hadoop.fs.Path(newLoc, m.getPath.getName)).close()
       }
-    // atomic re-point (appendLocation already proved the table is a
-    // plain unbucketed parquet relation, so ALTER is shape-safe)
-    if (spark.catalog.tableExists(target.quoted))
-      spark.sql(s"ALTER TABLE ${target.quoted} SET LOCATION '$newLoc'")
-    writePointer(target, newLoc)
-    spark.catalog.refreshTable(target.quoted)
+    // the same layout at a new location: registerAt re-points the
+    // catalog entry with one ALTER, then moves the pointer
+    writeLayout(newLoc, layout)
+    registerAt(target, newLoc)
     Some((before, dataFiles(new org.apache.hadoop.fs.Path(newLoc)).length))
   }
 
-  /** (Re-)point `target` at `location`. When the name already holds a
-    * parquet table with the same bucketing shape this is a single
-    * `ALTER TABLE ... SET LOCATION` — an atomic metadata call, so a
-    * concurrent reader never observes a missing relation (the table
-    * analog of the CREATE OR REPLACE VIEW promote). Only a shape
-    * change (bucketing added/removed/rekeyed, or a view occupying the
-    * name) falls back to drop-then-create. */
-  /** What the files at `location` physically are:
-    * (partition directories present, bucket-named part files present,
-    * any entries at all). Spark's bucketed writer names files
-    * `part-NNNNN-<uuid>_BBBBB.cNNN...` — the `_BBBBB.c` infix is the
-    * bucket id, absent from plain writes (`...-cNNN`). */
-  private def sniffLayout(location: String): (Boolean, Boolean, Boolean) = {
-    val p = new org.apache.hadoop.fs.Path(location)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) (false, false, false)
-    else {
-      val entries = fs.listStatus(p)
-        .filterNot(_.getPath.getName.startsWith("_"))
-      val partDirs = entries.exists(e =>
-        e.isDirectory && e.getPath.getName.contains("="))
-      val bucketRe = java.util.regex.Pattern
-        .compile("part-\\d+-.*_\\d{5}\\.c\\d+.*")
-      def anyBucketFile(es: Array[org.apache.hadoop.fs.FileStatus]): Boolean =
-        es.exists(e =>
-          !e.isDirectory && bucketRe.matcher(e.getPath.getName).matches())
-      // a partitioned+bucketed build nests its bucket-named files
-      // INSIDE the partition dirs — one representative leaf path is
-      // enough to corroborate (Spark writes every partition with the
-      // same bucketing), so descend the first `k=v` chain instead of
-      // listing the whole tree
-      var bucketFiles = anyBucketFile(entries)
-      if (!bucketFiles && partDirs) {
-        var dir = entries.find(e =>
-          e.isDirectory && e.getPath.getName.contains("=")).map(_.getPath)
-        var depth = 0
-        while (!bucketFiles && dir.isDefined && depth < 8) {
-          val inner = fs.listStatus(dir.get)
-            .filterNot(_.getPath.getName.startsWith("_"))
-          bucketFiles = anyBucketFile(inner)
-          dir = inner.find(e =>
-            e.isDirectory && e.getPath.getName.contains("=")).map(_.getPath)
-          depth += 1
-        }
-      }
-      (partDirs, bucketFiles, entries.nonEmpty)
-    }
+  // ------------------------------------------------- layout records
+  private def ident(t: TableName): TableIdentifier = TableIdentifier(t.table, Some(t.schema))
+
+  private def writeLayout(location: String, layout: Layout): Unit =
+    writeFileAt(new Path(location, Warehouse.LayoutRecord), layout.json)
+
+  /** The layout record of the build at `location`. A build without one
+    * is refused, never guessed at from its file names. */
+  private def layoutAt(location: String): Layout =
+    readFileAt(new Path(location, Warehouse.LayoutRecord)).filter(_.nonEmpty)
+      .map(Layout.fromJson).getOrElse(throw new IllegalStateException(
+        s"no layout record at $location: rebuild the table"))
+
+  /** (Re-)register `target` at the build at `location`, then move its
+    * pointer there. */
+  private def registerAt(target: TableName, location: String): Unit = {
+    declare(target, location)
+    writePointer(target, location)
   }
 
-  /** (Re-)register `target` as an external parquet table at
-    * `location`. `fileSchema` is the schema the files were written
-    * with, when the caller knows it (a fresh write, or a catalog entry
-    * being re-pointed): declaring it spares the one-task
-    * schema-inference job a bare `CREATE TABLE ... LOCATION` runs.
-    * Re-registrations of an OLDER build pass none and infer, since
-    * those files may predate the current design. */
-  private def registerAt(target: TableName, location: String,
-                         design: Option[TableDesign] = None,
-                         fileSchema: Option[StructType] = None): Unit = {
-    ensureDatabase(target.schema)
-    // trust, then VERIFY the physical layout: rollback/restore paths
-    // re-register an OLDER build under the CURRENT design, and a
-    // design that gained distribution keys (or partitioning) since
-    // that build would declare CLUSTERED BY over plain files —
-    // bucketed joins then skip their required shuffle and return
-    // silently wrong rows (or a PARTITIONED BY table over a flat
-    // directory scans as empty). When the location already holds
-    // files, only declare a layout the files corroborate; an EMPTY
-    // location (external schema declared ahead of data) keeps the
-    // design's word. Residual risk accepted: files bucketed under
-    // RENAMED keys are indistinguishable by name — a design that
-    // re-keys distribution must rebuild, not restore.
-    val (hasPartDirs, hasBucketFiles, hasAnyData) = sniffLayout(location)
-    val wantBuckets = design.flatMap(_.distribution).filter(_.nonEmpty)
-      .filter(_ => !hasAnyData || hasBucketFiles)
-      .map(d => (d, design.map(_.sortKeys).filter(_.nonEmpty).getOrElse(Seq.empty)))
+  /** Make the catalog entry `target` serve the build at `location`,
+    * declaring the build's layout record verbatim: no schema inference
+    * and no Spark job, and a rollback serves an older build exactly as
+    * it was written, whatever its design says now. A name that already
+    * holds a parquet table of the same layout is re-pointed with one
+    * `ALTER TABLE ... SET LOCATION` — an atomic metadata call, so a
+    * concurrent reader never observes a missing relation (the table
+    * analog of the CREATE OR REPLACE VIEW promote). Any other entry (a
+    * different layout, or a view) is dropped and re-created. */
+  private def declare(target: TableName, location: String): Unit = {
+    val layout = layoutAt(location)
+    val cat = spark.sessionState.catalog
     val existing =
-      try Some(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema))))
-      catch { case _: Exception => None }
-    val wantParts = design.map(_.partitionBy.map(_.toLowerCase)).getOrElse(Seq.empty)
-      .filter(_ => !hasAnyData || hasPartDirs)
-    // bucketed/partitioned CREATE TABLE requires an explicit column
-    // list (schema inference + bucketing is rejected by the analyzer;
-    // an EMPTY partitioned location has nothing to infer from); both
-    // imply a design, so the schema is available. A plain table
-    // declares its file schema when known, all columns nullable —
-    // what inference returns for parquet Spark wrote — unless DDL text
-    // cannot say it exactly (field metadata); otherwise it infers.
-    val declared =
-      if (wantBuckets.nonEmpty || wantParts.nonEmpty) design.map(_.toStructType)
-      else fileSchema.map(Warehouse.nullable)
-        .filter(s => s.nonEmpty && StructType.fromDDL(s.toDDL) == s)
-    // ALTER keeps the catalog's stored schema, so it is only safe when
-    // that schema already equals the declared one (nullability aside) —
-    // any drift, or an older build's unknown schema, falls back to
-    // drop-then-create.
-    val sameShape = existing.exists { t =>
-      t.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL &&
-        t.provider.exists(_.equalsIgnoreCase("parquet")) &&
-        t.bucketSpec.map(b => (b.bucketColumnNames, b.sortColumnNames)) ==
-          wantBuckets &&
-        t.bucketSpec.forall(_.numBuckets == BucketCount) &&
-        t.partitionColumnNames.map(_.toLowerCase) == wantParts &&
-        declared.exists(s =>
-          t.schema.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType, f.metadata))
-            .sortBy(_._1) ==
-            s.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType, f.metadata)).sortBy(_._1))
-    }
-    if (sameShape) {
+      try Some(cat.getTableMetadata(ident(target))) catch { case _: AnalysisException => None }
+    val uri = { val p = new Path(location); rawFs(p).makeQualified(p).toUri }
+    val sameShape = existing.exists(t => t.tableType == CatalogTableType.EXTERNAL &&
+      t.provider.exists(_.equalsIgnoreCase("parquet")) && Layout.of(t) == layout)
+    if (sameShape && existing.exists(_.location == uri)) ()   // already serving it
+    else if (sameShape) {
       spark.sql(s"ALTER TABLE ${target.quoted} SET LOCATION '$location'")
       // a partitioned table's catalog partition entries still point at
       // the OLD location, and RECOVER PARTITIONS only ADDS missing
@@ -1016,13 +906,10 @@ final class Warehouse(
       // (metadata-only: retainData leaves the old files for vacuum),
       // then RECOVER rebuilds the full set from the new directory
       // layout. The table itself is never missing from the catalog.
-      if (wantParts.nonEmpty) {
-        val ident = org.apache.spark.sql.catalyst.TableIdentifier(
-          target.table, Some(target.schema))
-        val cat = spark.sessionState.catalog
-        val stale = cat.listPartitions(ident)
+      if (layout.partitionBy.nonEmpty) {
+        val stale = cat.listPartitions(ident(target))
         if (stale.nonEmpty)
-          cat.dropPartitions(ident, stale.map(_.spec),
+          cat.dropPartitions(ident(target), stale.map(_.spec),
             ignoreIfNotExists = true, purge = false, retainData = true)
         spark.sql(s"ALTER TABLE ${target.quoted} RECOVER PARTITIONS")
       }
@@ -1031,101 +918,66 @@ final class Warehouse(
       // broadcast decisions) from the previous build's row counts.
       // Drop them; drop-then-create clears stats implicitly, and
       // analyzeAfter re-ANALYZEs post-publish when requested.
-      if (existing.exists(_.stats.isDefined))
-        spark.sessionState.catalog.alterTableStats(
-          org.apache.spark.sql.catalyst.TableIdentifier(
-            target.table, Some(target.schema)), None)
+      if (existing.exists(_.stats.isDefined)) cat.alterTableStats(ident(target), None)
       spark.catalog.refreshTable(target.quoted)
     } else {
-      if (existing.exists(_.tableType ==
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW))
-        spark.sql(s"DROP VIEW IF EXISTS ${target.quoted}")
-      else spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
-      val clustered = wantBuckets.map { case (d, sk) =>
-        val sortSpec =
-          if (sk.nonEmpty) s" SORTED BY (${sk.mkString(", ")})" else ""
-        s" CLUSTERED BY (${d.mkString(", ")})$sortSpec INTO $BucketCount BUCKETS"
-      }.getOrElse("")
-      val cols = declared.map(s => s" (${s.toDDL})").getOrElse("")
-      val partitioned =
-        if (wantParts.nonEmpty) s" PARTITIONED BY (${wantParts.mkString(", ")})"
-        else ""
-      spark.sql(
-        s"CREATE TABLE ${target.quoted}$cols USING parquet$clustered$partitioned " +
-          s"LOCATION '$location'")
+      existing.foreach { t =>
+        if (t.tableType == CatalogTableType.VIEW) dropView(target)
+        else spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
+      }
+      ensureDatabase(target.schema)
+      cat.createTable(CatalogTable(ident(target), CatalogTableType.EXTERNAL,
+        CatalogStorageFormat.empty.copy(locationUri = Some(uri)), layout.schema,
+        provider = Some("parquet"), partitionColumnNames = layout.partitionBy,
+        bucketSpec = layout.buckets,
+        tracksPartitionsInCatalog = spark.sessionState.conf.manageFilesourcePartitions),
+        ignoreIfExists = false)
       // register the partition directories already at the location
-      if (wantParts.nonEmpty)
+      if (layout.partitionBy.nonEmpty)
         spark.sql(s"ALTER TABLE ${target.quoted} RECOVER PARTITIONS")
     }
-    writePointer(target, location)
   }
 
-  /** `target`'s catalog entry, when it is a table with a location. */
-  private def catalogEntry(target: TableName): Option[CatalogTable] =
-    try Some(spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(target.table, Some(target.schema))))
-      .filter(_.storage.locationUri.isDefined)
-    catch { case _: Exception => None }
+  // ------------------------------------------------- pointers and views
+  private def pointersRoot: Path = new Path(s"$warehouseDir/pointers")
+  private def viewsRoot: Path = new Path(s"$warehouseDir/views")
 
-  private def locationOf(target: TableName): Option[String] =
-    catalogEntry(target).map(_.location.toString)
+  private def pointerPath(name: TableName): Path =
+    new Path(pointersRoot, s"${name.schema}.${name.table}")
 
-  // ------------------------------------------------- pointers manifest
-  /** The session catalog is in-memory: a fresh JVM knows no live
-    * locations, so [[vacuum]] run standalone would resolve an empty
-    * live set and delete EVERYTHING — standard and backup builds
-    * included. Every (re-)registration therefore also persists the
-    * live location to `warehouseDir/pointers/<schema>.<table>`, the
-    * on-disk twin of the catalog pointer; vacuum unions both. One
-    * tiny file write per registration — publish stays O(#tables). */
-  private def pointerPath(name: TableName): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      s"$warehouseDir/pointers/${name.schema}.${name.table}")
+  private def viewPath(name: TableName): Path =
+    new Path(viewsRoot, s"${name.schema}.${name.table}.sql")
 
-  /** Pointer I/O goes through the RAW filesystem where the scheme has
-    * a checksumming wrapper (the local FS): `ChecksumFileSystem` writes
-    * a `.crc` sidecar next to every file and renames it with the
-    * target, so the pointers dir would accumulate sidecars — and a
-    * sidecar left stale by any raw-path write makes every later
-    * checksummed read fail (ChecksumException → pointer unresolvable →
-    * vacuum refuses a healthy relation). Pointers are self-validating
+  /** Small-file I/O (pointers, records, view text) goes through the RAW
+    * filesystem where the scheme has a checksumming wrapper (the local
+    * FS): `ChecksumFileSystem` writes a `.crc` sidecar next to every
+    * file and renames it with the target, and a sidecar left stale by
+    * any raw-path write makes every later checksummed read fail
+    * (ChecksumException → pointer unresolvable → vacuum refuses a
+    * healthy relation). These files are self-validating
     * (empty/unreadable ⇒ refuse), so client-side checksums add no
     * safety here. HDFS/object stores are not `ChecksumFileSystem`s and
     * pass through unchanged. */
-  private def pointerFs(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+  private def rawFs(p: Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
       case other => other
     }
 
-  /** Drop a `.crc` sidecar left by a pre-raw-path write, so legacy
-    * warehouses converge to sidecar-free pointer dirs. */
-  private def dropLegacySidecar(fs: org.apache.hadoop.fs.FileSystem,
-                                p: org.apache.hadoop.fs.Path): Unit = {
-    val crc = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.crc")
-    if (fs.exists(crc)) fs.delete(crc, false)
-  }
-
-  /** Pointer writes must be ATOMIC: `fs.create(p, overwrite)` truncates
-    * in place, so a crash mid-write leaves an empty pointer — and if any
-    * OTHER position's pointer survives, vacuum's live set is non-empty,
-    * the fail-safe does not trigger, and the build whose pointer was
-    * lost gets deleted. Write a temp file and rename over the target
-    * (atomic on HDFS/local; object stores emulate rename — their
-    * non-atomicity is why [[pointerState]] ALSO treats a
+  /** Small-file writes must be ATOMIC: `fs.create(p, overwrite)`
+    * truncates in place, so a crash mid-write leaves an empty pointer —
+    * and if any OTHER position's pointer survives, vacuum's live set is
+    * non-empty, the fail-safe does not trigger, and the build whose
+    * pointer was lost gets deleted. Write a temp file and rename over
+    * the target (atomic on HDFS/local; object stores emulate rename —
+    * their non-atomicity is why [[pointerState]] ALSO treats a
     * present-but-empty pointer as unresolvable and vacuum refuses). */
-  private def writePointer(name: TableName, location: String): Unit =
-    writePointerFileAt(pointerPath(name), location)
-
-  private def writePointerFileAt(p: org.apache.hadoop.fs.Path,
-                                 location: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = pointerFs(p)
+  private def writeFileAt(p: Path, text: String): Unit = {
+    val fs = rawFs(p)
     fs.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.tmp.${java.util.UUID.randomUUID()}")
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp.${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
-    try out.write(location.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     fs match {
       case _: org.apache.hadoop.fs.RawLocalFileSystem =>
@@ -1133,25 +985,36 @@ final class Warehouse(
         // FileContext route would re-wrap local in its checksum layer.
         if (!fs.rename(tmp, p)) {
           fs.delete(tmp, false)
-          throw new java.io.IOException(s"pointer rename failed: $tmp -> $p")
+          throw new java.io.IOException(s"rename failed: $tmp -> $p")
         }
       case _ =>
         // FileContext.rename(OVERWRITE): the only Hadoop rename with
         // defined replace-existing semantics across schemes.
         org.apache.hadoop.fs.FileContext
-          .getFileContext(fs.makeQualified(p).toUri, conf)
+          .getFileContext(fs.makeQualified(p).toUri, spark.sparkContext.hadoopConfiguration)
           .rename(fs.makeQualified(tmp), fs.makeQualified(p),
             org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
-    dropLegacySidecar(fs, p)
   }
 
-  private def deletePointer(name: TableName): Unit = {
-    val p = pointerPath(name)
-    val fs = pointerFs(p)
-    if (fs.exists(p)) fs.delete(p, false)
-    dropLegacySidecar(fs, p)
+  /** A small file's trimmed text: None when absent, "" when empty or
+    * unreadable. */
+  private def readFileAt(p: Path): Option[String] = {
+    val fs = rawFs(p)
+    if (!fs.exists(p)) None
+    else Some(try {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
+      finally in.close()
+    } catch { case _: java.io.IOException => "" })
   }
+
+  private def deleteFileAt(p: Path): Unit = { rawFs(p).delete(p, false); () }
+
+  private def writePointer(name: TableName, location: String): Unit =
+    writeFileAt(pointerPath(name), location)
+
+  private def deletePointer(name: TableName): Unit = deleteFileAt(pointerPath(name))
 
   /** What a position's on-disk pointer says. `Unresolvable` (present
     * but empty/unreadable — a torn write) is distinct from `Absent`:
@@ -1165,25 +1028,71 @@ final class Warehouse(
   private[etl] def pointerState(name: TableName): PointerState =
     pointerStateAt(pointerPath(name))
 
-  private[etl] def pointerStateAt(p: org.apache.hadoop.fs.Path): PointerState = {
-    val fs = pointerFs(p)
-    if (!fs.exists(p)) PointerAbsent
-    else {
-      val content = try {
-        val in = fs.open(p)
-        try {
-          val bos = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-          Some(new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim)
-        } finally in.close()
-      } catch { case _: java.io.IOException => None }
-      content match {
-        case Some(loc) if loc.nonEmpty => PointerLive(loc)
-        case _ => PointerUnresolvable
+  private[etl] def pointerStateAt(p: Path): PointerState = readFileAt(p) match {
+    case None => PointerAbsent
+    case Some("") => PointerUnresolvable
+    case Some(loc) => PointerLive(loc)
+  }
+
+  private[etl] def readPointer(name: TableName): Option[String] =
+    pointerState(name) match {
+      case PointerLive(loc) => Some(loc)
+      case _ => None
+    }
+
+  /** CREATE OR REPLACE VIEW, with its query text recorded for the next
+    * process to re-create. */
+  private def createView(target: TableName, query: String): Unit = {
+    spark.sql(s"CREATE OR REPLACE VIEW ${target.quoted} AS $query")
+    writeFileAt(viewPath(target), query)
+  }
+
+  /** Drop the view `target` and its recorded query. A catalog drop,
+    * not DROP VIEW: the tables the view reads may be gone already, and
+    * DROP VIEW resolves the view (to uncache it) and logs the failed
+    * lookup. Nothing caches a warehouse view. */
+  private def dropView(target: TableName): Unit = {
+    spark.sessionState.catalog.dropTable(ident(target), ignoreIfNotExists = true, purge = false)
+    deleteFileAt(viewPath(target))
+  }
+
+  /** Serve what the directory records: every live pointer is declared
+    * from its build's layout record, then every recorded view is
+    * re-created (a view whose query reads another view waits for it).
+    * What cannot be served — a torn pointer, a build without a record,
+    * a view whose query no longer resolves — is skipped with one
+    * stderr line; vacuum still refuses a torn pointer. */
+  private def openPublished(): Unit = {
+    def entries(root: Path, suffix: String): Seq[(TableName, Path)] = {
+      val fs = rawFs(root)
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.map(_.getPath)
+        .filter(p => !p.getName.startsWith(".") && p.getName.endsWith(suffix))
+        .map(p => TableName.parse(p.getName.stripSuffix(suffix)) -> p)
+    }
+    def skip(name: TableName, why: String): Unit =
+      System.err.println(s"[warehouse] not serving ${name.identifier}: $why")
+    entries(pointersRoot, "").foreach { case (name, p) =>
+      pointerStateAt(p) match {
+        case PointerLive(loc) =>
+          try declare(name, loc) catch { case e: IllegalStateException => skip(name, e.getMessage) }
+        case _ => skip(name, s"its pointer $p is empty or unreadable (torn write)")
       }
     }
+    var pending = entries(viewsRoot, ".sql")
+    var progress = true
+    while (pending.nonEmpty && progress) {
+      val failed = pending.filterNot { case (name, p) =>
+        try {
+          ensureDatabase(name.schema)
+          spark.sql(s"CREATE OR REPLACE VIEW ${name.quoted} AS ${readFileAt(p).getOrElse("")}")
+          true
+        } catch { case _: AnalysisException => false }
+      }
+      progress = failed.size < pending.size
+      pending = failed
+    }
+    pending.foreach { case (name, _) => skip(name, "its view query does not resolve") }
   }
 
   // ------------------------------------------------- snapshots
@@ -1226,11 +1135,11 @@ final class Warehouse(
     requireSnapshotTag(tag)
     require(tables.nonEmpty, "createSnapshot needs at least one table")
     val root = snapshotsRoot
-    val fs = pointerFs(root)
+    val fs = rawFs(root)
     val dir = new org.apache.hadoop.fs.Path(root, tag)
     require(!fs.exists(dir), s"snapshot '$tag' already exists; drop it first")
     val resolved = tables.map { t =>
-      val loc = locationOf(t).orElse(readPointer(t)).getOrElse(
+      val loc = readPointer(t).getOrElse(
         throw new IllegalArgumentException(
           s"cannot snapshot '${t.identifier}': no resolvable live location " +
             "(unregistered table, or a view)"))
@@ -1245,7 +1154,7 @@ final class Warehouse(
     if (fs.exists(tmp)) fs.delete(tmp, true)
     fs.mkdirs(tmp)
     resolved.foreach { case (t, loc) =>
-      writePointerFileAt(
+      writeFileAt(
         new org.apache.hadoop.fs.Path(tmp, s"${t.schema}.${t.table}"), loc)
     }
     if (!fs.rename(tmp, dir))
@@ -1254,15 +1163,14 @@ final class Warehouse(
   }
 
   /** Re-point the live table at a pinned build — rollback to the
-    * snapshot. Metadata-only, same registerAt discipline as publish;
-    * pass the design when the table is bucketed/partitioned so the
-    * recreated relation keeps its shape. The pin itself stays. */
-  def restoreSnapshot(tag: String, name: TableName,
-                      design: Option[TableDesign] = None): Unit = {
+    * snapshot. Metadata-only, same registerAt discipline as publish:
+    * the build is served with the layout it was written with. The pin
+    * itself stays. */
+  def restoreSnapshot(tag: String, name: TableName): Unit = {
     requireSnapshotTag(tag)
     pointerStateAt(snapshotFile(tag, name)) match {
       case PointerLive(loc) =>
-        registerAt(name, loc, design)
+        registerAt(name, loc)
         spark.catalog.refreshTable(name.quoted)
       case PointerAbsent => throw new IllegalArgumentException(
         s"no snapshot '$tag' for '${name.identifier}'")
@@ -1276,7 +1184,7 @@ final class Warehouse(
     * skipped. */
   def listSnapshots(): Seq[(String, String, String)] = {
     val root = snapshotsRoot
-    val fs = pointerFs(root)
+    val fs = rawFs(root)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).filter(d =>
         d.isDirectory && !d.getPath.getName.startsWith(".")).toSeq.flatMap { d =>
@@ -1297,7 +1205,7 @@ final class Warehouse(
   def dropSnapshot(tag: String): Unit = {
     requireSnapshotTag(tag)
     val dir = new org.apache.hadoop.fs.Path(snapshotsRoot, tag)
-    val fs = pointerFs(dir)
+    val fs = rawFs(dir)
     require(fs.exists(dir), s"no snapshot '$tag'")
     fs.delete(dir, true)
     ()
@@ -1351,7 +1259,7 @@ final class Warehouse(
     * relation forever while listSnapshots shows nothing to drop. */
   private def allSnapshotPins(): Map[String, (Set[String], Boolean)] = {
     val root = snapshotsRoot
-    val fs = pointerFs(root)
+    val fs = rawFs(root)
     if (!fs.exists(root)) Map.empty
     else {
       val states = for {
@@ -1367,12 +1275,6 @@ final class Warehouse(
     }
   }
 
-  private[etl] def readPointer(name: TableName): Option[String] =
-    pointerState(name) match {
-      case PointerLive(loc) => Some(loc)
-      case _ => None
-    }
-
   /** Version stamp for freshness contracts (the MV-rewrite staleness
     * probe): the live build location plus an md5 over the RECURSIVE
     * data-file listing (path, length, mtime) — every mutation moves
@@ -1383,9 +1285,9 @@ final class Warehouse(
     * mtime term catches a same-name same-size rewrite; md5 keeps
     * collisions out of a correctness gate. */
   def tableVersion(name: TableName): String =
-    readPointer(name).orElse(locationOf(name)).map { loc =>
+    readPointer(name).map { loc =>
       val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = pointerFs(p)
+      val fs = rawFs(p)
       val b = Seq.newBuilder[String]
       if (fs.exists(p)) {
         val it = fs.listFiles(p, true)
@@ -1411,9 +1313,9 @@ final class Warehouse(
     * column (a change anywhere below `day=x/` moves `day=x`'s stamp —
     * coarser, never wrong). */
   def partitionVersions(name: TableName): Map[String, String] =
-    readPointer(name).orElse(locationOf(name)).map { loc =>
+    readPointer(name).map { loc =>
       val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = pointerFs(p)
+      val fs = rawFs(p)
       if (!fs.exists(p)) Map.empty[String, String]
       else {
         def hashOf(entries: Seq[String]): String = {
@@ -1528,7 +1430,6 @@ final class Warehouse(
         // and a stale backup pointer pins a dead build location as
         // live if the relation reverts to a table.
         if (holdsTable(bak)) spark.sql(s"DROP TABLE ${bak.quoted}")
-        else spark.sql(s"DROP VIEW IF EXISTS ${bak.quoted}")
         deletePointer(bak)
         val q = rewriteQuery(rel.design.query, rel.design.dependsOn,
           SchemaPosition.Standard)
@@ -1543,29 +1444,14 @@ final class Warehouse(
           // table later
           deletePointer(std)
         }
-        spark.sql(s"CREATE OR REPLACE VIEW ${std.quoted} AS $q")
-        // a catalog drop, not DROP VIEW: the staging tables this view
-        // reads are already gone, and DROP VIEW resolves the view (to
-        // uncache it) and logs the failed lookup. Nothing caches a
-        // staging view.
-        spark.sessionState.catalog.dropTable(
-          org.apache.spark.sql.catalyst.TableIdentifier(stg.table, Some(stg.schema)),
-          ignoreIfNotExists = true, purge = false)
+        createView(std, q)
+        dropView(stg)   // the staging tables it reads are already gone
       } else {
-        val d = Some(rel.design)
-        // both entries already hold their files' schema: re-pointing
-        // declares it rather than inferring it again (a partitioned
-        // entry declares the design's, inside registerAt)
-        def schemaOf(t: CatalogTable) =
-          Some(t.schema).filter(_ => t.partitionColumnNames.isEmpty)
-        catalogEntry(std).foreach(t =>                        // L2 backup
-          registerAt(bak, t.location.toString, d, schemaOf(t)))
-        catalogEntry(stg) match {
-          case Some(t) =>
-            registerAt(std, t.location.toString, d, schemaOf(t)) // L3 promote
-            spark.sql(s"DROP TABLE IF EXISTS ${stg.quoted}")
-            deletePointer(stg)   // its build now lives behind the standard pointer
-          case None => ()
+        readPointer(std).foreach(registerAt(bak, _))            // L2 backup
+        readPointer(stg).foreach { loc =>
+          registerAt(std, loc)                                  // L3 promote
+          spark.sql(s"DROP TABLE IF EXISTS ${stg.quoted}")
+          deletePointer(stg)   // its build now lives behind the standard pointer
         }
       }
     }
@@ -1576,7 +1462,7 @@ final class Warehouse(
     Dag.orderByDependencies(relations).foreach { rel =>
       if (!rel.isView) {
         val bak = rel.name.inPosition(SchemaPosition.Backup)
-        locationOf(bak).foreach(registerAt(rel.name, _, Some(rel.design)))
+        readPointer(bak).foreach(registerAt(rel.name, _))
       }
     }
 
@@ -1682,7 +1568,7 @@ final class Warehouse(
     }
     val tables = selected.filterNot(_.isView)
     val prior: Seq[(Relation, Option[String])] =
-      tables.map(r => r -> locationOf(r.name))
+      tables.map(r => r -> readPointer(r.name))
     val done = mutable.Buffer[String]()
     try tables.map { rel =>
       val r = buildOneRelation(rel, SchemaPosition.Standard, step = "update")
@@ -1701,7 +1587,7 @@ final class Warehouse(
         done.contains(r.identifier) ||
           (done.size < tables.size && r.identifier == tables(done.size).identifier)
       }.foreach {
-          case (r, Some(loc)) => registerAt(r.name, loc, Some(r.design))
+          case (r, Some(loc)) => registerAt(r.name, loc)
           case (r, None) =>
             spark.sql(s"DROP TABLE IF EXISTS ${r.name.quoted}")
             deletePointer(r.name)
@@ -1724,8 +1610,13 @@ final class Warehouse(
     relations.filter(r => !r.isView && selector.matches(r.name)).flatMap { rel =>
       val target = rel.name.inPosition(pos)
       try {
-        verifyConstraints(spark.table(target.quoted), rel.design,
-          trustEngineIdentity = false)
+        // the engine's own NA row is not data under audit: its key may
+        // equal a real one (a source key 0), as the build's check knows
+        val table = spark.table(target.quoted)
+        val audited =
+          if (!naRowShape(rel.design)) table
+          else table.exceptAll(naRow(rel.design).select(table.columns.map(c => col(s"`$c`")): _*))
+        verifyConstraints(audited, rel.design, trustEngineIdentity = false)
         None
       } catch {
         case e: FailedConstraintError => Some(rel.identifier -> e.getMessage)
@@ -1858,11 +1749,8 @@ final class Warehouse(
     // one snapshot-tree sweep for the whole pass (see allSnapshotPins)
     val pinsByName = allSnapshotPins()
     relations.filterNot(_.isView).foreach { rel =>
-      // Live = session catalog ∪ the persisted pointers manifest: a
-      // standalone `Cli vacuum` runs with an EMPTY in-memory catalog,
-      // and before the manifest existed that resolved zero live
-      // locations — and deleted every build, standard and backup
-      // included. The manifest is the cross-JVM source of truth.
+      // Live = every position's pointer ∪ snapshot pins: the pointers
+      // directory is the one record of what is published.
       val posNames = positions.map(rel.name.inPosition)
       val states = posNames.map(pointerState)
       // Snapshot pins count as live: a pinned build is someone's
@@ -1871,9 +1759,7 @@ final class Warehouse(
       // location could be any build dir about to be deleted.
       val (pins, pinTorn) = pinsByName.getOrElse(
         s"${rel.name.schema}.${rel.name.table}", (Set.empty[String], false))
-      val live: Set[String] = posNames.flatMap(n => locationOf(n).toSeq)
-        .++(states.collect { case PointerLive(loc) => loc })
-        .++(pins)
+      val live: Set[String] = (states.collect { case PointerLive(loc) => loc } ++ pins)
         .map(loc => qualified(new Path(loc)))
         .toSet
       val hasData = posNames.exists { posName =>
@@ -1893,13 +1779,13 @@ final class Warehouse(
             "the snapshot) first")
       } else if (live.isEmpty) {
         // Fail-safe: data on disk but NO resolvable live pointer means
-        // we cannot tell dead builds from live ones (e.g. a pre-manifest
-        // warehouse vacuumed from a fresh JVM). Refuse to guess.
+        // we cannot tell dead builds from live ones (e.g. the pointers
+        // directory was lost). Refuse to guess.
         if (hasData) {
           refused += rel.identifier
           System.err.println(
             s"[vacuum] refusing '${rel.identifier}': build data exists but no " +
-              "live location is resolvable (catalog or pointers manifest); " +
+              "live location is resolvable (no pointer or snapshot pin); " +
               "re-run a load/publish to establish pointers first")
         }
       } else posNames.foreach { posName =>
@@ -1934,11 +1820,48 @@ final class Warehouse(
       }
     VacuumResult(deleted.toSeq, refused.toSeq)
   }
+
+  // last, so every member it uses is initialized
+  openPublished()
 }
 
 object Warehouse {
   /** Hive's directory name for a NULL partition value. */
   val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  /** The file every build directory carries its [[Layout]] in.
+    * `_`-prefixed, so Spark, pyarrow and DuckDB scans skip it. */
+  private[etl] val LayoutRecord = "_layout.json"
+
+  /** What one build directory holds, recorded beside its data: the
+    * Spark schema (field metadata included; partition columns last, as
+    * the catalog keeps them), the partition columns and the bucket
+    * spec — exactly what registering the build declares. */
+  private[etl] final case class Layout(schema: StructType, partitionBy: Seq[String],
+                                       buckets: Option[BucketSpec]) {
+    def json: String = {
+      def strs(xs: Seq[String]) = Json.writeValueAsString(xs.asJava)
+      val b = buckets.map(b => s"""{"count": ${b.numBuckets}, """ +
+        s""""columns": ${strs(b.bucketColumnNames)}, "sort_columns": ${strs(b.sortColumnNames)}}""")
+      s"""{"schema": ${schema.json}, "partition_columns": ${strs(partitionBy)}, """ +
+        s""""buckets": ${b.getOrElse("null")}}"""
+    }
+  }
+
+  private[etl] object Layout {
+    def of(t: CatalogTable): Layout = Layout(t.schema, t.partitionColumnNames, t.bucketSpec)
+
+    def fromJson(text: String): Layout = {
+      val n = Json.readTree(text)
+      def strs(a: com.fasterxml.jackson.databind.JsonNode) = a.elements.asScala.map(_.asText).toSeq
+      Layout(DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
+        strs(n.get("partition_columns")),
+        Option(n.get("buckets")).filterNot(_.isNull).map(b => BucketSpec(
+          b.get("count").asInt, strs(b.get("columns")), strs(b.get("sort_columns")))))
+    }
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** The reference maps load concurrency onto Redshift WLM slots
     * (commands.py: wlm_query_slot_count); the Spark analog is a FAIR

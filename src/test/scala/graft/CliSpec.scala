@@ -71,6 +71,74 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(relative))
   }
 
+  /** The demo design set (`DemoDag`) in the reference layout. */
+  private def demoDesigns(): String = {
+    val root = Files.createTempDirectory("graft_cli_demo_")
+    graft.etl.DemoDag.designYaml.foreach { yaml =>
+      val d = graft.etl.TableDesign.load(yaml)
+      val source = if (d.isSourceTable) d.sourceName else d.name.schema
+      val file = root.resolve(s"schemas/${d.name.schema}/$source-${d.name.table}.yaml")
+      Files.createDirectories(file.getParent)
+      Files.write(file, yaml.getBytes(StandardCharsets.UTF_8))
+    }
+    root.toString
+  }
+
+  /** Loads the demo design set into a new warehouse; returns the load's
+    * options and its reported `rep.sales_by_segment` row count. */
+  private def loadDemo(): (Map[String, String], String) = {
+    val opts = Map("designs" -> demoDesigns(), "data" -> dataDir,
+      "warehouse" -> Files.createTempDirectory("graft_cli_demo_wh_").toString)
+    val (code, out) = captureOut(Cli.run(spark, "load", opts))
+    assert(code == 0, out)
+    (opts, "\\[load\\] rep.sales_by_segment: (\\d+) rows".r.findFirstMatchIn(out).get.group(1))
+  }
+
+  private def pointer(opts: Map[String, String], rel: String): String =
+    new String(Files.readAllBytes(Paths.get(opts("warehouse"), "pointers", rel)),
+      StandardCharsets.UTF_8)
+
+  test("cli: a published warehouse outlives the session that loaded it") {
+    val (opts, rows) = loadDemo()
+    // a later process starts with an empty session catalog
+    spark.stop()
+    spark = Session.build(4)
+    spark.sparkContext.setLogLevel("ERROR")
+    val (q, out) = captureOut(Cli.run(spark, "run_query", opts - "designs" +
+      ("sql" -> "select count(*) from rep.sales_by_segment")))
+    assert(q == 0 && out.linesIterator.toSeq.last.trim == rows, out)
+    val before = pointer(opts, "rep.sales_by_segment")
+    assert(Cli.run(spark, "update", opts + ("select" -> "rep.sales_by_segment")) == 0)
+    assert(pointer(opts, "rep.sales_by_segment") != before)
+    assert(Cli.run(spark, "check_constraints", opts) == 0)
+  }
+
+  test("cli: forked CLI JVMs serve a published warehouse: run_query, update, check_constraints") {
+    def prop(name: String) = sys.props.getOrElse(name,
+      fail(s"no -D$name: run this spec through the build (sbt test)"))
+    val launch = Seq(s"${sys.props("java.home")}/bin/java") ++
+      prop("graft.cds.javaOptions").split('\t') ++ Seq("-cp", prop("graft.cds.classpath"))
+    val (opts, rows) = loadDemo()
+    val cwd = Files.createTempDirectory("graft_cli_fork_")
+    def cli(command: String, extra: (String, String)*): (Int, String) = {
+      val args = (opts ++ extra).toSeq.flatMap { case (k, v) => Seq(s"--$k", v) }
+      val (out, err) = (cwd.resolve(s"$command.out"), cwd.resolve(s"$command.err"))
+      val code = new ProcessBuilder((launch ++ Seq("graft.Cli", command) ++ args): _*)
+        .directory(cwd.toFile).redirectOutput(out.toFile).redirectError(err.toFile)
+        .start().waitFor()
+      val text = new String(Files.readAllBytes(out), StandardCharsets.UTF_8)
+      assert(code == 0, s"$command exited $code: $text\n" +
+        new String(Files.readAllBytes(err), StandardCharsets.UTF_8).takeRight(3000))
+      (code, text)
+    }
+    val (_, out) = cli("run_query", "sql" -> "select count(*) from rep.sales_by_segment")
+    assert(out.linesIterator.toSeq.last.trim == rows, out)
+    val before = pointer(opts, "rep.sales_by_segment")
+    cli("update", "select" -> "rep.sales_by_segment")
+    assert(pointer(opts, "rep.sales_by_segment") != before)
+    cli("check_constraints")
+  }
+
   test("cli snapshot verbs: pin, list, restore, drop; user errors exit 1") {
     val wh = Files.createTempDirectory("graft_cli_snap_").toString
     def run(cmd: String, extra: (String, String)*): Int =

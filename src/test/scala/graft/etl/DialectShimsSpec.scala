@@ -1,6 +1,10 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,20 +88,20 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(native.collect().head.toSeq == reference.collect().head.toSeq)
   }
 
-  test("LISTAGG rewrite produces Spark aggregate syntax") {
-    val in = "SELECT g, LISTAGG(name, ', ') WITHIN GROUP (ORDER BY name) FROM t GROUP BY g"
-    val out = DialectShims.rewriteListagg(in)
-    assert(out.contains("array_join(array_sort(collect_list(name)), ', ')"))
-    assert(!out.toUpperCase.contains("LISTAGG"))
-    // and the rewritten SQL actually runs
-    spark.sql("SELECT 'a' AS g, 'x' AS name UNION ALL SELECT 'a', 'y'")
-      .createOrReplaceTempView("shim_t")
-    val rows = spark.sql(DialectShims.rewriteListagg(
-      "SELECT g, LISTAGG(name, ',') WITHIN GROUP (ORDER BY name) AS l FROM shim_t GROUP BY g"))
-      .collect()
-    assert(rows.head.getString(1) == "x,y")
-    // untouched SQL passes through
-    assert(DialectShims.rewriteListagg("SELECT 1") == "SELECT 1")
+  test("LISTAGG passes through verbatim and Spark answers it natively") {
+    spark.sql("SELECT * FROM VALUES (1, 1, 'c'), (1, 2, 'b'), (1, 3, 'a'), " +
+      "(2, 4, CAST(NULL AS STRING)) AS t(g, id, name)").createOrReplaceTempView("la_t")
+    val shapes = Seq(
+      // ordered by another column than the aggregated one
+      "SELECT LISTAGG(name, ',') WITHIN GROUP (ORDER BY id) FROM la_t WHERE g = 1" -> "c,b,a",
+      "SELECT LISTAGG(name, ',') WITHIN GROUP (ORDER BY name DESC) FROM la_t WHERE g = 1" -> "c,b,a",
+      // a group of NULLs aggregates to NULL, not ''
+      "SELECT LISTAGG(name, ',') WITHIN GROUP (ORDER BY id) FROM la_t WHERE g = 2" -> null)
+    shapes.foreach { case (sql, want) =>
+      val out = DialectShims.rewriteRedshiftSql(sql)
+      assert(out == sql)
+      assert(spark.sql(out).collect().head.getString(0) == want, sql)
+    }
   }
 
   test("DATEADD rewrite: any Redshift unit spelling, args untouched") {
@@ -136,7 +140,7 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = DialectShims.rewriteRedshiftSql(in)
     assert(out.contains("timestampadd(DAY, 1, t)"))
     assert(out.contains("rs_datediff_second( a, b)"))
-    assert(out.contains("array_join"))
+    assert(out.contains("LISTAGG(x, '|') WITHIN GROUP (ORDER BY x)"))
   }
 
   test("RATIO_TO_REPORT rewrites to the explicit x/SUM-over-window form") {
@@ -348,6 +352,26 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an identifier containing the word is not a keyword
     assert(DialectShims.rewriteQualify("SELECT disqualify FROM t")
       == "SELECT disqualify FROM t")
+  }
+
+  test("QUALIFY keeps line comments in its select list, FROM clause and predicate") {
+    // the rewrite trimmed each piece, which dropped the line break
+    // ending a `--` comment (and the NUL closing its mask placeholder):
+    // the comment then swallowed the rest of the rewritten query
+    spark.sql("SELECT * FROM VALUES (1, 1), (1, 2), (1, 3), (2, 4) AS t(g, id)")
+      .createOrReplaceTempView("qc_t")
+    val plain = "SELECT g, id FROM qc_t " +
+      "QUALIFY row_number() OVER (PARTITION BY g ORDER BY id) <= 2"
+    val commented = "SELECT g, id -- the key\nFROM qc_t -- source\n" +
+      "QUALIFY row_number() OVER (PARTITION BY g ORDER BY id) <= 2 -- top two\n"
+    val out = DialectShims.rewriteRedshiftSql(commented)
+    assert(!out.contains('\u0000'), out)
+    Seq("-- the key\n", "-- source\n", "-- top two\n").foreach(c => assert(out.contains(c), out))
+    assert(DialectShims.rewriteRedshiftSql(out) == out)
+    def rows(sql: String) = spark.sql(DialectShims.rewriteRedshiftSql(sql)).collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+    assert(rows(commented) == rows(plain))
+    assert(rows(plain) == Seq((1, 1), (1, 2), (2, 4)))
   }
 
   test("JSON_EXTRACT_PATH_TEXT / ARRAY_ELEMENT_TEXT translate to get_json_object") {
@@ -928,5 +952,121 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // NUL-free SQL still passes through the same entry point
     assert(DialectShims.rewriteRedshiftSql("SELECT 'ab' AS s FROM t")
       .contains("'ab'"))
+  }
+
+  // ------------------------------------------------------- properties
+  // The corpus: every SQL string literal in this spec, plus the
+  // Redshift-dialect oracle entries q21, q22, q24 and q25.
+  private def source(path: String): String =
+    new String(Files.readAllBytes(Paths.get(path)), UTF_8)
+
+  private val TripleQuoted = "(?s)\"\"\"(.*?)\"\"\"".r
+
+  private def margin(raw: String): String =
+    if (raw.contains("\n") && raw.linesIterator.drop(1).forall(_.trim.startsWith("|")))
+      raw.stripMargin
+    else raw
+
+  private lazy val corpus: Seq[String] = {
+    val spec = source("src/test/scala/graft/etl/DialectShimsSpec.scala")
+    val triple = TripleQuoted.findAllMatchIn(spec).map(m => margin(m.group(1))).toSeq
+    val plain = "\"((?:[^\"\\\\\n]|\\\\.)*)\"".r
+      .findAllMatchIn(TripleQuoted.replaceAllIn(spec, "")).flatMap(m =>
+        scala.util.Try(StringContext.processEscapes(m.group(1))).toOption).toSeq
+    val surface = source("src/main/scala/graft/queries/SqlSurface.scala")
+    val dialect = Seq("q21RedshiftDialect", "q22SimilarTo", "q24AnalyticDialect",
+      "q25TimeDialect").map { q =>
+      margin(TripleQuoted.findFirstMatchIn(
+        surface.substring(surface.indexOf(s"def $q("))).get.group(1))
+    }
+    (triple ++ plain ++ dialect).distinct
+      .filter(sql => "(?is)\\s*(select|with)\\b.*".r.matches(sql) && !sql.contains('\u0000'))
+  }
+
+  /** The corpus entries the rewriter accepts: the rest are refused
+    * with an IllegalArgumentException on purpose (TOP in a set
+    * operation, for one). */
+  private lazy val accepted: Seq[String] =
+    corpus.filter(sql => scala.util.Try(DialectShims.rewriteRedshiftSql(sql)).isSuccess)
+
+  /** Offsets of the whitespace characters outside literals, quoted
+    * identifiers and comments: the boundaries a piece may go in at. */
+  private def codeSpaces(sql: String): IndexedSeq[Int] = {
+    val out = IndexedSeq.newBuilder[Int]
+    var i = 0
+    while (i < sql.length) sql.charAt(i) match {
+      case q @ ('\'' | '"') =>
+        i += 1
+        while (i < sql.length && !(sql.charAt(i) == q &&
+            !(i + 1 < sql.length && sql.charAt(i + 1) == q)))
+          i += (if (sql.charAt(i) == q) 2 else 1)
+        i += 1
+      case '-' if sql.startsWith("--", i) =>
+        i = Some(sql.indexOf('\n', i)).filter(_ >= 0).getOrElse(sql.length)
+      case '/' if sql.startsWith("/*", i) =>
+        i = Some(sql.indexOf("*/", i + 2)).filter(_ >= 0).map(_ + 2).getOrElse(sql.length)
+      case c =>
+        if (c.isWhitespace) out += i
+        i += 1
+    }
+    out.result()
+  }
+
+  private val wordGen: Gen[String] = Gen.oneOf("DATEADD(day, 1, x)", "GETDATE()",
+    "SYSDATE", "SELECT TOP 5 a", "QUALIFY", "s.doc[0].k", "SIMILAR TO 'a%'",
+    "LISTAGG(a, ',') WITHIN GROUP (ORDER BY b)", "TO_CHAR(ts, 'YYYY')", "%", "_",
+    "$1", "\\", "é", "x", "1", "(", ")", ",")
+
+  /** A string literal, `--` comment or block comment holding
+    * dialect-looking text. */
+  private val pieceGen: Gen[String] = for {
+    words <- Gen.listOf(wordGen).map(_.mkString(" "))
+    kind <- Gen.oneOf("literal", "line", "block")
+  } yield kind match {
+    case "literal" => s"'${words.replace("'", "''")}'"
+    case "line" => s"-- $words\n"
+    case _ => s"/* $words */"
+  }
+
+  /** A corpus entry with a piece inserted at one of its boundaries. A
+    * literal does not go right after `SIMILAR TO` or `ESCAPE`: there it
+    * becomes the pattern operand, which the rewriter owns. */
+  private lazy val insertedGen: Gen[(String, String)] = for {
+    sql <- Gen.oneOf(accepted)
+    piece <- pieceGen
+    operandSlot = (at: Int) => piece.startsWith("'") &&
+      "(?is).*\\b(similar\\s+to|escape)\\s*".r.matches(sql.substring(0, at))
+    at <- Gen.oneOf(codeSpaces(sql).filterNot(operandSlot) :+ sql.length)
+  } yield (sql.substring(0, at) + " " + piece + sql.substring(at), piece)
+
+  private def checkProp(p: Prop): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), p)
+    assert(res.passed, s"property failed: ${res.status}")
+  }
+
+  /** The rewrite of `sql`, or None where the rewriter refuses it
+    * loudly; any other exception fails the property. */
+  private def rewritten(sql: String): Option[String] =
+    try Some(DialectShims.rewriteRedshiftSql(sql))
+    catch { case _: IllegalArgumentException => None }
+
+  test("property: rewriteRedshiftSql is idempotent") {
+    assert(corpus.size > 100, corpus.size)
+    assert(accepted.size > corpus.size * 9 / 10, corpus.diff(accepted))
+    assert(corpus.exists(_.contains("SIMILAR TO 'Customer#0000000[0-9][0-9]'")))
+    assert(corpus.exists(_.contains("RATIO_TO_REPORT(n_items) OVER")))
+    accepted.foreach { sql =>
+      val once = DialectShims.rewriteRedshiftSql(sql)
+      assert(DialectShims.rewriteRedshiftSql(once) == once, sql)
+    }
+    checkProp(Prop.forAllNoShrink(insertedGen) { case (sql, _) =>
+      Prop(rewritten(sql).forall(once => rewritten(once).contains(once))) :| sql
+    })
+  }
+
+  test("property: an inserted literal or comment comes out verbatim") {
+    checkProp(Prop.forAllNoShrink(insertedGen) { case (sql, piece) =>
+      Prop(rewritten(sql).forall(_.contains(piece))) :| sql
+    })
   }
 }

@@ -370,6 +370,109 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.count() == 25)
   }
 
+  test("a rollback serves the old build's recorded layout, with no Spark job") {
+    val s = spark
+    import s.implicits._
+    val wh = freshWarehouse()
+    val t = TableName.parse("rep.grown")
+    def design(extra: String) = TableDesign.load(
+      s"""name: rep.grown
+         |source_name: CTAS
+         |columns:
+         |  - name: k
+         |    type: int
+         |  - name: v
+         |    type: string
+         |$extra
+         |query: SELECT 1
+         |""".stripMargin)
+    def layout() = {
+      val m = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t.table, Some(t.schema)))
+      (m.schema, m.partitionColumnNames, m.bucketSpec)
+    }
+    wh.writeTable(t, Seq((1, "a"), (2, "b")).toDF("k", "v"), Some(design("")))
+    val v1 = layout()
+    wh.createSnapshot("v1", Seq(t))
+    // the design gains a column and a distribution key; then, instead,
+    // the column and a partition column (the two do not combine)
+    Seq("attributes:\n  distribution: [k]", "attributes:\n  partition_by: [p]").foreach { attrs =>
+      wh.writeTable(t, Seq((1, "a", 7), (2, "b", 8), (3, "c", 9)).toDF("k", "v", "p"),
+        Some(design(s"  - name: p\n    type: int\n$attrs")))
+      assert(layout() != v1)
+      val profile = Telemetry.scoped(spark) { scope =>
+        wh.restoreSnapshot("v1", t)
+        scope.profile()
+      }
+      assert(profile.map(_.jobs).contains(0), s"rollback ran Spark jobs: $profile")
+      assert(layout() == v1)
+      assert(spark.table(t.quoted).orderBy("k").as[(Int, String)].collect().toSeq ==
+        Seq((1, "a"), (2, "b")))
+    }
+  }
+
+  test("opening a warehouse serves its pointers and views; what it cannot serve is named") {
+    val dir = Files.createTempDirectory("graft_open_").toString
+    val view = rel(
+      """name: rep.v_top
+        |source_name: VIEW
+        |depends_on: [rep.top_nations]
+        |columns:
+        |  - name: n_name
+        |query: SELECT n_name FROM rep.top_nations
+        |""".stripMargin)
+    val rels = Seq(srcNation, ctasTop("SELECT n_name FROM src.nation WHERE n_nationkey < 5"), view)
+    new Warehouse(spark, dir, sfDir).loadWithStagingAndPublish(rels)
+    assert(new java.io.File(s"$dir/views/rep.v_top.sql").exists())
+    assert(!new java.io.File(s"$dir/views/etl_staging__rep.v_top.sql").exists(),
+      "publish drops the staging view and its recorded query")
+    // a later process: nothing in the session catalog
+    Seq("`rep`.`v_top`").foreach(v => spark.sql(s"DROP VIEW $v"))
+    Seq("`src`.`nation`", "`rep`.`top_nations`").foreach(t => spark.sql(s"DROP TABLE $t"))
+    val wh = new Warehouse(spark, dir, sfDir)
+    assert(spark.table("`rep`.`v_top`").count() == 5)
+    assert(spark.table("`src`.`nation`").count() == 25)
+    // a torn pointer and a build without a layout record are skipped at
+    // open, each with a line naming it; vacuum still refuses the torn one
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/pointers/src.nation"),
+      Array.emptyByteArray)
+    val top = TableName.parse("rep.top_nations")
+    val topLoc = wh.readPointer(top).get
+    assert(new java.io.File(new org.apache.hadoop.fs.Path(topLoc).toUri.getPath,
+      "_layout.json").delete())
+    Seq("`src`.`nation`", "`rep`.`top_nations`").foreach(t => spark.sql(s"DROP TABLE $t"))
+    val err = new java.io.ByteArrayOutputStream()
+    val realErr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val reopened = try new Warehouse(spark, dir, sfDir) finally System.setErr(realErr)
+    val lines = err.toString("UTF-8")
+    assert(lines.contains("not serving src.nation") && lines.contains("torn"), lines)
+    assert(lines.contains("not serving rep.top_nations") && lines.contains(topLoc) &&
+      lines.contains("rebuild"), lines)
+    assert(!spark.catalog.tableExists("`rep`.`top_nations`"))
+    assert(reopened.vacuum(rels).refused == Seq("src.nation"))
+    // re-pointing at a build without a record is refused, not guessed at
+    reopened.createSnapshot("no-record", Seq(top))
+    val e = intercept[IllegalStateException](reopened.restoreSnapshot("no-record", top))
+    assert(e.getMessage.contains("rebuild") && e.getMessage.contains(topLoc), e.getMessage)
+  }
+
+  test("only Warehouse names the pointers, views and layout-record paths") {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get("src/main"))
+    val sources =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.exists(_.getFileName.toString == "Warehouse.scala"))
+    val offenders = for {
+      p <- sources if p.getFileName.toString != "Warehouse.scala"
+      text = new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+      token <- Seq("pointers/", "/pointers", "views/", "/views", "_layout", "LayoutRecord")
+      if text.contains(token)
+    } yield s"${p.getFileName}: $token"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("restore from backup brings back the pre-publish table") {
     val wh = freshWarehouse()
     val v1 = Seq(srcNation, ctasTop("SELECT n_name FROM src.nation WHERE n_nationkey < 5"))
@@ -1728,11 +1831,12 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wh = freshWarehouse()
     val t = TableName.parse("dedup.pointer_only")
     wh.writeTable(t, Seq((1L, "a")).toDF("id", "v"))
-    // simulate a fresh JVM: the in-memory catalog entry is gone, the
-    // pointers manifest still resolves the live location — the
-    // documented re-run-cron / restarted-stream case
+    // a fresh JVM: the in-memory catalog entry is gone, the pointers
+    // directory still resolves the live location — the documented
+    // re-run-cron / restarted-stream case
     spark.sql(s"DROP TABLE ${t.quoted}")
-    assert(wh.appendToTableIdempotent(t, Seq((2L, "b")).toDF("id", "v"), "cron-d1"),
+    val fresh = new Warehouse(spark, wh.warehouseDir, sfDir)
+    assert(fresh.appendToTableIdempotent(t, Seq((2L, "b")).toDF("id", "v"), "cron-d1"),
       "append must work via the pointer fallback without a catalog entry")
     // the data landed at the pointed location
     val loc = wh.readPointer(t).get
@@ -1763,7 +1867,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       Some(pDesign))
     spark.sql(s"DROP TABLE ${pt.quoted}")
     val pe = intercept[IllegalStateException] {
-      wh.appendToTableIdempotent(pt,
+      new Warehouse(spark, wh.warehouseDir, sfDir).appendToTableIdempotent(pt,
         Seq((3L, "d3")).toDF("id", "day"), "cron-p1")
     }
     assert(pe.getMessage.contains("partition"), pe.getMessage)
@@ -1785,7 +1889,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     wh.writeTable(bt, Seq((1L, "a")).toDF("id", "v"), Some(bDesign))
     spark.sql(s"DROP TABLE ${bt.quoted}")
     val be = intercept[IllegalStateException] {
-      wh.appendToTableIdempotent(bt, Seq((2L, "b")).toDF("id", "v"), "cron-b1")
+      new Warehouse(spark, wh.warehouseDir, sfDir).appendToTableIdempotent(bt, Seq((2L, "b")).toDF("id", "v"), "cron-b1")
     }
     assert(be.getMessage.contains("bucket"), be.getMessage)
   }
@@ -1880,6 +1984,28 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val findings = wh.checkConstraints(Seq(drifted, auditDesign), TableSelector.all)
     assert(findings.map(_._1) == Seq("rep.dup_audit"), s"got $findings")
     assert(findings.head._2.contains("primary_key"))
+  }
+
+  test("standalone check_constraints does not count the engine's NA row against a real key 0") {
+    val wh = freshWarehouse()
+    // nation keys run 0..24, and the NA row of a dim_* table keys 0 too
+    val dim = rel(
+      """name: rep.dim_nat
+        |source_name: CTAS
+        |depends_on: [src.nation]
+        |columns:
+        |  - name: k
+        |    type: long
+        |    not_null: true
+        |  - name: n_name
+        |    type: string
+        |constraints:
+        |  - primary_key: [k]
+        |query: SELECT CAST(n_nationkey AS BIGINT) AS k, n_name FROM src.nation
+        |""".stripMargin)
+    wh.loadWithStagingAndPublish(Seq(srcNation, dim))
+    assert(spark.table("`rep`.`dim_nat`").filter("k = 0").count() == 2)
+    assert(wh.checkConstraints(Seq(srcNation, dim), TableSelector.all).isEmpty)
   }
 
   test("identity keys do not depend on input order when sort keys tie") {
