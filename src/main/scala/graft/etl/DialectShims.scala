@@ -1,37 +1,53 @@
 package graft.etl
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
 
-/** Redshift-dialect compatibility shims (SURVEY §7.2): transform SQL
-  * written for the reference warehouse uses a handful of functions
-  * Spark names differently. Text passes here rename them, and the
-  * function-shaped ones resolve to native builders in
-  * [[GraftExtensions]], so existing `.sql` files run unmodified; each
-  * maps to a codegen'd built-in (no UDF in the hot path).
+/** Redshift-dialect compatibility shims (SURVEY §7.2), so transform
+  * SQL written for the reference warehouse runs unmodified. Function-
+  * shaped Redshift names resolve as native builders ([[functions]],
+  * installed by [[GraftExtensions]]); text passes over masked SQL
+  * ([[rewriteRedshiftSql]]) remain only for syntax Spark's parser
+  * rejects, or where a keyword unit or a Spark type check stands in
+  * the way. Everything maps to codegen'd built-ins (no UDF). A shape a
+  * builder does not translate is refused at analysis with an
+  * IllegalArgumentException naming the call.
   *
-  * | Redshift | Spark mapping |
-  * |---|---|
-  * | GETDATE() | current_timestamp() ([[GraftExtensions]]) |
-  * | DATEADD(unit, n, ts) | ts + make_interval/n unit |
-  * | DATEDIFF(unit, a, b) | timestampdiff(unit, a, b) |
-  * | NVL(a, b) | coalesce — already a Spark builtin |
-  * | f_sha256(s) | sha2(s, 256) ([[GraftExtensions]]) |
-  * | SYSDATE | current_timestamp() |
-  * | CONVERT_TIMEZONE([src,] tgt, ts) | from_utc_timestamp/to_utc_timestamp |
-  * | TO_CHAR(ts, 'fmt') | per-token date_format concat |
+  * | Redshift | Kind | Spark mapping |
+  * |---|---|---|
+  * | TO_CHAR, TO_DATE, TO_TIMESTAMP, CONVERT_TIMEZONE, TRUNC, JSON_ARRAY_LENGTH, REGEXP_SUBSTR/COUNT/INSTR/REPLACE | builder as `rs_<name>`, plus a text rename of the call | per-token date_format, to_date/to_timestamp patterns, from_utc/to_utc_timestamp, date_trunc, regexp built-ins |
+  * | JSON_EXTRACT_PATH_TEXT, JSON_EXTRACT_ARRAY_ELEMENT_TEXT, IS_VALID_JSON(_ARRAY), CAN_JSON_PARSE, JSON_PARSE, JSON_SERIALIZE, SPLIT_TO_ARRAY, GET_ARRAY_LENGTH, SUBARRAY, CHARINDEX, STRTOL | builder | get_json_object / from_json / split / slice, instr, conv |
+  * | GETDATE(), f_sha256(s) | builder ([[GraftExtensions]]) | current_timestamp(), sha2(s, 256) |
+  * | DATEADD(unit, n, ts) | text (keyword unit) | timestampadd(UNIT, n, ts) |
+  * | DATEDIFF(unit, a, b) | text (keyword unit) + builder | rs_datediff_<unit>(a, b) |
+  * | SYSDATE | text (parenless) | current_timestamp() |
+  * | SIMILAR TO, QUALIFY, SELECT TOP n, APPROXIMATE COUNT(DISTINCT), RATIO_TO_REPORT | text (syntax) | RLIKE, filtered subquery, LIMIT, approx_count_distinct, x / SUM(x) OVER |
+  * | SUPER/PartiQL paths, UNNEST, comma iteration, UNPIVOT, `[*]` | text (syntax, or a path over a string column) | get_json_object, LATERAL VIEW explode(from_json), exists |
+  * | NVL, LEN, LISTAGG ... WITHIN GROUP | Spark built-ins (ordering and NULL semantics included) | — |
   */
 object DialectShims {
 
-  /** Installs nothing: every function-shaped shim (`dateadd_days`,
-    * `datediff_days`, `rs_datediff_<unit>`, `charindex`, `strtol`) is
-    * a native builder in [[GraftExtensions.functions]], so session
-    * start runs no SQL. Kept for callers that re-arm a session built
-    * from a reported conf. */
+  /** Installs nothing: every function-shaped shim is a native builder
+    * that [[GraftExtensions]] installs, so session start runs no SQL.
+    * Kept for callers that re-arm a session built from a reported
+    * conf. */
   def registerAll(spark: SparkSession): Unit = ()
 
-  // LEN (Redshift's LENGTH alias) needs no shim: Spark 4 ships it as a
-  // built-in alias of length, and it runs `LISTAGG(x, sep) WITHIN GROUP
-  // (ORDER BY ...)` natively, ordering and NULL semantics included.
+  private val MaskedComment = "--\\x00\\d+\\x00|/\\*\\x00\\d+\\x00\\*/"
+
+  /** Where the passes' patterns allow whitespace (masked text), a
+    * comment is whitespace too: a comment never changes what a pass
+    * accepts. */
+  private val Gap = s"(?:\\s|$MaskedComment)"
+
+  /** The masked comments in `s`, for a pass to re-emit when it drops
+    * the text around them (a `--` comment keeps its line break). */
+  private def commentsIn(s: String): String =
+    MaskedComment.r.findAllIn(s).map(c => if (c.startsWith("--")) s" $c\n" else s" $c").mkString
 
   // ------------------------------------------------- DATEADD/DATEDIFF
   /** Redshift's unit spellings → the canonical unit. */
@@ -61,7 +77,7 @@ object DialectShims {
 
   // ------------------------------------------------ RATIO_TO_REPORT
   private val RatioToReportRe =
-    raw"(?i)\bRATIO_TO_REPORT\s*\(\s*([^,()]+?)\s*\)\s*OVER\s*\(([^()]*)\)".r
+    s"(?i)\\bRATIO_TO_REPORT$Gap*\\($Gap*([^,()]+?)$Gap*\\)$Gap*OVER$Gap*\\(([^()]*)\\)".r
 
   /** Redshift's `RATIO_TO_REPORT(x) OVER (w)` → the explicit
     * `CAST(x AS DOUBLE) / SUM(x) OVER (w)` (neither Spark nor DuckDB
@@ -74,11 +90,12 @@ object DialectShims {
     RatioToReportRe.replaceAllIn(sql, m =>
       java.util.regex.Matcher.quoteReplacement(
         s"(CAST(${m.group(1).trim} AS DOUBLE) / " +
-          s"SUM(${m.group(1).trim}) OVER (${m.group(2)}))"))
+          s"SUM(${m.group(1).trim}) OVER (${m.group(2)}))" +
+          commentsIn(sql.substring(m.start, m.start(2)))))
 
   // ------------------------------------- APPROXIMATE COUNT (DISTINCT)
   private val ApproxCountRe =
-    raw"(?i)\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\b".r
+    s"(?i)\\bAPPROXIMATE$Gap+COUNT$Gap*\\($Gap*DISTINCT\\b".r
 
   /** Redshift's `APPROXIMATE COUNT(DISTINCT x)` (HLL under the hood)
     * → Spark's `approx_count_distinct(x` — the same sketch family,
@@ -89,10 +106,10 @@ object DialectShims {
     * this shim is spec-gated (DialectShimsSpec pins a 2%-of-exact
     * bound), not oracle-hashed. */
   def rewriteApproxCount(sql: String): String =
-    ApproxCountRe.replaceAllIn(sql, _ => "approx_count_distinct(")
+    ApproxCountRe.replaceAllIn(sql, m => "approx_count_distinct(" + commentsIn(m.matched))
 
-  private val DateAddRe = raw"(?i)\bDATEADD\s*\(\s*(\w+)\s*,".r
-  private val DateDiffRe = raw"(?i)\bDATEDIFF\s*\(\s*(\w+)\s*,".r
+  private val DateAddRe = s"(?i)\\bDATEADD$Gap*\\($Gap*(\\w+)$Gap*,".r
+  private val DateDiffRe = s"(?i)\\bDATEDIFF$Gap*\\($Gap*(\\w+)$Gap*,".r
 
   /** `DATEADD(unit, n, ts)` → `timestampadd(UNIT, n, ts)`: only the
     * function name and unit token are rewritten — the argument
@@ -101,7 +118,7 @@ object DialectShims {
   def rewriteDateAdd(sql: String): String =
     DateAddRe.replaceAllIn(sql, m =>
       UnitAliases.get(m.group(1).toLowerCase) match {
-        case Some(u) => s"timestampadd(${u.toUpperCase},"
+        case Some(u) => s"timestampadd(${u.toUpperCase}," + commentsIn(m.matched)
         case None => java.util.regex.Matcher.quoteReplacement(m.matched)
       })
 
@@ -112,7 +129,7 @@ object DialectShims {
   def rewriteDateDiff(sql: String): String =
     DateDiffRe.replaceAllIn(sql, m =>
       UnitAliases.get(m.group(1).toLowerCase) match {
-        case Some(u) => s"rs_datediff_$u("
+        case Some(u) => s"rs_datediff_$u(" + commentsIn(m.matched)
         case None => java.util.regex.Matcher.quoteReplacement(m.matched)
       })
 
@@ -154,96 +171,6 @@ object DialectShims {
     sb.append(")$").toString
   }
 
-  // ---------------------------- CONVERT_TIMEZONE / TO_CHAR / SYSDATE
-  /** Rewrite every `name(...)` call in MASKED text via `f(args)`,
-    * where `args` are the call's top-level comma-split argument texts
-    * (string literals are masked to placeholders, so paren balancing
-    * and comma splitting see only real syntax). Arguments are
-    * rewritten recursively FIRST, so nested calls compose inside-out.
-    * `f` returning None keeps the call itself untranslated but emits
-    * the rewritten arguments, so a translatable nested call inside an
-    * unsupported outer shape still translates (the C5 dry-run
-    * surfaces the unsupported outer call, the shim never corrupts
-    * it). */
-  private[etl] def rewriteCalls(sql: String, name: String)(
-      f: Seq[String] => Option[String]): String = {
-    val lower = sql.toLowerCase
-    val nm = name.toLowerCase
-    val sb = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val at = lower.indexOf(nm, i)
-      if (at < 0) { sb.append(sql.substring(i)); i = sql.length }
-      else {
-        val beforeOk = at == 0 || {
-          val c = sql.charAt(at - 1)
-          !Character.isLetterOrDigit(c) && c != '_' && c != '.'
-        }
-        var j = at + nm.length
-        while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-        val afterIdent = at + nm.length < sql.length && {
-          val c = sql.charAt(at + nm.length)
-          Character.isLetterOrDigit(c) || c == '_'
-        }
-        if (!beforeOk || afterIdent || j >= sql.length || sql.charAt(j) != '(') {
-          sb.append(sql.substring(i, at + nm.length)); i = at + nm.length
-        } else {
-          var depth = 1
-          var k = j + 1
-          var start = k
-          val args = scala.collection.mutable.ArrayBuffer[String]()
-          while (k < sql.length && depth > 0) {
-            sql.charAt(k) match {
-              case '(' => depth += 1
-              case ')' =>
-                depth -= 1
-                if (depth == 0) args += sql.substring(start, k)
-              case ',' if depth == 1 =>
-                args += sql.substring(start, k); start = k + 1
-              case _ =>
-            }
-            k += 1
-          }
-          if (depth != 0) {
-            sb.append(sql.substring(i, at + nm.length)); i = at + nm.length
-          } else {
-            val inner = args.map(a => rewriteCalls(a, name)(f).trim).toSeq
-            f(inner) match {
-              case Some(rep) => sb.append(sql.substring(i, at)).append(rep)
-              case None =>
-                // keep the unsupported OUTER call but emit the
-                // recursively REWRITTEN argument texts — re-emitting
-                // the raw substring would discard translations of
-                // nested same-name calls inside the arguments
-                sb.append(sql.substring(i, at))
-                  .append(sql.substring(at, at + nm.length))
-                  .append('(').append(inner.mkString(", ")).append(')')
-            }
-            i = k
-          }
-        }
-      }
-    }
-    sb.toString
-  }
-
-  /** Redshift `CONVERT_TIMEZONE(['src',] 'tgt', ts)` → Spark's
-    * from_utc/to_utc composition. The TWO-argument form's source zone
-    * is UTC BY DEFINITION in Redshift (not the session zone, which is
-    * what Spark's own 2-arg convert_timezone would use) — hence the
-    * explicit `from_utc_timestamp`. Three-argument form pivots
-    * through UTC: `to_utc_timestamp(ts, src)` then out to `tgt`.
-    * Zone expressions pass through untouched (named zones, fixed
-    * offsets, column refs all work — they reach codegen'd
-    * built-ins). */
-  def rewriteConvertTimezone(sql: String): String =
-    rewriteCalls(sql, "convert_timezone") {
-      case Seq(tgt, ts) => Some(s"from_utc_timestamp($ts, $tgt)")
-      case Seq(src, tgt, ts) =>
-        Some(s"from_utc_timestamp(to_utc_timestamp($ts, $src), $tgt)")
-      case _ => None
-    }
-
   /** Redshift `SYSDATE` (parenless, start-of-statement timestamp) →
     * `current_timestamp()` (Spark evaluates it once per query — the
     * same stability contract). Masked text, so a literal containing
@@ -253,7 +180,7 @@ object DialectShims {
     SysdateRe.replaceAllIn(sql, "current_timestamp()")
 
   private val SysdateRe =
-    raw"(?i)(?<![\w.])SYSDATE\b(?!\s*\()".r
+    s"(?i)(?<![\\w.])SYSDATE\\b(?!$Gap*\\()".r
 
   /** PG/Redshift TO_CHAR datetime format tokens → Spark datetime
     * pattern pieces. Name tokens are CASE-SENSITIVE triples (PG's
@@ -274,27 +201,22 @@ object DialectShims {
     ("MI", "mm", "m"), ("MS", "SSS", "SSS"), ("SS", "ss", "s"),
     ("DD", "dd", "d"), ("HH", "hh", "h"), ("Q", "Q", "Q"))
 
-  /** Translate one TO_CHAR datetime format into a Spark SQL
-    * expression over `ts` — a concat of per-token `date_format`
-    * pieces (each name token individually upper/lower-wrapped, so
-    * mixed-case formats like `'Dy DD MON YYYY'` come out right,
-    * which a single wrapped date_format cannot do) and quoted
-    * literal runs. PG fidelity: `Month`/`Day` blank-pad to 9 chars
-    * (the longest English name) and numeric tokens zero-pad; the
-    * `FM` prefix suppresses padding for the NEXT token only (PG
-    * semantics — Oracle's sticky FM differs). Returns None for
-    * number-mode characters (9/0/$ — TO_CHAR's numeric formatting,
-    * out of scope). */
-  private[etl] def toCharExpr(ts: String, format: String,
-      saved: scala.collection.mutable.ArrayBuffer[String]): Option[String] = {
+  /** Translate one TO_CHAR datetime format into a Spark SQL template
+    * over `__0` — a concat of per-token `date_format` pieces (each
+    * name token individually upper/lower-wrapped, so mixed-case
+    * formats like `'Dy DD MON YYYY'` come out right, which a single
+    * wrapped date_format cannot do) and quoted literal runs. PG
+    * fidelity: `Month`/`Day` blank-pad to 9 chars (the longest
+    * English name) and numeric tokens zero-pad; the `FM` prefix
+    * suppresses padding for the NEXT token only (PG semantics —
+    * Oracle's sticky FM differs). Returns None for number-mode
+    * characters (9/0/$ — [[toCharNumExpr]]'s formats). */
+  private[etl] def toCharExpr(format: String): Option[String] = {
     if (format.exists(c => "90$".indexOf(c.toInt) >= 0)) return None
     val pieces = scala.collection.mutable.ArrayBuffer[String]()
     val lit = new StringBuilder
     def flushLit(): Unit = if (lit.nonEmpty) {
-      // literal runs can contain commas/parens — placeholder them so
-      // later passes' call parsing never sees them raw
-      pieces += maskLit(saved,
-        lit.toString.replace("\\", "\\\\").replace("'", "\\'"))
+      pieces += "'" + lit.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
       lit.clear()
     }
     var fm = false
@@ -306,7 +228,7 @@ object DialectShims {
       } else ToCharNameTokens.find { case (t, _, _) => rest.startsWith(t) } match {
         case Some((t, pat, wrap)) =>
           flushLit()
-          var e = s"date_format($ts, '$pat')"
+          var e = s"date_format(__0, '$pat')"
           // Month/Day blank-pad to the longest English name (9)
           if (!fm && (pat == "MMMM" || pat == "EEEE")) e = s"rpad($e, 9, ' ')"
           pieces += (wrap match {
@@ -322,7 +244,7 @@ object DialectShims {
           } match {
             case Some((t, padded, unpadded)) =>
               flushLit()
-              pieces += s"date_format($ts, '${if (fm) unpadded else padded}')"
+              pieces += s"date_format(__0, '${if (fm) unpadded else padded}')"
               fm = false
               i += t.length
             case None =>
@@ -403,7 +325,7 @@ object DialectShims {
         case ')' =>
           if (depth == 0) predEnd = k else { depth -= 1; k += 1 }
         case _ =>
-          if (depth == 0 && (lower.regionMatches(k, "order by", 0, 8) ||
+          if (depth == 0 && (OrderByRe.matcher(lower).region(k, lower.length).lookingAt() ||
               lower.regionMatches(k, "limit", 0, 5)))
             predEnd = k
           else k += 1
@@ -439,6 +361,8 @@ object DialectShims {
     rewriteQualify(rewritten)   // handle remaining (outer) QUALIFYs
   }
 
+  private val OrderByRe = java.util.regex.Pattern.compile(s"order$Gap+by\\b")
+
   /** `s` with a line break after it when it ends in a `--` comment:
     * text spliced in after `s` would otherwise become comment text. */
   private def keepLineEnd(s: String): String =
@@ -448,7 +372,7 @@ object DialectShims {
     * numeric tokens whose Java pattern both formats AND parses the
     * same digits. Name tokens (MON/Day/AM) parse case-sensitively in
     * Java but case-insensitively in PG — translating them would
-    * accept different inputs, so they are left for the C5 dry-run. */
+    * accept different inputs, so such a format is refused. */
   private val ParseTokens: Seq[(String, String)] = Seq(
     ("HH24", "HH"), ("HH12", "hh"), ("YYYY", "yyyy"), ("YY", "yy"),
     ("MM", "MM"), ("MI", "mm"), ("MS", "SSS"), ("SS", "ss"),
@@ -458,7 +382,7 @@ object DialectShims {
     * argument) into a Java datetime parse pattern. Tokens match
     * case-insensitively (PG parse formats are case-blind); any
     * letter/digit outside a known token — including name tokens —
-    * aborts (None → the call is left untranslated). Punctuation
+    * aborts (None → the call is refused). Punctuation
     * separators pass through verbatim. */
   private[etl] def toParsePattern(format: String): Option[String] = {
     val sb = new StringBuilder
@@ -478,307 +402,6 @@ object DialectShims {
     Some(sb.toString)
   }
 
-  /** `TO_DATE(e, 'fmt')` / `TO_TIMESTAMP(e, 'fmt')` → Spark's
-    * two-argument `to_date`/`to_timestamp` with the parse pattern
-    * translated token-for-token — the INVERSE of the TO_CHAR shim
-    * (Redshift SQL full of `TO_DATE(s, 'MM/DD/YYYY')` is the very
-    * next thing a migrating warehouse hits after TO_CHAR,
-    * relation.py:279-293 ships such transforms verbatim). Literal
-    * formats only; other arities and untranslatable formats are left
-    * for the C5 dry-run. */
-  private def rewriteParseFn(sql: String, saved: scala.collection.mutable.ArrayBuffer[String],
-                             name: String): String =
-    rewriteCalls(sql, name) {
-      case Seq(e, MaskedLiteral(idx)) =>
-        toParsePattern(saved(idx.toInt).replace("''", "'"))
-          .map(p => s"$name($e, ${maskLit(saved, p)})")
-      case _ => None
-    }
-
-  /** Redshift's JSON accessors → `get_json_object` paths:
-    * `JSON_EXTRACT_PATH_TEXT(j, 'k1', 'k2'[, null_if_invalid])` →
-    * `get_json_object(j, '$.k1.k2')` and
-    * `JSON_EXTRACT_ARRAY_ELEMENT_TEXT(j, i[, null_if_invalid])` →
-    * `get_json_object(j, '$[i]')`. Both already return NULL on
-    * malformed JSON in Spark, so the `null_if_invalid` flag is
-    * accepted and dropped (Redshift WITHOUT the flag errors on bad
-    * JSON — the shim is the lenient form, documented deviation).
-    * Literal keys of word characters only; anything fancier (dotted
-    * keys, column-ref keys, expression indexes) is left for the C5
-    * dry-run rather than risking a wrong path. */
-  private def rewriteJsonExtract(sql: String, saved: scala.collection.mutable.ArrayBuffer[String]): String = {
-    def dropFlag(args: Seq[String]): Seq[String] =
-      if (args.length > 1 && (args.last.equalsIgnoreCase("true") ||
-          args.last.equalsIgnoreCase("false"))) args.init else args
-    val step = rewriteCalls(sql, "json_extract_path_text") { raw =>
-      val args = dropFlag(raw)
-      if (args.length < 2) None
-      else {
-        val keys = args.tail.map {
-          case MaskedLiteral(idx) =>
-            val k = saved(idx.toInt).replace("''", "'")
-            if (k.nonEmpty && k.forall(c =>
-              Character.isLetterOrDigit(c) || c == '_')) Some(k) else None
-          case _ => None
-        }
-        if (keys.exists(_.isEmpty)) None
-        // maskLit, NOT a raw literal: a 3+-key path like '$.a.b.c'
-        // contains a dotted run the later SUPER path pass would
-        // match INSIDE the literal and corrupt
-        else Some(s"get_json_object(${args.head}, " +
-          maskLit(saved, s"$$${keys.flatten.map("." + _).mkString}") + ")")
-      }
-    }
-    val step2 = rewriteCalls(step, "json_extract_array_element_text") { raw =>
-      val args = dropFlag(raw)
-      args match {
-        case Seq(j, idx) if idx.matches("\\d+") =>
-          Some(s"get_json_object($j, '$$[$idx]')")
-        case _ => None
-      }
-    }
-    rewriteJsonPredicates(step2)
-  }
-
-  /** The rest of Redshift's json-varchar function family. On this
-    * tier SUPER is json TEXT, so JSON_PARSE / JSON_SERIALIZE are
-    * identities; the validity predicates lean on Spark's lenient
-    * parsers returning NULL for malformed input:
-    *
-    *   - `JSON_ARRAY_LENGTH(j[, flag])` → `size(from_json(j,
-    *     'array<string>'))` (NULL, not an error, on bad json — the
-    *     lenient form, same documented deviation as the extractors)
-    *   - `CAN_JSON_PARSE(j)` → `get_json_object(j, '$') IS NOT NULL`
-    *     (any valid json, arrays included)
-    *   - `IS_VALID_JSON(j)` → the same MINUS arrays: Redshift's
-    *     IS_VALID_JSON is documented false for a json ARRAY (that's
-    *     IS_VALID_JSON_ARRAY's job) — a shim equal to CAN_JSON_PARSE
-    *     would route array payloads down the wrong branch silently
-    *   - `IS_VALID_JSON_ARRAY(j)` → `from_json(j, 'array<string>')
-    *     IS NOT NULL`
-    *   - `JSON_PARSE(x)` / `JSON_SERIALIZE(x)` → `x` */
-  private def rewriteJsonPredicates(sql: String): String = {
-    def dropFlag(args: Seq[String]): Seq[String] =
-      if (args.length > 1 && (args.last.equalsIgnoreCase("true") ||
-          args.last.equalsIgnoreCase("false"))) args.init else args
-    // array_size (not size): NULL for malformed/non-array input
-    // regardless of spark.sql.legacy.sizeOfNull
-    val s1 = rewriteCalls(sql, "json_array_length") { raw =>
-      dropFlag(raw) match {
-        case Seq(j) => Some(s"array_size(from_json($j, 'array<string>'))")
-        case _ => None
-      }
-    }
-    // the json literal `null` is VALID json but get_json_object
-    // returns SQL NULL for it — test it explicitly
-    def validJson(j: String): String =
-      s"(trim($j) = 'null' OR get_json_object($j, '$$') IS NOT NULL)"
-    val s2 = rewriteCalls(s1, "is_valid_json") {
-      // false for arrays: from_json with an array schema parses ONLY
-      // arrays (objects/scalars → NULL), so its non-nullity is the
-      // array discriminator
-      case Seq(j) => Some(s"(${validJson(j)} " +
-        s"AND from_json($j, 'array<string>') IS NULL)")
-      case _ => None
-    }
-    val s3 = rewriteCalls(s2, "can_json_parse") {
-      case Seq(j) => Some(validJson(j))
-      case _ => None
-    }
-    val s4 = rewriteCalls(s3, "is_valid_json_array") {
-      case Seq(j) => Some(s"(from_json($j, 'array<string>') IS NOT NULL)")
-      case _ => None
-    }
-    val s5 = rewriteCalls(s4, "json_parse") {
-      case Seq(x) => Some(s"($x)")
-      case _ => None
-    }
-    val s6 = rewriteCalls(s5, "json_serialize") {
-      case Seq(x) => Some(s"($x)")
-      case _ => None
-    }
-    // the SUPER array helpers migrating queries lean on:
-    //   SPLIT_TO_ARRAY(s, d) builds a SUPER array → json text here
-    //   (\Q..\E-quote the delimiter — Spark's split takes a REGEX,
-    //   Redshift's a literal);
-    //   GET_ARRAY_LENGTH is JSON_ARRAY_LENGTH's SUPER twin;
-    //   SUBARRAY(a, start, len) slices 0-based (Spark slice is
-    //   1-based)
-    val s7 = rewriteCalls(s6, "split_to_array") {
-      case Seq(s, d) =>
-        Some(s"to_json(split($s, concat('\\\\Q', $d, '\\\\E')))")
-      case Seq(s) =>   // Redshift's default delimiter is the comma
-        Some(s"to_json(split($s, ','))")
-      case _ => None
-    }
-    val s8 = rewriteCalls(s7, "get_array_length") {
-      case Seq(j) => Some(s"array_size(from_json($j, 'array<string>'))")
-      case _ => None
-    }
-    rewriteCalls(s8, "subarray") {
-      case Seq(j, start, len) =>
-        Some(s"to_json(slice(from_json($j, 'array<string>'), " +
-          s"($start) + 1, $len))")
-      case _ => None
-    }
-  }
-
-  // --------------------------------- REGEXP position/occurrence family
-  /** Redshift's regex functions carry POSITION (start the search at a
-    * 1-based offset), OCCURRENCE (match the n-th occurrence, not the
-    * first) and PARAMETERS ('c' case-sensitive — the default — or
-    * 'i') arguments that Spark's regexp builtins lack
-    * (dialect/redshift.py:218-229 ships transform SQL full of them):
-    *
-    *   REGEXP_SUBSTR(s, p [, pos [, occ [, params]]])
-    *     → coalesce(get(regexp_extract_all(substring(s,pos), p, 0),
-    *                    occ-1), '')    — Redshift returns '' on no
-    *                                     match, NULL on NULL input
-    *   REGEXP_COUNT(s, p [, pos [, params]])
-    *     → regexp_count(substring(s, pos), p)
-    *   REGEXP_INSTR(s, p [, pos [, occ [, opt [, params]]]])
-    *     → n-th match start (opt 0) or end+1 (opt 1), computed from
-    *       split parts + match lengths (both builtin collection
-    *       expressions, codegen'd); 0 on no match
-    *   REGEXP_REPLACE(s, p [, rep [, pos [, params]]])
-    *     → Spark regexp_replace (its 4-arg form HAS position); the
-    *       2-arg Redshift form deletes matches (rep = '')
-    *
-    * The 'i' parameter folds into a literal pattern as a `(?i)`
-    * prefix (both engines accept inline flags); a non-literal pattern
-    * with parameters, or the 'e'/'p' PCRE modes, are left for the C5
-    * dry-run. Zero-width patterns are out of contract for the
-    * occurrence arithmetic (split- and match-lists disagree there). */
-  private def applyRegexFlags(pattern: String, params: Option[String],
-                              saved: scala.collection.mutable.ArrayBuffer[String]): Option[String] =
-    params match {
-      case None => Some(pattern)
-      case Some(MaskedLiteral(idx)) =>
-        saved(idx.toInt).replace("''", "'") match {
-          case "" | "c" => Some(pattern)
-          case "i" => pattern match {
-            case MaskedLiteral(p) =>
-              if (!saved(p.toInt).startsWith("(?i)"))
-                saved(p.toInt) = "(?i)" + saved(p.toInt)
-              Some(pattern)
-            case _ => None
-          }
-          case _ => None   // 'e' (subexpression) / 'p' (PCRE): C5 surfaces
-        }
-      case _ => None
-    }
-
-  private def fromPos(s: String, pos: String): String =
-    if (pos.trim == "1") s else s"substring($s, $pos)"
-
-  private def rewriteRegexpFns(sql: String, saved: scala.collection.mutable.ArrayBuffer[String]): String = {
-    // REGEXP_SUBSTR additionally accepts the 'e' parameter (return
-    // the first SUBEXPRESSION of the match instead of the whole
-    // match) — group index 1 when the literal pattern declares a
-    // group, ignored (Redshift semantics) when it declares none.
-    val s1 = rewriteCalls(sql, "regexp_substr") { args =>
-      val (core, params) =
-        if (args.length == 5) (args.init, Some(args.last)) else (args, None)
-      val shape = core match {
-        case Seq(a, b) => Some((a, b, "1", "1"))
-        case Seq(a, b, c) => Some((a, b, c, "1"))
-        case Seq(a, b, c, d) => Some((a, b, c, d))
-        case _ => None
-      }
-      shape.flatMap { case (s, p, pos, occ) =>
-        val paramStr = params match {
-          case None => Some("")
-          case Some(MaskedLiteral(i)) => Some(saved(i.toInt).replace("''", "'"))
-          case _ => None   // non-literal parameters: C5 surfaces
-        }
-        paramStr.filter(_.forall(c => c == 'c' || c == 'i' || c == 'e'))
-          .flatMap { chars =>
-            val flagged: Option[String] =
-              if (!chars.contains('i')) Some(p)
-              else p match {
-                case MaskedLiteral(pi) =>
-                  if (!saved(pi.toInt).startsWith("(?i)"))
-                    saved(pi.toInt) = "(?i)" + saved(pi.toInt)
-                  Some(p)
-                case _ => None
-              }
-            val groupIdx: Option[Int] =
-              if (!chars.contains('e')) Some(0)
-              else p match {
-                case MaskedLiteral(pi) =>
-                  Some(if (saved(pi.toInt).contains("(")) 1 else 0)
-                case _ => None   // can't verify a group exists
-              }
-            for (pp <- flagged; g <- groupIdx) yield
-              s"CASE WHEN $s IS NULL OR $pp IS NULL THEN NULL ELSE " +
-                s"coalesce(get(regexp_extract_all(${fromPos(s, pos)}, $pp, $g), " +
-                s"($occ) - 1), '') END"
-          }
-      }
-    }
-    val s2 = rewriteCalls(s1, "regexp_count") { args =>
-      val (core, params) =
-        if (args.length == 4) (args.init, Some(args.last)) else (args, None)
-      core match {
-        case Seq(s, p) => applyRegexFlags(p, params, saved)
-          .map(pp => s"regexp_count($s, $pp)")
-        case Seq(s, p, pos) => applyRegexFlags(p, params, saved)
-          .map(pp => s"regexp_count(${fromPos(s, pos)}, $pp)")
-        case _ => None
-      }
-    }
-    val s3 = rewriteCalls(s2, "regexp_instr") { args =>
-      val (core, params) =
-        if (args.length == 6) (args.init, Some(args.last)) else (args, None)
-      val shape = core match {
-        case Seq(a, b) => Some((a, b, "1", "1", "0"))
-        case Seq(a, b, c) => Some((a, b, c, "1", "0"))
-        case Seq(a, b, c, d) => Some((a, b, c, d, "0"))
-        case Seq(a, b, c, d, e) => Some((a, b, c, d, e))
-        case _ => None
-      }
-      shape.filter { case (_, _, _, _, opt) =>
-        opt.trim == "0" || opt.trim == "1"
-      }.flatMap { case (s, p, pos, occ, opt) =>
-        applyRegexFlags(p, params, saved).map { pp =>
-          val base = fromPos(s, pos)
-          val posAdj = if (pos.trim == "1") "" else s" + ($pos) - 1"
-          if (occ.trim == "1" && opt.trim == "0")
-            s"CASE WHEN regexp_instr($base, $pp) = 0 THEN 0 " +
-              s"ELSE regexp_instr($base, $pp)$posAdj END"
-          else {
-            val ms = s"regexp_extract_all($base, $pp, 0)"
-            val parts = s"split($base, $pp, -1)"
-            val start =
-              s"aggregate(slice($parts, 1, $occ), 0, (a, x) -> a + length(x))" +
-                s" + aggregate(slice($ms, 1, ($occ) - 1), 0, (a, x) -> a + length(x)) + 1"
-            val endAdj =
-              if (opt.trim == "1") s" + length(get($ms, ($occ) - 1))" else ""
-            s"CASE WHEN $s IS NULL OR $pp IS NULL THEN NULL " +
-              s"WHEN size($ms) < ($occ) THEN 0 " +
-              s"ELSE $start$endAdj$posAdj END"
-          }
-        }
-      }
-    }
-    rewriteCalls(s3, "regexp_replace") { args =>
-      val (core, params) =
-        if (args.length == 5) (args.init, Some(args.last)) else (args, None)
-      val shape = core match {
-        case Seq(a, b) => Some((a, b, "''", "1"))
-        case Seq(a, b, c) => Some((a, b, c, "1"))
-        case Seq(a, b, c, d) => Some((a, b, c, d))
-        case _ => None
-      }
-      shape.flatMap { case (s, p, rep, pos) =>
-        applyRegexFlags(p, params, saved).map { pp =>
-          if (pos.trim == "1") s"regexp_replace($s, $pp, $rep)"
-          else s"regexp_replace($s, $pp, $rep, $pos)"
-        }
-      }
-    }
-  }
-
   // ------------------------------------------------- datepart TRUNC
   /** Oracle-style datepart spellings accepted by `TRUNC(ts, 'fmt')`.
     * Distinct from [[UnitAliases]] on purpose: in TRUNC formats 'MM'
@@ -789,62 +412,16 @@ object DialectShims {
     "month" -> "month", "mon" -> "month", "mm" -> "month",
     "week" -> "week", "iw" -> "week",   // ISO (Monday-start) week
     // Oracle's DAY truncations: 'DDD'/'DD'/'J' are the day formats;
-    // 'DAY'/'DY'/'D' are WEEK-start formats handled below
+    // 'DAY'/'DY'/'D' are WEEK-start formats (the TRUNC builder)
     "dd" -> "day", "ddd" -> "day", "j" -> "day",
     "hour" -> "hour", "hh" -> "hour", "hh12" -> "hour", "hh24" -> "hour",
     "minute" -> "minute", "mi" -> "minute",
     "second" -> "second", "ss" -> "second")
 
-  /** `TRUNC(e, 'month')` (Oracle/Redshift datepart truncation) →
-    * `CAST(date_trunc('MONTH', e) AS DATE)` for day-or-coarser units
-    * (TRUNC returns a DATE there), `date_trunc` alone for sub-day
-    * units (the time component survives). Spark's own `trunc(date,
-    * fmt)` covers only year..week and returns DATE — this shim widens
-    * the unit set and keeps one deterministic output type per unit.
-    *
-    * Oracle's one-letter formats do NOT abbreviate the word they
-    * resemble: `'D'` truncates to the start of the WEEK (Sunday
-    * under the default US NLS territory, which this shim pins — not
-    * `date_trunc('WEEK')`, whose ISO weeks start Monday), and `'W'`
-    * truncates to the start of the value's week-OF-MONTH chunk
-    * (day 1, 8, 15, 22, or 29 of its month). Both previously aliased
-    * to day/week truncation, silently wrong for any Oracle-trained
-    * query. Numeric TRUNC (second argument not a string literal) is
-    * left untouched.
-    *
-    * Known limitation: the week-start/chunk branches reference the
-    * argument expression twice (no single-reference SQL form exists
-    * for them) — fine for columns (codegen subexpression elimination
-    * dedups), but a NON-DETERMINISTIC argument could disagree with
-    * itself between the two references. */
-  private def rewriteTruncDatepart(sql: String, saved: scala.collection.mutable.ArrayBuffer[String]): String =
-    rewriteCalls(sql, "trunc") {
-      case Seq(e, MaskedLiteral(idx)) =>
-        saved(idx.toInt).replace("''", "'").toLowerCase match {
-          case "d" | "dy" | "day" =>
-            // ALL of Oracle's day-of-week formats truncate to the
-            // start of the (Sunday-based, US NLS) week — 'DAY' does
-            // NOT mean day truncation; dayofweek is 1 for Sunday
-            Some(s"date_sub(CAST(($e) AS DATE), dayofweek($e) - 1)")
-          case "w" =>
-            Some("date_add(CAST(date_trunc('MONTH', " + e + ") AS DATE), " +
-              s"7 * CAST(floor((dayofmonth($e) - 1) / 7) AS INT))")
-          case "ww" =>
-            // week-of-YEAR chunk: day 1, 8, 15, ... relative to Jan 1
-            Some("date_add(CAST(date_trunc('YEAR', " + e + ") AS DATE), " +
-              s"7 * CAST(floor((dayofyear($e) - 1) / 7) AS INT))")
-          case unit => TruncUnits.get(unit).map {
-            case u @ ("year" | "quarter" | "month" | "week" | "day") =>
-              s"CAST(date_trunc('${u.toUpperCase}', $e) AS DATE)"
-            case u => s"date_trunc('${u.toUpperCase}', $e)"
-          }
-        }
-      case _ => None
-    }
-
   /** Numeric-mode TO_CHAR — `TO_CHAR(number, '$S999,999.00')` — the
-    * formatting half of the pair with TO_NUMBER. Supported pattern
-    * subset (anything else is left for the C5 dry-run):
+    * formatting half of the pair with TO_NUMBER, as a Spark SQL
+    * template over `__0`. Supported pattern subset (anything else is
+    * None, so the call is refused):
     *
     *   [FM] [S] [$] int-digits('9'/'0', ',' grouping) ['.' dec-digits]
     *
@@ -865,8 +442,7 @@ object DialectShims {
     *
     * Every emitted piece is a codegen'd builtin (decimal casts,
     * floor, lpad, a lookahead regexp_replace for grouping). */
-  private[etl] def toCharNumExpr(x: String, format: String,
-      saved: scala.collection.mutable.ArrayBuffer[String]): Option[String] = {
+  private[etl] def toCharNumExpr(format: String): Option[String] = {
     var f = format
     var fm = false
     if (f.regionMatches(true, 0, "FM", 0, 2)) { fm = true; f = f.substring(2) }
@@ -888,7 +464,7 @@ object DialectShims {
       if (i < 0) 1 else digitsOnly.length - i
     }
     val scale = decPat.length
-    val v = s"CAST(($x) AS DECIMAL(38, $scale))"
+    val v = s"CAST((__0) AS DECIMAL(38, $scale))"
     val absV = s"abs($v)"
     // DECIMAL(38,0), not BIGINT: a pattern wide enough for a 19+-
     // digit integer part would otherwise overflow the cast and print
@@ -896,13 +472,9 @@ object DialectShims {
     val intRaw = s"CAST(CAST(floor($absV) AS DECIMAL(38, 0)) AS STRING)"
     val intPadded =
       if (minIntDigits > 1) s"lpad($intRaw, $minIntDigits, '0')" else intRaw
-    // both regex literals are maskLit'd: raw, their comma and parens
-    // would corrupt later passes' call parsing
     val intGrouped =
       if (grouping)
-        s"regexp_replace($intPadded, " +
-          maskLit(saved, "(\\\\d)(?=(\\\\d{3})+$)") + ", " +
-          maskLit(saved, "$1,") + ")"
+        s"regexp_replace($intPadded, '(\\\\d)(?=(\\\\d{3})+$$)', '$$1,')"
       else intPadded
     val decPart =
       if (scale == 0) "''"
@@ -919,27 +491,278 @@ object DialectShims {
         s"ELSE concat($signPart, $dollarPart, $intGrouped, $decPart) END")
   }
 
-  /** `TO_CHAR(ts, 'fmt')` → the per-token concat above (datetime
-    * mode) or [[toCharNumExpr]] (number mode — the format contains
-    * 9/0/$). The format must be a string LITERAL (a mask
-    * placeholder) — a column-ref format can't be translated at
-    * rewrite time and is left for the C5 dry-run. */
-  private def rewriteToChar(sql: String, saved: scala.collection.mutable.ArrayBuffer[String]): String =
-    rewriteCalls(sql, "to_char") {
-      case Seq(ts, MaskedLiteral(idx)) =>
-        val f = saved(idx.toInt).replace("''", "'")
-        toCharExpr(ts, f, saved).orElse(toCharNumExpr(ts, f, saved))
+  // --------------------------------------------- function-shaped shims
+  /** A string literal argument's value. */
+  private object Str {
+    def unapply(e: Expression): Option[String] = e match {
+      case Literal(v, _: StringType) if v != null => Some(v.toString)
+      case _ => None
+    }
+  }
+
+  private def isOne(e: Expression): Boolean = e == Literal(1)
+
+  /** The expression of SQL template `sql`, with `__0`, `__1`, ...
+    * standing for `args`. Parsed per call under the session's conf,
+    * as the query text around it was; its functions resolve as in any
+    * query (Spark's built-ins, not the `rs_` builders). */
+  private def expand(sql: String, args: Expression*): Expression =
+    CatalystSqlParser.parseExpression(sql).transform {
+      case UnresolvedAttribute(Seq(p)) if p.startsWith("__") => args(p.drop(2).toInt)
+    }
+
+  /** The builder of Redshift function `name`: `translate` maps the
+    * call's resolved arguments to a Spark expression, or to None for a
+    * shape it does not translate, which is refused at analysis (the
+    * C5 dry-run reports it) rather than left to a Spark built-in of
+    * the same name. */
+  private def shim(name: String, usage: String)(
+      translate: Seq[Expression] => Option[Expression]): (String, Seq[Expression] => Expression) =
+    name -> (args => translate(args).getOrElse(throw new IllegalArgumentException(
+      s"${name.toUpperCase}(${args.map(_.sql).mkString(", ")}) has no Spark " +
+        s"translation; the dialect supports $usage")))
+
+  /** A shim of fixed arity over one template (which casts the
+    * arguments where a typed SQL signature would). */
+  private def fixed(name: String, arity: Int, template: String) =
+    shim(name, s"${name.toUpperCase} with $arity argument(s)") {
+      case args if args.size == arity => Some(expand(template, args: _*))
       case _ => None
     }
 
-  private val MaskedLiteral = ("'\\u0000(\\d+)\\u0000'").r
+  /** A trailing `null_if_invalid` flag, accepted and dropped: Spark's
+    * JSON readers already return NULL on malformed input (Redshift
+    * WITHOUT the flag errors on bad JSON — the shim is the lenient
+    * form, documented deviation). */
+  private def dropFlag(args: Seq[Expression]): Seq[Expression] = args match {
+    case init :+ Literal(_: Boolean, BooleanType) if init.nonEmpty => init
+    case _ => args
+  }
+
+  // array_size (not size): NULL for malformed/non-array input
+  // regardless of spark.sql.legacy.sizeOfNull
+  private val ArrayLength = "array_size(from_json(__0, 'array<string>'))"
+
+  // the json literal `null` is VALID json but get_json_object returns
+  // SQL NULL for it — test it explicitly
+  private val ValidJson = "(trim(__0) = 'null' OR get_json_object(__0, '$') IS NOT NULL)"
+
+  /** A REGEXP_* builder. Redshift's regex functions take POSITION (a
+    * 1-based search start), OCCURRENCE (the n-th match) and a trailing
+    * PARAMETERS string that Spark's regexp built-ins lack
+    * (dialect/redshift.py:218-229 ships transform SQL full of them).
+    * `f` gets the text, the pattern and up to `positional - 2` more
+    * arguments, and the parameter letters: 'c' (case-sensitive, the
+    * default) changes nothing and 'i' prefixes `(?i)` to a literal
+    * pattern (both engines take inline flags). A non-literal
+    * parameter string, a letter outside `allowed` (the 'p' PCRE mode)
+    * or 'i' over a non-literal pattern is refused. */
+  private def regexp(name: String, usage: String, positional: Int, allowed: String)(
+      f: (Seq[Expression], String) => Option[Expression]) =
+    shim(name, usage) { args =>
+      val (core, params) =
+        if (args.length == positional + 1) (args.init, Some(args.last)) else (args, None)
+      val letters = params.fold(Option("")) {
+        case Str(l) => Some(l).filter(_.forall(allowed.contains(_)))
+        case _ => None
+      }
+      (core.lift(1), letters) match {
+        case (Some(_), Some(l)) if core.length <= positional && !l.contains('i') => f(core, l)
+        case (Some(Str(p)), Some(l)) if core.length <= positional =>
+          f(core.updated(1, Literal(if (p.startsWith("(?i)")) p else "(?i)" + p)), l)
+        case _ => None
+      }
+    }
+
+  /** The searched text from 1-based position `__2` on. */
+  private def searched(pos: Expression): String =
+    if (isOne(pos)) "__0" else "substring(__0, __2)"
+
+  /** Every function-shaped Redshift shim, by its Redshift name. Each
+    * builder reads its literal arguments (formats, JSON keys, regex
+    * parameters) from the resolved call and emits codegen'd Spark
+    * built-ins. [[GraftExtensions]] installs them, a name Spark
+    * already has under `rs_` (see [[sqlName]]). */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // the TWO-argument form's source zone is UTC BY DEFINITION in
+    // Redshift (not the session zone, which Spark's own 2-arg
+    // convert_timezone would use); three arguments pivot through UTC
+    shim("convert_timezone", "CONVERT_TIMEZONE([source,] target, timestamp)") {
+      case Seq(tgt, ts) => Some(expand("from_utc_timestamp(__0, __1)", ts, tgt))
+      case Seq(src, tgt, ts) =>
+        Some(expand("from_utc_timestamp(to_utc_timestamp(__0, __1), __2)", ts, src, tgt))
+      case _ => None
+    },
+    shim("to_char", "TO_CHAR(value, 'format') with a datetime or number format literal") {
+      case Seq(x, Str(f)) => toCharExpr(f).orElse(toCharNumExpr(f)).map(expand(_, x))
+      case _ => None
+    }) ++
+    // the INVERSE of TO_CHAR, token for token: Redshift SQL full of
+    // TO_DATE(s, 'MM/DD/YYYY') ships verbatim (relation.py:279-293)
+    Seq("to_date", "to_timestamp").map(name =>
+      shim(name, s"${name.toUpperCase}(text, 'format') with numeric format tokens") {
+        case Seq(e, Str(f)) => toParsePattern(f).map(p => expand(s"$name(__0, __1)", e, Literal(p)))
+        case _ => None
+      }) ++ Seq(
+    shim("json_extract_path_text",
+        "JSON_EXTRACT_PATH_TEXT(json, 'key', ...[, null_if_invalid]) with word-character key literals") { args =>
+      dropFlag(args) match {
+        case j +: keys if keys.nonEmpty =>
+          val words = keys.collect {
+            case Str(k) if k.nonEmpty && k.forall(c => c.isLetterOrDigit || c == '_') => k
+          }
+          if (words.size < keys.size) None
+          else Some(expand("get_json_object(__0, __1)", j, Literal("$" + words.map("." + _).mkString)))
+        case _ => None
+      }
+    },
+    shim("json_extract_array_element_text",
+        "JSON_EXTRACT_ARRAY_ELEMENT_TEXT(json, index[, null_if_invalid]) with a literal index") { args =>
+      dropFlag(args) match {
+        case Seq(j, Literal(i: Int, IntegerType)) if i >= 0 =>
+          Some(expand("get_json_object(__0, __1)", j, Literal(s"$$[$i]")))
+        case _ => None
+      }
+    },
+    shim("json_array_length", "JSON_ARRAY_LENGTH(json[, null_if_invalid])") { args =>
+      dropFlag(args) match {
+        case Seq(j) => Some(expand(ArrayLength, j))
+        case _ => None
+      }
+    },
+    fixed("get_array_length", 1, ArrayLength),
+    // false for arrays, as Redshift documents (that is
+    // IS_VALID_JSON_ARRAY's job): from_json with an array schema
+    // parses ONLY arrays, so its non-nullity is the array discriminator
+    fixed("is_valid_json", 1, s"($ValidJson AND from_json(__0, 'array<string>') IS NULL)"),
+    fixed("can_json_parse", 1, ValidJson),
+    fixed("is_valid_json_array", 1, "(from_json(__0, 'array<string>') IS NOT NULL)"),
+    // SUPER is json TEXT on this tier, so parse and serialize are identities
+    fixed("json_parse", 1, "__0"),
+    fixed("json_serialize", 1, "__0"),
+    // a SUPER array as json text; \Q..\E quotes the delimiter, since
+    // Spark's split takes a REGEX and Redshift's a literal (the comma
+    // is Redshift's default)
+    shim("split_to_array", "SPLIT_TO_ARRAY(text[, delimiter])") {
+      case Seq(s) => Some(expand("to_json(split(__0, ','))", s))
+      case Seq(s, d) => Some(expand("to_json(split(__0, concat('\\\\Q', __1, '\\\\E')))", s, d))
+      case _ => None
+    },
+    // 0-based start (Spark's slice is 1-based)
+    fixed("subarray", 3, "to_json(slice(from_json(__0, 'array<string>'), (__1) + 1, __2))"),
+    // '' on no match, NULL on NULL input; 'e' returns the first
+    // SUBEXPRESSION: group 1 when the literal pattern declares a group,
+    // the whole match (Redshift semantics) when it declares none
+    regexp("regexp_substr",
+        "REGEXP_SUBSTR(text, pattern[, position[, occurrence[, 'c'|'i'|'e']]])", 4, "cie") {
+      (core, letters) =>
+        val group = if (!letters.contains('e')) Some(0) else core(1) match {
+          case Str(p) => Some(if (p.stripPrefix("(?i)").contains("(")) 1 else 0)
+          case _ => None
+        }
+        val Seq(s, p, pos, occ) = core.padTo(4, Literal(1))
+        group.map(g => expand("CASE WHEN __0 IS NULL OR __1 IS NULL THEN NULL ELSE " +
+          s"coalesce(get(regexp_extract_all(${searched(pos)}, __1, $g), (__3) - 1), '') END",
+          s, p, pos, occ))
+    },
+    regexp("regexp_count", "REGEXP_COUNT(text, pattern[, position[, 'c'|'i']])", 3, "ci") {
+      (core, _) =>
+        val Seq(s, p, pos) = core.padTo(3, Literal(1))
+        Some(expand(s"regexp_count(${searched(pos)}, __1)", s, p, pos))
+    },
+    // the n-th match start (option 0) or end+1 (option 1) from split
+    // parts and match lengths, 0 on no match; zero-width patterns are
+    // out of contract (split- and match-lists disagree there)
+    regexp("regexp_instr",
+        "REGEXP_INSTR(text, pattern[, position[, occurrence[, 0|1[, 'c'|'i']]]])", 5, "ci") {
+      (core, _) =>
+        val Seq(s, p, pos, occ, option) = core.padTo(4, Literal(1)).padTo(5, Literal(0))
+        val text = searched(pos)
+        val posAdj = if (isOne(pos)) "" else " + (__2) - 1"
+        val ms = s"regexp_extract_all($text, __1, 0)"
+        val nth = "CASE WHEN __0 IS NULL OR __1 IS NULL THEN NULL " +
+          s"WHEN size($ms) < (__3) THEN 0 ELSE " +
+          s"aggregate(slice(split($text, __1, -1), 1, __3), 0, (a, x) -> a + length(x)) + " +
+          s"aggregate(slice($ms, 1, (__3) - 1), 0, (a, x) -> a + length(x)) + 1"
+        (option match {
+          case Literal(0, IntegerType) if isOne(occ) => Some(s"CASE WHEN regexp_instr($text, __1) = 0 " +
+            s"THEN 0 ELSE regexp_instr($text, __1)$posAdj END")
+          case Literal(0, IntegerType) => Some(s"$nth$posAdj END")
+          case Literal(1, IntegerType) => Some(s"$nth + length(get($ms, (__3) - 1))$posAdj END")
+          case _ => None
+        }).map(expand(_, s, p, pos, occ))
+    },
+    // the 2-argument form deletes matches; Spark's 4-argument
+    // regexp_replace has the position
+    regexp("regexp_replace",
+        "REGEXP_REPLACE(text, pattern[, replacement[, position[, 'c'|'i']]])", 4, "ci") {
+      (core, _) =>
+        val Seq(s, p, rep, pos) = core.padTo(3, Literal("")).padTo(4, Literal(1))
+        Some(if (isOne(pos)) expand("regexp_replace(__0, __1, __2)", s, p, rep)
+          else expand("regexp_replace(__0, __1, __2, __3)", s, p, rep, pos))
+    },
+    // TRUNC returns a DATE for day-or-coarser units; sub-day units
+    // keep the time component. Oracle's one-letter formats do NOT
+    // abbreviate the word they resemble: 'D' (like 'DY' and 'DAY')
+    // truncates to the start of the WEEK, Sunday under the default US
+    // NLS territory (dayofweek is 1 for Sunday), and 'W'/'WW' to the
+    // start of the value's 7-day chunk of its month/year. Those three
+    // reference the argument twice, so a NON-DETERMINISTIC argument
+    // could disagree with itself.
+    shim("trunc", "TRUNC(timestamp, 'datepart')") {
+      case Seq(e, Str(f)) =>
+        (f.toLowerCase match {
+          case "d" | "dy" | "day" => Some("date_sub(CAST((__0) AS DATE), dayofweek(__0) - 1)")
+          case "w" => Some("date_add(CAST(date_trunc('MONTH', __0) AS DATE), " +
+            "7 * CAST(floor((dayofmonth(__0) - 1) / 7) AS INT))")
+          case "ww" => Some("date_add(CAST(date_trunc('YEAR', __0) AS DATE), " +
+            "7 * CAST(floor((dayofyear(__0) - 1) / 7) AS INT))")
+          case unit => TruncUnits.get(unit).map {
+            case u @ ("year" | "quarter" | "month" | "week" | "day") =>
+              s"CAST(date_trunc('${u.toUpperCase}', __0) AS DATE)"
+            case u => s"date_trunc('${u.toUpperCase}', __0)"
+          }
+        }).map(expand(_, e))
+      case _ => None
+    },
+    // CHARINDEX's argument order is (needle, haystack), the REVERSE of
+    // instr; both are 1-based with 0 for an absent needle
+    fixed("charindex", 2, "instr(CAST(__1 AS STRING), CAST(__0 AS STRING))"),
+    fixed("strtol", 2, "CAST(conv(CAST(__0 AS STRING), CAST(__1 AS INT), 10) AS BIGINT)")) ++
+    // Redshift DATEDIFF counts BOUNDARY CROSSINGS, not complete
+    // intervals: datediff(day, 23:00, next 01:00) = 1. Truncating both
+    // sides to the unit first makes Spark's complete-interval
+    // timestampdiff count exactly the crossings. One function per unit:
+    // [[rewriteDateDiff]] folds the unit into the name.
+    CanonicalUnits.map { unit =>
+      val u = unit.toUpperCase
+      fixed(s"rs_datediff_$unit", 2, s"timestampdiff($u, date_trunc('$u', CAST(__0 AS TIMESTAMP)), " +
+        s"date_trunc('$u', CAST(__1 AS TIMESTAMP)))")
+    }
+
+  /** The names in [[functions]] that Spark also has as built-ins. */
+  private lazy val SparkNamed: Set[String] = functions.map(_._1)
+    .filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n))).toSet
+
+  /** The SQL name [[GraftExtensions]] installs `name`'s builder under:
+    * `rs_<name>` where Spark has a built-in `name`, so SQL that skips
+    * the dialect pass keeps Spark's meaning. Computed, not listed: a
+    * Spark upgrade that adds a same-named built-in cannot take a
+    * Redshift call over. */
+  def sqlName(name: String): String = if (SparkNamed(name)) s"rs_$name" else name
+
+  private lazy val SparkNamedCallRe =
+    s"(?i)(?<![\\w.])(${SparkNamed.mkString("|")})(?=$Gap*\\()".r
+
+  /** `name(` → `rs_name(` for the [[SparkNamed]] functions (masked
+    * text). Idempotent: `rs_name(` does not match again. */
+  private def renameSparkNamed(sql: String): String =
+    SparkNamedCallRe.replaceAllIn(sql, "rs_$1")
 
   /** Register a literal INJECTED by a rewrite pass and return its
     * placeholder. Injected literals must never appear raw in masked
-    * text: later passes' call parsing counts parentheses and splits
-    * on top-level commas without tracking quotes, so a raw '$1,' or
-    * '(\\d)' literal corrupts them (found via numeric TO_CHAR's
-    * grouping regex being re-parsed by the REGEXP_REPLACE pass). */
+    * text: a json path such as '$.a.b.c' holds a dotted run the SUPER
+    * path pass would match inside the literal. */
   private def maskLit(saved: scala.collection.mutable.ArrayBuffer[String],
                       content: String): String = {
     saved += content
@@ -984,7 +807,10 @@ object DialectShims {
       } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
         val e = sql.indexOf('\n', i)
         val end = if (e < 0) n else e
-        sb.append("--").append(save(sql.substring(i + 2, end)))
+        val text = sql.substring(i + 2, end)
+        // Spark's lexer continues a `--` comment over a backslash-
+        // newline and Redshift's does not: a space keeps the next line
+        sb.append("--").append(save(if (e >= 0 && text.endsWith("\\")) text + " " else text))
         i = end
       } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
         val e = sql.indexOf("*/", i + 2)
@@ -1000,6 +826,7 @@ object DialectShims {
 
   private val Placeholder = "\u0000(\\d+)\u0000".r
 
+
   private[etl] def unmask(sql: String, saved: IndexedSeq[String]): String =
     Placeholder.replaceAllIn(sql, m =>
       java.util.regex.Matcher.quoteReplacement(saved(m.group(1).toInt)))
@@ -1011,7 +838,8 @@ object DialectShims {
     * the pattern needs no special handling at this layer. Non-literal
     * patterns (column refs) are left for the C5 dry-run to surface. */
   private val SimilarToRe =
-    raw"(?i)\b(NOT\s+)?SIMILAR\s+TO\s+'\u0000(\d+)\u0000'(?:\s+ESCAPE\s+'\u0000(\d+)\u0000')?".r
+    (s"(?i)\\b(NOT$Gap+)?SIMILAR$Gap+TO$Gap+'\\x00(\\d+)\\x00'" +
+      s"(?:$Gap+ESCAPE$Gap+'\\x00(\\d+)\\x00')?").r
 
   private def rewriteSimilarTo(sql: String, saved: scala.collection.mutable.ArrayBuffer[String]): String =
     SimilarToRe.replaceAllIn(sql, m => {
@@ -1026,13 +854,13 @@ object DialectShims {
       saved(patIdx) = regex.replace("\\", "\\\\").replace("'", "\\'")
       val not = if (m.group(1) != null) "NOT " else ""
       java.util.regex.Matcher.quoteReplacement(
-        s"${not}RLIKE '\u0000$patIdx\u0000'")
+        s"${not}RLIKE '\u0000$patIdx\u0000'" + commentsIn(m.matched))
     })
 
   // ------------------------------------------------------ SELECT TOP
   private val TopRe =
     java.util.regex.Pattern.compile(
-      "(?i)\\bSELECT(\\s+DISTINCT)?\\s+TOP\\s+(\\d+)\\b")
+      s"(?i)\\bSELECT($Gap+DISTINCT)?$Gap+TOP$Gap+(\\d+)\\b")
 
   /** Redshift's `SELECT TOP n` (equivalent to LIMIT, allowed in any
     * query block) → remove the TOP clause and append `LIMIT n` at the
@@ -1046,7 +874,7 @@ object DialectShims {
     if (!m.find()) return sql
     val start = m.start
     val n = m.group(2).toLong
-    val distinct = Option(m.group(1)).getOrElse("")
+    val distinct = if (m.group(1) == null) "" else " DISTINCT"
     // depth of the SELECT, then the block end at that depth
     def depthAt(pos: Int): Int =
       sql.substring(0, pos).count(_ == '(') - sql.substring(0, pos).count(_ == ')')
@@ -1085,7 +913,7 @@ object DialectShims {
     require(!"(?i)\\b(UNION|INTERSECT|EXCEPT|MINUS)\\b".r
         .findFirstIn(stripBalancedParens(block)).isDefined,
       s"SELECT TOP $n in a set-operation branch is ambiguous — use LIMIT")
-    val rewritten = sql.substring(0, start) + s"SELECT$distinct" +
+    val rewritten = sql.substring(0, start) + "SELECT" + commentsIn(m.group) + distinct +
       sql.substring(m.end, end) + s" LIMIT $n" + sql.substring(end)
     rewriteSelectTop(rewritten)   // next TOP, if any
   }
@@ -1120,7 +948,7 @@ object DialectShims {
     * to json when the target type is string), so element paths
     * compose. */
   private val UnnestRe = java.util.regex.Pattern.compile(
-    "(?i)(,|\\bCROSS\\s+JOIN\\b)\\s*UNNEST\\s*\\(")
+    s"(?i)(,|\\bCROSS$Gap+JOIN\\b)$Gap*UNNEST$Gap*\\(")
 
   private[etl] def rewriteUnnest(sql: String): (String, Set[String]) = {
     val m = UnnestRe.matcher(sql)
@@ -1143,7 +971,8 @@ object DialectShims {
     // branch the leftover `(col)` spliced into the output as corrupt
     // SQL with a baffling downstream parse error.
     val aliasM = java.util.regex.Pattern
-      .compile("(?i)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)(\\s*\\(\\s*([A-Za-z_]\\w*(?:\\s*,[^)]*)?)\\s*\\))?")
+      .compile(s"(?i)^$Gap*(?:AS$Gap+)?([A-Za-z_]\\w*)" +
+        s"($Gap*\\($Gap*([A-Za-z_]\\w*(?:\\s*,[^)]*)?)$Gap*\\))?")
       .matcher(sql.substring(i))
     require(aliasM.find() && !ReservedAfterAlias(aliasM.group(1).toUpperCase),
       "UNNEST(...) requires an alias (UNNEST(expr) AS x)")
@@ -1155,7 +984,8 @@ object DialectShims {
     val viewName = if (colList.isDefined) aliasM.group(1) else alias + "_lv"
     val replaced = sql.substring(0, m.start) +
       s" LATERAL VIEW explode(from_json($arg, 'array<string>')) " +
-      s"$viewName AS $alias" + sql.substring(i + aliasM.end)
+      s"$viewName AS $alias" + commentsIn(m.group + aliasM.group) +
+      sql.substring(i + aliasM.end)
     val (s2, more) = rewriteUnnest(replaced)
     (s2, more + alias)
   }
@@ -1234,8 +1064,8 @@ object DialectShims {
       "FROM", "SELECT", "SET", "VALUES", "BY", "AND", "OR", "NOT",
       "CASE", "WHEN", "THEN", "ELSE", "END")).mkString("|") + ")\\b)"
     val item = java.util.regex.Pattern.compile(
-      "(?i)(\\bFROM|\\bJOIN|,)\\s+" + notKw + "([A-Za-z_][\\w.]*)" +
-        "(?:\\s+(?:AS\\s+)?" + notKw + "([A-Za-z_]\\w*))?").matcher(sql)
+      s"(?i)(\\bFROM|\\bJOIN|,)$Gap+" + notKw + "([A-Za-z_][\\w.]*)" +
+        s"(?:$Gap+(?:AS$Gap+)?" + notKw + "([A-Za-z_]\\w*))?").matcher(sql)
     while (item.find()) {
       // comma-anchored matches are FROM items only inside a FROM/JOIN
       // clause (ON: a comma item can directly follow a join's ON
@@ -1254,7 +1084,7 @@ object DialectShims {
     }
     // derived tables: `FROM ( ... ) [AS] x`
     val derived = java.util.regex.Pattern.compile(
-      "\\)\\s*(?:(?i:AS)\\s+)?([A-Za-z_]\\w*)").matcher(sql)
+      s"\\)$Gap*(?:(?i:AS)$Gap+)?([A-Za-z_]\\w*)").matcher(sql)
     while (derived.find()) {
       val a = derived.group(1)
       // position just past the ')': the subquery parens are balanced
@@ -1349,7 +1179,7 @@ object DialectShims {
     "\\b([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\]|\\[\\*\\])+)")
 
   private val WildcardCmpRe = java.util.regex.Pattern.compile(
-    "^\\s*(<=|>=|<>|!=|=|<|>)\\s*('\\x00\\d+\\x00'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)")
+    s"^$Gap*(<=|>=|<>|!=|=|<|>)$Gap*('\\x00\\d+\\x00'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)")
 
   private[etl] def rewriteWildcardPaths(sql: String,
                                         unnestAliases: Set[String],
@@ -1392,8 +1222,7 @@ object DialectShims {
           // `> 3::int` re-attaching '::int' to the generated
           // boolean). Refuse loudly — the documented contract —
           // instead of rewriting wrong.
-          val afterCmp = sql.substring(m.end + cm.end)
-            .dropWhile(_.isWhitespace)
+          val afterCmp = sql.substring(m.end + cm.end).replaceFirst(s"^$Gap*", "")
           val compound = afterCmp.nonEmpty &&
             "(+-*/|%[:^&#<>".contains(afterCmp.charAt(0))
           require(!compound,
@@ -1411,8 +1240,9 @@ object DialectShims {
             if (post.isEmpty) "wc_e"
             else s"get_json_object(wc_e, ${maskLit(saved, "$" + post)})"
           out.append(sql, last, m.start)
+          // the comparison as written, comments included
           out.append(s"exists(from_json($arrayText, 'array<string>'), " +
-            s"wc_e -> $inner ${cm.group(1)} ${cm.group(2)})")
+            s"wc_e -> $inner${cm.group})")
           last = m.end + cm.end
         }
       }
@@ -1438,8 +1268,8 @@ object DialectShims {
     * same scope rule Redshift itself uses to tell `s.doc.lines`
     * from a three-part catalog name. */
   private val PartiqlIterRe = java.util.regex.Pattern.compile(
-    ",\\s*([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])+)\\s+" +
-    "(?:(?i:AS)\\s+)?([A-Za-z_]\\w*)(?:\\s+(?i:AT)\\s+([A-Za-z_]\\w*))?")
+    s",$Gap*([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])+)$Gap+" +
+    s"(?:(?i:AS)$Gap+)?([A-Za-z_]\\w*)(?:$Gap+(?i:AT)$Gap+([A-Za-z_]\\w*))?")
 
   /** Words that can follow a FROM item and must never be mistaken for
     * an element alias (`FROM t, UNNEST(x) WHERE ...` swallowing WHERE
@@ -1513,7 +1343,7 @@ object DialectShims {
             s" LATERAL VIEW explode(from_json($arrayText, " +
               s"'array<string>')) ${elem}_lv AS $elem"
         }
-        out.append(sql, last, m.start).append(lateral)
+        out.append(sql, last, m.start).append(lateral).append(commentsIn(m.group))
         last = m.end
         aliases += elem
       }
@@ -1542,8 +1372,8 @@ object DialectShims {
     * (...))`, which q31 covers via Spark's native UNPIVOT — the
     * SUPER form iterates a json object column.) */
   private val PartiqlUnpivotRe = java.util.regex.Pattern.compile(
-    ",\\s*(?i:UNPIVOT)\\s+([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])*)\\s+" +
-    "(?:(?i:AS)\\s+)?([A-Za-z_]\\w*)\\s+(?i:AT)\\s+([A-Za-z_]\\w*)")
+    s",$Gap*(?i:UNPIVOT)$Gap+([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])*)$Gap+" +
+    s"(?:(?i:AS)$Gap+)?([A-Za-z_]\\w*)$Gap+(?i:AT)$Gap+([A-Za-z_]\\w*)")
 
   /** Shared guard for PartiQL FROM-item rewrites (comma iteration,
     * SUPER UNPIVOT): the item's path head must be a relation alias —
@@ -1587,13 +1417,18 @@ object DialectShims {
       val head = m.group(1)
       val aliasOk = !ReservedAfterAlias(m.group(3).toUpperCase) &&
         !ReservedAfterAlias(m.group(4).toUpperCase)
-      if (partiqlFromItemBound(sql, m.start, head) && aliasOk) {
+      // no other reading of this item parses, so an unbound head is refused
+      require(!aliasOk || partiqlFromItemBound(sql, m.start, head),
+        s"UNPIVOT $head${m.group(2)}: a SUPER UNPIVOT item's head must be " +
+          "a relation alias bound earlier in the FROM clause")
+      if (aliasOk) {
         val objText = partiqlJsonText(head, m.group(2), "SUPER UNPIVOT", saved)
         val valAlias = m.group(3)
         val keyAlias = m.group(4)
         out.append(sql, last, m.start)
         out.append(s" LATERAL VIEW explode(from_json($objText, " +
-          s"'map<string,string>')) ${keyAlias}_lv AS $keyAlias, $valAlias")
+          s"'map<string,string>')) ${keyAlias}_lv AS $keyAlias, $valAlias" +
+          commentsIn(m.group))
         last = m.end
         aliases += valAlias
       }
@@ -1657,33 +1492,22 @@ object DialectShims {
   def rewriteRedshiftSql(sql: String): String = {
     val (masked, saved) = mask(sql)
     val arr = scala.collection.mutable.ArrayBuffer(saved: _*)
-    val step0 = rewriteSelectTop(masked)
-    val step1 = rewriteRatioToReport(rewriteApproxCount(step0))
-    val step3 = rewriteDateAdd(step1)
-    val step4 = rewriteDateDiff(step3)
-    val step5 = rewriteSysdate(step4)
-    val step6 = rewriteConvertTimezone(step5)
-    val step7 = rewriteQualify(rewriteSimilarTo(step6, arr))
-    val step8 = rewriteToChar(step7, arr)
-    val step9 = rewriteParseFn(step8, arr, "to_date")
-    val step10 = rewriteParseFn(step9, arr, "to_timestamp")
-    val step11 = rewriteRegexpFns(step10, arr)
-    val step12 = rewriteTruncDatepart(step11, arr)
-    val step13 = rewriteJsonExtract(step12, arr)
+    val step1 = renameSparkNamed(rewriteQualify(rewriteSimilarTo(rewriteSysdate(rewriteDateDiff(
+      rewriteDateAdd(rewriteRatioToReport(rewriteApproxCount(rewriteSelectTop(masked)))))), arr)))
     // SUPER/PartiQL last: UNNEST and comma-iteration introduce
     // element aliases whose field refs the path pass then rewrites
-    val (step14, unnestAliases) = rewriteUnnest(step13)
+    val (step2, unnestAliases) = rewriteUnnest(step1)
     // SUPER UNPIVOT first: its `, UNPIVOT x.y AS v AT k` form must not
     // be half-consumed by the comma-iteration pass
-    val (step14b, unpivotAliases) = rewritePartiqlUnpivot(step14, arr)
-    val (step15, iterAliases) = rewritePartiqlIteration(step14b, arr)
+    val (step3, unpivotAliases) = rewritePartiqlUnpivot(step2, arr)
+    val (step4, iterAliases) = rewritePartiqlIteration(step3, arr)
     val elemAliases = unnestAliases ++ unpivotAliases ++ iterAliases
     // wildcard paths BEFORE the scalar path pass: SuperPathRe would
     // otherwise match the `s.doc.lines` prefix of `s.doc.lines[*].q`
     // and leave a dangling `[*].q` in the output
-    val step16 = rewriteWildcardPaths(step15, elemAliases, arr)
+    val step5 = rewriteWildcardPaths(step4, elemAliases, arr)
     val rewritten = rewriteUnnestFieldRefs(
-      rewriteSuperPaths(step16, elemAliases, arr), elemAliases)
+      rewriteSuperPaths(step5, elemAliases, arr), elemAliases)
     unmask(rewritten, arr.toIndexedSeq)
   }
 }

@@ -2,9 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Conv, CurrentTimestamp, Expression, ExpressionInfo, Literal, Sha2, StringInstr, TimestampAdd, TimestampDiff, TruncTimestamp}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, CurrentTimestamp, Expression, ExpressionInfo, Literal, Sha2}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, TimestampType}
 
 import graft.queries._
 
@@ -17,10 +16,9 @@ import graft.queries._
   *
   * `f_sha256` (the one warehouse UDF the reference ships,
   * sql/001_ETL_create_f_sha256.sql:4-11) maps to `Sha2(e, 256)`;
-  * `getdate` to `CurrentTimestamp`. The Redshift function-shaped
-  * shims that [[DialectShims]]' text passes target (`dateadd_days`,
-  * `datediff_days`, `rs_datediff_<unit>`, `charindex`, `strtol`) are
-  * builders here too, so building a session runs no SQL.
+  * `getdate` to `CurrentTimestamp`. The Redshift dialect's
+  * function-shaped shims ([[DialectShims.functions]]) are installed
+  * here too, so building a session runs no SQL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -37,44 +35,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** A shim over fixed argument types: each argument is cast to its
-    * declared type, as a typed SQL function signature would. */
-  private def typed(name: String, types: DataType*)(
-      body: Seq[Expression] => Expression): Seq[Expression] => Expression = args => {
-    if (args.size != types.size) throw new IllegalArgumentException(
-      s"$name takes ${types.size} args, got ${args.size}")
-    body(args.zip(types).map { case (a, t) => Cast(a, t) })
-  }
-
-  /** Redshift DATEDIFF counts BOUNDARY CROSSINGS, not complete
-    * intervals: datediff(day, 23:00, next 01:00) = 1. Truncating both
-    * sides to the unit boundary first makes Spark's complete-interval
-    * timestampdiff count exactly the crossings. One function per unit:
-    * [[DialectShims.rewriteDateDiff]] folds the unit into the name. */
-  private def rsDateDiff(unit: String): (String, Seq[Expression] => Expression) = {
-    val u = unit.toUpperCase
-    s"rs_datediff_$unit" -> typed(s"rs_datediff_$unit", TimestampType, TimestampType) {
-      case Seq(a, b) =>
-        TimestampDiff(u, TruncTimestamp(Literal(u), a), TruncTimestamp(Literal(u), b))
-    }
-  }
-
-  /** Every native function the extension injects, by SQL name. */
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "dateadd_days" -> typed("dateadd_days", IntegerType, TimestampType) {
-      case Seq(n, ts) => TimestampAdd("DAY", n, ts)
-    },
-    "datediff_days" -> typed("datediff_days", TimestampType, TimestampType) {
-      case Seq(a, b) => TimestampDiff("DAY", a, b)
-    },
-    // CHARINDEX's argument order is (needle, haystack), the REVERSE of
-    // instr; both are 1-based with 0 for an absent needle
-    "charindex" -> typed("charindex", StringType, StringType) {
-      case Seq(needle, haystack) => StringInstr(haystack, needle)
-    },
-    "strtol" -> typed("strtol", StringType, IntegerType) {
-      case Seq(str, base) => Cast(Conv(str, base, Literal(10)), LongType)
-    }) ++ DialectShims.CanonicalUnits.map(rsDateDiff) ++ Seq(
+  /** Every native function the extension injects, by SQL name: the
+    * Redshift dialect's [[DialectShims.functions]] (a name Spark
+    * already has installed as `rs_<name>`), then the engine's own. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] =
+    DialectShims.functions.map { case (name, builder) =>
+      DialectShims.sqlName(name) -> builder
+    } ++ Seq(
     "f_sha256" -> (c => Sha2(c.head, Literal(256))),
     "getdate" -> (_ => CurrentTimestamp()),
     "trunc_utf8_bytes" -> (c =>
