@@ -202,13 +202,8 @@ object Cli {
           if (opts.contains("no-staging"))
             wh.loadRelations(rels, maxConcurrency = conc,
               analyzeAfter = doAnalyze, skipCopyAll = skipAll)
-          else if (skipAll) {
-            val r = wh.loadRelations(rels, SchemaPosition.Staging,
-              maxConcurrency = conc, skipCopyAll = true)
-            wh.publish(rels)
-            r
-          } else wh.loadWithStagingAndPublish(rels, maxConcurrency = conc,
-            analyzeAfter = doAnalyze)
+          else wh.loadWithStagingAndPublish(rels, maxConcurrency = conc,
+            analyzeAfter = doAnalyze, skipCopyAll = skipAll)
         results.foreach(r =>
           println(s"[load] ${r.identifier}: ${r.rowcount} rows" +
             (if (r.skipped) " (skip copy)" else "")))

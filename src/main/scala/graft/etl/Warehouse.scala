@@ -49,6 +49,13 @@ final case class VacuumResult(deleted: Seq[String], refused: Seq[String])
   * At 100 TB this matters: publish cost is O(#tables) catalog calls,
   * not O(bytes). Builds themselves are plain distributed writes.
   *
+  * Every build follows one order: write the data at its own location,
+  * write its layout record, check it there (a relation build's
+  * constraints), and only then point the name at it (`registerAt`:
+  * the catalog entry, then the pointer file). A build that fails
+  * before the last step was never visible, so nothing is rolled back;
+  * its orphaned directory is [[vacuum]]'s to reclaim.
+  *
   * The warehouse directory is the one record of published state; the
   * session catalog is a cache of it, filled when a `Warehouse` opens:
   *
@@ -173,9 +180,11 @@ final class Warehouse(
     }
 
   // ------------------------------------------------------ build one
-  /** The reference's `build_one_relation` (load.py:703-744):
-    * create-or-replace, load (COPY stand-in or CTAS insert), verify
-    * constraints, count rows. */
+  /** The reference's `build_one_relation` (load.py:703-744): load
+    * (COPY stand-in or CTAS insert) into a fresh build, verify its
+    * constraints there, and only then point the name at it. A build
+    * that fails its check is never published; its directory is left
+    * for [[vacuum]]. */
   def buildOneRelation(rel: Relation, pos: SchemaPosition.Value = SchemaPosition.Standard,
                        skipCopy: Boolean = false,
                        inRun: Option[Set[String]] = None,
@@ -194,47 +203,35 @@ final class Warehouse(
             else (sourceDataFrame(design), () => ())
           // everything from here on runs under the cleanup's finally:
           // the identity build above already persisted its frames, so
-          // ANY exit path — NA-row construction, pointer read, write,
-          // constraint check — must release them
+          // ANY exit path — NA-row construction, write, constraint
+          // check, registration — must release them
           val rowcount = try {
           val hasNaRow = !skipCopy && naRowShape(design)
           val out = if (hasNaRow) withNaRow(design, df) else df
-          // Constraints are verified against the WRITTEN table, as
-          // the reference does (load.py:564-634 queries the loaded
-          // relation): checking the DataFrame pre-write would execute
-          // the whole CTAS/COPY plan twice. A failing check must then
-          // UNDO the registration — publish() promotes whatever
-          // staging location exists, and a direct standard build has
-          // already re-pointed the live name — so the pointer is
-          // restored to the pre-build location (or dropped if the
-          // relation is new) before the error propagates. The
-          // engine-generated NA row (T3) is excluded from the check —
-          // identity keys start at 1, so sk=0 IS the NA row — else a
-          // real source key 0 would false-positive against it.
-          val prevLocation = readPointer(target)
-          val rowcount0 = writeTable(target, out, Some(design))
+          // Constraints are verified against the WRITTEN build, as the
+          // reference queries the loaded relation (load.py:564-634):
+          // checking the DataFrame pre-write would execute the whole
+          // CTAS/COPY plan twice. The build is read at its own location
+          // and the name moves only once the check passes, so a reader
+          // never sees a build that fails it. The engine-generated NA
+          // row (T3) is excluded from the check — identity keys start
+          // at 1, so sk=0 IS the NA row — else a real source key 0
+          // would false-positive against it.
+          val (loc, rows) = writeBuild(target, out, Some(design))
           if (!skipCopy) {
-            val written = spark.table(target.quoted)
+            val written = readBuild(loc)
             val checked = (design.identityColumn, hasNaRow) match {
               case (Some(ic), true) => written.filter(col(ic.name) =!= 0)
               // identity-less dim: no column marks the NA row in the
-              // written table — check the pre-NA frame (re-executes
+              // written build — check the pre-NA frame (re-executes
               // the plan, but only for this rare design shape)
               case (None, true) => df
               case _ => written
             }
-            try verifyConstraints(checked, design)
-            catch { case e: FailedConstraintError =>
-              prevLocation match {
-                case Some(loc) => registerAt(target, loc)
-                case None =>
-                  spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
-                  deletePointer(target)
-              }
-              throw e
-            }
+            verifyConstraints(checked, design)
           }
-          rowcount0
+          registerAt(target, loc)
+          rows
           } finally ctasCleanup()   // drop the identity build's cache
           BuildResult(rel.identifier, if (design.isCtas) "ctas" else "table",
             rowcount, skipCopy)
@@ -306,47 +303,50 @@ final class Warehouse(
     * (Redshift's analog is the slice count). */
   val BucketCount = 8
 
-  /** Write as an external parquet table at a fresh versioned location
-    * and (re-)register it — DROP+CREATE like the reference's
-    * create_or_replace_relation (T7, load.py:342-374).
+  /** Write `df` as a new build of `target` and point the name at it:
+    * [[writeBuild]], then [[registerAt]]. Callers that check a build
+    * before publishing it ([[buildOneRelation]]) run the two steps
+    * themselves. Returns the rows written. */
+  def writeTable(target: TableName, df: DataFrame,
+                 design: Option[TableDesign] = None): Long = {
+    val (loc, rows) = writeBuild(target, df, design)
+    registerAt(target, loc)
+    rows
+  }
+
+  /** Write `df` at a fresh versioned location of `target`, then its
+    * layout record; no catalog entry or pointer of `target` moves.
+    * Returns the location and the rows written.
     *
     * A design `distribution` key maps to Spark bucketing (SURVEY
     * §1.4: distkey → bucketBy): both sides of a join bucketed on the
     * key skip the shuffle entirely — the Redshift KEY-distribution
     * co-location property. `compound_sort` maps to sortBy within
     * buckets (sortkey). */
-  def writeTable(target: TableName, df: DataFrame,
-                 design: Option[TableDesign] = None): Long = {
-    val loc = dataLocation(target, buildCounter.incrementAndGet())
+  private def writeBuild(target: TableName, df: DataFrame,
+                         design: Option[TableDesign]): (String, Long) = {
+    val buildId = buildCounter.incrementAndGet()
+    val loc = dataLocation(target, buildId)
     // S11 load diagnostics for the monitor's finish event (keyed by
     // output location, so parallel D5 builds never cross-read)
     val metrics = Telemetry.measureWrite(spark, loc) {
       val distKeys = design.flatMap(_.distribution).getOrElse(Seq.empty)
       if (distKeys.nonEmpty) {
+        // only saveAsTable writes bucketed files: it writes them under
+        // a scratch name, whose declared layout is recorded before the
+        // entry goes (an EXTERNAL entry: its files stay)
         ensureDatabase(target.schema)
-        // the bucketed path must DROP before saveAsTable; if the write
-        // then fails (executor OOM, source error) the relation would be
-        // gone from the catalog while its old data and pointer are
-        // intact — re-declare the previous build, exactly as its record
-        // says it was written, before rethrowing
-        val prevLoc = readPointer(target)
-        spark.sql(s"DROP TABLE IF EXISTS ${target.quoted}")
+        val scratch = TableName(target.schema, s"${target.table}__build_$buildId")
         try {
           val w0 = df.write.mode("overwrite").format("parquet")
             .option("path", loc)
             .bucketBy(BucketCount, distKeys.head, distKeys.tail: _*)
           val sorted = design.map(_.sortKeys).filter(_.nonEmpty)
             .map(sk => w0.sortBy(sk.head, sk.tail: _*)).getOrElse(w0)
-          sorted.saveAsTable(target.quoted)
-        } catch {
-          case e: Throwable =>
-            try prevLoc.foreach(declare(target, _))
-            catch { case re: Throwable => e.addSuppressed(re) }
-            throw e
-        }
-        // saveAsTable declared the layout: record what it declared
-        writeLayout(loc, Layout.of(spark.sessionState.catalog.getTableMetadata(ident(target))))
-        writePointer(target, loc)
+          sorted.saveAsTable(scratch.quoted)
+          writeLayout(loc, Layout.of(spark.sessionState.catalog.getTableMetadata(ident(scratch))))
+        } finally spark.sessionState.catalog.dropTable(ident(scratch),
+          ignoreIfNotExists = true, purge = false)
       } else {
         val partCols = design.map(_.partitionBy).getOrElse(Seq.empty)
         val zCols = design.map(_.interleavedSort).getOrElse(Seq.empty)
@@ -406,17 +406,20 @@ final class Warehouse(
         val parts = partCols.flatMap(c => fields.find(_.name.equalsIgnoreCase(c)))
         writeLayout(loc, Layout(StructType(fields.filterNot(parts.contains) ++ parts),
           parts.map(_.name), None))
-        registerAt(target, loc)
       }
     }
     monitor.attachMetrics(metrics)
     // Rowcount from the write command's own metrics — re-scanning the
-    // table just to count it would read every build's output twice
+    // build just to count it would read every build's output twice
     // (the reference likewise reads stl_load_commits, not the table).
     // Fallback scan only if the listener missed the build.
-    metrics.map(_.rowsWritten)
-      .getOrElse(spark.table(target.quoted).count())
+    (loc, metrics.map(_.rowsWritten).getOrElse(readBuild(loc).count()))
   }
+
+  /** The build at `location`, read with its recorded schema: no
+    * inference, so a string partition value such as '01' stays one. */
+  private def readBuild(location: String): DataFrame =
+    spark.read.schema(layoutAt(location).schema).parquet(location)
 
   /** Z-order clustering for `interleaved_sort` writes: normalize each
     * column to `[0, 2^bits)` over its P01..P99 range (ONE
@@ -758,21 +761,6 @@ final class Warehouse(
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(hp, s"_applied_$tag")
     if (fs.exists(marker)) return false
-    // Upgrade path: before the hash suffix existed, a special-char tag
-    // was recorded under its plain sanitized name. Honor that legacy
-    // marker (the batch IS applied — re-applying would double-count it)
-    // and stamp the new-scheme marker alongside so the next replay hits
-    // the fast path. Caveat, documented: if TWO distinct legacy tags
-    // collided on one sanitized name, only the first was ever applied —
-    // that data loss already happened under the old scheme and cannot
-    // be distinguished here; new-scheme tags never collide.
-    if (tag != sanitized) {
-      val legacy = new org.apache.hadoop.fs.Path(hp, s"_applied_$sanitized")
-      if (fs.exists(legacy)) {
-        fs.create(marker).close()
-        return false
-      }
-    }
     val staging = new org.apache.hadoop.fs.Path(hp, s"_staging_$tag")
     df.write.mode("overwrite").parquet(staging.toString)
     // clear any partial earlier attempt, then move the staged files
@@ -1399,8 +1387,10 @@ final class Warehouse(
     * standard schemas are untouched — staging IS the isolation. */
   def loadWithStagingAndPublish(relations: Seq[Relation],
                                 maxConcurrency: Int = 4,
-                                analyzeAfter: Boolean = false): Seq[BuildResult] = {
-    val results = loadRelations(relations, SchemaPosition.Staging, maxConcurrency)
+                                analyzeAfter: Boolean = false,
+                                skipCopyAll: Boolean = false): Seq[BuildResult] = {
+    val results = loadRelations(relations, SchemaPosition.Staging, maxConcurrency,
+      skipCopyAll = skipCopyAll)
     publish(relations)
     // Stats must attach to the PUBLISHED catalog entries: the staging
     // names are dropped by the promote, taking any stats with them.
@@ -1577,21 +1567,14 @@ final class Warehouse(
     } catch { case e: Throwable =>
       // the "rollback": restore every already-swapped table to its
       // pre-update location; a table that did not exist before the
-      // update is dropped again. The FAILING table is restored too:
-      // buildOneRelation undoes its own registration only on a
-      // constraint failure, but a bucketed table's write path runs
-      // DROP TABLE before saveAsTable, so a mid-write failure would
-      // otherwise leave it dropped (registerAt is idempotent — re-
-      // registering a table the failure never touched is a no-op).
-      prior.filter { case (r, _) =>
-        done.contains(r.identifier) ||
-          (done.size < tables.size && r.identifier == tables(done.size).identifier)
-      }.foreach {
-          case (r, Some(loc)) => registerAt(r.name, loc)
-          case (r, None) =>
-            spark.sql(s"DROP TABLE IF EXISTS ${r.name.quoted}")
-            deletePointer(r.name)
-        }
+      // update is dropped again. The failing build never moved its
+      // name, so there is nothing of it to restore.
+      prior.filter { case (r, _) => done.contains(r.identifier) }.foreach {
+        case (r, Some(loc)) => registerAt(r.name, loc)
+        case (r, None) =>
+          spark.sql(s"DROP TABLE IF EXISTS ${r.name.quoted}")
+          deletePointer(r.name)
+      }
       throw e
     }
   }
@@ -1649,49 +1632,6 @@ final class Warehouse(
         Thread.sleep(pollMs)
       }
     }
-  }
-
-  // ------------------------------------------------------------ D6
-  /** Event-driven load ("concurrent extract", load.py:790-988): the
-    * reference polls DynamoDB for per-table extract-finish events and
-    * loads each table as its extract lands, with an idle timeout.
-    * Here the event store is a marker directory: the extractor drops
-    * `<schema>.<table>.extracted`; this poller builds each source as
-    * its marker appears, then runs transformations in order. */
-  def eventDrivenLoad(relations: Seq[Relation], markerDir: String,
-                      idleTimeoutMs: Long = 3600 * 1000L,
-                      pollMs: Long = 100L): Seq[BuildResult] = {
-    val ordered = Dag.orderByDependencies(relations)
-    createSchemas(ordered, SchemaPosition.Standard)
-    val sources = ordered.filterNot(_.isTransformation)
-    val results = mutable.Buffer[BuildResult]()
-    val pending = mutable.Set[String](sources.map(_.identifier): _*)
-    // Markers through the Hadoop FS API (not java.nio): the marker
-    // directory lives wherever the extractor runs — HDFS or an object
-    // store in production, file: in tests — and all schemes must work.
-    val markerBase = new org.apache.hadoop.fs.Path(markerDir)
-    val markerFs =
-      markerBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var lastProgress = System.currentTimeMillis()
-    while (pending.nonEmpty) {
-      val arrived = pending.toSeq.sorted.filter { id =>
-        markerFs.exists(
-          new org.apache.hadoop.fs.Path(markerBase, s"$id.extracted"))
-      }
-      if (arrived.nonEmpty) {
-        arrived.foreach { id =>
-          results += buildOneRelation(sources.find(_.identifier == id).get)
-          pending -= id
-        }
-        lastProgress = System.currentTimeMillis()
-      } else if (System.currentTimeMillis() - lastProgress > idleTimeoutMs) {
-        throw new RequiredRelationLoadError(
-          s"idle timeout waiting for extract events: ${pending.toSeq.sorted.mkString(", ")}")
-      } else Thread.sleep(pollMs)
-    }
-    ordered.filter(_.isTransformation).foreach(rel =>
-      results += buildOneRelation(rel))
-    results.toSeq
   }
 
   // ------------------------------------------------------------ L6

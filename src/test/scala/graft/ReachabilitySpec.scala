@@ -100,7 +100,6 @@ object ReachabilitySpec {
     "Validate.upstreamConstraints" -> "SURVEY C4: upstream constraint validation",
     "Validate.reloadConsistency" -> "SURVEY C7: reload-consistency check",
     "Dag.setRequired" -> "SURVEY D2: required-relation propagation",
-    "Warehouse.eventDrivenLoad" -> "SURVEY D6: event-driven load",
     "Retry" -> "SURVEY D8: retry with backoff, not yet wired around COPY and INSERT",
     "Warehouse.restoreFromBackup" -> "SURVEY L4: restore standard from backup",
     "Explain.broadcastJoins" -> "test hook for the broadcast-join plan gates in ExplainSpec and QueryHelpersSpec",

@@ -268,28 +268,6 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(results.map(_.identifier) == Seq("src.nation", "rep.top_n"))
   }
 
-  test("D6: event-driven load builds sources as markers land, then transforms") {
-    val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_evt_").toString, sfDir)
-    val markerDir = Files.createTempDirectory("graft_markers_").toString
-    val writer = new Thread(() => {
-      Thread.sleep(150)
-      Files.write(Paths.get(markerDir, "src.nation.extracted"), Array.emptyByteArray)
-    })
-    writer.start()
-    val results = wh.eventDrivenLoad(Seq(srcNation, repTop), markerDir,
-      idleTimeoutMs = 10000, pollMs = 20)
-    writer.join()
-    assert(results.map(_.identifier) == Seq("src.nation", "rep.top_n"))
-    // idle timeout fires when no marker ever arrives
-    val wh2 = new Warehouse(spark,
-      Files.createTempDirectory("graft_evt2_").toString, sfDir)
-    intercept[RequiredRelationLoadError] {
-      wh2.eventDrivenLoad(Seq(srcNation), Files.createTempDirectory("empty_").toString,
-        idleTimeoutMs = 200, pollMs = 20)
-    }
-  }
-
   test("L6: ANALYZE computes statistics on a built table") {
     val wh = new Warehouse(spark,
       Files.createTempDirectory("graft_an_").toString, sfDir)

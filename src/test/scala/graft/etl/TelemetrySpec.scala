@@ -148,8 +148,10 @@ class TelemetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       finally walk.close()
     }
     assert(sources.exists(_._1.getFileName.toString == "Telemetry.scala"))
-    // ScaleProbeSpec (env-gated) needs every task's duration
-    val allowed = Set("Telemetry.scala", "ScaleProbeSpec.scala", "TelemetrySpec.scala")
+    // ScaleProbeSpec (env-gated) needs every task's duration, and
+    // WarehouseSpec the catalog's create/drop/alter events of a build
+    val allowed = Set("Telemetry.scala", "ScaleProbeSpec.scala", "TelemetrySpec.scala",
+      "WarehouseSpec.scala")
     val tokens = Seq("addSparkListener", "listenerManager.register",
       "extends SparkListener", "extends QueryExecutionListener",
       "extends org.apache.spark.scheduler.SparkListener",

@@ -928,9 +928,9 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("update rollback restores the FAILING bucketed table (dropped pre-write)") {
     val wh = freshWarehouse()
-    // a distribution-keyed table: writeTable DROPs it before the
-    // bucketed saveAsTable, so a mid-write failure leaves it GONE
-    // unless the update rollback restores the failing table too
+    // a distribution-keyed table: its build writes under a scratch
+    // name and never touches the live one, so a mid-write failure
+    // leaves it registered at its pre-update build, with no rollback
     def bkt(query: String) = rel(
       s"""name: rep.bkt_t
          |source_name: CTAS
@@ -948,7 +948,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     wh.loadWithStagingAndPublish(Seq(srcNation, bkt(good)))
     assert(spark.table("`rep`.`bkt_t`").count() == 5)
     // analysis passes; the failure fires at EXECUTION time (inside
-    // saveAsTable, after the DROP) — raise_error behind a non-foldable
+    // saveAsTable) — raise_error behind a non-foldable
     // predicate cannot be optimized away and throws per-row
     val bad = "SELECT n_nationkey, IF(n_nationkey > 100, n_name, " +
       "CAST(raise_error('mid-write failure') AS STRING)) AS n_name " +
@@ -961,14 +961,124 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       "failing bucketed table must be re-registered by the rollback")
     assert(spark.table("`rep`.`bkt_t`").count() == 5,
       "failing table must serve its pre-update data")
-    // the old build WAS bucketed under this same design, so the
-    // restore keeps the bucket spec (registerAt corroborates it
-    // against the bucket-named files — faithful restore, shuffle
-    // elision preserved)
+    // the entry is still the old build's, bucket spec included
+    // (shuffle elision preserved)
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier("bkt_t", Some("rep")))
     assert(meta.bucketSpec.isDefined,
       s"same-design restore keeps the corroborated bucketing: $meta")
+  }
+
+  /** The table events (create, drop, alter and their pre-events) the
+    * catalog posts to the listener bus for `t` while `body` runs. */
+  private def tableEvents(t: TableName)(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.catalyst.catalog.TableEvent
+    import org.apache.spark.sql.graft.Bus
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case te: TableEvent if te.database == t.schema && te.name == t.table =>
+          seen.add(te.getClass.getSimpleName)
+        case _ =>
+      }
+    }
+    assert(Bus.drain(spark.sparkContext, 10000))
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      assert(Bus.drain(spark.sparkContext, 10000))
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  test("a build that fails is never published: no catalog event for its name") {
+    val dir = Files.createTempDirectory("graft_wh_test_").toString
+    val wh = new Warehouse(spark, dir, sfDir)
+    wh.loadRelations(Seq(srcNation))
+    // (a) a standard-position rebuild that breaks its primary key
+    def keyed(key: String) = rel(
+      s"""name: rep.keyed
+         |source_name: CTAS
+         |depends_on: [src.nation]
+         |columns:
+         |  - name: k
+         |    type: int
+         |    not_null: true
+         |constraints:
+         |  - primary_key: [k]
+         |query: SELECT $key AS k FROM src.nation
+         |""".stripMargin)
+    wh.buildOneRelation(keyed("CAST(n_nationkey AS INT)"))
+    val keyedT = TableName.parse("rep.keyed")
+    val pointer = java.nio.file.Paths.get(dir, "pointers", "rep.keyed")
+    val before = Files.readAllBytes(pointer)
+    val onKeyed = tableEvents(keyedT) {
+      intercept[FailedConstraintError](
+        wh.buildOneRelation(keyed("CAST(n_nationkey % 5 AS INT)")))
+    }
+    assert(onKeyed.isEmpty, s"a failing check moved the name: $onKeyed")
+    assert(Files.readAllBytes(pointer).sameElements(before), "the pointer moved")
+    assert(spark.table(keyedT.quoted).count() == 25)
+    // (b) a bucketed build that fails at execution time, inside its write
+    def bkt(query: String) = rel(
+      s"""name: rep.bkt_ev
+         |source_name: CTAS
+         |depends_on: [src.nation]
+         |columns:
+         |  - name: n_nationkey
+         |    type: int
+         |  - name: n_name
+         |    type: string
+         |attributes:
+         |  distribution: [n_nationkey]
+         |query: $query
+         |""".stripMargin)
+    val good = "SELECT n_nationkey, n_name FROM src.nation WHERE n_nationkey < 5"
+    wh.buildOneRelation(bkt(good))
+    val bktT = TableName.parse("rep.bkt_ev")
+    def bucketed(): Boolean = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(bktT.table, Some(bktT.schema)))
+      .bucketSpec.isDefined
+    val onFailed = tableEvents(bktT) {
+      intercept[Exception](wh.buildOneRelation(bkt(
+        "SELECT n_nationkey, IF(n_nationkey > 100, n_name, " +
+          "CAST(raise_error('mid-write failure') AS STRING)) AS n_name FROM src.nation")))
+    }
+    assert(onFailed.isEmpty, s"a failing bucketed write touched the name: $onFailed")
+    assert(bucketed() && spark.table(bktT.quoted).count() == 5)
+    // (c) a passing bucketed rebuild of the same layout re-points the
+    // entry in place: the name is never missing
+    val onPassed = tableEvents(bktT)(wh.buildOneRelation(bkt(good)))
+    assert(!onPassed.contains("DropTableEvent"), s"the rebuild dropped the name: $onPassed")
+    assert(bucketed() && spark.table(bktT.quoted).count() == 5)
+  }
+
+  test("a partitioned build is checked with its recorded partition types") {
+    val wh = freshWarehouse()
+    def parted(rows: String) = rel(
+      s"""name: rep.parted
+         |source_name: CTAS
+         |columns:
+         |  - name: k
+         |    type: int
+         |  - name: p
+         |    type: string
+         |constraints:
+         |  - primary_key: [p, k]
+         |attributes:
+         |  partition_by: [p]
+         |query: SELECT * FROM VALUES $rows AS t(k, p)
+         |""".stripMargin)
+    wh.buildOneRelation(parted("(1, '01'), (1, '02')"))
+    assert(spark.table("`rep`.`parted`").select("p").collect().map(_.getString(0))
+      .sorted.toSeq == Seq("01", "02"))
+    // inferred from the directory names, '01' would read as the int 1
+    val e = intercept[FailedConstraintError](
+      wh.buildOneRelation(parted("(1, '01'), (1, '01'), (2, '02')")))
+    assert(e.getMessage.contains("(01,1,"), e.getMessage)
   }
 
   test("writeTable's auto layout keeps a top-level column with a dot in its name") {
@@ -991,10 +1101,10 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = TableName.parse("rep.gained_dist")
     wh.writeTable(t, Seq((1, "a"), (2, "b")).toDF("n_nationkey", "n_name"))
     val plainLoc = wh.readPointer(t).get
-    // the design then GAINS distribution; a failing bucketed rebuild
-    // rolls back to the plain v1 files. Declaring CLUSTERED BY over
-    // them would let bucketed joins skip their required shuffle —
-    // wrong rows, no error — so the restore must register plain.
+    // the design then GAINS distribution, and its bucketed rebuild
+    // fails: the name must still serve the plain v1 files. Declaring
+    // CLUSTERED BY over them would let bucketed joins skip their
+    // required shuffle — wrong rows, no error.
     val gained = TableDesign.load(
       """name: rep.gained_dist
         |source_name: CTAS
@@ -1016,8 +1126,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(meta.bucketSpec.isEmpty,
       s"plain v1 files must not be declared bucketed: ${meta.bucketSpec}")
     assert(spark.table(t.quoted).count() == 2, "serves the v1 data")
-    // scheme-insensitive: registerAt re-points with the catalog's
-    // file:// form while the original pointer was scheme-less
+    // scheme-insensitive: the pointer may carry a file:// form
     def bare(p: String) = p.stripPrefix("file://")
     assert(wh.readPointer(t).map(bare).contains(bare(plainLoc)),
       s"pointer back at v1: ${wh.readPointer(t)} vs $plainLoc")
@@ -1789,18 +1898,17 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!wh.appendToTableIdempotent(t, Seq((5L, "e")).toDF("id", "v"), "b.1"))
     assert(!wh.appendToTableIdempotent(t, Seq((6L, "f")).toDF("id", "v"), "b:1"))
     assert(spark.table(t.quoted).count() == 6)
-    // UPGRADE path: a batch applied under the pre-hash-suffix scheme
-    // left only `_applied_<sanitized>` — a replay after the upgrade
-    // must honor that legacy marker (no double-count) and stamp the
-    // new-scheme marker so subsequent replays hit the fast path
-    fs.create(new org.apache.hadoop.fs.Path(loc, "_applied_b_2")).close()
-    assert(!wh.appendToTableIdempotent(t, Seq((7L, "g")).toDF("id", "v"), "b.2"),
-      "legacy sanitized-only marker must count as applied")
-    assert(spark.table(t.quoted).count() == 6,
-      "legacy-marked batch must not be re-applied after the upgrade")
-    assert(fs.listStatus(loc).map(_.getPath.getName)
-        .exists(n => n.startsWith("_applied_b_2-") && n != "_applied_b_2"),
-      "replay over a legacy marker must stamp the new-scheme marker")
+    // a plain tag and a special-char tag that sanitizes to it are
+    // distinct batches too: 'b.1' must not take 'b_1's marker for its own
+    val plain = TableName.parse("dedup.idemp_plain")
+    wh.writeTable(plain, Seq((1L, "a")).toDF("id", "v"))
+    assert(wh.appendToTableIdempotent(plain, Seq((2L, "b")).toDF("id", "v"), "b_1"))
+    assert(wh.appendToTableIdempotent(plain, Seq((3L, "c")).toDF("id", "v"), "b.1"))
+    assert(spark.table(plain.quoted).count() == 3,
+      "a tag and its sanitized twin must both apply")
+    assert(!wh.appendToTableIdempotent(plain, Seq((2L, "b")).toDF("id", "v"), "b_1"))
+    assert(!wh.appendToTableIdempotent(plain, Seq((3L, "c")).toDF("id", "v"), "b.1"))
+    assert(spark.table(plain.quoted).count() == 3)
   }
 
   test("appendToTableIdempotent: a tag that PREFIXES another must not eat its files") {
