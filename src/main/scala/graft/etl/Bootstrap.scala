@@ -83,10 +83,17 @@ object Bootstrap {
       })
     }
     walk(spark.sessionState.sqlParser.parsePlan(query))
-    spans.sortBy(-_._1).foldLeft(query) { case (q, (s, e, rep)) =>
-      q.substring(0, s) + rep + q.substring(e + 1)
-    }
+    splice(query, spans.toSeq)
   }
+
+  /** `text` with each edit `(start, stop, replacement)` applied back to
+    * front: characters `start..stop` (parser origin indexes, inclusive)
+    * give way to the replacement, and `stop = start - 1` inserts. Edits
+    * must not overlap; insertions at one offset keep their order. */
+  private[etl] def splice(text: String, edits: Seq[(Int, Int, String)]): String =
+    edits.zipWithIndex.sortBy { case ((s, _, _), i) => (-s, -i) }.foldLeft(text) {
+      case (q, ((s, e, rep), _)) => q.substring(0, s) + rep + q.substring(e + 1)
+    }
 
   // ------------------------------------------------------------- B1
   /** Table discovery (bootstrap.py:27-82): list a database's tables,

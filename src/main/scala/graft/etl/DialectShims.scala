@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
   * | DATEDIFF(unit, a, b) | text (keyword unit) + builder | rs_datediff_<unit>(a, b) |
   * | SYSDATE | text (parenless) | current_timestamp() |
   * | SIMILAR TO, QUALIFY, SELECT TOP n, APPROXIMATE COUNT(DISTINCT), RATIO_TO_REPORT | text (syntax) | RLIKE, filtered subquery, LIMIT, approx_count_distinct, x / SUM(x) OVER |
-  * | SUPER/PartiQL paths, UNNEST, comma iteration, UNPIVOT, `[*]` | text (syntax, or a path over a string column) | get_json_object, LATERAL VIEW explode(from_json), exists |
+  * | UNNEST, SUPER `UNPIVOT ... AT k`, `AS e AT i`, `[*]` | text (syntax) | LATERAL VIEW explode(from_json), exists |
+  * | SUPER/PartiQL paths, comma iteration `FROM s, s.path AS e` | Spark's parse (scope per query block) | get_json_object, LATERAL VIEW explode(from_json) |
   * | NVL, LEN, LISTAGG ... WITHIN GROUP | Spark built-ins (ordering and NULL semantics included) | — |
   */
 object DialectShims {
@@ -272,7 +273,8 @@ object DialectShims {
     * This keeps inline window expressions legal (they move into the
     * subquery's SELECT list) and leaves ORDER BY/LIMIT at the outer
     * level where QUALIFY semantics put them (applied AFTER the
-    * filter). Only TOP-LEVEL QUALIFYs rewrite (depth-0 scan over
+    * filter); a set operation's next branch ends the predicate too.
+    * Only TOP-LEVEL QUALIFYs rewrite (depth-0 scan over
     * masked text, innermost-first for nested subqueries); a QUALIFY
     * inside a string literal is masked and never matches. */
   private[etl] def rewriteQualify(sql: String): String = {
@@ -314,7 +316,7 @@ object DialectShims {
       j -= 1
     }
     if (selStart < 0 || !lower.regionMatches(selStart, "select", 0, 6)) return sql
-    // predicate runs to the first depth-0 ORDER BY / LIMIT / closing
+    // predicate runs to the first depth-0 ORDER BY / LIMIT / set operation / closing
     // paren / end after QUALIFY
     var k = at + 7
     depth = 0
@@ -326,12 +328,15 @@ object DialectShims {
           if (depth == 0) predEnd = k else { depth -= 1; k += 1 }
         case _ =>
           if (depth == 0 && (OrderByRe.matcher(lower).region(k, lower.length).lookingAt() ||
-              lower.regionMatches(k, "limit", 0, 5)))
+              lower.regionMatches(k, "limit", 0, 5) ||
+              SetOpRe.matcher(lower).useTransparentBounds(true).region(k, lower.length).lookingAt()))
             predEnd = k
           else k += 1
       }
     }
     if (predEnd < 0) predEnd = sql.length
+    // the spacing before what follows stays with it
+    while (predEnd > at + 7 && sql.charAt(predEnd - 1).isWhitespace) predEnd -= 1
     // strip, not trim: trim would also eat the NUL that closes a
     // masked `--` comment's placeholder
     val pred = keepLineEnd(sql.substring(at + 7, predEnd).strip)
@@ -362,6 +367,8 @@ object DialectShims {
   }
 
   private val OrderByRe = java.util.regex.Pattern.compile(s"order$Gap+by\\b")
+
+  private val SetOpRe = java.util.regex.Pattern.compile("(?<!\\w)(?:union|intersect|except|minus)\\b")
 
   /** `s` with a line break after it when it ends in a `--` comment:
     * text spliced in after `s` would otherwise become comment text. */
@@ -759,16 +766,6 @@ object DialectShims {
   private def renameSparkNamed(sql: String): String =
     SparkNamedCallRe.replaceAllIn(sql, "rs_$1")
 
-  /** Register a literal INJECTED by a rewrite pass and return its
-    * placeholder. Injected literals must never appear raw in masked
-    * text: a json path such as '$.a.b.c' holds a dotted run the SUPER
-    * path pass would match inside the literal. */
-  private def maskLit(saved: scala.collection.mutable.ArrayBuffer[String],
-                      content: String): String = {
-    saved += content
-    s"'\u0000${saved.size - 1}\u0000'"
-  }
-
   // ------------------------------------- literal/comment-safe rewriting
   /** Mask string literals, double-quoted identifiers, and comments
     * with indexed placeholders (`NUL idx NUL`, delimiters kept) so the
@@ -928,230 +925,145 @@ object DialectShims {
     *   - `FROM t, UNNEST(expr) [AS] x` / `CROSS JOIN UNNEST(expr) x`
     *     → `FROM t LATERAL VIEW explode(from_json(expr,
     *       'array<string>')) x_lv AS x`
-    *   - `x.field` on an UNNEST alias → `get_json_object(x, '$.field')`
+    *   - `x.field` on an element alias → `get_json_object(x, '$.field')`
     *
-    * Contract of the syntax-only rewrite (no catalog is consulted):
-    * a dotted reference with ≥ 3 components — or ≥ 2 plus a `[n]`
-    * index — is a PartiQL path ONLY when its head is a relation
-    * alias (or single-part relation name, or UNNEST/iteration
-    * element alias) bound by a FROM/JOIN item of the statement —
-    * the same scope rule Redshift uses to tell `s.doc.lines` from a
-    * three-part catalog name. A fully-qualified column reference
-    * whose head is a SCHEMA (`SELECT sch.t.col FROM sch.t`) binds no
-    * single-part alias, so it stays a qualified reference; relation
-    * positions (after FROM/JOIN) are excluded outright. Paths
-    * yield STRINGS (scalar json values unquoted, nested values as
-    * their json text — both Redshift's `::text` behavior and
-    * Spark's `get_json_object`); numeric use casts explicitly, as
-    * SUPER queries do. Array elements from UNNEST arrive as json
-    * TEXT (Spark's JSON parser serializes non-scalar elements back
-    * to json when the target type is string), so element paths
-    * compose. */
-  private val UnnestRe = java.util.regex.Pattern.compile(
-    s"(?i)(,|\\bCROSS$Gap+JOIN\\b)$Gap*UNNEST$Gap*\\(")
+    * Two stages. Text passes rewrite only the syntax Spark's parser
+    * rejects — UNNEST, SUPER `UNPIVOT ... AT k`, `AS e AT i` and `[*]`
+    * — into LATERAL VIEWs and `exists()` over the paths as written,
+    * placing each LATERAL VIEW after its block's last FROM item. Scope
+    * then comes from Spark's parse ([[resolvePaths]]): a dotted
+    * reference with ≥ 3 components — or ≥ 2 plus a `[n]` index — is a
+    * PartiQL path ONLY when its head binds, in its own query block or
+    * an enclosing one, to a relation alias, a single-part relation or
+    * CTE name, or an element alias a text pass emitted (where 2
+    * components suffice) — the same scope rule Redshift uses to tell
+    * `s.doc.lines` from a three-part catalog name. A two-part relation
+    * name (`FROM sch.t`) binds no head, so `sch.t.col` stays a column
+    * reference; UNION branches and CTE bodies are blocks of their own;
+    * the parser binds lambda variables itself. A comma-listed FROM item
+    * `s.path [AS] e` whose head binds earlier is iteration. An
+    * unaliased SELECT-list path keeps the name Redshift gives it, its
+    * last attribute. Paths yield STRINGS (scalar json values unquoted, nested values as their
+    * json text — both Redshift's `::text` behavior and Spark's
+    * `get_json_object`); numeric use casts explicitly, as SUPER queries
+    * do. Array elements arrive as json TEXT (Spark's JSON parser
+    * serializes non-scalar elements back to json when the target type
+    * is string), so element paths compose. */
+  private val Name = "[A-Za-z_]\\w*"
+  private val PathSyntax = s"$Name(?:\\.$Name|\\[\\d+\\])*"
 
-  private[etl] def rewriteUnnest(sql: String): (String, Set[String]) = {
-    val m = UnnestRe.matcher(sql)
-    if (!m.find()) return (sql, Set.empty)
-    var depth = 1
-    var i = m.end
-    while (depth > 0 && i < sql.length) {
-      sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
+  /** The PartiQL FROM items Spark's parser rejects: `, UNNEST(x) [AS]
+    * e` (or `CROSS JOIN UNNEST`), SUPER `, UNPIVOT s.doc AS v AT k`
+    * (one row per object attribute) and `, s.path [AS] e AT i`
+    * (iteration with a 0-based ordinal, Redshift's native spelling). */
+  private val FromItemRe = java.util.regex.Pattern.compile(
+    s"(?i)(?:,|\\bCROSS$Gap+JOIN\\b(?=$Gap*UNNEST$Gap*\\())$Gap*(?:UNNEST$Gap*(\\()|" +
+      s"(UNPIVOT$Gap+)?($PathSyntax)$Gap+(?:AS$Gap+)?($Name)$Gap+AT$Gap+($Name))")
+
+  /** A PartiQL item a text pass emitted as a LATERAL VIEW: its element
+    * alias, and the refusal for a path head that binds nothing (None
+    * where any expression may stand, as in UNNEST). */
+  private final case class Emitted(element: String, refusal: Option[String])
+
+  /** Rewrite the FROM items of [[FromItemRe]], left to right (masked
+    * text), each to a LATERAL VIEW after its block's last FROM item
+    * (Spark allows LATERAL VIEW only after the whole FROM list); the
+    * paths stay as written for [[resolvePaths]]. Returns the emitted
+    * items by LATERAL VIEW name. */
+  private def rewriteFromItems(sql: String): (String, Map[String, Emitted]) = {
+    var out = sql
+    var from = 0
+    val emitted = Map.newBuilder[String, Emitted]
+    var m = FromItemRe.matcher(out)
+    while (m.find(from)) {
+      val (itemEnd, lateral, view, item, dropped) =
+        if (m.group(1) != null) {
+          var depth = 1
+          var i = m.end
+          while (depth > 0 && i < out.length) {
+            out.charAt(i) match {
+              case '(' => depth += 1
+              case ')' => depth -= 1
+              case _ => ()
+            }
+            i += 1
+          }
+          require(depth == 0, "UNNEST(...): unbalanced parentheses")
+          val arg = out.substring(m.end, i - 1)
+          // two spellings: `UNNEST(x) [AS] t` (t is the element) and the
+          // Trino/Athena column-alias form `UNNEST(x) [AS] t(col)` (col is
+          // the element, t names the lateral relation)
+          val aliasM = java.util.regex.Pattern
+            .compile(s"(?i)^$Gap*(?:AS$Gap+)?($Name)" +
+              s"($Gap*\\($Gap*($Name(?:\\s*,[^)]*)?)$Gap*\\))?")
+            .matcher(out.substring(i))
+          require(aliasM.find() && !ReservedAfterAlias(aliasM.group(1).toUpperCase),
+            "UNNEST(...) requires an alias (UNNEST(expr) AS x)")
+          val colList = Option(aliasM.group(3)).map(_.trim)
+          require(colList.forall(!_.contains(",")),
+            "UNNEST(expr) AS t(a, b, ...) multi-column form is not supported " +
+              "over json-varchar arrays — iterate a single element alias")
+          val alias = colList.getOrElse(aliasM.group(1))
+          val view = if (colList.isDefined) aliasM.group(1) else alias + "_lv"
+          (i + aliasM.end, s"explode(from_json($arg, 'array<string>')) $view AS $alias",
+            view, Emitted(alias, None), m.group + aliasM.group)
+        } else {
+          val (path, elem, at) = (m.group(3), m.group(4), m.group(5))
+          if (m.group(2) != null)
+            (m.end, s"explode(from_json($path, 'map<string,string>')) ${at}_lv AS $at, $elem",
+              s"${at}_lv", Emitted(elem, Some(s"UNPIVOT $path: a SUPER UNPIVOT item's " +
+                "head must be a relation alias bound earlier in the FROM clause")), m.group)
+          else
+            (m.end, s"posexplode(from_json($path, 'array<string>')) ${elem}_lv AS $at, $elem",
+              s"${elem}_lv", Emitted(elem, Some(s"$path AS $elem AT $at: a PartiQL iteration " +
+                "item's head must be a relation alias bound earlier in the FROM clause")), m.group)
+        }
+      emitted += view.toLowerCase -> item
+      val rest = out.substring(itemEnd)
+      val joined = out.substring(0, m.start) + rest
+      val at = lastItemEnd(joined, m.start + clauseEnd(rest))
+      out = joined.substring(0, at) + s" LATERAL VIEW $lateral" +
+        commentsIn(dropped) + joined.substring(at)
+      from = m.start
+      m = FromItemRe.matcher(out)
     }
-    require(depth == 0, "UNNEST(...): unbalanced parentheses")
-    val arg = sql.substring(m.end, i - 1)
-    // two spellings: `UNNEST(x) [AS] t` (t is the element) and the
-    // Trino/Athena column-alias form `UNNEST(x) [AS] t(col)` (col is
-    // the element, t names the lateral relation). Without the second
-    // branch the leftover `(col)` spliced into the output as corrupt
-    // SQL with a baffling downstream parse error.
-    val aliasM = java.util.regex.Pattern
-      .compile(s"(?i)^$Gap*(?:AS$Gap+)?([A-Za-z_]\\w*)" +
-        s"($Gap*\\($Gap*([A-Za-z_]\\w*(?:\\s*,[^)]*)?)$Gap*\\))?")
-      .matcher(sql.substring(i))
-    require(aliasM.find() && !ReservedAfterAlias(aliasM.group(1).toUpperCase),
-      "UNNEST(...) requires an alias (UNNEST(expr) AS x)")
-    val colList = Option(aliasM.group(3)).map(_.trim)
-    require(colList.forall(!_.contains(",")),
-      "UNNEST(expr) AS t(a, b, ...) multi-column form is not supported " +
-        "over json-varchar arrays — iterate a single element alias")
-    val alias = colList.getOrElse(aliasM.group(1))
-    val viewName = if (colList.isDefined) aliasM.group(1) else alias + "_lv"
-    val replaced = sql.substring(0, m.start) +
-      s" LATERAL VIEW explode(from_json($arg, 'array<string>')) " +
-      s"$viewName AS $alias" + commentsIn(m.group + aliasM.group) +
-      sql.substring(i + aliasM.end)
-    val (s2, more) = rewriteUnnest(replaced)
-    (s2, more + alias)
+    (out, emitted.result())
   }
 
-  private val SuperPathRe = java.util.regex.Pattern.compile(
-    "\\b([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])+)")
+  /** The keywords that end a FROM clause's item list (a relational
+    * PIVOT/UNPIVOT is one: LATERAL VIEW goes before it). */
+  private val ClauseEndRe = java.util.regex.Pattern.compile(
+    s"(?i)(?:(?:WHERE|HAVING|LIMIT|OFFSET|WINDOW|QUALIFY|UNION|INTERSECT|EXCEPT|MINUS|" +
+      s"(?:GROUP|ORDER|CLUSTER|DISTRIBUTE|SORT)$Gap+BY)\\b|" +
+      s"(?:UN)?PIVOT$Gap*(?:\\(|INCLUDE\\b|EXCLUDE\\b)|;)")
 
-  /** Statement text VISIBLE from `pos` under SQL scoping: the
-    * position's own paren scope plus every enclosing scope, with
-    * sibling (balanced) sub-scopes blanked to `()`. An alias bound
-    * only INSIDE an unrelated subquery must not leak out — `SELECT
-    * d.v FROM (SELECT 1 FROM events) q, events.doc AS d` binds
-    * `events` in the inner scope only, and treating the outer
-    * `events.doc` as a PartiQL head because of it would corrupt a
-    * valid schema-qualified relation. Enclosing scopes stay visible,
-    * so correlated references (an outer alias used inside a
-    * subquery) still resolve. */
-  private def visibleScopeText(sql: String, pos: Int): String = {
-    val chain = scala.collection.mutable.Set.empty[Int]
-    val pre = scala.collection.mutable.Stack[Int]()
+  /** The offset in `s` (masked text after a FROM item) of its block's
+    * next clause: a depth-0 [[ClauseEndRe]] keyword, the paren that
+    * closes the block, or the end. */
+  private def clauseEnd(s: String): Int = {
+    val kw = ClauseEndRe.matcher(s)
+    var depth = 0
     var i = 0
-    while (i < pos && i < sql.length) {
-      sql.charAt(i) match {
-        case '(' => pre.push(i)
-        case ')' => if (pre.nonEmpty) pre.pop()
-        case _ => ()
-      }
-      i += 1
-    }
-    pre.foreach(chain += _)
-    val sb = new java.lang.StringBuilder(sql.length)
-    val cur = scala.collection.mutable.Stack[Int]()
-    i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      // sibling scopes are blanked to literally `()` — the parens must
-      // SURVIVE (only the contents go) because fromBoundAliases binds
-      // derived tables via `\)\s*(AS)?\s*alias`: dropping them entirely
-      // would unbind `FROM (SELECT ...) AS d` and silently skip the
-      // path rewrite of `d.payload.kind`. The '(' of a directly-nested
-      // sibling is visible iff all ENCLOSING scopes are on the chain
-      // (chain is a nesting path, so top∈chain ⊆ tail∈chain); the ')'
-      // is popped BEFORE its visibility check so a sibling's closer is
-      // judged by the parent scope it returns to.
-      c match {
-        case '(' =>
-          cur.push(i)
-          if (cur.drop(1).forall(chain.contains)) sb.append(c)
-        case ')' =>
-          if (cur.nonEmpty) cur.pop()
-          if (cur.forall(chain.contains)) sb.append(c)
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '(' => depth += 1
+        case ')' => if (depth == 0) return i else depth -= 1
         case _ =>
-          if (cur.forall(chain.contains)) sb.append(c)
+          if (depth == 0 && (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
+              s.charAt(i - 1) != '_') && kw.region(i, s.length).lookingAt()) return i
       }
       i += 1
     }
-    sb.toString
+    s.length
   }
 
-  /** Single-part relation aliases and names bound by FROM/JOIN items
-    * anywhere in the (masked) statement — the scope a PartiQL path
-    * head must resolve in. Multi-part names (`FROM sch.t`) bind no
-    * single-part head, which is exactly what keeps a fully-qualified
-    * `sch.t.col` column reference out of the path rewrite. Returned
-    * UPPERCASED: SQL identifier resolution is case-insensitive, so
-    * `FROM src AS S` must bind the head of `s.doc.title`. Callers
-    * pass [[visibleScopeText]] of the reference position, never the
-    * raw statement, so sibling-subquery bindings cannot leak. */
-  private def fromBoundAliases(sql: String): Set[String] = {
-    val acc = scala.collection.mutable.Set.empty[String]
-    // the alias capture must REJECT keywords via lookahead, not
-    // post-filter: a greedy `(\w+)` would consume the FROM in
-    // `SELECT a, b FROM t x` as b's "alias" and the real FROM item
-    // would never match at all
-    val notKw = "(?!(?i:" + (ReservedAfterAlias ++ Set(
-      "FROM", "SELECT", "SET", "VALUES", "BY", "AND", "OR", "NOT",
-      "CASE", "WHEN", "THEN", "ELSE", "END")).mkString("|") + ")\\b)"
-    val item = java.util.regex.Pattern.compile(
-      s"(?i)(\\bFROM|\\bJOIN|,)$Gap+" + notKw + "([A-Za-z_][\\w.]*)" +
-        s"(?:$Gap+(?:AS$Gap+)?" + notKw + "([A-Za-z_]\\w*))?").matcher(sql)
-    while (item.find()) {
-      // comma-anchored matches are FROM items only inside a FROM/JOIN
-      // clause (ON: a comma item can directly follow a join's ON
-      // condition) — a SELECT-list comma binds nothing
-      val inFrom = item.group(1) != "," ||
-        (clauseBefore(sql, item.start) match {
-          case "FROM" | "JOIN" | "ON" => true
-          case _ => false
-        })
-      if (inFrom) Option(item.group(3)) match {
-        case Some(a) => acc += a.toUpperCase
-        case None if !item.group(2).contains('.') =>
-          acc += item.group(2).toUpperCase
-        case None => ()
-      }
-    }
-    // derived tables: `FROM ( ... ) [AS] x`
-    val derived = java.util.regex.Pattern.compile(
-      s"\\)$Gap*(?:(?i:AS)$Gap+)?([A-Za-z_]\\w*)").matcher(sql)
-    while (derived.find()) {
-      val a = derived.group(1)
-      // position just past the ')': the subquery parens are balanced
-      // there, so clauseBefore reports the OUTER clause (a SELECT-list
-      // scalar subquery's alias is not a relation alias)
-      if (!ReservedAfterAlias(a.toUpperCase) &&
-          (clauseBefore(sql, derived.start + 1) match {
-            case "FROM" | "JOIN" => true
-            case _ => false
-          })) acc += a.toUpperCase
-    }
-    acc.toSet
-  }
+  private val TrailingGapRe = s"$Gap+$$".r
 
-  private[etl] def rewriteSuperPaths(sql: String,
-                                     unnestAliases: Set[String],
-                                     saved: scala.collection.mutable.ArrayBuffer[String]): String = {
-    val elemUpper = unnestAliases.map(_.toUpperCase)
-    // per-position scope: aliases bound in sibling subqueries must
-    // not make an outer schema.table.column look like a path
-    def bound(pos: Int): Set[String] =
-      fromBoundAliases(visibleScopeText(sql, pos)) ++ elemUpper
-    val m = SuperPathRe.matcher(sql)
-    val out = new java.lang.StringBuilder
-    var last = 0
-    while (m.find()) {
-      val followedByParen = {
-        var i = m.end
-        while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-        i < sql.length && sql.charAt(i) == '('
-      }
-      val prevWord = {
-        var i = m.start - 1
-        while (i >= 0 && sql.charAt(i).isWhitespace) i -= 1
-        val end = i
-        while (i >= 0 && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i -= 1
-        sql.substring(i + 1, end + 1).toUpperCase
-      }
-      // `schema.fn(...)` stays a call; `FROM db.schema.table` stays a
-      // catalog name
-      // three-part names in RELATION positions are catalog names, not
-      // paths: directly after FROM/JOIN/INTO/TABLE, and — the comma-
-      // listed FROM item case (`FROM sch.t a, db.sch2.t2 b`) — any
-      // position whose nearest clause keyword in its own paren scope
-      // is FROM or JOIN (a genuine PartiQL iteration item there was
-      // consumed by rewritePartiqlIteration, which runs first)
-      val relationPosition =
-        prevWord == "FROM" || prevWord == "JOIN" ||
-        prevWord == "INTO" || prevWord == "TABLE" ||
-        (clauseBefore(sql, m.start) match {
-          case "FROM" | "JOIN" => true
-          case _ => false
-        })
-      val head = m.group(1)
-      if (!followedByParen && !relationPosition &&
-          bound(m.start)(head.toUpperCase)) {
-        val (base, path) =
-          if (elemUpper(head.toUpperCase)) (head, "." + m.group(2) + m.group(3))
-          else (head + "." + m.group(2), m.group(3))
-        out.append(sql, last, m.start)
-        out.append(s"get_json_object($base, ${maskLit(saved, s"$$$path")})")
-        last = m.end
-      }
-    }
-    out.append(sql, last, sql.length)
-    out.toString
-  }
+  /** `stop` moved back over the whitespace and comments before it: the
+    * end of the last token, where an item goes in without landing in a
+    * `--` comment or moving the text's own spacing. */
+  private def lastItemEnd(sql: String, stop: Int): Int =
+    TrailingGapRe.findFirstMatchIn(sql.substring(0, stop)).fold(stop)(_.start)
 
   /** PartiQL `[*]` wildcard array paths inside comparison predicates:
     * `WHERE s.doc.lines[*].q > 3`. Redshift's SUPER tier accepts a
@@ -1165,111 +1077,75 @@ object DialectShims {
     * change the query's cardinality the way FROM-iteration does):
     *
     *   `s.doc.lines[*].q > 3` →
-    *   `exists(from_json(get_json_object(s.doc, '$.lines'),
-    *           'array<string>'), wc_e -> get_json_object(wc_e, '$.q') > 3)`
+    *   `exists(from_json(s.doc.lines, 'array<string>'),
+    *           wc_e -> get_json_object(wc_e, '$.q') > 3)`
     *
-    * Scope guards are [[rewriteSuperPaths]]'s: the head must be a
-    * FROM-bound alias (or UNNEST/iteration element alias) visible at
-    * the reference, relation positions are excluded. The wildcard is
+    * and [[resolvePaths]] then reads `s.doc.lines` in scope (a head
+    * that binds nothing is refused, naming the path). The wildcard is
     * supported ONLY in a simple comparison (`path <op> literal/number/
     * column`) — anything else (SELECT-list wildcard, function-wrapped
     * path, path on the comparison's right) is REFUSED loudly rather
-    * than rewritten wrong. One wildcard step per path. */
+    * than rewritten wrong. One wildcard step per path. Returns the
+    * offset of each emitted array path with its refusal. */
   private val WildcardPathRe = java.util.regex.Pattern.compile(
     "\\b([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\]|\\[\\*\\])+)")
 
   private val WildcardCmpRe = java.util.regex.Pattern.compile(
     s"^$Gap*(<=|>=|<>|!=|=|<|>)$Gap*('\\x00\\d+\\x00'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)")
 
-  private[etl] def rewriteWildcardPaths(sql: String,
-                                        unnestAliases: Set[String],
-                                        saved: scala.collection.mutable.ArrayBuffer[String]): String = {
-    if (!sql.contains("[*]")) return sql
-    val elemUpper = unnestAliases.map(_.toUpperCase)
-    def bound(pos: Int): Set[String] =
-      fromBoundAliases(visibleScopeText(sql, pos)) ++ elemUpper
+  private def rewriteWildcardPaths(sql: String): (String, Map[Int, String]) = {
+    if (!sql.contains("[*]")) return (sql, Map.empty)
     val m = WildcardPathRe.matcher(sql)
     val out = new java.lang.StringBuilder
+    val owned = Map.newBuilder[Int, String]
     var last = 0
     while (m.find()) {
       val comps = m.group(3)
       // m.start >= last: a dotted identifier consumed as a previous
       // match's comparison operand must not re-match as a path
       if (m.start >= last && comps.contains("[*]")) {
-        val head = m.group(1)
-        val relationPosition = clauseBefore(sql, m.start) match {
-          case "FROM" | "JOIN" => true
-          case _ => false
-        }
-        if (!relationPosition && bound(m.start)(head.toUpperCase)) {
-          val star = comps.indexOf("[*]")
-          require(comps.indexOf("[*]", star + 3) < 0,
-            s"nested [*] wildcards are not supported: ${m.group(0)}")
-          val pre = comps.substring(0, star)
-          val post = comps.substring(star + 3)
-          val cm = WildcardCmpRe.matcher(sql.substring(m.end))
-          require(cm.find(),
-            s"PartiQL [*] wildcard paths are supported only in a simple " +
-              s"comparison predicate (path <op> operand): ${m.group(0)}")
-          // the operand must be the WHOLE right-hand side: an operand
-          // followed by '(' is a function call whose argument list
-          // would be stranded, and one followed by an arithmetic/
-          // concat/subscript/cast continuation ('+', '-', '*', '/',
-          // '|', '%', '[', ':' for '::type', '^' exponentiation,
-          // '&' bitwise AND, '#' bitwise XOR, '<'/'>' shifts) is a
-          // compound expression this pass would silently truncate
-          // (e.g. `> s.doc.y[*].r` consuming only `s.doc.y`, or
-          // `> 3::int` re-attaching '::int' to the generated
-          // boolean). Refuse loudly — the documented contract —
-          // instead of rewriting wrong.
-          val afterCmp = sql.substring(m.end + cm.end).replaceFirst(s"^$Gap*", "")
-          val compound = afterCmp.nonEmpty &&
-            "(+-*/|%[:^&#<>".contains(afterCmp.charAt(0))
-          require(!compound,
-            s"PartiQL [*] wildcard comparison operand must be a single " +
-              s"literal, number, or column — not a compound expression " +
-              s"or function call: ${m.group(0)} ${cm.group(1)} ${cm.group(2)}$afterCmp"
-                .take(120))
-          val (base, prePath) =
-            if (elemUpper(head.toUpperCase)) (head, "." + m.group(2) + pre)
-            else (head + "." + m.group(2), pre)
-          val arrayText =
-            if (prePath.isEmpty) base
-            else s"get_json_object($base, ${maskLit(saved, "$" + prePath)})"
-          val inner =
-            if (post.isEmpty) "wc_e"
-            else s"get_json_object(wc_e, ${maskLit(saved, "$" + post)})"
-          out.append(sql, last, m.start)
-          // the comparison as written, comments included
-          out.append(s"exists(from_json($arrayText, 'array<string>'), " +
-            s"wc_e -> $inner${cm.group})")
-          last = m.end + cm.end
-        }
+        val star = comps.indexOf("[*]")
+        require(comps.indexOf("[*]", star + 3) < 0,
+          s"nested [*] wildcards are not supported: ${m.group(0)}")
+        val post = comps.substring(star + 3)
+        val cm = WildcardCmpRe.matcher(sql.substring(m.end))
+        require(cm.find(),
+          s"PartiQL [*] wildcard paths are supported only in a simple " +
+            s"comparison predicate (path <op> operand): ${m.group(0)}")
+        // the operand must be the WHOLE right-hand side: an operand
+        // followed by '(' is a function call whose argument list
+        // would be stranded, and one followed by an arithmetic/
+        // concat/subscript/cast continuation ('+', '-', '*', '/',
+        // '|', '%', '[', ':' for '::type', '^' exponentiation,
+        // '&' bitwise AND, '#' bitwise XOR, '<'/'>' shifts) is a
+        // compound expression this pass would silently truncate
+        // (e.g. `> s.doc.y[*].r` consuming only `s.doc.y`, or
+        // `> 3::int` re-attaching '::int' to the generated
+        // boolean). Refuse loudly — the documented contract —
+        // instead of rewriting wrong.
+        val afterCmp = sql.substring(m.end + cm.end).replaceFirst(s"^$Gap*", "")
+        val compound = afterCmp.nonEmpty &&
+          "(+-*/|%[:^&#<>".contains(afterCmp.charAt(0))
+        require(!compound,
+          s"PartiQL [*] wildcard comparison operand must be a single " +
+            s"literal, number, or column — not a compound expression " +
+            s"or function call: ${m.group(0)} ${cm.group(1)} ${cm.group(2)}$afterCmp"
+              .take(120))
+        val inner =
+          if (post.isEmpty) "wc_e"
+          else s"get_json_object(wc_e, '$$$post')"
+        out.append(sql, last, m.start).append("exists(from_json(")
+        owned += out.length -> (s"PartiQL path ${m.group(0)}: its head must be a relation " +
+          "alias or element bound in the FROM clause")
+        // the comparison as written, comments included
+        out.append(s"${m.group(1)}.${m.group(2)}${comps.substring(0, star)}, " +
+          s"'array<string>'), wc_e -> $inner${cm.group})")
+        last = m.end + cm.end
       }
     }
     out.append(sql, last, sql.length)
-    out.toString
+    (out.toString, owned.result())
   }
-
-  /** Redshift's NATIVE PartiQL iteration syntax: the SUPER array is a
-    * FROM-clause item whose head is an earlier relation alias —
-    *
-    *   `FROM src s, s.doc.lines AS elem [AT i]`
-    *
-    * (`UNNEST` is the Athena/Trino spelling; the Redshift SUPER docs
-    * spell iteration with this comma form). Rewritten to
-    * `LATERAL VIEW [pos]explode(from_json(<array json text>,
-    * 'array<string>')) elem_lv AS [i,] elem`; `AT` ordinals are
-    * 0-based on both sides (posexplode's pos matches Redshift's
-    * array indexing). Two guards keep catalog names and SELECT-list
-    * items safe: the rewrite fires only (a) inside a FROM clause of
-    * the CURRENT paren scope, and (b) when the path head is a
-    * relation alias already bound earlier in the statement — the
-    * same scope rule Redshift itself uses to tell `s.doc.lines`
-    * from a three-part catalog name. */
-  private val PartiqlIterRe = java.util.regex.Pattern.compile(
-    s",$Gap*([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])+)$Gap+" +
-    s"(?:(?i:AS)$Gap+)?([A-Za-z_]\\w*)(?:$Gap+(?i:AT)$Gap+([A-Za-z_]\\w*))?")
 
   /** Words that can follow a FROM item and must never be mistaken for
     * an element alias (`FROM t, UNNEST(x) WHERE ...` swallowing WHERE
@@ -1280,196 +1156,155 @@ object DialectShims {
     "EXCEPT", "JOIN", "ON", "LATERAL", "CROSS", "INNER", "LEFT", "RIGHT",
     "FULL", "QUALIFY", "WINDOW", "AS", "AT")
 
-  /** The last clause keyword before `pos` in its own paren scope —
-    * complete subqueries are dropped, an enclosing one is entered. */
-  private def clauseBefore(sql: String, pos: Int): String = {
-    val before = sql.substring(0, pos)
-    var scopeStart = 0
-    val opens = scala.collection.mutable.Stack[Int]()
-    var i = 0
-    while (i < before.length) {
-      before.charAt(i) match {
-        case '(' => opens.push(i + 1)
-        case ')' => if (opens.nonEmpty) opens.pop()
-        case _ => ()
-      }
-      i += 1
+  /** Masked text that may hold a PartiQL path: a dotted run of three or
+    * more parts, a dotted reference with an index, or a comma before a
+    * two-part name and an alias (an iteration item). Only such a
+    * statement is parsed. */
+  private val PathCandidateRe =
+    (s"\\b$Name\\.$Name(?:\\.$Name|\\[\\d+\\])|,$Gap*$Name\\.$Name$Gap+(?:(?i:AS)$Gap+)?$Name").r
+
+  /** A dotted reference as written: head, first component, the rest. */
+  private val PathRe = s"($Name)(\\.$Name)?((?:\\.$Name|\\[\\d+\\])*)".r
+
+  private val LastNameRe = s"\\.($Name)$$".r
+
+  /** `path` as json text when its head binds as an element (`elem`) or
+    * as a relation: `get_json_object(base, '$rest')`, with the element
+    * or the relation's column as base; None where it names a column or
+    * element itself, or is not a plain dotted reference. */
+  private def jsonText(path: String, elem: Boolean): Option[String] = path match {
+    case PathRe(head, col, rest) =>
+      val base = if (elem || col == null) head else head + col
+      Option(path.drop(base.length)).filter(_.nonEmpty)
+        .map(p => s"get_json_object($base, '$$$p')")
+    case _ => None
+  }
+
+  /** Rewrite the PartiQL paths of `sql` (unmasked) from Spark's parse:
+    * one walk over the parsed plan decides each query block's scope
+    * once, and each path goes in at its parser origin through
+    * [[Bootstrap.splice]]. A comma-listed `s.path [AS] e` whose head
+    * binds becomes a LATERAL VIEW after the block's last FROM item.
+    * `emitted` are the text passes' LATERAL VIEWs by name, `owned` the
+    * refusals of their `[*]` array paths by offset: a head in either
+    * that binds nothing is refused. SQL Spark cannot parse is left as
+    * it is. */
+  private def resolvePaths(sql: String, emitted: Map[String, Emitted],
+                           owned: Map[Int, String]): String = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedExtractValue, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.trees.TreeNode
+    val plan =
+      try CatalystSqlParser.parsePlan(sql)
+      catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => return sql }
+    type Scope = List[Map[String, Boolean]]   // per block: name → binds an element
+    def lookup(scope: Scope, name: String): Option[Boolean] =
+      scope.iterator.flatMap(_.get(name.toLowerCase)).nextOption()
+    def span(n: TreeNode[_]): Option[(Int, Int)] =
+      for (s <- n.origin.startIndex; e <- n.origin.stopIndex) yield (s, e)
+    val edits = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
+
+    def attribute(e: Expression): Option[UnresolvedAttribute] = e match {
+      case a: UnresolvedAttribute => Some(a)
+      case UnresolvedExtractValue(child, Literal(_, IntegerType | StringType)) => attribute(child)
+      case _ => None
     }
-    if (opens.nonEmpty) scopeStart = opens.top   // INNERMOST open paren
-    val scope = stripBalancedParens(before.substring(scopeStart))
-    // LATERAL is tracked so text INSIDE an already-rewritten
-    // `LATERAL VIEW ... AS i, ln` clause (our own output) reads as
-    // clause "LATERAL", never as a FROM item — without it the
-    // posexplode form's `, ln` would bind the element alias as a fake
-    // relation and the shadowing guard in rewriteUnnestFieldRefs
-    // would skip its field refs
-    val kw = java.util.regex.Pattern.compile(
-      "(?i)\\b(FROM|SELECT|WHERE|HAVING|GROUP|ORDER|JOIN|ON|LATERAL)\\b")
-      .matcher(scope)
-    var lastKw = ""
-    while (kw.find()) lastKw = kw.group(1).toUpperCase
-    lastKw
-  }
-
-  private[etl] def rewritePartiqlIteration(sql: String,
-                                           saved: scala.collection.mutable.ArrayBuffer[String]): (String, Set[String]) = {
-    val m = PartiqlIterRe.matcher(sql)
-    val out = new java.lang.StringBuilder
-    var last = 0
-    var aliases = Set.empty[String]
-    while (m.find()) {
-      val head = m.group(1)
-      // scope guard shared with UNPIVOT ([[partiqlFromItemBound]]):
-      // aliases AND bare single-part relation names bound BEFORE this
-      // item (`FROM events, events.doc.lines AS l` iterates over the
-      // events table's column — an alias-only rule would silently
-      // leave the raw PartiQL item for Spark to choke on).
-      // Prefix-scoped (binding must precede use in a FROM list) AND
-      // scope-visible: a name bound only inside an earlier sibling
-      // subquery must not turn a schema-qualified comma item into
-      // iteration.
-      val aliasOk = !ReservedAfterAlias(m.group(3).toUpperCase) &&
-        Option(m.group(4)).forall(a => !ReservedAfterAlias(a.toUpperCase))
-      if (partiqlFromItemBound(sql, m.start, head) && aliasOk) {
-        // comps: ".doc.lines" / ".tags[0].x"
-        val arrayText = partiqlJsonText(head, m.group(2),
-          "PartiQL iteration", saved)
-        val elem = m.group(3)
-        val lateral = Option(m.group(4)) match {
-          case Some(ord) =>
-            s" LATERAL VIEW posexplode(from_json($arrayText, " +
-              s"'array<string>')) ${elem}_lv AS $ord, $elem"
-          case None =>
-            s" LATERAL VIEW explode(from_json($arrayText, " +
-              s"'array<string>')) ${elem}_lv AS $elem"
-        }
-        out.append(sql, last, m.start).append(lateral).append(commentsIn(m.group))
-        last = m.end
-        aliases += elem
-      }
-    }
-    out.append(sql, last, sql.length)
-    (out.toString, aliases)
-  }
-
-  /** Redshift SUPER OBJECT-attribute iteration — `UNPIVOT` as a
-    * FROM-clause item (Redshift's PartiQL spelling for walking an
-    * object's attributes, the dual of array comma-iteration):
-    *
-    *   `FROM src s, UNPIVOT s.doc AS v AT k`
-    *
-    * yields one row per attribute with `k` = attribute name and `v`
-    * = attribute value. Rewritten to an explode over the parsed
-    * MAP — `LATERAL VIEW explode(from_json(<object json text>,
-    * 'map<string,string>')) k_lv AS k, v` — one codegen'd per-row
-    * expansion, no join. Values arrive as text exactly like the
-    * array-iteration elements (Spark's JSON parser serializes
-    * non-scalar map values back to json when the value type is
-    * string), so nested field refs on `v` compose through the same
-    * element-alias path pass. Guards are [[rewritePartiqlIteration]]'s:
-    * head bound earlier in a FROM clause; reserved words never read
-    * as aliases. (This is DISTINCT from relational `UNPIVOT(col IN
-    * (...))`, which q31 covers via Spark's native UNPIVOT — the
-    * SUPER form iterates a json object column.) */
-  private val PartiqlUnpivotRe = java.util.regex.Pattern.compile(
-    s",$Gap*(?i:UNPIVOT)$Gap+([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\])*)$Gap+" +
-    s"(?:(?i:AS)$Gap+)?([A-Za-z_]\\w*)$Gap+(?i:AT)$Gap+([A-Za-z_]\\w*)")
-
-  /** Shared guard for PartiQL FROM-item rewrites (comma iteration,
-    * SUPER UNPIVOT): the item's path head must be a relation alias —
-    * or bare single-part relation name — bound EARLIER in a FROM/JOIN
-    * clause visible at the item's position, and the item itself must
-    * sit in a FROM context. One implementation so the two passes'
-    * scoping can never silently diverge. */
-  private def partiqlFromItemBound(sql: String, start: Int,
-                                   head: String): Boolean = {
-    val boundEarlier = fromBoundAliases(
-      visibleScopeText(sql.substring(0, start), start))
-      .contains(head.toUpperCase)
-    val inFrom = clauseBefore(sql, start) match {
-      case "FROM" | "JOIN" | "ON" => true
-      case _ => false
-    }
-    boundEarlier && inFrom
-  }
-
-  /** Shared head+path → json-text extraction for the two PartiQL
-    * FROM-item forms: `alias.column` is the navigated value itself;
-    * deeper components ride a masked `get_json_object` path. */
-  private def partiqlJsonText(head: String, comps: String, what: String,
-                              saved: scala.collection.mutable.ArrayBuffer[String]): String = {
-    val colM = java.util.regex.Pattern
-      .compile("^\\.([A-Za-z_]\\w*)").matcher(comps)
-    require(colM.find(), s"$what needs alias.column...: $head$comps")
-    val base = s"$head.${colM.group(1)}"
-    val path = comps.substring(colM.end)
-    if (path.isEmpty) base
-    else s"get_json_object($base, ${maskLit(saved, s"$$$path")})"
-  }
-
-  private[etl] def rewritePartiqlUnpivot(sql: String,
-                                         saved: scala.collection.mutable.ArrayBuffer[String]): (String, Set[String]) = {
-    val m = PartiqlUnpivotRe.matcher(sql)
-    val out = new java.lang.StringBuilder
-    var last = 0
-    var aliases = Set.empty[String]
-    while (m.find()) {
-      val head = m.group(1)
-      val aliasOk = !ReservedAfterAlias(m.group(3).toUpperCase) &&
-        !ReservedAfterAlias(m.group(4).toUpperCase)
-      // no other reading of this item parses, so an unbound head is refused
-      require(!aliasOk || partiqlFromItemBound(sql, m.start, head),
-        s"UNPIVOT $head${m.group(2)}: a SUPER UNPIVOT item's head must be " +
-          "a relation alias bound earlier in the FROM clause")
-      if (aliasOk) {
-        val objText = partiqlJsonText(head, m.group(2), "SUPER UNPIVOT", saved)
-        val valAlias = m.group(3)
-        val keyAlias = m.group(4)
-        out.append(sql, last, m.start)
-        out.append(s" LATERAL VIEW explode(from_json($objText, " +
-          s"'map<string,string>')) ${keyAlias}_lv AS $keyAlias, $valAlias" +
-          commentsIn(m.group))
-        last = m.end
-        aliases += valAlias
+    /** `named`: a SELECT-list item without an alias, which keeps the
+      * name Redshift gives a path, its last attribute. */
+    def expr(e: Expression, scope: Scope, refusal: Option[String], named: Boolean = false): Unit = e match {
+      case sq: SubqueryExpression => block(sq.plan, scope)
+      case _ => (attribute(e), span(e)) match {
+        case (Some(a), Some((s, stop))) =>
+          val path = sql.substring(s, stop + 1)
+          lookup(scope, a.nameParts.head) match {
+            case Some(elem) => jsonText(path, elem) match {
+              case Some(json) =>
+                val name = LastNameRe.findFirstMatchIn(path).filter(_ => named)
+                edits += ((s, stop, json + name.fold("")(n => s" AS `${n.group(1)}`")))
+              case None => e.children.foreach(expr(_, scope, None))
+            }
+            case None =>
+              refusal.orElse(owned.get(s)).foreach(r => throw new IllegalArgumentException(r))
+          }
+        case _ => e.children.foreach(expr(_, scope, refusal))
       }
     }
-    out.append(sql, last, sql.length)
-    (out.toString, aliases)
-  }
 
-  /** 2-part `x.field` refs on an UNNEST element alias (the ≥3-part
-    * form is handled by [[rewriteSuperPaths]]; the guard against
-    * `get_json_object(x, '...')`'s own interior is the dot — the
-    * rewritten form never has `alias.` inside). */
-  private def rewriteUnnestFieldRefs(sql: String,
-                                     aliases: Set[String]): String =
-    aliases.foldLeft(sql) { (s, a) =>
-      java.util.regex.Pattern
-        // the (?<![.$]) lookbehind keeps the alias from matching
-        // inside an already-rewritten json path literal ('$.items.qty'
-        // when the element alias is also named items) or as the tail
-        // of a longer dotted ref; (?i:) on the alias itself because
-        // identifier resolution is case-insensitive (`... AS Ln` then
-        // `SELECT ln.p`) — the base keeps the text AS WRITTEN at the
-        // reference so the output stays recognizable
-        .compile(s"(?<![.$$])\\b((?i:${java.util.regex.Pattern.quote(a)}))\\.([A-Za-z_]\\w*)\\b(?![\\w.\\[(])")
-        .matcher(s)
-        // quoteReplacement: the functional replaceAll still expands
-        // $-group references in the computed string, and json paths
-        // are full of literal '$'. SHADOWING guard: a case-variant of
-        // the element alias that is itself a relation alias bound in
-        // the reference's visible scope (`... FROM emp E WHERE
-        // E.dept = 'x'` inside a subquery, element alias `e` outside)
-        // is a normal column reference — rewriting it would produce
-        // an unresolvable get_json_object base.
-        .replaceAll { r =>
-          val shadowed = fromBoundAliases(visibleScopeText(s, r.start))
-            .contains(r.group(1).toUpperCase)
-          java.util.regex.Matcher.quoteReplacement(
-            if (shadowed) r.group(0)
-            else s"get_json_object(${r.group(1)}, '$$.${r.group(2)}')")
-        }
+    /** A comma join's origin is the whole FROM clause, an explicit
+      * join's its JOIN ... ON. */
+    def commaJoin(j: Join): Boolean = span(j).exists(s => span(j.left).exists(s._1 < _._1))
+    /** Where the item list of `p`'s FROM clause ends: its last item,
+      * before any LATERAL VIEW. */
+    def itemsEnd(p: LogicalPlan): Option[Int] = p match {
+      case g: Generate => itemsEnd(g.child)
+      case j: Join if commaJoin(j) => itemsEnd(j.right)
+      case _: Join | _: SubqueryAlias | _: LeafNode => span(p).map(_._2)
+      case _ => p.children.lastOption.flatMap(itemsEnd)
     }
+
+    def block(root: LogicalPlan, outer: Scope): Unit = {
+      val names = scala.collection.mutable.Map[String, Boolean]()
+      val members = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
+      val generators = scala.collection.mutable.ArrayBuffer[(Expression, Option[String])]()
+      val nested = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
+      val iterations = scala.collection.mutable.ArrayBuffer[String]()
+      def visit(p: LogicalPlan): Unit = p match {
+        case _: Union | _: SetOperation => nested ++= p.children
+        case w: UnresolvedWith => nested ++= w.cteRelations.map(_._2); visit(w.child)
+        case j: Join if commaJoin(j) =>
+          visit(j.left)
+          j.right match {
+            // comma iteration: `, s.doc.lines AS ln` over a head bound earlier
+            case a @ SubqueryAlias(id, r: UnresolvedRelation) if r.multipartIdentifier.size > 1 &&
+                lookup(names.toMap :: outer, r.multipartIdentifier.head).isDefined =>
+              val elem = lookup(names.toMap :: outer, r.multipartIdentifier.head).contains(true)
+              for ((s, stop) <- span(r); prev <- itemsEnd(j.left); (_, end) <- span(a)) {
+                val path = sql.substring(s, stop + 1)
+                val (cut, saved) = mask(sql.substring(prev + 1, end + 1))
+                edits += ((prev + 1, end, ""))
+                iterations += s" LATERAL VIEW explode(from_json(${jsonText(path, elem).getOrElse(path)}, " +
+                  s"'array<string>')) ${id.name}_lv AS ${id.name}" + unmask(commentsIn(cut), saved)
+              }
+              names(id.name.toLowerCase) = true
+            case right => visit(right)
+          }
+        case SubqueryAlias(id, child) =>
+          names(id.name.toLowerCase) = false
+          if (!child.isInstanceOf[UnresolvedRelation]) nested += child
+        case r: UnresolvedRelation =>
+          if (r.multipartIdentifier.size == 1) names(r.multipartIdentifier.head.toLowerCase) = false
+        case g: Generate =>
+          visit(g.child)
+          val item = g.qualifier.flatMap(q => emitted.get(q.toLowerCase))
+          item.foreach(i => names(i.element.toLowerCase) = true)
+          generators += ((g.generator, item.flatMap(_.refusal)))
+        case _ => members += p; p.children.foreach(visit)
+      }
+      visit(root)
+      val scope = names.toMap :: outer
+      def selected(items: Seq[Expression]): Unit = items.foreach {
+        case UnresolvedAlias(item, _) => expr(item, scope, None, named = true)
+        case item => expr(item, scope, None, named = item.isInstanceOf[UnresolvedAttribute])
+      }
+      members.foreach {
+        case p: Project => selected(p.projectList)
+        case a: Aggregate =>
+          a.groupingExpressions.foreach(expr(_, scope, None))
+          selected(a.aggregateExpressions)
+        // a named window's spec sits in a map, outside `expressions`
+        case w: WithWindowDefinition => w.windowDefinitions.values.foreach(expr(_, scope, None))
+        case p => p.expressions.foreach(expr(_, scope, None))
+      }
+      generators.foreach { case (g, refusal) => expr(g, scope, refusal) }
+      if (iterations.nonEmpty) itemsEnd(root).foreach(end =>
+        iterations.foreach(text => edits += ((end + 1, end, text))))
+      nested.foreach(block(_, outer))
+    }
+
+    block(plan, Nil)
+    Bootstrap.splice(sql, edits.toSeq)
+  }
 
   /** Remove balanced parenthesized spans (so set-op keywords inside
     * subqueries don't trip the TOP scope check). */
@@ -1494,20 +1329,15 @@ object DialectShims {
     val arr = scala.collection.mutable.ArrayBuffer(saved: _*)
     val step1 = renameSparkNamed(rewriteQualify(rewriteSimilarTo(rewriteSysdate(rewriteDateDiff(
       rewriteDateAdd(rewriteRatioToReport(rewriteApproxCount(rewriteSelectTop(masked)))))), arr)))
-    // SUPER/PartiQL last: UNNEST and comma-iteration introduce
-    // element aliases whose field refs the path pass then rewrites
-    val (step2, unnestAliases) = rewriteUnnest(step1)
-    // SUPER UNPIVOT first: its `, UNPIVOT x.y AS v AT k` form must not
-    // be half-consumed by the comma-iteration pass
-    val (step3, unpivotAliases) = rewritePartiqlUnpivot(step2, arr)
-    val (step4, iterAliases) = rewritePartiqlIteration(step3, arr)
-    val elemAliases = unnestAliases ++ unpivotAliases ++ iterAliases
-    // wildcard paths BEFORE the scalar path pass: SuperPathRe would
-    // otherwise match the `s.doc.lines` prefix of `s.doc.lines[*].q`
-    // and leave a dangling `[*].q` in the output
-    val step5 = rewriteWildcardPaths(step4, elemAliases, arr)
-    val rewritten = rewriteUnnestFieldRefs(
-      rewriteSuperPaths(step5, elemAliases, arr), elemAliases)
-    unmask(rewritten, arr.toIndexedSeq)
+    // SUPER/PartiQL last: the syntax Spark rejects, then the paths from
+    // Spark's parse of the result
+    val (step2, emitted) = rewriteFromItems(step1)
+    val (step3, wildcards) = rewriteWildcardPaths(step2)
+    val text = unmask(step3, arr.toIndexedSeq)
+    if (emitted.isEmpty && wildcards.isEmpty && PathCandidateRe.findFirstIn(step3).isEmpty) text
+    else resolvePaths(text, emitted, wildcards.map { case (at, path) =>
+      at + Placeholder.findAllMatchIn(step3.substring(0, at))
+        .map(p => arr(p.group(1).toInt).length - p.matched.length).sum -> path
+    })
   }
 }

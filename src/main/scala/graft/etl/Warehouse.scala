@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable,
+  CatalogTablePartition, CatalogTableType, ExternalCatalogUtils}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -887,19 +888,19 @@ final class Warehouse(
     else if (sameShape) {
       spark.sql(s"ALTER TABLE ${target.quoted} SET LOCATION '$location'")
       // a partitioned table's catalog partition entries still point at
-      // the OLD location, and RECOVER PARTITIONS only ADDS missing
-      // specs — an existing spec keeps its stale absolute location and
-      // scans would keep serving the superseded build (then fail once
-      // vacuum reclaims it). Drop every stored partition entry first
+      // the OLD location, and registering only ADDS missing specs — an
+      // existing spec keeps its stale absolute location and scans would
+      // keep serving the superseded build (then fail once vacuum
+      // reclaims it). Drop every stored partition entry first
       // (metadata-only: retainData leaves the old files for vacuum),
-      // then RECOVER rebuilds the full set from the new directory
-      // layout. The table itself is never missing from the catalog.
+      // then register the full set from the new directory layout. The
+      // table itself is never missing from the catalog.
       if (layout.partitionBy.nonEmpty) {
         val stale = cat.listPartitions(ident(target))
         if (stale.nonEmpty)
           cat.dropPartitions(ident(target), stale.map(_.spec),
             ignoreIfNotExists = true, purge = false, retainData = true)
-        spark.sql(s"ALTER TABLE ${target.quoted} RECOVER PARTITIONS")
+        registerPartitions(target, location, layout)
       }
       // SET LOCATION swaps the data but PRESERVES catalog stats from
       // any prior ANALYZE — the CBO would then size joins (and flip
@@ -921,9 +922,35 @@ final class Warehouse(
         tracksPartitionsInCatalog = spark.sessionState.conf.manageFilesourcePartitions),
         ignoreIfExists = false)
       // register the partition directories already at the location
-      if (layout.partitionBy.nonEmpty)
-        spark.sql(s"ALTER TABLE ${target.quoted} RECOVER PARTITIONS")
+      if (layout.partitionBy.nonEmpty) registerPartitions(target, location, layout)
     }
+  }
+
+  /** Register with `target`'s catalog entry the partition directories
+    * (`col=value/...`, in `layout`'s partition column order) of the
+    * build at `location`. `ALTER TABLE ... RECOVER PARTITIONS` does the
+    * same but warns about every other file it meets, and each build
+    * carries its layout record beside the partition directories. */
+  private def registerPartitions(target: TableName, location: String, layout: Layout): Unit = {
+    val root = new Path(location)
+    val fs = rawFs(root)
+    def dirs(p: Path, cols: Seq[String], spec: Map[String, String]): Seq[(Map[String, String], Path)] =
+      cols match {
+        case Seq() => Seq(spec -> p)
+        case col +: rest => fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
+          st.getPath.getName.split("=", 2) match {
+            case Array(k, v) if k.equalsIgnoreCase(col) =>
+              dirs(st.getPath, rest, spec + (col -> ExternalCatalogUtils.unescapePathName(v)))
+            case _ => Nil
+          }
+        }
+      }
+    val cat = spark.sessionState.catalog
+    val storage = cat.getTableMetadata(ident(target)).storage
+    val parts = dirs(root, layout.partitionBy, Map.empty).map { case (spec, dir) =>
+      CatalogTablePartition(spec, storage.copy(locationUri = Some(fs.makeQualified(dir).toUri)))
+    }
+    if (parts.nonEmpty) cat.createPartitions(ident(target), parts, ignoreIfExists = true)
   }
 
   // ------------------------------------------------- pointers and views

@@ -611,6 +611,10 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r2g = DialectShims.rewriteRedshiftSql(
       "SELECT s.doc.items[0].sku FROM a JOIN b ON a.id = b.id, src s")
     assert(r2g.contains("get_json_object(s.doc, '$.items[0].sku')"), r2g)
+    // a named window's spec is in scope too
+    val r2h = DialectShims.rewriteRedshiftSql(
+      "SELECT s.doc.a FROM src s WINDOW w AS (PARTITION BY s.doc.k)")
+    assert(r2h.contains("PARTITION BY get_json_object(s.doc, '$.k')"), r2h)
     // bare 2-part + index is a path on the column
     val r3 = DialectShims.rewriteRedshiftSql(
       "SELECT e.tags[2] FROM events e")
@@ -834,10 +838,10 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT s.id FROM src s WHERE s.tags[*] = 'x'")
     assert(r3.contains(
       "exists(from_json(s.tags, 'array<string>'), wc_e -> wc_e = 'x')"), r3)
-    // an UNBOUND head is not a path — untouched
-    val r4 = DialectShims.rewriteRedshiftSql(
-      "SELECT 1 FROM src s WHERE nope.doc.lines[*].q > 3")
-    assert(r4.contains("nope.doc.lines[*].q"), r4)
+    // an UNBOUND head has no reading Spark parses: refused, naming the path
+    val r4 = intercept[IllegalArgumentException](DialectShims.rewriteRedshiftSql(
+      "SELECT 1 FROM src s WHERE nope.doc.lines[*].q > 3"))
+    assert(r4.getMessage.contains("nope.doc.lines[*].q"), r4)
     // wildcard on an iteration ELEMENT alias composes
     val r5 = DialectShims.rewriteRedshiftSql(
       "SELECT e FROM src s, UNNEST(s.doc.rows) AS e WHERE e.vals[*] = 2")
@@ -928,6 +932,47 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT v.unit AS u FROM unp_src s, UNPIVOT s.doc AS v AT k " +
         "WHERE k = 'b'")).collect().map(_.getString(0)).toSeq
     assert(nested == Seq("ms"), nested)
+  }
+
+  /** The sorted first column of the rewrite of `sql`, run. */
+  private def firstColumn(sql: String): Seq[String] =
+    spark.sql(DialectShims.rewriteRedshiftSql(sql)).collect().map(_.getString(0)).toSeq.sorted
+
+  private def scopeViews(): Unit = {
+    spark.sql("SELECT '[{\"sku\": \"a1\"}, {\"sku\": \"b2\"}]' AS p")
+      .createOrReplaceTempView("events")
+    spark.sql("SELECT 'c3' AS sku").createOrReplaceTempView("inv")
+  }
+
+  test("an element alias is not shadowed by a relation alias in another UNION branch") {
+    scopeViews()
+    assert(firstColumn("SELECT i.sku FROM events e, UNNEST(e.p) AS i " +
+      "UNION ALL SELECT i.sku FROM inv i") == Seq("a1", "b2", "c3"))
+  }
+
+  test("an element alias in a CTE body is not shadowed by the outer query's relation alias") {
+    scopeViews()
+    assert(firstColumn("WITH x AS (SELECT i.sku FROM events e, UNNEST(e.p) AS i) " +
+      "SELECT x.sku FROM x JOIN inv i ON true") == Seq("a1", "b2"))
+  }
+
+  test("a head bound only in another UNION branch is not a path head") {
+    val out = DialectShims.rewriteRedshiftSql(
+      "SELECT s.doc.k FROM src s UNION ALL SELECT s.doc.k FROM sch.s")
+    assert(out.startsWith("SELECT get_json_object(s.doc, '$.k')"), out)
+    assert(out.endsWith(" UNION ALL SELECT s.doc.k FROM sch.s"), out)
+  }
+
+  test("an iteration item before another FROM item: the LATERAL VIEW follows the FROM list") {
+    spark.sql("SELECT '{\"a\": \"x\", \"lines\": [1, 2]}' AS doc").createOrReplaceTempView("src")
+    spark.sql("SELECT * FROM VALUES (10), (20) AS v(n)").createOrReplaceTempView("other")
+    Seq("SELECT s.doc.a, ln, o.n FROM src s, s.doc.lines AS ln, other o",
+      "SELECT s.doc.a, ln, o.n FROM src s, UNNEST(s.doc.lines) AS ln, other o").foreach { sql =>
+      val out = DialectShims.rewriteRedshiftSql(sql)
+      assert(out.contains("other o LATERAL VIEW explode("), out)
+      val rows = spark.sql(out).collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
+      assert(rows.sorted == Seq(("x", "1", 10), ("x", "1", 20), ("x", "2", 10), ("x", "2", 20)), sql)
+    }
   }
 
   test("SQL containing a NUL character is rejected, not silently corrupted") {
@@ -1110,13 +1155,14 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** A corpus entry with a piece inserted at one of its boundaries. A
-    * literal does not go right after `SIMILAR TO` or `ESCAPE`: there it
-    * becomes the pattern operand, which the rewriter owns. */
+    * literal does not go right after `SIMILAR TO` or `ESCAPE`, comments
+    * between or after them included: there it becomes the pattern
+    * operand, which the rewriter owns. */
   private lazy val insertedGen: Gen[(String, String)] = for {
     sql <- Gen.oneOf(accepted)
     piece <- pieceGen
     operandSlot = (at: Int) => piece.startsWith("'") &&
-      "(?is).*\\b(similar\\s+to|escape)\\s*".r.matches(sql.substring(0, at))
+      "(?is).*\\b(similar\\s+to|escape)".r.matches(uncommented(sql.substring(0, at) + "\n"))
     at <- Gen.oneOf(codeSpaces(sql).filterNot(operandSlot) :+ sql.length)
   } yield (sql.substring(0, at) + " " + piece + sql.substring(at), piece)
 
@@ -1151,6 +1197,26 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = if (piece.startsWith("--") && piece.endsWith("\\\n")) piece.init + " \n" else piece
       Prop(rewritten(sql).forall(_.contains(out))) :| sql
     })
+  }
+
+  test("property: a UNION ALL branch is rewritten as it would be alone") {
+    // binds i, e and s only as plain relation aliases or two-part names
+    val q2 = "SELECT i.sku, e.doc.k, s.doc.k FROM inv i JOIN sch.e ON i.id = e.id " +
+      "JOIN sch.s ON s.id = i.id"
+    assert(DialectShims.rewriteRedshiftSql(q2) == q2)
+    // a depth-0 ORDER BY, LIMIT or TOP would take the appended branch in
+    val trailing = "(?i)\\b(order\\s+by|limit|top)\\b".r
+    def depthZero(sql: String): String = {
+      val once = "\\([^()]*\\)".r.replaceAllIn(sql, "")
+      if (once == sql) sql else depthZero(once)
+    }
+    val single = accepted.filter(q => trailing.findFirstIn(depthZero(DialectShims.mask(q)._1)).isEmpty)
+    assert(single.size > 30, single.size)
+    single.foreach { q =>
+      val joined = DialectShims.rewriteRedshiftSql(q + " UNION ALL " + q2)
+      val apart = DialectShims.rewriteRedshiftSql(q) + " UNION ALL " + DialectShims.rewriteRedshiftSql(q2)
+      assert(joined == apart, s"$q\n$joined\n$apart")
+    }
   }
 
   test("property: every rewrite parses") {

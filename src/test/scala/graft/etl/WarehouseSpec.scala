@@ -291,6 +291,59 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.catalog.tableExists("`etl_staging__rep`.`small_nations`"))
   }
 
+  test("registering a partitioned build reads no layout record as a partition: no repair warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val wh = freshWarehouse()
+    val t = TableName.parse("rep.parted_nations")
+    val parted = rel(
+      """name: rep.parted_nations
+        |source_name: CTAS
+        |depends_on: [src.nation]
+        |columns:
+        |  - name: n_name
+        |    type: string
+        |  - name: region
+        |    type: int
+        |attributes:
+        |  partition_by: [region]
+        |query: SELECT n_name, CAST(n_nationkey % 3 AS INT) AS region FROM src.nation
+        |""".stripMargin)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("repair-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = classOf[org.apache.spark.sql.execution.command.RepairTableCommand].getName
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    // the spec runs at ERROR; open this one logger to WARN for the calls
+    Configurator.setLevel(logger, Level.WARN)
+    val config = ctx.getConfiguration.getLoggerConfig(logger)
+    config.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      // a partitioned build and its publish, a rebuild re-pointing the
+      // published name, then a rollback to the first build
+      wh.loadWithStagingAndPublish(Seq(srcNation, parted))
+      wh.createSnapshot("parted-v1", Seq(t))
+      wh.loadWithStagingAndPublish(Seq(srcNation, parted))
+      wh.restoreSnapshot("parted-v1", t)
+    } finally {
+      config.removeAppender(appender.getName)
+      Configurator.setLevel(logger, Level.ERROR)
+      appender.stop()
+    }
+    assert(warnings.isEmpty, warnings.toArray.mkString("\n"))
+    assert(spark.sql(s"SHOW PARTITIONS ${t.quoted}").count() == 3)
+    assert(spark.table(t.quoted).count() == 25)
+    assert(spark.table(t.quoted).where("region = 1").count() == 8)
+  }
+
   test("a declared table schema equals the schema inferred from its files") {
     val wh = freshWarehouse()
     val design = TableDesign.load(
@@ -1362,7 +1415,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("`rep`.`nat_part`").count() == 25)
     assert(spark.table("`rep`.`nat_part`")
       .filter(org.apache.spark.sql.functions.col("n_regionkey") === 1).count() == 5)
-    // rebuild with CHANGED row values: RECOVER PARTITIONS only ADDS
+    // rebuild with CHANGED row values: partition registration only ADDS
     // missing specs, so without dropping the stale catalog entries
     // first, scans would keep serving the OLD build's rows from the
     // old absolute partition locations (and break once vacuum
