@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.parser.{CatalystSqlParser, ParseException}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
 
 /** Redshift-dialect compatibility shims (SURVEY §7.2), so transform
@@ -940,7 +940,9 @@ object DialectShims {
     * `s.doc.lines` from a three-part catalog name. A two-part relation
     * name (`FROM sch.t`) binds no head, so `sch.t.col` stays a column
     * reference; UNION branches and CTE bodies are blocks of their own;
-    * the parser binds lambda variables itself. A comma-listed FROM item
+    * a lambda's arguments shadow other heads in its body. The parse is
+    * `spark.sql`'s, and a statement a text pass translated but Spark
+    * cannot parse is refused. A comma-listed FROM item
     * `s.path [AS] e` whose head binds earlier is iteration. An
     * unaliased SELECT-list path keeps the name Redshift gives it, its
     * last attribute. Paths yield STRINGS (scalar json values unquoted, nested values as their
@@ -1085,19 +1087,19 @@ object DialectShims {
     * supported ONLY in a simple comparison (`path <op> literal/number/
     * column`) — anything else (SELECT-list wildcard, function-wrapped
     * path, path on the comparison's right) is REFUSED loudly rather
-    * than rewritten wrong. One wildcard step per path. Returns the
-    * offset of each emitted array path with its refusal. */
+    * than rewritten wrong. One wildcard step per path. Returns each
+    * emitted array path's text with its refusal. */
   private val WildcardPathRe = java.util.regex.Pattern.compile(
     "\\b([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)((?:\\.[A-Za-z_]\\w*|\\[\\d+\\]|\\[\\*\\])+)")
 
   private val WildcardCmpRe = java.util.regex.Pattern.compile(
     s"^$Gap*(<=|>=|<>|!=|=|<|>)$Gap*('\\x00\\d+\\x00'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)")
 
-  private def rewriteWildcardPaths(sql: String): (String, Map[Int, String]) = {
+  private def rewriteWildcardPaths(sql: String): (String, Map[String, String]) = {
     if (!sql.contains("[*]")) return (sql, Map.empty)
     val m = WildcardPathRe.matcher(sql)
     val out = new java.lang.StringBuilder
-    val owned = Map.newBuilder[Int, String]
+    val owned = Map.newBuilder[String, String]
     var last = 0
     while (m.find()) {
       val comps = m.group(3)
@@ -1134,11 +1136,11 @@ object DialectShims {
         val inner =
           if (post.isEmpty) "wc_e"
           else s"get_json_object(wc_e, '$$$post')"
-        out.append(sql, last, m.start).append("exists(from_json(")
-        owned += out.length -> (s"PartiQL path ${m.group(0)}: its head must be a relation " +
+        val array = s"${m.group(1)}.${m.group(2)}${comps.substring(0, star)}"
+        owned += array -> (s"PartiQL path ${m.group(0)}: its head must be a relation " +
           "alias or element bound in the FROM clause")
         // the comparison as written, comments included
-        out.append(s"${m.group(1)}.${m.group(2)}${comps.substring(0, star)}, " +
+        out.append(sql, last, m.start).append(s"exists(from_json($array, " +
           s"'array<string>'), wc_e -> $inner${cm.group})")
         last = m.end + cm.end
       }
@@ -1168,6 +1170,9 @@ object DialectShims {
 
   private val LastNameRe = s"\\.($Name)$$".r
 
+  /** The parser `spark.sql` uses (no extension replaces it). */
+  private lazy val SessionParser = new org.apache.spark.sql.execution.SparkSqlParser
+
   /** `path` as json text when its head binds as an element (`elem`) or
     * as a relation: `get_json_object(base, '$rest')`, with the element
     * or the relation's column as base; None where it names a column or
@@ -1186,18 +1191,24 @@ object DialectShims {
     * [[Bootstrap.splice]]. A comma-listed `s.path [AS] e` whose head
     * binds becomes a LATERAL VIEW after the block's last FROM item.
     * `emitted` are the text passes' LATERAL VIEWs by name, `owned` the
-    * refusals of their `[*]` array paths by offset: a head in either
-    * that binds nothing is refused. SQL Spark cannot parse is left as
-    * it is. */
+    * refusals of their `[*]` array paths by path text: a head in either
+    * that binds nothing is refused. The parse is the one `spark.sql`
+    * makes; SQL it rejects is left as it is, or refused when a text
+    * pass translated part of it. */
   private def resolvePaths(sql: String, emitted: Map[String, Emitted],
-                           owned: Map[Int, String]): String = {
+                           owned: Map[String, String]): String = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedExtractValue, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, SubqueryExpression, UnresolvedNamedLambdaVariable}
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.catalyst.trees.TreeNode
     val plan =
-      try CatalystSqlParser.parsePlan(sql)
-      catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => return sql }
+      try SessionParser.parsePlan(sql)
+      catch {
+        case e: ParseException if emitted.nonEmpty || owned.nonEmpty =>
+          throw new IllegalArgumentException("PartiQL items were translated, but Spark " +
+            s"cannot parse the result: ${e.getMessage.linesIterator.next()}", e)
+        case _: ParseException => return sql
+      }
     type Scope = List[Map[String, Boolean]]   // per block: name → binds an element
     def lookup(scope: Scope, name: String): Option[Boolean] =
       scope.iterator.flatMap(_.get(name.toLowerCase)).nextOption()
@@ -1205,29 +1216,35 @@ object DialectShims {
       for (s <- n.origin.startIndex; e <- n.origin.stopIndex) yield (s, e)
     val edits = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
 
-    def attribute(e: Expression): Option[UnresolvedAttribute] = e match {
-      case a: UnresolvedAttribute => Some(a)
-      case UnresolvedExtractValue(child, Literal(_, IntegerType | StringType)) => attribute(child)
+    /** The head of a dotted reference. The parser makes every name in a
+      * lambda body a lambda variable; only the `lambdas` arguments are. */
+    def head(e: Expression, lambdas: Set[String]): Option[String] = e match {
+      case a: UnresolvedAttribute => a.nameParts.headOption
+      case v: UnresolvedNamedLambdaVariable => v.nameParts.headOption.filterNot(h => lambdas(h.toLowerCase))
+      case UnresolvedExtractValue(child, Literal(_, IntegerType | StringType)) => head(child, lambdas)
       case _ => None
     }
     /** `named`: a SELECT-list item without an alias, which keeps the
       * name Redshift gives a path, its last attribute. */
-    def expr(e: Expression, scope: Scope, refusal: Option[String], named: Boolean = false): Unit = e match {
+    def expr(e: Expression, scope: Scope, refusal: Option[String], named: Boolean = false,
+             lambdas: Set[String] = Set.empty): Unit = e match {
       case sq: SubqueryExpression => block(sq.plan, scope)
-      case _ => (attribute(e), span(e)) match {
-        case (Some(a), Some((s, stop))) =>
+      case LambdaFunction(body, args, _) =>
+        expr(body, scope, refusal, lambdas = lambdas ++ args.map(_.name.toLowerCase))
+      case _ => (head(e, lambdas), span(e)) match {
+        case (Some(h), Some((s, stop))) =>
           val path = sql.substring(s, stop + 1)
-          lookup(scope, a.nameParts.head) match {
+          lookup(scope, h) match {
             case Some(elem) => jsonText(path, elem) match {
               case Some(json) =>
                 val name = LastNameRe.findFirstMatchIn(path).filter(_ => named)
                 edits += ((s, stop, json + name.fold("")(n => s" AS `${n.group(1)}`")))
-              case None => e.children.foreach(expr(_, scope, None))
+              case None => e.children.foreach(expr(_, scope, None, lambdas = lambdas))
             }
             case None =>
-              refusal.orElse(owned.get(s)).foreach(r => throw new IllegalArgumentException(r))
+              refusal.orElse(owned.get(path)).foreach(r => throw new IllegalArgumentException(r))
           }
-        case _ => e.children.foreach(expr(_, scope, refusal))
+        case _ => e.children.foreach(expr(_, scope, refusal, lambdas = lambdas))
       }
     }
 
@@ -1335,9 +1352,6 @@ object DialectShims {
     val (step3, wildcards) = rewriteWildcardPaths(step2)
     val text = unmask(step3, arr.toIndexedSeq)
     if (emitted.isEmpty && wildcards.isEmpty && PathCandidateRe.findFirstIn(step3).isEmpty) text
-    else resolvePaths(text, emitted, wildcards.map { case (at, path) =>
-      at + Placeholder.findAllMatchIn(step3.substring(0, at))
-        .map(p => arr(p.group(1).toInt).length - p.matched.length).sum -> path
-    })
+    else resolvePaths(text, emitted, wildcards)
   }
 }

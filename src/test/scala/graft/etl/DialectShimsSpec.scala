@@ -975,6 +975,34 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a path inside a lambda body is a path: the [*] operand and a filter() body") {
+    spark.sql("SELECT 1 AS id, '{\"min\": 4, \"k\": \"b\", \"tags\": [\"a\", \"b\"], " +
+        "\"lines\": [{\"q\": 1}, {\"q\": 5}]}' AS doc " +
+        "UNION ALL SELECT 2, '{\"min\": 6, \"k\": \"c\", \"tags\": [\"a\"], " +
+        "\"lines\": [{\"q\": 5}]}'").createOrReplaceTempView("lam_src")
+    val wc = DialectShims.rewriteRedshiftSql(
+      "SELECT s.id FROM lam_src s WHERE s.doc.lines[*].q > s.doc.min")
+    assert(wc.contains("wc_e -> get_json_object(wc_e, '$.q') > get_json_object(s.doc, '$.min')"), wc)
+    assert(spark.sql(wc).collect().map(_.getInt(0)).toSeq == Seq(1), wc)
+    // the lambda's own argument and an element's field inside a lambda
+    val rows = spark.sql(DialectShims.rewriteRedshiftSql(
+      "SELECT s.id, size(filter(from_json(s.doc.tags, 'array<string>'), x -> x = s.doc.k)), " +
+        "size(filter(array(1), x -> ln.q > x)) FROM lam_src s, s.doc.lines AS ln"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+    assert(rows == Seq((1, 1, 0), (1, 1, 1), (2, 0, 1)), rows)
+    // a lambda argument named like a relation alias is not a path head
+    val shadow = "SELECT transform(array(named_struct('a', named_struct('b', 1))), s -> s.a.b) FROM src s"
+    assert(DialectShims.rewriteRedshiftSql(shadow) == shadow)
+  }
+
+  test("the paths of SQL only the session parser accepts are rewritten; a translated item Spark rejects is refused") {
+    val view = DialectShims.rewriteRedshiftSql("CREATE TEMPORARY VIEW v AS SELECT s.doc.k FROM src s")
+    assert(view == "CREATE TEMPORARY VIEW v AS SELECT get_json_object(s.doc, '$.k') AS `k` FROM src s", view)
+    val e = intercept[IllegalArgumentException](DialectShims.rewriteRedshiftSql(
+      "SELECT i FROM src s, UNNEST(s.doc.a) AS i WHERE ("))
+    assert(e.getMessage.contains("cannot parse"), e.getMessage)
+  }
+
   test("SQL containing a NUL character is rejected, not silently corrupted") {
     // NUL is the mask placeholder delimiter: input NULs could misindex
     // the saved-literal table. The shim must refuse up front.
