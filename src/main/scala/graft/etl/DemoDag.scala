@@ -1,6 +1,7 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -229,6 +230,66 @@ object DemoDag {
       |  CAST(SUM(CAST(f.gross_revenue AS DECIMAL(18,6))) AS DOUBLE) AS revenue
       |FROM fact f JOIN dim d ON f.customer_key = d.customer_key
       |GROUP BY d.c_mktsegment ORDER BY c_mktsegment""".stripMargin
+
+  /** Writes the design set in the CLI's
+    * `schemas/{schema}/{source}-{table}.yaml` layout under `root`. */
+  def writeDesigns(root: Path): Unit = designYaml.foreach { yaml =>
+    val d = TableDesign.load(yaml)
+    val source = if (d.isSourceTable) d.sourceName else d.name.schema
+    val file = root.resolve(s"schemas/${d.name.schema}/$source-${d.name.table}.yaml")
+    Files.createDirectories(file.getParent)
+    Files.write(file, yaml.getBytes(UTF_8))
+  }
+
+  /** A few rows per source table as `dir/{table}.parquet`, typed as the
+    * TPC-H test data is: unique primary keys, and join keys that match
+    * (every order's customer and every line's order exist). */
+  def writeSources(spark: SparkSession, dir: String): Unit = Seq(
+    "nation" -> "SELECT CAST(id AS INT) AS n_nationkey, concat('NATION', id) AS n_name FROM range(5)",
+    "customer" -> """SELECT id AS c_custkey, concat('Customer#', id) AS c_name,
+      |  CAST(id % 5 AS INT) AS c_nationkey,
+      |  element_at(array('BUILDING', 'MACHINERY', 'HOUSEHOLD'), CAST(id % 3 AS INT) + 1) AS c_mktsegment
+      |FROM range(1, 31)""".stripMargin,
+    "orders" -> """SELECT id AS o_orderkey, 1 + id % 30 AS o_custkey,
+      |  CASE WHEN id % 2 = 0 THEN 'F' ELSE 'O' END AS o_orderstatus,
+      |  CAST(100 + id * 7.25 AS DOUBLE) AS o_totalprice,
+      |  timestamp_seconds(820454400 + id * 86400) AS o_orderdate
+      |FROM range(1, 61)""".stripMargin,
+    "lineitem" -> """SELECT 1 + id DIV 4 AS l_orderkey, CAST(1 + id % 4 AS INT) AS l_linenumber,
+      |  CAST(10 + id * 1.5 AS DOUBLE) AS l_extendedprice, CAST((id % 10) / 100.0 AS DOUBLE) AS l_discount
+      |FROM range(240)""".stripMargin
+  ).foreach { case (table, sql) =>
+    spark.sql(sql).write.mode("overwrite").parquet(s"$dir/$table.parquet")
+  }
+
+  /** The nightly rebuild in one JVM and one session: writes the design
+    * set and its sources under WORKDIR, then runs `graft.Cli extract`
+    * over them and `graft.Cli load` (staging and publish) over the
+    * extract's output. The build dumps the CLI's class-data-sharing
+    * archive from this run, so one archive holds what both commands
+    * load. Exits non-zero when either command does.
+    *
+    * usage: graft.etl.DemoDag WORKDIR */
+  def main(args: Array[String]): Unit = {
+    if (args.length != 1) {
+      System.err.println("usage: graft.etl.DemoDag WORKDIR")
+      sys.exit(2)
+    }
+    val work = Paths.get(args(0)).toAbsolutePath
+    def at(name: String) = work.resolve(name).toString
+    writeDesigns(work.resolve("designs"))
+    val spark = graft.Session.build()
+    val code = try {
+      writeSources(spark, at("data"))
+      val extracted = graft.Cli.run(spark, "extract", Map(
+        "designs" -> at("designs"), "data" -> at("data"), "out" -> at("extract")))
+      if (extracted != 0) extracted
+      else graft.Cli.run(spark, "load", Map(
+        "designs" -> at("designs"), "data" -> at("extract"),
+        "warehouse" -> at("wh"), "events" -> at("events.jsonl")))
+    } finally spark.stop()
+    if (code != 0) sys.exit(code)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dag_load_order" -> (dagLoadOrder _),

@@ -327,9 +327,8 @@ object DialectShims {
         case ')' =>
           if (depth == 0) predEnd = k else { depth -= 1; k += 1 }
         case _ =>
-          if (depth == 0 && (OrderByRe.matcher(lower).region(k, lower.length).lookingAt() ||
-              lower.regionMatches(k, "limit", 0, 5) ||
-              SetOpRe.matcher(lower).useTransparentBounds(true).region(k, lower.length).lookingAt()))
+          if (depth == 0 &&
+              PredicateEndRe.matcher(lower).useTransparentBounds(true).region(k, lower.length).lookingAt())
             predEnd = k
           else k += 1
       }
@@ -366,9 +365,10 @@ object DialectShims {
     rewriteQualify(rewritten)   // handle remaining (outer) QUALIFYs
   }
 
-  private val OrderByRe = java.util.regex.Pattern.compile(s"order$Gap+by\\b")
-
-  private val SetOpRe = java.util.regex.Pattern.compile("(?<!\\w)(?:union|intersect|except|minus)\\b")
+  /** What ends a QUALIFY predicate: ORDER BY, LIMIT or a set operation,
+    * each a whole word (`rank_limit` and `limits` are names). */
+  private val PredicateEndRe = java.util.regex.Pattern.compile(
+    s"(?<!\\w)(?:order$Gap+by|limit|union|intersect|except|minus)\\b")
 
   /** `s` with a line break after it when it ends in a `--` comment:
     * text spliced in after `s` would otherwise become comment text. */

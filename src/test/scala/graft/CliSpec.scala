@@ -74,13 +74,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The demo design set (`DemoDag`) in the reference layout. */
   private def demoDesigns(): String = {
     val root = Files.createTempDirectory("graft_cli_demo_")
-    graft.etl.DemoDag.designYaml.foreach { yaml =>
-      val d = graft.etl.TableDesign.load(yaml)
-      val source = if (d.isSourceTable) d.sourceName else d.name.schema
-      val file = root.resolve(s"schemas/${d.name.schema}/$source-${d.name.table}.yaml")
-      Files.createDirectories(file.getParent)
-      Files.write(file, yaml.getBytes(StandardCharsets.UTF_8))
-    }
+    graft.etl.DemoDag.writeDesigns(root)
     root.toString
   }
 

@@ -340,6 +340,17 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
       == "SELECT disqualify FROM t")
   }
 
+  test("QUALIFY: a name containing LIMIT does not end the predicate") {
+    spark.range(6).selectExpr("id AS g", "id % 3 AS rank_limit", "id AS limits")
+      .createOrReplaceTempView("qt_limit")
+    def gs(sql: String): Seq[Long] =
+      spark.sql(DialectShims.rewriteRedshiftSql(sql)).collect().map(_.getLong(0)).toSeq.sorted
+    assert(gs("SELECT g FROM qt_limit QUALIFY rank_limit = 1") == Seq(1L, 4L))
+    assert(gs("SELECT g FROM qt_limit QUALIFY limits > 1") == Seq(2L, 3L, 4L, 5L))
+    // the keyword itself still ends it
+    assert(gs("SELECT g FROM qt_limit QUALIFY limits > 1 ORDER BY g LIMIT 2") == Seq(2L, 3L))
+  }
+
   test("QUALIFY keeps line comments in its select list, FROM clause and predicate") {
     // the rewrite trimmed each piece, which dropped the line break
     // ending a `--` comment (and the NUL closing its mask placeholder):
