@@ -705,13 +705,12 @@ object Cli {
               f"elapsed=${e.elapsedSeconds}%.2fs scan_rows=${e.rowcount.getOrElse(0L)}"))
         0
       case "explain" =>
-        // --sql: explain an ad-hoc query (through the dialect shim,
-        // like run_query would execute it); otherwise the selected
-        // transformations' design queries
+        // --sql: explain an ad-hoc query, read through the dialect as
+        // run_query and run_sql read it; otherwise the selected
+        // transformations' design queries (rewritten at design load)
         opts.get("sql") match {
           case Some(sql) =>
-            println(Explain.report(
-              spark.sql(DialectShims.rewriteRedshiftSql(sql))))
+            println(Explain.report(DialectShims.sql(spark, sql)))
           case None =>
             designs.filter(r => r.isTransformation && selector.matches(r.name))
               .foreach { r =>

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Design bootstrap (B1-B8): the reference infers table designs from
   * upstream catalogs (`pg_class`/`pg_attribute`/`pg_index`/`pg_depend`,
@@ -17,9 +18,12 @@ object Bootstrap {
     * live tables (bootstrap.py:182-205's pg_depend lookup; the
     * EXPLAIN fallback B6 at bootstrap.py:208-278 is unnecessary —
     * the parser sees every reference, however nested). */
-  def dependenciesOf(spark: SparkSession, query: String): Seq[String] = {
+  def dependenciesOf(spark: SparkSession, query: String): Seq[String] =
+    dependenciesOf(spark.sessionState.sqlParser.parsePlan(query))
+
+  private def dependenciesOf(parsed: LogicalPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
     val ctes = scala.collection.mutable.Set[String]()
     val rels = scala.collection.mutable.Set[String]()
     // Explicit recursion: plan.collect alone misses CTE definitions
@@ -39,7 +43,7 @@ object Bootstrap {
         case _ => ()
       })
     }
-    walk(spark.sessionState.sqlParser.parsePlan(query))
+    walk(parsed)
     (rels -- ctes).toSeq.sorted
   }
 
@@ -126,13 +130,15 @@ object Bootstrap {
       })
   }
 
-  /** CTAS/VIEW design from a query (B8, bootstrap.py:572-640): the
-    * reference creates a temp view and reads the catalog back; here
-    * the analyzer gives the schema without touching the catalog. */
+  /** CTAS/VIEW design from a query in Redshift SQL (B8,
+    * bootstrap.py:572-640): the reference creates a temp view and
+    * reads the catalog back; here the analyzer gives the schema of the
+    * query read through the dialect, without touching the catalog. */
   def designFromQuery(spark: SparkSession, name: TableName, query: String,
                       asView: Boolean = false): TableDesign = {
-    val schema = spark.sql(query).schema  // analysis only, not executed
-    val deps = dependenciesOf(spark, query).map(TableName.parse)
+    val df = DialectShims.sql(spark, query)   // analysis only, not executed
+    val schema = df.schema
+    val deps = dependenciesOf(df.queryExecution.logical).map(TableName.parse)
     if (asView)
       TableDesign(name, "VIEW",
         schema.fields.toSeq.map(f => ColumnDef(f.name)),
@@ -214,11 +220,10 @@ object Bootstrap {
     byTable.toSeq.sortBy(_._1).flatMap { case ((schema, table), fs) =>
       fs.find(_.ext == "sql") match {
         case Some(sqlFile) if !fs.exists(_.ext == "yaml") =>
-          // same dialect pass FileSets.discover applies: the analyzer
-          // must see Spark SQL, not raw Redshift spellings
-          val query = DialectShims.rewriteRedshiftSql(
-            new String(Files.readAllBytes(sqlFile.path),
-              StandardCharsets.UTF_8).trim)
+          // the file's own Redshift text: designFromQuery reads it
+          // through the dialect
+          val query = new String(Files.readAllBytes(sqlFile.path),
+            StandardCharsets.UTF_8).trim
           val name = TableName(schema, table)
           val design = designFromQuery(spark, name, query, asView = asView)
           // the query stays in the existing .sql (saveTableDesign will

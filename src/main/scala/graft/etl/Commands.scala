@@ -7,10 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Commands {
 
   // ------------------------------------------------------------- Q1
-  /** run_query (load.py:1373-1404): execute a transformation's query
-    * with a LIMIT. `limit = None` means `LIMIT NULL` (all rows). */
+  /** run_query (load.py:1373-1404): execute a query, Redshift SQL
+    * through the dialect, with a LIMIT. `limit = None` means `LIMIT
+    * NULL` (all rows). */
   def runQuery(spark: SparkSession, query: String, limit: Option[Int] = Some(100)): DataFrame = {
-    val df = spark.sql(query)
+    val df = DialectShims.sql(spark, query)
     limit.map(df.limit).getOrElse(df)
   }
 
@@ -225,7 +226,8 @@ object Commands {
   }
 
   /** RunSql admin command (commands.py:772-821): execute a SQL script,
-    * returning the last result. EVERY statement runs — the reference
+    * each statement through the dialect, returning the last result.
+    * EVERY statement runs — the reference
     * executes each in order — so intermediate SELECTs are forced with
     * an executor-side no-op action (no driver collect; a script-sized
     * intermediate result never lands on the driver); only the LAST
@@ -234,7 +236,7 @@ object Commands {
     val stmts = splitSqlStatements(script)
     stmts.zipWithIndex.foldLeft(Option.empty[DataFrame]) {
       case (_, (stmt, ix)) =>
-        val df = spark.sql(stmt)   // commands (DDL/DML) execute here
+        val df = DialectShims.sql(spark, stmt)   // commands (DDL/DML) execute here
         if (ix < stmts.length - 1) df.foreach(_ => ())
         Some(df)
     }
@@ -268,9 +270,9 @@ object Commands {
         require(r.getBoolean(0), "f_sha256 != sha2")
       },
       check("dialect.shim") {
-        val sql = DialectShims.rewriteRedshiftSql(
-          "SELECT DATEDIFF(day, DATE '2024-01-31', DATE '2024-02-01') AS d")
-        require(spark.sql(sql).head.getLong(0) == 1L, "boundary datediff")
+        val d = DialectShims.sql(spark,
+          "SELECT DATEDIFF(day, DATE '2024-01-31', DATE '2024-02-01') AS d").head.getLong(0)
+        require(d == 1L, "boundary datediff")
       },
       check("asof.native") {
         val l = Seq((1L, 10L, 100L)).toDF("k", "lt", "lid")

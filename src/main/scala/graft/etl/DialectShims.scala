@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
   * | DATEDIFF(unit, a, b) | text (keyword unit) + builder | rs_datediff_<unit>(a, b) |
   * | SYSDATE | text (parenless) | current_timestamp() |
   * | SIMILAR TO, QUALIFY, SELECT TOP n, APPROXIMATE COUNT(DISTINCT), RATIO_TO_REPORT | text (syntax) | RLIKE, filtered subquery, LIMIT, approx_count_distinct, x / SUM(x) OVER |
-  * | UNNEST, SUPER `UNPIVOT ... AT k`, `AS e AT i`, `[*]` | text (syntax) | LATERAL VIEW explode(from_json), exists |
-  * | SUPER/PartiQL paths, comma iteration `FROM s, s.path AS e` | Spark's parse (scope per query block) | get_json_object, LATERAL VIEW explode(from_json) |
+  * | UNNEST, SUPER `UNPIVOT ... AT k`, `AS e AT i`, `[*]` | text (syntax) | in-place LATERAL explode(from_json), exists |
+  * | SUPER/PartiQL paths, comma iteration `FROM s, s.path AS e` | Spark's parse (scope per query block) | get_json_object, in-place LATERAL explode(from_json) |
   * | NVL, LEN, LISTAGG ... WITHIN GROUP | Spark built-ins (ordering and NULL semantics included) | — |
   */
 object DialectShims {
@@ -643,7 +643,8 @@ object DialectShims {
     // parses ONLY arrays, so its non-nullity is the array discriminator
     fixed("is_valid_json", 1, s"($ValidJson AND from_json(__0, 'array<string>') IS NULL)"),
     fixed("can_json_parse", 1, ValidJson),
-    fixed("is_valid_json_array", 1, "(from_json(__0, 'array<string>') IS NOT NULL)"),
+    // NULL for NULL, as IS_VALID_JSON and CAN_JSON_PARSE answer
+    fixed("is_valid_json_array", 1, "CASE WHEN __0 IS NOT NULL THEN from_json(__0, 'array<string>') IS NOT NULL END"),
     // SUPER is json TEXT on this tier, so parse and serialize are identities
     fixed("json_parse", 1, "__0"),
     fixed("json_serialize", 1, "__0"),
@@ -923,14 +924,14 @@ object DialectShims {
     *
     *   - `alias.col.a.b[0].c` → `get_json_object(alias.col, '$.a.b[0].c')`
     *   - `FROM t, UNNEST(expr) [AS] x` / `CROSS JOIN UNNEST(expr) x`
-    *     → `FROM t LATERAL VIEW explode(from_json(expr,
-    *       'array<string>')) x_lv AS x`
+    *     → `FROM t, LATERAL explode(from_json(expr,
+    *       'array<string>')) AS x_lv(x)`
     *   - `x.field` on an element alias → `get_json_object(x, '$.field')`
     *
     * Two stages. Text passes rewrite only the syntax Spark's parser
     * rejects — UNNEST, SUPER `UNPIVOT ... AT k`, `AS e AT i` and `[*]`
-    * — into LATERAL VIEWs and `exists()` over the paths as written,
-    * placing each LATERAL VIEW after its block's last FROM item. Scope
+    * — into lateral generators where each item stands and `exists()`
+    * over the paths as written. Scope
     * then comes from Spark's parse ([[resolvePaths]]): a dotted
     * reference with ≥ 3 components — or ≥ 2 plus a `[n]` index — is a
     * PartiQL path ONLY when its head binds, in its own query block or
@@ -957,33 +958,33 @@ object DialectShims {
   /** The PartiQL FROM items Spark's parser rejects: `, UNNEST(x) [AS]
     * e` (or `CROSS JOIN UNNEST`), SUPER `, UNPIVOT s.doc AS v AT k`
     * (one row per object attribute) and `, s.path [AS] e AT i`
-    * (iteration with a 0-based ordinal, Redshift's native spelling). */
+    * (iteration with a 0-based ordinal, Redshift's native spelling).
+    * Group `item` is the item after its `,` or `CROSS JOIN`. */
   private val FromItemRe = java.util.regex.Pattern.compile(
-    s"(?i)(?:,|\\bCROSS$Gap+JOIN\\b(?=$Gap*UNNEST$Gap*\\())$Gap*(?:UNNEST$Gap*(\\()|" +
+    s"(?i)(?:,|\\bCROSS$Gap+JOIN\\b(?=$Gap*UNNEST$Gap*\\())$Gap*(?<item>UNNEST$Gap*(\\()|" +
       s"(UNPIVOT$Gap+)?($PathSyntax)$Gap+(?:AS$Gap+)?($Name)$Gap+AT$Gap+($Name))")
 
-  /** A PartiQL item a text pass emitted as a LATERAL VIEW: its element
+  /** A PartiQL item a text pass emitted as a lateral join: its element
     * alias, and the refusal for a path head that binds nothing (None
     * where any expression may stand, as in UNNEST). */
   private final case class Emitted(element: String, refusal: Option[String])
 
   /** Rewrite the FROM items of [[FromItemRe]], left to right (masked
-    * text), each to a LATERAL VIEW after its block's last FROM item
-    * (Spark allows LATERAL VIEW only after the whole FROM list); the
-    * paths stay as written for [[resolvePaths]]. Returns the emitted
-    * items by LATERAL VIEW name. */
+    * text), each where it stands to a lateral generator, `LATERAL
+    * explode(...) AS e_lv(e)`; the paths stay as written for
+    * [[resolvePaths]]. Returns the emitted items by relation name. */
   private def rewriteFromItems(sql: String): (String, Map[String, Emitted]) = {
-    var out = sql
-    var from = 0
+    val out = new java.lang.StringBuilder
+    var last = 0
     val emitted = Map.newBuilder[String, Emitted]
-    var m = FromItemRe.matcher(out)
-    while (m.find(from)) {
+    val m = FromItemRe.matcher(sql)
+    while (m.find(last)) {
       val (itemEnd, lateral, view, item, dropped) =
-        if (m.group(1) != null) {
+        if (m.group(2) != null) {
           var depth = 1
           var i = m.end
-          while (depth > 0 && i < out.length) {
-            out.charAt(i) match {
+          while (depth > 0 && i < sql.length) {
+            sql.charAt(i) match {
               case '(' => depth += 1
               case ')' => depth -= 1
               case _ => ()
@@ -991,14 +992,14 @@ object DialectShims {
             i += 1
           }
           require(depth == 0, "UNNEST(...): unbalanced parentheses")
-          val arg = out.substring(m.end, i - 1)
+          val arg = sql.substring(m.end, i - 1)
           // two spellings: `UNNEST(x) [AS] t` (t is the element) and the
           // Trino/Athena column-alias form `UNNEST(x) [AS] t(col)` (col is
           // the element, t names the lateral relation)
           val aliasM = java.util.regex.Pattern
             .compile(s"(?i)^$Gap*(?:AS$Gap+)?($Name)" +
               s"($Gap*\\($Gap*($Name(?:\\s*,[^)]*)?)$Gap*\\))?")
-            .matcher(out.substring(i))
+            .matcher(sql.substring(i))
           require(aliasM.find() && !ReservedAfterAlias(aliasM.group(1).toUpperCase),
             "UNNEST(...) requires an alias (UNNEST(expr) AS x)")
           val colList = Option(aliasM.group(3)).map(_.trim)
@@ -1007,65 +1008,26 @@ object DialectShims {
               "over json-varchar arrays — iterate a single element alias")
           val alias = colList.getOrElse(aliasM.group(1))
           val view = if (colList.isDefined) aliasM.group(1) else alias + "_lv"
-          (i + aliasM.end, s"explode(from_json($arg, 'array<string>')) $view AS $alias",
-            view, Emitted(alias, None), m.group + aliasM.group)
+          (i + aliasM.end, s"LATERAL explode(from_json($arg, 'array<string>')) AS $view($alias)",
+            view, Emitted(alias, None), sql.substring(m.start("item"), m.end) + aliasM.group)
         } else {
-          val (path, elem, at) = (m.group(3), m.group(4), m.group(5))
-          if (m.group(2) != null)
-            (m.end, s"explode(from_json($path, 'map<string,string>')) ${at}_lv AS $at, $elem",
+          val (path, elem, at) = (m.group(4), m.group(5), m.group(6))
+          if (m.group(3) != null)
+            (m.end, s"LATERAL explode(from_json($path, 'map<string,string>')) AS ${at}_lv($at, $elem)",
               s"${at}_lv", Emitted(elem, Some(s"UNPIVOT $path: a SUPER UNPIVOT item's " +
-                "head must be a relation alias bound earlier in the FROM clause")), m.group)
+                "head must be a relation alias bound earlier in the FROM clause")), m.group("item"))
           else
-            (m.end, s"posexplode(from_json($path, 'array<string>')) ${elem}_lv AS $at, $elem",
+            (m.end, s"LATERAL posexplode(from_json($path, 'array<string>')) AS ${elem}_lv($at, $elem)",
               s"${elem}_lv", Emitted(elem, Some(s"$path AS $elem AT $at: a PartiQL iteration " +
-                "item's head must be a relation alias bound earlier in the FROM clause")), m.group)
+                "item's head must be a relation alias bound earlier in the FROM clause")), m.group("item"))
         }
       emitted += view.toLowerCase -> item
-      val rest = out.substring(itemEnd)
-      val joined = out.substring(0, m.start) + rest
-      val at = lastItemEnd(joined, m.start + clauseEnd(rest))
-      out = joined.substring(0, at) + s" LATERAL VIEW $lateral" +
-        commentsIn(dropped) + joined.substring(at)
-      from = m.start
-      m = FromItemRe.matcher(out)
+      out.append(sql, last, m.start("item")).append(lateral).append(commentsIn(dropped))
+      last = itemEnd
     }
-    (out, emitted.result())
+    out.append(sql, last, sql.length)
+    (out.toString, emitted.result())
   }
-
-  /** The keywords that end a FROM clause's item list (a relational
-    * PIVOT/UNPIVOT is one: LATERAL VIEW goes before it). */
-  private val ClauseEndRe = java.util.regex.Pattern.compile(
-    s"(?i)(?:(?:WHERE|HAVING|LIMIT|OFFSET|WINDOW|QUALIFY|UNION|INTERSECT|EXCEPT|MINUS|" +
-      s"(?:GROUP|ORDER|CLUSTER|DISTRIBUTE|SORT)$Gap+BY)\\b|" +
-      s"(?:UN)?PIVOT$Gap*(?:\\(|INCLUDE\\b|EXCLUDE\\b)|;)")
-
-  /** The offset in `s` (masked text after a FROM item) of its block's
-    * next clause: a depth-0 [[ClauseEndRe]] keyword, the paren that
-    * closes the block, or the end. */
-  private def clauseEnd(s: String): Int = {
-    val kw = ClauseEndRe.matcher(s)
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => if (depth == 0) return i else depth -= 1
-        case _ =>
-          if (depth == 0 && (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-              s.charAt(i - 1) != '_') && kw.region(i, s.length).lookingAt()) return i
-      }
-      i += 1
-    }
-    s.length
-  }
-
-  private val TrailingGapRe = s"$Gap+$$".r
-
-  /** `stop` moved back over the whitespace and comments before it: the
-    * end of the last token, where an item goes in without landing in a
-    * `--` comment or moving the text's own spacing. */
-  private def lastItemEnd(sql: String, stop: Int): Int =
-    TrailingGapRe.findFirstMatchIn(sql.substring(0, stop)).fold(stop)(_.start)
 
   /** PartiQL `[*]` wildcard array paths inside comparison predicates:
     * `WHERE s.doc.lines[*].q > 3`. Redshift's SUPER tier accepts a
@@ -1189,15 +1151,15 @@ object DialectShims {
     * one walk over the parsed plan decides each query block's scope
     * once, and each path goes in at its parser origin through
     * [[Bootstrap.splice]]. A comma-listed `s.path [AS] e` whose head
-    * binds becomes a LATERAL VIEW after the block's last FROM item.
-    * `emitted` are the text passes' LATERAL VIEWs by name, `owned` the
+    * binds becomes a lateral `explode` where it stands. `emitted` are
+    * the text passes' lateral items by relation name, `owned` the
     * refusals of their `[*]` array paths by path text: a head in either
     * that binds nothing is refused. The parse is the one `spark.sql`
     * makes; SQL it rejects is left as it is, or refused when a text
     * pass translated part of it. */
   private def resolvePaths(sql: String, emitted: Map[String, Emitted],
                            owned: Map[String, String]): String = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedExtractValue, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedExtractValue, UnresolvedRelation, UnresolvedTVFAliases}
     import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, SubqueryExpression, UnresolvedNamedLambdaVariable}
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.catalyst.trees.TreeNode
@@ -1251,21 +1213,12 @@ object DialectShims {
     /** A comma join's origin is the whole FROM clause, an explicit
       * join's its JOIN ... ON. */
     def commaJoin(j: Join): Boolean = span(j).exists(s => span(j.left).exists(s._1 < _._1))
-    /** Where the item list of `p`'s FROM clause ends: its last item,
-      * before any LATERAL VIEW. */
-    def itemsEnd(p: LogicalPlan): Option[Int] = p match {
-      case g: Generate => itemsEnd(g.child)
-      case j: Join if commaJoin(j) => itemsEnd(j.right)
-      case _: Join | _: SubqueryAlias | _: LeafNode => span(p).map(_._2)
-      case _ => p.children.lastOption.flatMap(itemsEnd)
-    }
 
     def block(root: LogicalPlan, outer: Scope): Unit = {
       val names = scala.collection.mutable.Map[String, Boolean]()
       val members = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
       val generators = scala.collection.mutable.ArrayBuffer[(Expression, Option[String])]()
       val nested = scala.collection.mutable.ArrayBuffer[LogicalPlan]()
-      val iterations = scala.collection.mutable.ArrayBuffer[String]()
       def visit(p: LogicalPlan): Unit = p match {
         case _: Union | _: SetOperation => nested ++= p.children
         case w: UnresolvedWith => nested ++= w.cteRelations.map(_._2); visit(w.child)
@@ -1276,26 +1229,29 @@ object DialectShims {
             case a @ SubqueryAlias(id, r: UnresolvedRelation) if r.multipartIdentifier.size > 1 &&
                 lookup(names.toMap :: outer, r.multipartIdentifier.head).isDefined =>
               val elem = lookup(names.toMap :: outer, r.multipartIdentifier.head).contains(true)
-              for ((s, stop) <- span(r); prev <- itemsEnd(j.left); (_, end) <- span(a)) {
+              for ((s, stop) <- span(r); (_, end) <- span(a)) {
                 val path = sql.substring(s, stop + 1)
-                val (cut, saved) = mask(sql.substring(prev + 1, end + 1))
-                edits += ((prev + 1, end, ""))
-                iterations += s" LATERAL VIEW explode(from_json(${jsonText(path, elem).getOrElse(path)}, " +
-                  s"'array<string>')) ${id.name}_lv AS ${id.name}" + unmask(commentsIn(cut), saved)
+                val (cut, saved) = mask(sql.substring(stop + 1, end + 1))
+                edits += ((s, end, s"LATERAL explode(from_json(${jsonText(path, elem).getOrElse(path)}, " +
+                  s"'array<string>')) AS ${id.name}_lv(${id.name})" + unmask(commentsIn(cut), saved)))
               }
               names(id.name.toLowerCase) = true
             case right => visit(right)
           }
+        // an item a text pass emitted: `LATERAL explode(...) AS e_lv(e)`
+        case j: LateralJoin => j.right.plan match {
+          case SubqueryAlias(id, UnresolvedTVFAliases(_, tvf, _)) if emitted.contains(id.name.toLowerCase) =>
+            visit(j.left)
+            val item = emitted(id.name.toLowerCase)
+            names(item.element.toLowerCase) = true
+            tvf.expressions.foreach(g => generators += ((g, item.refusal)))
+          case _ => members += p; p.children.foreach(visit)
+        }
         case SubqueryAlias(id, child) =>
           names(id.name.toLowerCase) = false
           if (!child.isInstanceOf[UnresolvedRelation]) nested += child
         case r: UnresolvedRelation =>
           if (r.multipartIdentifier.size == 1) names(r.multipartIdentifier.head.toLowerCase) = false
-        case g: Generate =>
-          visit(g.child)
-          val item = g.qualifier.flatMap(q => emitted.get(q.toLowerCase))
-          item.foreach(i => names(i.element.toLowerCase) = true)
-          generators += ((g.generator, item.flatMap(_.refusal)))
         case _ => members += p; p.children.foreach(visit)
       }
       visit(root)
@@ -1314,8 +1270,6 @@ object DialectShims {
         case p => p.expressions.foreach(expr(_, scope, None))
       }
       generators.foreach { case (g, refusal) => expr(g, scope, refusal) }
-      if (iterations.nonEmpty) itemsEnd(root).foreach(end =>
-        iterations.foreach(text => edits += ((end + 1, end, text))))
       nested.foreach(block(_, outer))
     }
 
@@ -1354,4 +1308,12 @@ object DialectShims {
     if (emitted.isEmpty && wildcards.isEmpty && PathCandidateRe.findFirstIn(step3).isEmpty) text
     else resolvePaths(text, emitted, wildcards)
   }
+
+  /** The one door from authored SQL to Spark: `run_query`, `run_sql`,
+    * `explain --sql`, the bootstrap of a `.sql` file and the dialect
+    * entries run each statement through here, rewritten once. Spark-
+    * native statements pass unchanged. Design queries are rewritten
+    * once at design load ([[FileSets.discover]]) instead, because views
+    * and query rewrites keep that text. */
+  def sql(spark: SparkSession, text: String): DataFrame = spark.sql(rewriteRedshiftSql(text))
 }

@@ -706,8 +706,8 @@ object SqlSurface {
     * sources to varchar (config/default_settings.yaml:97-118) and
     * modern Redshift transform SQL walks such payloads with dot
     * paths, array indexes, and UNNEST. The dialect shim rewrites the
-    * PartiQL forms to `get_json_object` + `LATERAL VIEW explode(
-    * from_json(...))`; DuckDB answers the same question with its
+    * PartiQL forms to `get_json_object` + an in-place `LATERAL
+    * explode(from_json(...))`; DuckDB answers the same question with its
     * native json path operators and lateral `unnest`, sharing none of
     * the shim's machinery. */
   def q41SuperPaths(spark: SparkSession, sfDir: String): DataFrame = {
@@ -727,7 +727,7 @@ object SqlSurface {
         |  t AS tag
         |FROM src s, UNNEST(s.payload.tags) AS t
         |ORDER BY s.id, tag""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q41SuperPathsSql: String =
@@ -771,7 +771,7 @@ object SqlSurface {
         |FROM src s, s.doc.lines AS ln AT i
         |WHERE CAST(ln.n AS BIGINT) <> 1
         |ORDER BY s.id, ord""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q42PartiqlIterateSql: String =
@@ -825,7 +825,7 @@ object SqlSurface {
         |FROM src s, s.doc.lines AS ln
         |GROUP BY ln.meta.tag
         |ORDER BY tag""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q43PartiqlNestedSql: String =
@@ -881,7 +881,7 @@ object SqlSurface {
         |FROM src s
         |WHERE s.doc.lines[*].q > 3
         |ORDER BY s.id""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q44WildcardFilterSql: String =
@@ -928,7 +928,7 @@ object SqlSurface {
         |FROM src s, UNPIVOT s.doc AS v AT k
         |GROUP BY k
         |ORDER BY attr""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q45SuperUnpivotSql: String =
@@ -968,7 +968,7 @@ object SqlSurface {
         |  DATEDIFF(day, TIMESTAMP '1995-01-01 00:00:00', TIMESTAMP '1995-03-01 12:00:00') AS diff_days
         |FROM rs_nation JOIN rs_region ON n_regionkey = r_regionkey
         |GROUP BY r_name ORDER BY r_name""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   /** `SELECT TOP n` (Redshift's LIMIT spelling) through the dialect
@@ -983,7 +983,7 @@ object SqlSurface {
         |  SELECT TOP 5 c_custkey, c_acctbal
         |  FROM top_customer ORDER BY c_acctbal DESC, c_custkey
         |) t ORDER BY c_custkey""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q35TopDialectSql: String =
@@ -1150,7 +1150,7 @@ object SqlSurface {
         |  CAST(DECODE(c_mktsegment, 'BUILDING', 1, 0) AS INT) AS is_building
         |FROM rs_customer
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q22SimilarToSql: String =
@@ -1244,7 +1244,7 @@ object SqlSurface {
         |  NVL2(NULLIF(qty_bucket, 1), 'multi', 'first') AS bucket_tag
         |FROM g
         |ORDER BY flag, qty_bucket""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   /** DuckDB has neither WIDTH_BUCKET, RATIO_TO_REPORT, nor NVL2: the
@@ -1297,7 +1297,7 @@ object SqlSurface {
         |FROM rs_orders
         |WHERE SYSDATE >= TIMESTAMP '2000-01-01 00:00:00'
         |ORDER BY o_orderkey LIMIT 200""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   /** DuckDB has no TO_CHAR/CONVERT_TIMEZONE/SYSDATE either: strftime
@@ -1334,7 +1334,7 @@ object SqlSurface {
         |  CAST(TO_TIMESTAMP(TO_CHAR(o_orderdate, 'YYYY-MM-DD HH24:MI:SS'), 'YYYY-MM-DD HH24:MI:SS') AS VARCHAR(32)) AS rt_ts
         |FROM rs_orders
         |ORDER BY o_orderkey LIMIT 100""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q26ParseDialectSql: String =
@@ -1386,7 +1386,7 @@ object SqlSurface {
         |FROM rs_orders
         |QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) = 1
         |ORDER BY o_custkey LIMIT 200""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q28QualifySql: String =
@@ -1410,7 +1410,7 @@ object SqlSurface {
         |  COUNT(JSON_EXTRACT_PATH_TEXT(props, 'missing', true)) AS n_missing
         |FROM rs_events
         |GROUP BY event_type ORDER BY event_type""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q29JsonDialectSql: String =
@@ -1588,7 +1588,7 @@ object SqlSurface {
         |  STRTOL(SPLIT_PART(c_name, '#', 2), 16) AS id_hex,
         |  CAST(DATE_PART('year', TIMESTAMP '1995-07-16 12:30:00') AS BIGINT) AS yr
         |FROM rs_customer ORDER BY c_custkey LIMIT 300""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q33StringDialectSql: String =
@@ -1628,7 +1628,7 @@ object SqlSurface {
         |  CAST(TRUNC(DATEADD(day, CAST(doc_id % 900 AS INT),
         |    TIMESTAMP '1994-01-01 00:00:00'), 'month') AS VARCHAR(16)) AS dmonth
         |FROM rs_documents ORDER BY doc_id LIMIT 500""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q39RegexDialectSql: String =
@@ -1672,7 +1672,7 @@ object SqlSurface {
         |  TO_CHAR(o_orderkey, 'FM99') AS overflowed,
         |  TO_CHAR(o_orderkey % 5, '9') AS signslot
         |FROM rs_orders ORDER BY o_orderkey LIMIT 500""".stripMargin
-    spark.sql(graft.etl.DialectShims.rewriteRedshiftSql(redshiftSql))
+    graft.etl.DialectShims.sql(spark, redshiftSql)
   }
 
   val q40ToCharNumberSql: String =

@@ -789,6 +789,34 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c2 == 0 && out.contains("rows=3"), out)
   }
 
+  test("run_query, run_sql and explain --sql agree with the dialect door") {
+    val statements = Seq(
+      "SELECT DATEDIFF(day, TIMESTAMP '2024-01-31 23:00:00', TIMESTAMP '2024-02-01 01:00:00') AS d, " +
+        "TRUNC(TIMESTAMP '2024-01-31 10:00:00', 'D') AS w",
+      "SELECT TO_CHAR(DATE '2024-02-03', 'Mon YYYY') AS m",
+      "SELECT id FROM range(5) QUALIFY ROW_NUMBER() OVER (ORDER BY id DESC) <= 2",
+      "SELECT 'abc' SIMILAR TO 'a%' AS a, 'xbc' SIMILAR TO 'a%' AS x",
+      "SELECT TOP 2 id FROM range(10) ORDER BY id",
+      "SELECT APPROXIMATE COUNT(DISTINCT id) AS n FROM range(10)",
+      "SELECT id, RATIO_TO_REPORT(id) OVER () AS r FROM range(1, 5)",
+      "SELECT i, e FROM (SELECT '[\"x\", \"y\"]' AS tags) s, s.tags AS e AT i",
+      "SELECT s.id FROM (SELECT 1 AS id, '{\"q\": [1, 5]}' AS doc " +
+        "UNION ALL SELECT 2, '{\"q\": [1, 2]}') s WHERE s.doc.q[*] > 3")
+    statements.foreach { sql =>
+      val door = etl.DialectShims.sql(spark, sql).collect().map(_.toSeq
+        .map(v => Option(v).map(_.toString).getOrElse("NULL")).mkString(" | ")).toSeq.sorted
+      val (c1, q) = captureOut { Cli.run(spark, "run_query", Map("sql" -> sql)) }
+      val (c2, r) = captureOut { Cli.run(spark, "run_sql", Map("sql" -> sql)) }
+      assert(c1 == 0 && c2 == 0, sql)
+      // run_query prints a header line first
+      assert(q.linesIterator.drop(1).toSeq.sorted == door, s"run_query: $sql\n$q")
+      assert(r.linesIterator.toSeq.sorted == door, s"run_sql: $sql\n$r")
+      assert(captureOut { Cli.run(spark, "explain", Map("sql" -> sql)) }._1 == 0, sql)
+    }
+    val (_, first) = captureOut { Cli.run(spark, "run_query", Map("sql" -> statements.head)) }
+    assert(first.linesIterator.toSeq.last == "1 | 2024-01-28", first)
+  }
+
   test("cli create_mv / refresh_mv: stored defs arm the rewrite across sessions") {
     val s = spark
     import s.implicits._

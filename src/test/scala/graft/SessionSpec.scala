@@ -27,6 +27,11 @@ class SessionSpec extends AnyFunSuite {
     assert(filesMentioning("SparkSession.builder") == Set("Session.scala"))
   }
 
+  test("authored SQL reaches Spark through one door") {
+    // DialectShims.sql, and the design load, which stores its rewrite
+    assert(filesMentioning("rewriteRedshiftSql(") == Set("DialectShims.scala", "FileSets.scala"))
+  }
+
   test("only GraftExtensions and DialectShims install functions, strategies or rules") {
     val allowed = Set("GraftExtensions.scala", "DialectShims.scala")
     val offenders = Seq("createOrReplaceTempFunction", "udf.register",

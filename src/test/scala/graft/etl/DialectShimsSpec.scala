@@ -630,13 +630,13 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r3 = DialectShims.rewriteRedshiftSql(
       "SELECT e.tags[2] FROM events e")
     assert(r3.contains("get_json_object(e.tags, '$[2]')"), r3)
-    // UNNEST → LATERAL VIEW explode(from_json); element field refs
+    // UNNEST → LATERAL explode(from_json) in place; element field refs
     // become paths on the element's json text
     val r4 = DialectShims.rewriteRedshiftSql(
       "SELECT i.sku, i.qty FROM events e, UNNEST(e.payload.items) AS i")
     assert(r4.contains(
-      "LATERAL VIEW explode(from_json(" +
-        "get_json_object(e.payload, '$.items'), 'array<string>')) i_lv AS i"),
+      ", LATERAL explode(from_json(" +
+        "get_json_object(e.payload, '$.items'), 'array<string>')) AS i_lv(i)"),
       r4)
     assert(r4.contains("get_json_object(i, '$.sku')") &&
       r4.contains("get_json_object(i, '$.qty')"), r4)
@@ -687,7 +687,7 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("{\"a\":1}", null, null, "true", "false", "true", "{\"a\":1}", "{\"a\":1}"),
       Seq("{oops", null, null, "false", "false", "false", "{oops", "{oops"),
       Seq("null", null, null, "true", "false", "true", "null", "null"),
-      Seq(null, null, null, null, "false", null, null, null)), family)
+      Seq(null, null, null, null, null, null, null, null)), family)
     // live eval: lengths and validity over good, bad, and array json
     val rows = spark.sql(DialectShims.rewriteRedshiftSql(
       "SELECT JSON_ARRAY_LENGTH('[1,2,3]') AS n, " +
@@ -724,20 +724,20 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = DialectShims.rewriteRedshiftSql(
       "SELECT s.id, i, ln.p FROM src s, s.doc.lines AS ln AT i")
     assert(r1.contains(
-      "LATERAL VIEW posexplode(from_json(" +
-        "get_json_object(s.doc, '$.lines'), 'array<string>')) ln_lv AS i, ln"),
+      "LATERAL posexplode(from_json(" +
+        "get_json_object(s.doc, '$.lines'), 'array<string>')) AS ln_lv(i, ln)"),
       r1)
     assert(r1.contains("get_json_object(ln, '$.p')"), r1)
     // no AT → plain explode; alias.column (2-part) is the array itself
     val r2 = DialectShims.rewriteRedshiftSql(
       "SELECT e FROM src s, s.tags e")
     assert(r2.contains(
-      "LATERAL VIEW explode(from_json(s.tags, 'array<string>')) e_lv AS e"),
+      "FROM src s, LATERAL explode(from_json(s.tags, 'array<string>')) AS e_lv(e)"),
       r2)
     // SELECT-list comma items with a bound head are NOT iteration
     val r3 = DialectShims.rewriteRedshiftSql(
       "SELECT s.id, s.doc.kind AS kind FROM src s")
-    assert(!r3.contains("LATERAL VIEW") &&
+    assert(!r3.contains("LATERAL") &&
       r3.contains("get_json_object(s.doc, '$.kind')"), r3)
     // a comma-listed CATALOG name (head not a bound alias) is untouched
     val r4 = DialectShims.rewriteRedshiftSql(
@@ -748,15 +748,15 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r4a = DialectShims.rewriteRedshiftSql(
       "SELECT l FROM events, events.doc.lines AS l")
     assert(r4a.contains(
-      "LATERAL VIEW explode(from_json(" +
-        "get_json_object(events.doc, '$.lines'), 'array<string>')) l_lv AS l"),
+      "LATERAL explode(from_json(" +
+        "get_json_object(events.doc, '$.lines'), 'array<string>')) AS l_lv(l)"),
       r4a)
     // a name bound only inside a SIBLING subquery must not leak out:
     // `events` here is a SCHEMA in the outer scope, and the inner
     // scope's `FROM events` must not turn `events.doc` into iteration
     val r4d = DialectShims.rewriteRedshiftSql(
       "SELECT d.v FROM (SELECT 1 AS one FROM events) q, events.doc AS d")
-    assert(!r4d.contains("LATERAL VIEW") &&
+    assert(!r4d.contains("LATERAL") &&
       r4d.contains("events.doc AS d"), r4d)
     // ...nor make the path pass rewrite an outer schema.table.column
     val r4e = DialectShims.rewriteRedshiftSql(
@@ -904,15 +904,15 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = DialectShims.rewriteRedshiftSql(
       "SELECT k, v FROM src s, UNPIVOT s.doc AS v AT k")
     assert(r1.contains(
-      "LATERAL VIEW explode(from_json(s.doc, 'map<string,string>')) " +
-        "k_lv AS k, v"), r1)
+      "LATERAL explode(from_json(s.doc, 'map<string,string>')) " +
+        "AS k_lv(k, v)"), r1)
     // nested path below the column
     val r2 = DialectShims.rewriteRedshiftSql(
       "SELECT k2, v2 FROM src s, UNPIVOT s.doc.metrics AS v2 AT k2")
     assert(r2.contains(
-      "LATERAL VIEW explode(from_json(" +
+      "LATERAL explode(from_json(" +
         "get_json_object(s.doc, '$.metrics'), 'map<string,string>')) " +
-        "k2_lv AS k2, v2"), r2)
+        "AS k2_lv(k2, v2)"), r2)
     // value-alias field refs compose (object attribute values are
     // json text, same as array elements)
     val r3 = DialectShims.rewriteRedshiftSql(
@@ -974,16 +974,55 @@ class DialectShimsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.endsWith(" UNION ALL SELECT s.doc.k FROM sch.s"), out)
   }
 
-  test("an iteration item before another FROM item: the LATERAL VIEW follows the FROM list") {
+  test("an iteration item before another FROM item joins where it stands") {
     spark.sql("SELECT '{\"a\": \"x\", \"lines\": [1, 2]}' AS doc").createOrReplaceTempView("src")
     spark.sql("SELECT * FROM VALUES (10), (20) AS v(n)").createOrReplaceTempView("other")
     Seq("SELECT s.doc.a, ln, o.n FROM src s, s.doc.lines AS ln, other o",
       "SELECT s.doc.a, ln, o.n FROM src s, UNNEST(s.doc.lines) AS ln, other o").foreach { sql =>
       val out = DialectShims.rewriteRedshiftSql(sql)
-      assert(out.contains("other o LATERAL VIEW explode("), out)
+      assert(out.contains("'array<string>')) AS ln_lv(ln), other o"), out)
       val rows = spark.sql(out).collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
       assert(rows.sorted == Seq(("x", "1", 10), ("x", "1", 20), ("x", "2", 10), ("x", "2", 20)), sql)
     }
+  }
+
+  test("an iteration item before JOIN ... ON binds its element for the ON") {
+    spark.sql("SELECT 1 AS id, '[\"a\", \"b\", \"c\"]' AS tags").createOrReplaceTempView("src")
+    spark.sql("SELECT * FROM VALUES ('a', 10), ('c', 30) AS v(k, w)").createOrReplaceTempView("u")
+    val rows = spark.sql(DialectShims.rewriteRedshiftSql(
+      "SELECT e, u.w FROM src s, s.tags e JOIN u ON u.k = e"))
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+    assert(rows == Seq(("a", 10), ("c", 30)), rows)
+    // SELECT * lists the element at the item's position, as Redshift does
+    val star = spark.sql(DialectShims.rewriteRedshiftSql(
+      "SELECT * FROM src s, UNNEST(s.tags) AS e, u WHERE u.k = e"))
+    assert(star.columns.toSeq == Seq("id", "tags", "e", "k", "w"), star.columns.toSeq)
+  }
+
+  test("Spark-native statements pass the rewrite byte for byte") {
+    val settings = Settings.load()
+    val templates = Templates.listTemplates("sql").map(t => Templates.renderSql(settings, t._1))
+    assert(templates.size == 2, templates)
+    val corpus = Seq(
+      // perfbench reads the session conf through `run_query --sql SET`
+      "SET",
+      // what the CLI specs send through run_query and run_sql
+      "select count(*) from rep.sales_by_segment",
+      "SELECT 1 AS x",
+      "SELECT sum(a.id * b.id) AS s FROM range(300000) a CROSS JOIN range(300000) b",
+      "SELECT 21 * 2 AS answer",
+      "SELECT g, sum(x) AS sx FROM mvs.sales GROUP BY g ORDER BY g",
+      "CREATE OR REPLACE TEMPORARY VIEW rs_t AS SELECT 41 AS x",
+      "SELECT x + 1 AS answer FROM rs_t",
+      // the engine's own DDL shapes
+      "CREATE DATABASE IF NOT EXISTS `rep`",
+      "ALTER TABLE `rep`.`t` SET LOCATION '/wh/rep/t/_b/0001'",
+      "DROP TABLE IF EXISTS `rep`.`t`",
+      "ANALYZE TABLE `rep`.`t` COMPUTE STATISTICS",
+      "SHOW USER FUNCTIONS",
+      "SHOW PARTITIONS `rep`.`t`",
+      "DESCRIBE TABLE EXTENDED `src`.`nation`") ++ templates
+    corpus.foreach(sql => assert(DialectShims.rewriteRedshiftSql(sql) == sql, sql))
   }
 
   test("a path inside a lambda body is a path: the [*] operand and a filter() body") {
