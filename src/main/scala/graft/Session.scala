@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, classic}
 
 import graft.etl.GraftExtensions
 
@@ -17,8 +17,12 @@ object Session {
   private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** Starts from the classic builder, not `SparkSession.builder()`:
+    * that one picks its implementation by reflection, which builds
+    * Scala's runtime-reflection universe (0.5-1.4 s of every cold CLI
+    * JVM) before the context starts. */
   def build(cores: Int = defaultCores): SparkSession = {
-    val b = SparkSession.builder()
+    val b = classic.SparkSession.builder()
     // spark-submit and -Dspark.master choose their own master
     if (!sys.props.contains("spark.master")) b.master(s"local[$cores]")
     val spark = b

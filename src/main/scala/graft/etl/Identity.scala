@@ -1,7 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed IDENTITY(1,1) surrogate-key assignment
@@ -36,6 +39,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * The result is bit-identical to `row_number() OVER (ORDER BY keys)`,
   * so it is independent of input partitioning only for a total order.
+  * The warehouse's CTAS builds pass one (the declared sort keys, then
+  * every other orderable column), so the input is numbered as it
+  * comes, with no repartition to spread it first.
   */
 object Identity {
 
@@ -57,23 +63,11 @@ object Identity {
     val n = if (numPartitions > 0) numPartitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val pid = col("__pid")
-    // Spread the input when its plan under-parallelizes (a CTAS join
-    // over single-split local scans is a broadcast join whose output
-    // inherits the ONE scan split — both range-exchange passes over
-    // the cache then ran ≤3-way while 29 cores idled, measured as the
-    // largest serial stage of the dag_final_table lifecycle). No-op
-    // whenever the plan already splits ≥ cores — at warehouse scale
-    // this inserts nothing. Numbering is a row_number over the
-    // declared ORDER; rows tied on it are numbered in arrival order.
     // Persist only when the frame is not already cached: persist() is
     // a no-op on an already-cached plan, so the unconditional
-    // persist/unpersist pair would silently drop a CALLER's cache when
-    // the spread is a no-op on a pre-persisted input.
-    val spreadDf = graft.queries.Tables.spread(df)
-    val ownCache = spreadDf.storageLevel == StorageLevel.NONE
-    val input =
-      if (ownCache) spreadDf.persist(StorageLevel.MEMORY_AND_DISK)
-      else spreadDf
+    // persist/unpersist pair would silently drop a CALLER's cache.
+    val ownCache = df.storageLevel == StorageLevel.NONE
+    val input = if (ownCache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     val parted = input
       .repartitionByRange(n, order: _*)
       .sortWithinPartitions(order: _*)
@@ -89,10 +83,11 @@ object Identity {
     val offsets = counts.map(_._2).scanLeft(0L)(_ + _).init
     // Offsets ride back in via a broadcast join (a when-chain would
     // stop codegen at high partition counts).
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsetDf = counts.map(_._1).zip(offsets).toSeq
-      .toDF("__pid2", "__offset")
+    // built from Rows and a schema, not `toDF`: a TypeTag encoder
+    // builds Scala's runtime-reflection universe in a cold JVM
+    val offsetDf = df.sparkSession.createDataFrame(
+      counts.map(_._1).zip(offsets).map { case (p, o) => Row(p, o) }.toSeq.asJava,
+      StructType(Seq(StructField("__pid2", IntegerType), StructField("__offset", LongType))))
     val rowIdxInPartition = col("__mono").bitwiseAND(lit((1L << 33) - 1))
     val out = parted
       .join(broadcast(offsetDf), pid === col("__pid2"))

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable,
-  CatalogTablePartition, CatalogTableType, ExternalCatalogUtils}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogDatabase, CatalogStorageFormat,
+  CatalogTable, CatalogTablePartition, CatalogTableType, ExternalCatalogUtils}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 final class FailedConstraintError(msg: String) extends RuntimeException(msg)
@@ -112,8 +113,11 @@ final class Warehouse(
   private def dataLocation(name: TableName, buildId: Long): String =
     s"$warehouseDir/data/${name.schema}.${name.table}/$buildId"
 
-  def ensureDatabase(schema: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$schema`")
+  def ensureDatabase(schema: String): Unit = {
+    val cat = spark.sessionState.catalog
+    cat.createDatabase(CatalogDatabase(schema, "", cat.getDefaultDBPath(schema), Map.empty),
+      ignoreIfExists = true)
+  }
 
   def createSchemas(relations: Seq[Relation], pos: SchemaPosition.Value): Unit =
     relations.map(_.name.inPosition(pos).schema).distinct.foreach(ensureDatabase)
@@ -145,9 +149,11 @@ final class Warehouse(
   /** Duplicate check per declared constraint (load.py:564-634):
     * `GROUP BY key HAVING COUNT(*) > 1 LIMIT 5`; for `unique`, null
     * keys are exempt (Redshift UNIQUE semantics). Non-empty ⇒
-    * [[FailedConstraintError]] carrying sample keys. */
+    * [[FailedConstraintError]] carrying sample keys. `oneTask` checks
+    * in one task, with no exchange: for a build AQE would read back as
+    * one shuffle partition anyway, that is one stage instead of two. */
   def verifyConstraints(df: DataFrame, design: TableDesign,
-                        trustEngineIdentity: Boolean = true): Unit =
+                        trustEngineIdentity: Boolean = true, oneTask: Boolean = false): Unit =
     design.constraints.foreach { ct =>
       // A surrogate key on the engine's own identity column is unique
       // BY CONSTRUCTION (row_number over a total order, Identity.scala)
@@ -162,9 +168,10 @@ final class Warehouse(
         design.identityColumn.exists(ic => ct.columns == Seq(ic.name))
       if (!engineGenerated) {
       val keyCols = ct.columns.map(col)
+      val in = if (oneTask) df.coalesce(1) else df
       val base = if (ct.kind == "unique")
-        df.filter(ct.columns.map(col(_).isNotNull).reduce(_ && _))
-      else df
+        in.filter(ct.columns.map(col(_).isNotNull).reduce(_ && _))
+      else in
       // aliased aggregate, not .count(): a constraint column literally
       // named "count" would make filter(col("count")) ambiguous and
       // fail every build of that relation regardless of data
@@ -218,7 +225,7 @@ final class Warehouse(
           // row (T3) is excluded from the check — identity keys start
           // at 1, so sk=0 IS the NA row — else a real source key 0
           // would false-positive against it.
-          val (loc, rows) = writeBuild(target, out, Some(design))
+          val (loc, rows, metrics) = writeBuild(target, out, Some(design))
           if (!skipCopy) {
             val written = readBuild(loc)
             val checked = (design.identityColumn, hasNaRow) match {
@@ -229,7 +236,10 @@ final class Warehouse(
               case (None, true) => df
               case _ => written
             }
-            verifyConstraints(checked, design)
+            // a build AQE would coalesce to one shuffle partition is
+            // checked in one task; a larger or unmeasured one shuffles
+            verifyConstraints(checked, design, oneTask = metrics.exists(_.bytesWritten <=
+              spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
           }
           registerAt(target, loc)
           rows
@@ -310,14 +320,14 @@ final class Warehouse(
     * themselves. Returns the rows written. */
   def writeTable(target: TableName, df: DataFrame,
                  design: Option[TableDesign] = None): Long = {
-    val (loc, rows) = writeBuild(target, df, design)
+    val (loc, rows, _) = writeBuild(target, df, design)
     registerAt(target, loc)
     rows
   }
 
   /** Write `df` at a fresh versioned location of `target`, then its
     * layout record; no catalog entry or pointer of `target` moves.
-    * Returns the location and the rows written.
+    * Returns the location, the rows written and the write's metrics.
     *
     * A design `distribution` key maps to Spark bucketing (SURVEY
     * §1.4: distkey → bucketBy): both sides of a join bucketed on the
@@ -325,7 +335,7 @@ final class Warehouse(
     * co-location property. `compound_sort` maps to sortBy within
     * buckets (sortkey). */
   private def writeBuild(target: TableName, df: DataFrame,
-                         design: Option[TableDesign]): (String, Long) = {
+                         design: Option[TableDesign]): (String, Long, Option[LoadMetrics]) = {
     val buildId = buildCounter.incrementAndGet()
     val loc = dataLocation(target, buildId)
     // S11 load diagnostics for the monitor's finish event (keyed by
@@ -383,25 +393,13 @@ final class Warehouse(
           // copy-on-every-slice property without a shuffle.
           // WarehouseSpec pins the join plan.
           df.coalesce(1).write.mode("overwrite").parquet(loc)
-        else {
-          // "auto": engine default. Parallelize the write when the plan
-          // under-splits (single-split local source scans made every
-          // COPY-stand-in write a one-task stage — 0.9 s serial per
-          // source on the lifecycle's critical path); no-op at scale,
-          // and never applied over a deliberate sort order (identity
-          // builds arrive range-partitioned+sorted and keep that file
-          // layout; declared sort keys likewise rule the layout).
-          // modest cap: enough parallelism to hide per-task encode/commit
-          // latency without fanning a small table into cores-many files
-          // (32 near-empty write tasks measured as pure deser/scheduling
-          // overhead under the level-parallel source loads)
-          // spreadWide (all-columns hash), not spread: a generic
-          // relation's head column can be low-cardinality or skewed,
-          // which would collapse the fan-out into 1-2 hot write tasks
-          val out = if (design.exists(_.sortKeys.nonEmpty)) df
-                    else graft.queries.Tables.spreadWide(df, cap = 8)
-          out.write.mode("overwrite").parquet(loc)
-        }
+        else
+          // "auto": the plan's own partitions, one file each — a COPY
+          // writes one task per artifact file (the reference's COPY
+          // parallelism, set by the extract), a CTAS what its exchanges
+          // give. A partition-count probe to re-spread a small write
+          // would run the build's query twice.
+          df.write.mode("overwrite").parquet(loc)
         // the catalog keeps partition columns last, as a read infers them
         val fields = Warehouse.nullable(df.schema).fields
         val parts = partCols.flatMap(c => fields.find(_.name.equalsIgnoreCase(c)))
@@ -414,7 +412,7 @@ final class Warehouse(
     // build just to count it would read every build's output twice
     // (the reference likewise reads stl_load_commits, not the table).
     // Fallback scan only if the listener missed the build.
-    (loc, metrics.map(_.rowsWritten).getOrElse(readBuild(loc).count()))
+    (loc, metrics.map(_.rowsWritten).getOrElse(readBuild(loc).count()), metrics)
   }
 
   /** The build at `location`, read with its recorded schema: no
@@ -1467,7 +1465,9 @@ final class Warehouse(
         readPointer(std).foreach(registerAt(bak, _))            // L2 backup
         readPointer(stg).foreach { loc =>
           registerAt(std, loc)                                  // L3 promote
-          spark.sql(s"DROP TABLE IF EXISTS ${stg.quoted}")
+          // as DROP TABLE does: forget the cached relation, then the entry
+          spark.sessionState.catalog.refreshTable(ident(stg))
+          spark.sessionState.catalog.dropTable(ident(stg), ignoreIfNotExists = true, purge = false)
           deletePointer(stg)   // its build now lives behind the standard pointer
         }
       }

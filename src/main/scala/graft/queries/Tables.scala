@@ -57,54 +57,21 @@ object Tables {
     * idle (measured: the fuzzy_join_names2 variant-explode map stage
     * was 1 task × 4.9 s — half the entry's wall).
     *
-    * Scale-adaptive by construction: the round-robin exchange is
-    * inserted ONLY when the scan's split count is below the session's
-    * parallelism. At 100 TB a corpus scan yields thousands of splits,
-    * so this is a no-op there — never a gratuitous full-corpus
-    * shuffle. Intended for plain scan/filter/project frames (the
-    * partition count probe walks the non-adaptive physical plan, so
-    * call it on inputs whose parallelism IS the scan's). The exchange
-    * is a HASH repartition on the head column (id-like at every kernel
-    * call site) — keyless round-robin was tried and rejected in r19:
-    * it defeats AQE exchange reuse (two kernel map stages) and pays a
-    * local sort per task for retry determinism. The hash expression is
-    * deterministic, so retried tasks reproduce their assignment.
-    * Downstream kernels are content-keyed; the one numbering consumer
-    * (Identity) range-repartitions on its declared order afterwards,
-    * and rows TIED on that order keep this hash's arrival order — so
-    * this key is part of the pinned numbering behavior and must not
-    * change lightly (an all-columns variant here flipped tied
-    * surrogate keys in t2_identity_ctas). */
-  def spread(df: DataFrame, cap: Int = Int.MaxValue): DataFrame = {
-    val target =
-      math.min(cap, df.sparkSession.sparkContext.defaultParallelism)
+    * Scale-adaptive by construction: the exchange is inserted ONLY
+    * when the scan's split count is below the session's parallelism.
+    * At 100 TB a corpus scan yields thousands of splits, so this is a
+    * no-op there — never a gratuitous full-corpus shuffle. Its callers are kernel sites over plain scans, where the
+    * partition-count probe only plans: `df.rdd` is an SQL execution
+    * of its own, and over a plan with exchanges it would run every
+    * adaptive stage below them once more. The exchange is a HASH
+    * repartition on the head column (id-like at every call site) —
+    * keyless round-robin was tried and rejected in r19: it defeats
+    * AQE exchange reuse (two kernel map stages) and pays a local sort
+    * per task for retry determinism. The hash expression is
+    * deterministic, so retried tasks reproduce their assignment. */
+  def spread(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, col(df.columns.head))
-  }
-
-  /** The WRITE-PATH spread (Warehouse.writeTable's cap-8 fan-out):
-    * hash on EVERY hashable column, so a relation whose head column is
-    * low-cardinality or skewed cannot collapse the "spread" into 1-2
-    * hot partitions — the generic-relation hazard the kernel-site
-    * [[spread]] never faces (its call sites all lead with an id).
-    * Write layout only: which file a row lands in cannot change any
-    * query's rows, and every declared query orders its output. */
-  def spreadWide(df: DataFrame, cap: Int = Int.MaxValue): DataFrame = {
-    val target =
-      math.min(cap, df.sparkSession.sparkContext.defaultParallelism)
-    if (df.rdd.getNumPartitions >= target) df
-    else {
-      // MapType is not hashable in Spark — skip any column holding one
-      def hashable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
-        case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-        case _ => true
-      }
-      val cols = df.schema.fields.filter(f => hashable(f.dataType))
-        .map(f => df.col("`" + f.name.replace("`", "``") + "`"))
-      if (cols.isEmpty) df.repartition(target)
-      else df.repartition(target, cols.toSeq: _*)
-    }
   }
 }

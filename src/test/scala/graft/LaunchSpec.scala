@@ -75,5 +75,14 @@ class LaunchSpec extends AnyFunSuite {
     // janino's signed jars stay outside any archive (about 500 classes)
     val fromJars = load.count(l => l.contains(" source: file:") && l.endsWith(".jar"))
     assert(fromJars < 1000, s"the load JVM loaded $fromJars classes from jars")
+    // neither JVM builds Scala's runtime-reflection universe (0.5-1.4 s
+    // each): not the session builder, not MLlib's session extension
+    // (its jars are off the classpath), not a TypeTag encoder
+    for ((name, log) <- Seq("extract" -> extract, "load" -> load))
+      assert(!log.exists(_.contains(" scala.reflect.runtime.JavaUniverse")),
+        s"the $name JVM loaded scala.reflect.runtime.JavaUniverse")
+    val mllib = prop("graft.cds.classpath").split(java.io.File.pathSeparator)
+      .filter(_.contains("spark-mllib"))
+    assert(mllib.isEmpty, mllib.mkString(", "))
   }
 }

@@ -210,6 +210,83 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.catalog.tableExists("`rep`.`dup`"))
   }
 
+  /** The profile of `body`'s jobs, and the description of every SQL
+    * execution started while it ran. */
+  private def traced(body: => Unit): (Telemetry.Profile, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.graft.Bus
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => seen.add(s.description)
+        case _ =>
+      }
+    }
+    assert(Bus.drain(spark.sparkContext, 10000))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val profile = Telemetry.scoped(spark) { scope => body; scope.profile() }
+      (profile.getOrElse(fail("the listener bus did not drain")), seen.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a small COPY build runs two jobs: its write and a one-stage key check") {
+    // an extract's artifact, as the nightly load COPYs it
+    val src = Files.createTempDirectory("graft_copy_src_").toString
+    Artifact.write(spark.read.parquet(s"$sfDir/nation.parquet"), srcNation.design,
+      s"$src/src.nation")
+    val wh = new Warehouse(spark, Files.createTempDirectory("graft_wh_test_").toString, src)
+    val (profile, _) = traced(wh.buildOneRelation(srcNation))
+    assert(profile.jobs == 2 && profile.stages.size == 2, profile)
+    assert(spark.table("`src`.`nation`").count() == 25)
+  }
+
+  test("a CTAS build over a join runs its query once: no rdd execution") {
+    val wh = freshWarehouse()
+    wh.buildOneRelation(srcNation)
+    val joined = ctasTop("SELECT a.n_name FROM src.nation a JOIN src.nation b " +
+      "ON a.n_nationkey = b.n_nationkey WHERE b.n_nationkey < 5")
+    val (_, executions) = traced(wh.buildOneRelation(joined))
+    assert(!executions.exists(_.startsWith("rdd at")), executions)
+    assert(spark.table("`rep`.`top_nations`").count() == 5)
+  }
+
+  test("a duplicate key fails the same way in the one-task check and the shuffled one") {
+    val wh = freshWarehouse()
+    wh.buildOneRelation(srcNation)
+    val dup = rel(
+      """name: rep.dup_one
+        |source_name: CTAS
+        |depends_on: [src.nation]
+        |columns:
+        |  - name: k
+        |    type: int
+        |constraints:
+        |  - primary_key: [k]
+        |query: SELECT CAST(LEAST(n_nationkey, 1) AS INT) AS k FROM src.nation
+        |""".stripMargin)
+    def failed(): (Telemetry.Profile, String) = {
+      var message = ""
+      val (profile, _) = traced {
+        message = intercept[FailedConstraintError](wh.buildOneRelation(dup)).getMessage
+      }
+      (profile, message)
+    }
+    val (oneTask, small) = failed()
+    // a build larger than AQE's advisory partition size is checked
+    // through a shuffle
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1")
+    val (shuffled, large) = try failed() finally spark.conf.unset(key)
+    assert(small.endsWith("examples: (1,24)"), small)
+    assert(large == small)
+    assert(oneTask.jobs == 2 && oneTask.stages.size == 2, oneTask)
+    assert(shuffled.stages.size > oneTask.stages.size, shuffled)
+    assert(!spark.catalog.tableExists("`rep`.`dup_one`"))
+  }
+
   test("constraint-violating staged build is NOT published; prior data survives") {
     val wh = freshWarehouse()
     // v1: clean build of rep.counts publishes 5 rows
@@ -1139,7 +1216,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val wh = freshWarehouse()
     val t = TableName.parse("rep.dotted")
-    // under-split input, so the write takes the spreadWide path
+    // no design: the auto layout, which writes the frame as it comes
     assert(wh.writeTable(t, Seq((1, "a"), (2, "b")).toDF("a.b", "c")) == 2L)
     val back = spark.table(t.quoted)
     assert(back.columns.toSeq == Seq("a.b", "c"))

@@ -544,30 +544,4 @@ class QueryHelpersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.groupBy().agg(expr("bounded_topk(s, id, 2L)").as("t"))
       .selectExpr("size(t)").collect().head.getInt(0) == 2)
   }
-
-  test("Tables.spreadWide survives a constant first column (all-columns hash)") {
-    val s = spark
-    import s.implicits._
-    // a single-partition frame whose FIRST column is one constant value:
-    // the head-column hash of spread() would collapse the "spread" into
-    // one hot partition — the write-path spreadWide must actually fan out
-    val df = (0 until 256).map(i => ("const", i.toLong, s"payload_$i"))
-      .toDF("k", "id", "text").coalesce(1)
-    assert(df.rdd.getNumPartitions == 1)
-    val out = Tables.spreadWide(df, cap = 8)
-    // local[2] session: defaultParallelism=2, cap above it — target 2
-    val target = math.min(8, s.sparkContext.defaultParallelism)
-    assert(out.rdd.getNumPartitions == target)
-    val sizes = out.rdd.mapPartitions(it => Iterator(it.size)).collect()
-    assert(sizes.count(_ > 0) == target,
-      s"constant first column collapsed the spread: ${sizes.toSeq}")
-    // results are partitioning-independent
-    assert(out.count() == 256)
-    // already-wide-enough frames pass through untouched
-    val wide = df.repartition(target)
-    assert(Tables.spreadWide(wide, cap = 8) eq wide)
-    // a map column cannot be hashed — spreadWide must skip it, not throw
-    val withMap = df.withColumn("m", map(lit("a"), $"id")).coalesce(1)
-    assert(Tables.spreadWide(withMap, cap = 8).rdd.getNumPartitions == target)
-  }
 }

@@ -8,11 +8,14 @@ Each EVENTLOG is the uncompressed event log of one JVM, written with
   -Dspark.eventLog.dir=DIR
 (DIR must exist): a file, or the `eventlog_v2_*` directory of a rolling
 log, whose `events_<n>_*` files are read in order. For every log it
-prints one line per SQL execution and per job, in start order: the
-start in seconds after the
-application started, the duration, the stages and tasks that ran, and
-the call site (a job) or the description (a SQL execution). A job that
-belongs to a SQL execution is indented under it. A closing line counts
+prints one line per SQL execution and per job: the start in seconds
+after the application started, the duration, the stages and tasks that
+ran, and the call site (a job) or the description (a SQL execution).
+SQL executions, and jobs outside any, are listed in start order. Each
+job of an execution (its `spark.sql.execution.id`) is listed, indented,
+under that execution, whenever it started: adaptive query execution
+runs its stages as jobs whose call site names no relation, and
+concurrent builds interleave their jobs in time. A closing line counts
 the executions, the jobs, the stages and the tasks.
 """
 import json
@@ -66,19 +69,27 @@ def timeline(events):
         done = [s for s in job["stages"] if s in stage_tasks]
         return len(done), sum(stage_tasks[s] for s in done)
 
-    rows = []
-    for sid, s in sqls.items():
-        mine = [ran(j) for j in jobs.values() if j["sql"] == sid]
-        rows.append((s["start"], 0, "sql", s, sum(m[0] for m in mine), sum(m[1] for m in mine)))
+    def line(start, end, stages, tasks, what):
+        dur = f"{(end - start) / 1e3:7.3f}" if end else "      ?"
+        print(f"{(start - t0) / 1e3:8.3f} {dur} {stages:3d} {tasks:4d}  {what[:120]}")
+
+    under = {sid: [] for sid in sqls}
+    top = [(s["start"], sid, s) for sid, s in sqls.items()]
     for j in jobs.values():
-        stages, tasks = ran(j)
-        rows.append((j["start"], 1, "job", j, stages, tasks))
-    rows.sort(key=lambda r: (r[0], r[1]))
-    for start, _, kind, rec, stages, tasks in rows:
-        dur = f"{(rec['end'] - start) / 1e3:7.3f}" if rec["end"] else "      ?"
-        indent = "  " if kind == "job" and rec["sql"] is not None else ""
-        print(f"{(start - t0) / 1e3:8.3f} {dur} {stages:3d} {tasks:4d}  "
-              f"{indent}{kind} {rec['site'][:120]}")
+        if j["sql"] in under:
+            under[j["sql"]].append(j)
+        else:
+            top.append((j["start"], None, j))
+    for start, sid, rec in sorted(top, key=lambda r: r[0]):
+        if sid is None:
+            line(start, rec["end"], *ran(rec), f"job {rec['site']}")
+            continue
+        mine = sorted(under[sid], key=lambda j: j["start"])
+        counts = [ran(j) for j in mine]
+        line(start, rec["end"], sum(c[0] for c in counts), sum(c[1] for c in counts),
+             f"sql {rec['site']}")
+        for j, (stages, tasks) in zip(mine, counts):
+            line(j["start"], j["end"], stages, tasks, f"  job {j['site']}")
     print(f"# {len(sqls)} sql executions, {len(jobs)} jobs, "
           f"{len(stage_tasks)} stages, {sum(stage_tasks.values())} tasks")
 
