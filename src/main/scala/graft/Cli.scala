@@ -9,9 +9,8 @@ import graft.etl._
   * directory laid out by the reference's path convention
   * (`schemas/{schema}/{source}-{table}.yaml` + `.sql`).
   *
-  * Commands: load (staging+publish), update, extract-static, unload,
-  * validate, show_ddl, ls, run_query, explain, create_index,
-  * show_dependents.
+  * Commands: `printUsage` lists every one. `load` and `update` build
+  * into staging and publish at the end; `upgrade` rebuilds in place.
   */
 object Cli {
 
@@ -29,12 +28,12 @@ object Cli {
         |  update         --designs DIR --data DIR --warehouse DIR --select PATTERN [--only-selected] [--vacuum] [--scheduled-start-time EPOCH_MS|ISO8601] [--wait-timeout-ms N] [--events FILE]
         |  check_constraints --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--with-staging]
         |  vacuum         --designs DIR --data DIR --warehouse DIR [--select PATTERN] [--compact TABLE[,TABLE]] [--max-files N] [--dry-run]
-        |  extract        --designs DIR --data DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro] [--use-sampling] [--max-concurrency N]
+        |  extract        --designs DIR --data DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro] [--use-sampling] [--max-concurrency N] [--events FILE]
         |  unload         --designs DIR --out DIR [--select PATTERN] [--format csv|json|parquet|avro]
         |  validate       --designs DIR
         |  show_ddl       --designs DIR [--select PATTERN]
         |  ls             --designs DIR
-        |  run_query      --sql SQL [--limit N] [--cache DIR] [--data DIR --warehouse DIR]  (arms stored MVs)
+        |  run_query      --sql SQL [--limit N] [--data DIR --warehouse DIR]  (arms stored MVs)
         |  create_mv      --data DIR --warehouse DIR --name N --base SCHEMA.TABLE [--mv SCHEMA.TABLE] --group-cols C1[,C2...] --agg-cols A1[,A2...]
         |  refresh_mv     --data DIR --warehouse DIR --name N
         |  run_sql        --file SCRIPT.sql | --sql "stmt; stmt" | --template NAME [--config DIRS]   (alias: run_sql_template)
@@ -247,8 +246,9 @@ object Cli {
           .foreach(r =>
             println(s"[update] ${r.identifier}: ${r.rowcount} rows"))
         // `update --vacuum` (commands.py:1310-1314, load.py:1366-1367):
-        // tidy up after the refresh — this is also what reclaims build
-        // locations orphaned by a previous update's rollback.
+        // tidy up after the refresh — the builds the publish moved out
+        // of the backup slot, and the build of a relation whose earlier
+        // update failed its check or write.
         if (opts.contains("vacuum")) {
           val vr = warehouse.vacuum(Dag.selectInExecutionOrder(designs, selector,
             includeDependents = !opts.contains("only-selected")))
@@ -453,12 +453,15 @@ object Cli {
           s"artifact format '$format' is not one of ${Artifact.Formats.mkString("|")}")
         val conc = maxConcurrency
         val sources = designs.filter(r => r.design.isSourceTable && selector.matches(r.name))
+        // each source is one monitored `extract` step: its finish event
+        // is what `update --scheduled-start-time` waits for
         val written = Warehouse.parallelMap(spark, sources, conc) { r =>
-          scala.util.Try {
+          scala.util.Try(monitor.monitored(r.identifier, "extract") {
             val df = Extract.sourceDataFrame(spark, data, r.design,
               useSampling = opts.contains("use-sampling"))
-            Artifact.write(df, r.design, s"$out/${r.identifier}", format)
-          }
+            val rows = Artifact.write(df, r.design, s"$out/${r.identifier}", format)
+            (rows, Some(rows))
+          })
         }
         // every source has finished: report in design order, then fail
         // on the first source that did
@@ -672,30 +675,12 @@ object Cli {
           if (opts.contains("config")) Qmr.rulesFromSettings(settings)
           else Seq.empty
         val qmrMonitor = new Monitor()
-        def guarded[T](df: org.apache.spark.sql.DataFrame)(
-            action: org.apache.spark.sql.DataFrame => T): T =
-          if (qmrRules.isEmpty) action(df)
-          else Qmr.guarded(df, qmrRules, qmrMonitor)(action)
-        // --cache DIR: Redshift-style transparent result caching —
-        // identical query over unchanged inputs is served from the
-        // materialized prior answer (ResultCache invalidates
-        // structurally via input file listings). A cache MISS
-        // materializes the full query, so it runs under the SAME QMR
-        // guard as a direct execution — caching must not bypass
-        // statement_timeout.
         val rqDf = Commands.runQuery(spark, opts.getOrElse("sql", usage()),
           opts.get("limit").map(_.toInt).orElse(Some(100)))
-        val servedDf = opts.get("cache") match {
-          case Some(dir) =>
-            val (served, hit) = guarded(rqDf)(
-              new graft.etl.ResultCache(spark, dir).lookup(_))
-            System.err.println(
-              s"[run_query] result cache ${if (hit) "HIT" else "MISS"}")
-            served
-          case None => rqDf
-        }
-        println(servedDf.schema.fieldNames.mkString(" | "))
-        guarded(servedDf)(_.collect()).foreach(r => println(r.toSeq.map(v =>
+        println(rqDf.schema.fieldNames.mkString(" | "))
+        val rows = if (qmrRules.isEmpty) rqDf.collect()
+          else Qmr.guarded(rqDf, qmrRules, qmrMonitor)(_.collect())
+        rows.foreach(r => println(r.toSeq.map(v =>
           Option(v).map(_.toString).getOrElse("NULL")).mkString(" | ")))
         // log-action rule breaches must reach the operator, not a
         // discarded Monitor instance

@@ -253,7 +253,7 @@ object Extract {
     * file — the engine's `stl_load_errors`) instead of failing the
     * load, UNLESS they exceed `maxError`, which aborts BEFORE anything
     * is written — the target keeps serving its previous build either
-    * way (all-or-nothing discipline, same as update rollback).
+    * way (all-or-nothing, as `update` is).
     *
     * Cost shape: the bad-side count and the good-side write are each
     * one pass over the source — the same passes a strict COPY pays;

@@ -149,9 +149,13 @@ final class Warehouse(
   /** Duplicate check per declared constraint (load.py:564-634):
     * `GROUP BY key HAVING COUNT(*) > 1 LIMIT 5`; for `unique`, null
     * keys are exempt (Redshift UNIQUE semantics). Non-empty ⇒
-    * [[FailedConstraintError]] carrying sample keys. `oneTask` checks
-    * in one task, with no exchange: for a build AQE would read back as
-    * one shuffle partition anyway, that is one stage instead of two. */
+    * [[FailedConstraintError]] carrying sample keys. The engine's own
+    * NA row (T3) is not data under check: in a `dim_*` CTAS the key
+    * group equal (`<=>`) to the NA row's key counts one row less, so a
+    * real key equal to it (a source key 0) is no duplicate, and `df`
+    * is the build or table as written. `oneTask` checks in one task,
+    * with no exchange: for a build AQE would read back as one shuffle
+    * partition anyway, that is one stage instead of two. */
   def verifyConstraints(df: DataFrame, design: TableDesign,
                         trustEngineIdentity: Boolean = true, oneTask: Boolean = false): Unit =
     design.constraints.foreach { ct =>
@@ -175,10 +179,16 @@ final class Warehouse(
       // aliased aggregate, not .count(): a constraint column literally
       // named "count" would make filter(col("count")) ambiguous and
       // fail every build of that relation regardless of data
-      val dups = base.groupBy(keyCols: _*)
+      val counted = base.groupBy(keyCols: _*)
         .agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("__dup_count"))
-        .filter(col("__dup_count") > 1).limit(5).collect()
+      val dups = (if (!naRowShape(design)) counted else {
+        val isNaKey = ct.columns.map { c =>
+          val cd = design.activeColumns.find(_.name.equalsIgnoreCase(c)).get
+          col(c) <=> expr(design.naValueSql(cd)).cast(cd.dataType)
+        }.reduce(_ && _)
+        counted.withColumn("__dup_count", col("__dup_count") - when(isNaKey, 1).otherwise(0))
+      }).filter(col("__dup_count") > 1).limit(5).collect()
       if (dups.nonEmpty)
         throw new FailedConstraintError(
           s"relation '${design.name.identifier}' violates ${ct.kind} " +
@@ -214,33 +224,19 @@ final class Warehouse(
           // ANY exit path — NA-row construction, write, constraint
           // check, registration — must release them
           val rowcount = try {
-          val hasNaRow = !skipCopy && naRowShape(design)
-          val out = if (hasNaRow) withNaRow(design, df) else df
+          val out = if (!skipCopy && naRowShape(design)) withNaRow(design, df) else df
           // Constraints are verified against the WRITTEN build, as the
           // reference queries the loaded relation (load.py:564-634):
           // checking the DataFrame pre-write would execute the whole
           // CTAS/COPY plan twice. The build is read at its own location
           // and the name moves only once the check passes, so a reader
-          // never sees a build that fails it. The engine-generated NA
-          // row (T3) is excluded from the check — identity keys start
-          // at 1, so sk=0 IS the NA row — else a real source key 0
-          // would false-positive against it.
+          // never sees a build that fails it.
           val (loc, rows, metrics) = writeBuild(target, out, Some(design))
-          if (!skipCopy) {
-            val written = readBuild(loc)
-            val checked = (design.identityColumn, hasNaRow) match {
-              case (Some(ic), true) => written.filter(col(ic.name) =!= 0)
-              // identity-less dim: no column marks the NA row in the
-              // written build — check the pre-NA frame (re-executes
-              // the plan, but only for this rare design shape)
-              case (None, true) => df
-              case _ => written
-            }
-            // a build AQE would coalesce to one shuffle partition is
-            // checked in one task; a larger or unmeasured one shuffles
-            verifyConstraints(checked, design, oneTask = metrics.exists(_.bytesWritten <=
+          // a build AQE would coalesce to one shuffle partition is
+          // checked in one task; a larger or unmeasured one shuffles
+          if (!skipCopy)
+            verifyConstraints(readBuild(loc), design, oneTask = metrics.exists(_.bytesWritten <=
               spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
-          }
           registerAt(target, loc)
           rows
           } finally ctasCleanup()   // drop the identity build's cache
@@ -292,15 +288,12 @@ final class Warehouse(
 
   /** Missing-dimension NA row (T3, load.py:506-526). */
   def withNaRow(design: TableDesign, df: DataFrame): DataFrame =
-    df.unionByName(naRow(design))
+    df.unionByName(spark.range(1).select(design.activeColumns.map(c =>
+      expr(design.naValueSql(c)).cast(c.dataType).as(c.name)): _*))
 
   /** Designs whose builds carry the NA row: `dim_*` CTAS tables. */
   private def naRowShape(design: TableDesign): Boolean =
     design.isCtas && design.name.table.startsWith("dim_")
-
-  private def naRow(design: TableDesign): DataFrame =
-    spark.range(1).select(design.activeColumns.map(c =>
-      expr(design.naValueSql(c)).cast(c.dataType).as(c.name)): _*)
 
   private def buildView(design: TableDesign, pos: SchemaPosition.Value,
                         target: TableName,
@@ -1413,9 +1406,10 @@ final class Warehouse(
   def loadWithStagingAndPublish(relations: Seq[Relation],
                                 maxConcurrency: Int = 4,
                                 analyzeAfter: Boolean = false,
-                                skipCopyAll: Boolean = false): Seq[BuildResult] = {
+                                skipCopyAll: Boolean = false,
+                                step: String = "load"): Seq[BuildResult] = {
     val results = loadRelations(relations, SchemaPosition.Staging, maxConcurrency,
-      skipCopyAll = skipCopyAll)
+      skipCopyAll = skipCopyAll, step = step)
     publish(relations)
     // Stats must attach to the PUBLISHED catalog entries: the staging
     // names are dropped by the promote, taking any stats with them.
@@ -1549,22 +1543,22 @@ final class Warehouse(
   // ------------------------------------------------------------ T6
   /** The `update` command (delete-then-reload,
     * load.py:1308-1367, 422-425): refresh the selected tables AND
-    * their downstream transformations in place, in execution order
-    * (`onlySelected` restricts to the matched tables, the reference's
-    * `--only-selected` debugging flag). Views are untouched.
+    * their downstream transformations, in execution order
+    * (`onlySelected` restricts to the matched relations, the
+    * reference's `--only-selected` debugging flag). Returns the
+    * tables' results, in execution order.
     *
     * The reference wraps the whole refresh in ONE Redshift
     * transaction — a failure anywhere rolls every table back
-    * (load.py:1357-1364). The pointer-swap equivalent (SURVEY §7.3):
-    * each table's pre-update location is captured up front, builds
-    * re-point the standard names in order (later CTAS reads earlier
-    * tables' fresh data, as inside the reference's transaction), and
-    * on ANY failure every already-swapped pointer is restored — after
-    * the command the warehouse holds either all-new or all-old data,
-    * never a mix. Rolled-back build locations are left for [[vacuum]]
-    * (no pointer references them). Readers DURING the run may see a
-    * mix — the price of updating in place without staging; `load`'s
-    * staging+publish is the isolation path. */
+    * (load.py:1357-1364). The Spark shape of that (SURVEY T6, §7) is
+    * `load`'s: build the selection into staging, every relation
+    * required, then publish. The first failure raises
+    * [[RequiredRelationLoadError]] before [[publish]], so no standard
+    * name moves. As after a failed `load`, the builds that passed stay
+    * at the staging position until the next publish replaces them,
+    * and the failed one's directory is left for [[vacuum]]. Views
+    * between selected relations are staged too, so a CTAS reading an
+    * updated table through a view reads the fresh build. */
   def updateRelations(relations: Seq[Relation], selector: TableSelector,
                       scheduledStartMs: Option[Long] = None,
                       eventLog: Option[String] = None,
@@ -1572,7 +1566,7 @@ final class Warehouse(
                       pollMs: Long = 30 * 1000L,
                       onlySelected: Boolean = false): Seq[BuildResult] = {
     val selected = Dag.selectInExecutionOrder(relations, selector,
-      includeDependents = !onlySelected)
+      includeDependents = !onlySelected, includeImmediateViews = true)
     // `update --scheduled-start-time T`: the reference blocks until
     // every selected SOURCE table has an extract-finish event newer
     // than T (monitor.py:825-859, load.py:1343-1355) — the daily
@@ -1583,27 +1577,9 @@ final class Warehouse(
         selected.filterNot(_.isTransformation).map(_.identifier),
         since, eventLog, waitTimeoutMs, pollMs)
     }
-    val tables = selected.filterNot(_.isView)
-    val prior: Seq[(Relation, Option[String])] =
-      tables.map(r => r -> readPointer(r.name))
-    val done = mutable.Buffer[String]()
-    try tables.map { rel =>
-      val r = buildOneRelation(rel, SchemaPosition.Standard, step = "update")
-      done += rel.identifier
-      r
-    } catch { case e: Throwable =>
-      // the "rollback": restore every already-swapped table to its
-      // pre-update location; a table that did not exist before the
-      // update is dropped again. The failing build never moved its
-      // name, so there is nothing of it to restore.
-      prior.filter { case (r, _) => done.contains(r.identifier) }.foreach {
-        case (r, Some(loc)) => registerAt(r.name, loc)
-        case (r, None) =>
-          spark.sql(s"DROP TABLE IF EXISTS ${r.name.quoted}")
-          deletePointer(r.name)
-      }
-      throw e
-    }
+    val built = loadWithStagingAndPublish(selected.map(_.copy(isRequired = true)),
+      step = "update").map(r => r.identifier -> r).toMap
+    selected.filterNot(_.isView).map(r => built(r.identifier))
   }
 
   // ------------------------------------------------------------ C1 (standalone)
@@ -1620,13 +1596,7 @@ final class Warehouse(
     relations.filter(r => !r.isView && selector.matches(r.name)).flatMap { rel =>
       val target = rel.name.inPosition(pos)
       try {
-        // the engine's own NA row is not data under audit: its key may
-        // equal a real one (a source key 0), as the build's check knows
-        val table = spark.table(target.quoted)
-        val audited =
-          if (!naRowShape(rel.design)) table
-          else table.exceptAll(naRow(rel.design).select(table.columns.map(c => col(s"`$c`")): _*))
-        verifyConstraints(audited, rel.design, trustEngineIdentity = false)
+        verifyConstraints(spark.table(target.quoted), rel.design, trustEngineIdentity = false)
         None
       } catch {
         case e: FailedConstraintError => Some(rel.identifier -> e.getMessage)

@@ -311,6 +311,28 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.exists(destA.resolve("manifest.json")))
   }
 
+  test("cli extract --events feeds update --scheduled-start-time") {
+    val since = System.currentTimeMillis()
+    val out = Files.createTempDirectory("graft_cli_exev_").toString
+    val events = Files.createTempDirectory("graft_cli_exev_log_")
+      .resolve("events.jsonl").toString
+    assert(Cli.run(spark, "extract", Map(
+      "designs" -> designsDir, "data" -> dataDir, "out" -> out,
+      "select" -> "cli.region", "events" -> events)) == 0)
+    val extracted = etl.Monitor.readLog(events).filter(_.step == "extract")
+    assert(extracted.map(e => (e.target, e.event)) ==
+      Seq("cli.region" -> "start", "cli.region" -> "finish"), extracted)
+    assert(extracted.last.rowcount.contains(5L), extracted)
+    // a later process loads the extract, then updates from it
+    val opts = Map("designs" -> designsDir, "data" -> out,
+      "warehouse" -> Files.createTempDirectory("graft_cli_exev_wh_").toString)
+    assert(Cli.run(spark, "load", opts) == 0)
+    val (code, printed) = captureOut(Cli.run(spark, "update", opts ++ Map(
+      "select" -> "cli.region", "scheduled-start-time" -> since.toString,
+      "events" -> events, "wait-timeout-ms" -> "2000")))
+    assert(code == 0 && printed.contains("[update] cli.summary: 1 rows"), printed)
+  }
+
   test("extract output round-trips through the warehouse COPY path (S10)") {
     // The reference workflow: `arthur extract` lands gzip CSV + a COPY
     // manifest; `arthur load` COPYs those files into the warehouse
@@ -732,7 +754,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(errBuf.toString("UTF-8").contains("no value"))
   }
 
-  test("cli run_query: statement_timeout aborts, result cache hits") {
+  test("cli run_query: statement_timeout aborts a query over its budget") {
     val cfg = Files.createTempDirectory("graft_cli_qmr_")
     Files.write(cfg.resolve("settings.yaml"),
       "resources:\n  RedshiftCluster:\n    statement_timeout: 700\n"
@@ -753,21 +775,6 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally System.setErr(prevErr)
     assert(c2 == 1, "timed-out query must exit non-zero")
     assert(errBuf.toString("UTF-8").contains("statement_timeout"))
-    // --cache: second identical run is a HIT with identical output
-    val cacheDir = Files.createTempDirectory("graft_cli_rc_").toString
-    def cached() = {
-      val eb = new java.io.ByteArrayOutputStream()
-      val pe = System.err
-      System.setErr(new java.io.PrintStream(eb, true, "UTF-8"))
-      val r = try captureOut { Cli.run(spark, "run_query", Map(
-        "sql" -> "SELECT 21 * 2 AS answer", "cache" -> cacheDir)) }
-      finally System.setErr(pe)
-      (r._1, r._2, eb.toString("UTF-8"))
-    }
-    val (m1, o1, e1) = cached()
-    assert(m1 == 0 && o1.contains("42") && e1.contains("MISS"))
-    val (m2, o2, e2) = cached()
-    assert(m2 == 0 && o2 == o1 && e2.contains("HIT"))
   }
 
   test("cli explain --sql and standalone analyze verb") {

@@ -253,6 +253,67 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("`rep`.`top_nations`").count() == 5)
   }
 
+  test("an identity-less dim build is checked over what it wrote: its join runs once") {
+    val wh = freshWarehouse()
+    wh.buildOneRelation(srcNation)
+    def joined(name: String) = rel(
+      s"""name: rep.$name
+         |source_name: CTAS
+         |depends_on: [src.nation]
+         |columns:
+         |  - name: k
+         |    type: int
+         |    not_null: true
+         |  - name: n_name
+         |    type: string
+         |constraints:
+         |  - primary_key: [k]
+         |query: SELECT a.n_nationkey AS k, b.n_name FROM src.nation a JOIN src.nation b
+         |  ON a.n_nationkey = b.n_nationkey
+         |""".stripMargin)
+    // the same build without the NA row: its write and a one-stage check
+    val (plain, _) = traced(wh.buildOneRelation(joined("nat_join")))
+    val (dim, _) = traced(wh.buildOneRelation(joined("dim_nat_join")))
+    assert(dim.jobs == plain.jobs && dim.stages.size == plain.stages.size,
+      s"dim: $dim\nplain: $plain")
+    assert(spark.table("`rep`.`dim_nat_join`").count() == 26)
+  }
+
+  test("a real key equal to the NA row's key: one passes, two fail the build and the audit") {
+    val wh = freshWarehouse()
+    wh.buildOneRelation(srcNation)
+    // nation keys run 0..24, and the NA row of a dim_* table keys 0 too
+    def dim(key: String) = rel(
+      s"""name: rep.dim_nat
+         |source_name: CTAS
+         |depends_on: [src.nation]
+         |columns:
+         |  - name: k
+         |    type: long
+         |    not_null: true
+         |  - name: n_name
+         |    type: string
+         |constraints:
+         |  - primary_key: [k]
+         |query: SELECT CAST($key AS BIGINT) AS k, n_name FROM src.nation
+         |""".stripMargin)
+    val one = dim("n_nationkey")
+    wh.buildOneRelation(one)
+    assert(spark.table("`rep`.`dim_nat`").filter("k = 0").count() == 2)
+    assert(wh.checkConstraints(Seq(one), TableSelector.all).isEmpty)
+    // nations 0 and 1 both key 0
+    val two = dim("IF(n_nationkey = 1, 0, n_nationkey)")
+    val built = intercept[FailedConstraintError](wh.buildOneRelation(two)).getMessage
+    assert(built.endsWith("examples: (0,2)"), built)
+    // the same rows at rest, written past the build's check
+    wh.writeTable(two.name, wh.withNaRow(two.design,
+      spark.sql("SELECT CAST(IF(n_nationkey = 1, 0, n_nationkey) AS BIGINT) AS k, n_name " +
+        "FROM src.nation")))
+    val audited = wh.checkConstraints(Seq(two), TableSelector.all)
+    assert(audited.map(_._1) == Seq("rep.dim_nat"), audited)
+    assert(audited.head._2.endsWith("examples: (0,2)"), audited)
+  }
+
   test("a duplicate key fails the same way in the one-task check and the shuffled one") {
     val wh = freshWarehouse()
     wh.buildOneRelation(srcNation)
@@ -1000,41 +1061,48 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       e.target == "rep.top_nations" && e.step == "upgrade" && e.event == "finish"))
   }
 
-  test("update is all-or-nothing: failure mid-list restores earlier tables") {
+  private def midT(query: String) = rel(
+    s"""name: rep.mid_t
+       |source_name: CTAS
+       |depends_on: [src.nation]
+       |columns:
+       |  - name: n_name
+       |    type: string
+       |query: $query
+       |""".stripMargin)
+
+  private def tailT(query: String) = rel(
+    s"""name: rep.tail_t
+       |source_name: CTAS
+       |depends_on: [rep.mid_t]
+       |columns:
+       |  - name: n_name
+       |    type: string
+       |query: $query
+       |""".stripMargin)
+
+  /** A warehouse holding top_nations (5 rows), mid_t (4) and tail_t
+    * (4), and the edited design set whose update fails: top_nations
+    * and mid_t select MORE rows, but tail_t's query is broken. */
+  private def brokenTailUpdate(): (Warehouse, Seq[Relation]) = {
     val wh = freshWarehouse()
-    def mid(query: String) = rel(
-      s"""name: rep.mid_t
-         |source_name: CTAS
-         |depends_on: [src.nation]
-         |columns:
-         |  - name: n_name
-         |    type: string
-         |query: $query
-         |""".stripMargin)
-    def tail(query: String) = rel(
-      s"""name: rep.tail_t
-         |source_name: CTAS
-         |depends_on: [rep.mid_t]
-         |columns:
-         |  - name: n_name
-         |    type: string
-         |query: $query
-         |""".stripMargin)
     val v1 = Seq(srcNation,
       ctasTop("SELECT n_name FROM src.nation WHERE n_nationkey < 5"),
-      mid("SELECT n_name FROM src.nation WHERE n_nationkey < 4"),
-      tail("SELECT n_name FROM rep.mid_t"))
+      midT("SELECT n_name FROM src.nation WHERE n_nationkey < 4"),
+      tailT("SELECT n_name FROM rep.mid_t"))
     wh.loadWithStagingAndPublish(v1)
     assert(spark.table("`rep`.`top_nations`").count() == 5)
     assert(spark.table("`rep`.`mid_t`").count() == 4)
-    // The edited design set: top_nations and mid_t now select MORE
-    // rows, but tail_t's query is broken — the reference's single
-    // transaction would roll everything back (load.py:1357-1364); the
-    // pointer emulation must restore every already-swapped table.
-    val v2 = Seq(srcNation,
+    (wh, Seq(srcNation,
       ctasTop("SELECT n_name FROM src.nation WHERE n_nationkey < 7"),
-      mid("SELECT n_name FROM src.nation WHERE n_nationkey < 6"),
-      tail("SELECT no_such_column FROM rep.mid_t"))
+      midT("SELECT n_name FROM src.nation WHERE n_nationkey < 6"),
+      tailT("SELECT no_such_column FROM rep.mid_t")))
+  }
+
+  test("update is all-or-nothing: failure mid-list restores earlier tables") {
+    // the reference's single transaction would roll everything back
+    // (load.py:1357-1364)
+    val (wh, v2) = brokenTailUpdate()
     intercept[Exception] {
       wh.updateRelations(v2, TableSelector.all)
     }
@@ -1048,8 +1116,8 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and a clean update moves everything forward together
     val v3 = Seq(srcNation,
       ctasTop("SELECT n_name FROM src.nation WHERE n_nationkey < 7"),
-      mid("SELECT n_name FROM src.nation WHERE n_nationkey < 6"),
-      tail("SELECT n_name FROM rep.mid_t"))
+      midT("SELECT n_name FROM src.nation WHERE n_nationkey < 6"),
+      tailT("SELECT n_name FROM rep.mid_t"))
     wh.updateRelations(v3, TableSelector.all)
     assert(spark.table("`rep`.`top_nations`").count() == 7)
     assert(spark.table("`rep`.`mid_t`").count() == 6)
@@ -1099,9 +1167,59 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"same-design restore keeps the corroborated bucketing: $meta")
   }
 
+  test("a failed update publishes nothing: no catalog event for its tables") {
+    val (wh, v2) = brokenTailUpdate()
+    val names = Seq("rep.top_nations", "rep.mid_t", "rep.tail_t").map(TableName.parse)
+    val events = tableEvents(names: _*) {
+      intercept[Exception](wh.updateRelations(v2, TableSelector.all))
+    }
+    assert(events.isEmpty, s"a failed update moved a standard name: $events")
+    assert(names.map(n => spark.table(n.quoted).count()) == Seq(5, 4, 4))
+  }
+
+  test("update stages the views between its tables: a CTAS over a view reads the fresh build") {
+    val wh = freshWarehouse()
+    val view = rel(
+      """name: rep.v_top
+        |source_name: VIEW
+        |depends_on: [rep.top_nations]
+        |columns:
+        |  - name: n_name
+        |query: SELECT n_name FROM rep.top_nations
+        |""".stripMargin)
+    val overView = rel(
+      """name: rep.over_v
+        |source_name: CTAS
+        |depends_on: [rep.v_top]
+        |columns:
+        |  - name: n_name
+        |    type: string
+        |query: SELECT n_name FROM rep.v_top
+        |""".stripMargin)
+    def designs(n: Int) =
+      Seq(srcNation, ctasTop(s"SELECT n_name FROM src.nation WHERE n_nationkey < $n"),
+        view, overView)
+    wh.loadWithStagingAndPublish(designs(5))
+    assert(spark.table("`rep`.`over_v`").count() == 5)
+    // the view is a dependent of the selection
+    val all = wh.updateRelations(designs(7), TableSelector(Seq("rep.top_nations")))
+    assert(all.map(_.identifier) == Seq("rep.top_nations", "rep.over_v"))
+    assert(spark.table("`rep`.`over_v`").count() == 7)
+    // the backup slot holds the pre-update build
+    assert(spark.table(TableName.parse("rep.over_v").inPosition(SchemaPosition.Backup).quoted)
+      .count() == 5)
+    // only the two tables are selected; the view between them is not
+    val only = wh.updateRelations(designs(9),
+      TableSelector(Seq("rep.top_nations", "rep.over_v")), onlySelected = true)
+    assert(only.map(_.identifier) == Seq("rep.top_nations", "rep.over_v"))
+    assert(spark.table("`rep`.`v_top`").count() == 9)
+    assert(spark.table("`rep`.`over_v`").count() == 9)
+  }
+
   /** The table events (create, drop, alter and their pre-events) the
-    * catalog posts to the listener bus for `t` while `body` runs. */
-  private def tableEvents(t: TableName)(body: => Unit): Seq[String] = {
+    * catalog posts to the listener bus for any of `ts` while `body`
+    * runs. */
+  private def tableEvents(ts: TableName*)(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.catalyst.catalog.TableEvent
     import org.apache.spark.sql.graft.Bus
@@ -1109,7 +1227,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case te: TableEvent if te.database == t.schema && te.name == t.table =>
+        case te: TableEvent if ts.exists(t => te.database == t.schema && te.name == t.table) =>
           seen.add(te.getClass.getSimpleName)
         case _ =>
       }
